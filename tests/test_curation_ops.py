@@ -60,6 +60,47 @@ def test_html_extended_entity_table(spark):
     assert oracle.loc[0, "text_out"] == exp
 
 
+# adversarial entity pieces: near-misses of table keys, a key without
+# its ';', wrong case, empty and trailing pieces, deletions that must
+# not cascade into a new entity, quotes, and pages without any '&'
+_ENTITY_CASES = {
+    "a &amp;lt; b": "a &lt; b",
+    "&ltx;": "&ltx;",
+    "&#101": "&#101",
+    "&#101;nd": "end",
+    "&LT;": "&LT;",
+    "&&amp;": "&&",
+    "trailing &": "trailing &",
+    "&;": "&;",
+    "&nbsp;&shy;": " ",
+    "&am&shy;p;": "&amp;",
+    "&apos;&quot;&#39;": "'\"'",
+    "no entity here": "no entity here",
+    "": "",
+}
+
+
+def test_entity_decode_matches_duckdb_twin(spark):
+    """The literal-map decode and its DuckDB twin (first-match CASE)
+    agree with each other and with the expected decode on every
+    adversarial piece."""
+    import duckdb
+
+    src = pd.DataFrame({"s": list(_ENTITY_CASES)})
+    got = dict(
+        spark.createDataFrame(src)
+        .select("s", html._decode_entities(F.col("s")).alias("d"))
+        .toPandas().values.tolist()
+    )
+    con = duckdb.connect()
+    con.register("t", src)
+    twin = dict(con.execute(
+        f"SELECT s, {html.decode_entities_sql('s')} AS d FROM t"
+    ).fetchall())
+    assert got == _ENTITY_CASES
+    assert twin == _ENTITY_CASES
+
+
 def test_html_byte_identity_contract(spark):
     """The north-rule invariant: extracted text byte-identical to the
     source text through the synthetic page builder, every rotation."""
@@ -144,8 +185,8 @@ def test_composed_chains_compile_under_codegen_limits(spark):
     codegen fallback DISABLED, a stage that fails to compile raises
     instead of silently running interpreted. The curation chain used
     to blow the limit because the pushed-down gopher filter duplicated
-    the whole HTML-extraction expression; the explode(array(...))
-    Generate barrier keeps it generated once."""
+    the whole HTML-extraction expression; the one-row token Generate
+    keeps the filter above every regexp chain."""
     import __spark_entry__ as entry
 
     qs = entry.queries_extended()
@@ -258,6 +299,76 @@ def test_curation_end_to_end_semantics(spark):
     # redaction evidence survives the filter chain on some rows
     assert out.filter(F.col("n_pii") > 0).count() > 0
     out.unpersist()
+
+
+def _write_docs(d) -> None:
+    """documents.parquet in ``d``: six pages, odd ids with text that has
+    no 'e'; no id is a multiple of 3 or 4, so none gets planted PII
+    text containing an 'e'."""
+    no_e = "a quick brown fox jumps high on a sunny day with my cat"
+    with_e = "the quick brown fox jumps over the lazy dog in the sun"
+    ids = [1, 2, 5, 7, 10, 13]
+    texts = [no_e if i % 2 else with_e for i in ids]
+    pd.DataFrame({
+        "doc_id": ids, "text": texts, "lang": "en", "source": "src0",
+        "n_chars": [len(t) for t in texts],
+    }).to_parquet(d / "documents.parquet", index=False)
+
+
+def test_curation_oracle_keeps_pages_without_entities(spark, tmp_path):
+    """A page whose text has no 'e' carries no '&' into the entity
+    decode (the page builder writes 'e' as '&#101;'); it must survive
+    the DuckDB twin of the curation chain as it survives Spark's."""
+    import duckdb
+
+    from vyperdatum_spark.queries.webtext import (
+        curation_end_to_end_sql, q_curation_end_to_end)
+
+    _write_docs(tmp_path)
+    got = q_curation_end_to_end(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/documents.parquet')")
+    want = con.execute(curation_end_to_end_sql()).df()
+    assert sorted(got["doc_id"]) == [1, 2, 5, 7, 10, 13]
+    assert sorted(got.columns) == sorted(want.columns)
+    cols = list(got.columns)
+    assert (got.sort_values("doc_id").values.tolist()
+            == want[cols].sort_values("doc_id").values.tolist())
+
+
+def test_curation_plan_runs_each_regex_chain_once(spark, tmp_path):
+    """Optimized-plan shape of q_curation_end_to_end: each PII rule is
+    one regexp_extract_all + one regexp_replace and each HTML strip
+    pattern appears once (no alias substitution into the Gopher
+    filter, which Spark does not de-duplicate); the filter sits right
+    above the token Generate; and no isnotnull over the regex chain was
+    inferred below it (that would run the whole chain twice)."""
+    import re
+
+    from vyperdatum_spark.ops.textstats import GOPHER_MIN_WORDS
+    from vyperdatum_spark.queries.webtext import q_curation_end_to_end
+
+    _write_docs(tmp_path)
+    df = q_curation_end_to_end(spark, str(tmp_path))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for pat, _ in pii.PII_RULES:
+        assert plan.count(pat) == 2, pat
+        assert len(re.findall(
+            r"regexp_extract_all\([^,]*, " + re.escape(pat), plan)) == 1
+        assert len(re.findall(
+            r"regexp_replace\([^,]*, " + re.escape(pat), plan)) == 1
+    for pat in (html.RE_COMMENT, html.RE_SCRIPT, html.RE_STYLE,
+                html.RE_TAG, html.RE_WS):
+        assert plan.count(pat) == 1, pat
+
+    lines = plan.splitlines()
+    gopher = [i for i, ln in enumerate(lines)
+              if "Filter" in ln and f">= {GOPHER_MIN_WORDS})" in ln]
+    assert len(gopher) == 1
+    assert lines[gopher[0] + 1].lstrip(" :").startswith("+- Generate ")
+    below = "\n".join(lines[gopher[0] + 1:])
+    assert not re.search(r"isnotnull\([^)]*regexp_replace", below)
 
 
 def test_stream_first_capture_across_batches(spark, tmp_path):

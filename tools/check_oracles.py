@@ -5,6 +5,7 @@ compares against oracle_sql() via DuckDB: row count, column names,
 and order-insensitive value equality (sorted rows, NaN==NaN).
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+Runs Spark at local[$SPARK_GRAFT_CPUS] (all host cores when unset).
 """
 
 from __future__ import annotations
@@ -56,7 +57,7 @@ def main():
     import __spark_entry__ as entry
     from vyperdatum_spark.session import get_spark
 
-    spark = get_spark(cores=8, extra_conf={
+    spark = get_spark(extra_conf={
         "spark.ui.showConsoleProgress": "false",
         # strict: a stage that blows janino's 64 KB method limit FAILS
         # the gate instead of silently running interpreted (set

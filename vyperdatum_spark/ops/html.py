@@ -16,10 +16,9 @@ Extraction contract (deterministic, engine-portable):
   4. strip every remaining tag ``<…>``;
   5. decode a FIXED entity table (the common named entities plus the
      numeric forms the fixtures exercise) in ONE pass — split on
-     '&', first-match CASE per piece, rejoin — so decoded output is
-     never re-scanned and ``&amp;lt;`` round-trips to the literal
-     ``&lt;`` and not ``<`` (r5: replaces the per-entity replace
-     chain, which cost one full string scan per table entry);
+     '&', one literal-map lookup per piece, rejoin — so decoded
+     output is never re-scanned and ``&amp;lt;`` round-trips to the
+     literal ``&lt;`` and not ``<``;
   6. collapse runs of whitespace to one space and trim.
 
 Rules 2–4 are shared verbatim (same regex source text) with the
@@ -32,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from . import sql_str
 
 # regex source shared by the Spark plan and the DuckDB oracle
 RE_COMMENT = r"(?s)<!--.*?-->"
@@ -57,8 +58,8 @@ RE_WS = r"[ \t\r\n]+"
 # spec-correct by construction; two normalization OVERRIDES are part
 # of the contract: &nbsp;/&#160; → ASCII space (so the whitespace
 # collapse merges it) and &shy;/&#173; → removed (soft hyphen).
-# Decode order significant: &amp;/&#38; strictly last so double-
-# encoded entities round-trip (&amp;lt; → &lt;, not <).
+# Double-encoded entities round-trip (&amp;lt; → &lt;, not <) because
+# the decode is one pass that never re-scans its output.
 _NAMED_HEAD = (
     "lt", "gt", "quot", "apos",
     "ndash", "mdash", "lsquo", "rsquo", "ldquo", "rdquo", "hellip",
@@ -80,7 +81,6 @@ def _build_entities() -> tuple:
     # contract overrides (normalization, not decoding)
     pairs += [("&nbsp;", " "), ("&#160;", " "),
               ("&shy;", ""), ("&#173;", "")]
-    # &amp; and its numeric twin strictly last
     pairs += [("&amp;", "&"), ("&#38;", "&")]
     return tuple(pairs)
 
@@ -88,46 +88,44 @@ def _build_entities() -> tuple:
 ENTITIES = _build_entities()
 
 
+# the table as one literal map, keyed on the entity text after the '&'
+_ENTITY_MAP_SQL = "map(" + ", ".join(
+    f"{sql_str(ent[1:])}, {sql_str(ch)}" for ent, ch in ENTITIES) + ")"
+
+
 def _decode_entities(c: Column) -> Column:
-    """Single-pass entity decode (r5 — replaces the 38-pass replace
-    chain, which re-scanned the full string once per table entry):
-    split on '&', decode the ≤1 entity that can start each
-    subsequent piece via a first-match CASE over the table, rejoin.
+    """Single-pass entity decode: split on '&', decode the ≤1 entity
+    that can start each piece after the first, rejoin.
 
-    One string scan regardless of table size — table growth costs
-    per-'&' prefix checks, not whole-string passes (the replace
-    chain was 38 full scans/row, measured 2.5× on html_extract_text
-    at sf0.1).  Decoded output is never re-scanned, so double-encoded
-    entities round-trip exactly as amp-last did (&amp;lt; → &lt;) —
-    and, unlike the sequential chain, a deletion (&shy;) can never
-    cascade into a NEW entity match, which matches real HTML parser
-    behavior (the chain's only divergence, on adversarial nestings
-    like &am&shy;p; that no parser decodes either).  No table entry
-    is a prefix of another, so first-match == only-match and table
-    order is immaterial (amp-last kept for readability).  The DuckDB
-    twin (decode_entities_sql) is generated from the same tuple."""
-    ps = F.split(c, "&", -1)
+    One string scan regardless of table size, and decoded output is
+    never re-scanned, so double-encoded entities round-trip
+    (&amp;lt; → &lt;) and a deletion (&shy;) can never cascade into a
+    NEW entity match (&am&shy;p; → &amp;, not &, as in real HTML
+    parsers).  Every table key is ``#?[A-Za-z0-9]+;``, so a piece
+    starts with a key exactly when its prefix through the first ';' is
+    one: the decode is one lookup of that prefix in a literal map, with
+    '&' + piece as the miss.  ``c`` is referenced once (the first piece
+    is kept by index inside the same ``transform``), so an expensive
+    input is evaluated once per row even where no projection stages it.
+    The DuckDB twin (decode_entities_sql) is generated from the same
+    tuple."""
+    ents = F.expr(_ENTITY_MAP_SQL)
 
-    def dec(p: Column) -> Column:
-        expr = None
-        for ent, ch in ENTITIES:
-            name = ent[1:]  # strip the '&' the split consumed
-            val = F.concat(
-                F.lit(ch), p.substr(F.lit(len(name) + 1), F.length(p))
-            )
-            expr = (F.when(p.startswith(name), val) if expr is None
-                    else expr.when(p.startswith(name), val))
-        return expr.otherwise(F.concat(F.lit("&"), p))
+    def dec(p: Column, i: Column) -> Column:
+        semi = F.instr(p, ";")
+        hit = F.concat(F.try_element_at(ents, p.substr(F.lit(1), semi)),
+                       p.substr(semi + 1, F.length(p)))
+        return F.when(i == 0, p).otherwise(
+            F.coalesce(hit, F.concat(F.lit("&"), p)))
 
-    return F.concat(
-        F.element_at(ps, 1),
-        F.array_join(F.transform(F.slice(ps, 2, F.size(ps) - 1), dec), ""),
-    )
+    return F.array_join(F.transform(F.split(c, "&", -1), dec), "")
 
 
 def decode_entities_sql(expr: str) -> str:
-    """DuckDB twin of ``_decode_entities`` — same split/CASE/rejoin,
-    generated from the same ENTITIES tuple."""
+    """DuckDB twin of ``_decode_entities`` — split, first-match CASE per
+    piece, rejoin — generated from the same ENTITIES tuple.  The rejoin
+    is coalesced because DuckDB's ``array_to_string`` of an empty list
+    (a string without '&') is NULL where Spark's ``array_join`` is ''."""
     ps = f"string_split({expr}, '&')"
     cases = " ".join(
         f"WHEN starts_with(p, '{ent[1:]}') "
@@ -136,17 +134,15 @@ def decode_entities_sql(expr: str) -> str:
     )
     piece = f"CASE {cases} ELSE '&' || p END"
     return (
-        f"(({ps})[1] || array_to_string("
-        f"list_transform(({ps})[2:], p -> {piece}), ''))"
+        f"(({ps})[1] || coalesce(array_to_string("
+        f"list_transform(({ps})[2:], p -> {piece}), ''), ''))"
     )
 
 
 def extract_text_col(html_col: Column) -> Column:
-    """The extraction chain as ONE column expression — for callers
-    that need text_out alongside other columns (streaming pipelines,
-    compositions). Each stage is referenced exactly once, so the
-    nested expression evaluates each regexp once per row (staging is
-    only needed when an intermediate is referenced more than once)."""
+    """The extraction chain as ONE column expression.  Each stage,
+    the entity decode included, references its input once, so each
+    regexp runs once per row with no staging projection."""
     s = F.decode(html_col, "UTF-8")
     for pat in (RE_COMMENT, RE_SCRIPT, RE_STYLE, RE_TAG):
         s = F.regexp_replace(s, pat, "")
@@ -156,34 +152,12 @@ def extract_text_col(html_col: Column) -> Column:
 
 def extract_text(df: DataFrame, id_col: str = "doc_id",
                  html_col: str = "html") -> DataFrame:
-    """(id, text_out, n_html_bytes): visible text per page.
-
-    Staged projections keep each regexp at one evaluation per row
-    (the same pattern as urls.canonical_url_df — inlining the chain
-    would re-run earlier stages once per reference)."""
+    """(id, text_out, n_html_bytes): visible text per page."""
     raw = F.col(html_col)
-    s0 = F.decode(raw, "UTF-8")
-    d = df.select(
-        F.col(id_col),
+    return df.select(
+        F.col(id_col), extract_text_col(raw).alias("text_out"),
         F.octet_length(raw).cast("long").alias("n_html_bytes"),
-        F.regexp_replace(s0, RE_COMMENT, "").alias("_s"),
     )
-    d = d.select(
-        id_col, "n_html_bytes",
-        F.regexp_replace(F.col("_s"), RE_SCRIPT, "").alias("_s"),
-    )
-    d = d.select(
-        id_col, "n_html_bytes",
-        F.regexp_replace(F.col("_s"), RE_STYLE, "").alias("_s"),
-    )
-    d = d.select(
-        id_col, "n_html_bytes",
-        F.regexp_replace(F.col("_s"), RE_TAG, "").alias("_s"),
-    )
-    txt = _decode_entities(F.col("_s"))
-    txt = F.trim(F.regexp_replace(txt, RE_WS, " "))
-    return d.select(F.col(id_col), txt.alias("text_out"),
-                    F.col("n_html_bytes"))
 
 
 def extract_expr_sql(html_expr: str) -> str:

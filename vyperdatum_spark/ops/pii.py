@@ -16,7 +16,8 @@ become [EMAIL], not a half-redacted [IP] remnant.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from . import sql_str
 
 # (pattern, placeholder) in application order — e-mail before IP
 PII_RULES = (
@@ -35,33 +36,31 @@ def pii_redact(df: DataFrame, id_col: str = "doc_id",
     """(id, clean_text, n_email, n_ip, n_phone): placeholder-redacted
     text plus per-kind match counts. Counts are taken on the staged
     text (post prior rules) so kinds never double-count the same span."""
-    d = df.select(F.col(id_col), F.col(text_col).alias("_t"))
-    counts = []
-    for (pat, tok), kind in zip(PII_RULES, _KINDS):
-        cnt = F.size(F.regexp_extract_all(F.col("_t"), F.lit(pat), 0))
-        counts.append(cnt.cast("long").alias(f"n_{kind}"))
-        d = d.select(
-            id_col, *[f"n_{k}" for k in _KINDS[: len(counts) - 1]],
-            counts[-1],
-            F.regexp_replace(F.col("_t"), pat, tok).alias("_t"),
-        )
-    return d.select(
-        F.col(id_col), F.col("_t").alias("clean_text"),
-        *[F.col(f"n_{k}") for k in _KINDS],
-    )
+    return pii_annotate(df.select(id_col, text_col), text_col).select(
+        id_col, "clean_text", *(f"n_{k}" for k in _KINDS))
 
 
 def pii_annotate(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Composition form: APPENDS (clean_text, n_email, n_ip, n_phone)
     to the input DataFrame, keeping every existing column — for
-    pipelines that carry url/ts/lineage alongside the text. Same
-    staged rule order as pii_redact."""
-    d = df.withColumn("_t", F.col(text_col))
-    for (pat, tok), kind in zip(PII_RULES, _KINDS):
-        cnt = F.size(F.regexp_extract_all(F.col("_t"), F.lit(pat), 0))
-        d = d.withColumn(f"n_{kind}", cnt.cast("long"))
-        d = d.withColumn("_t", F.regexp_replace(F.col("_t"), pat, tok))
-    return d.withColumnRenamed("_t", "clean_text")
+    pipelines that carry url/ts/lineage alongside the text.
+
+    One projection per rule, in rule order, each built from SQL text
+    (a handful of py4j calls): a rule reads its input twice (count +
+    replace), so the projections stay apart and each regexp runs once
+    per row."""
+    counts = [f"n_{k}" for k in _KINDS]
+    keep = [f"`{c}`" for c in df.columns if c not in ("clean_text", *counts)]
+    d = df.selectExpr(*keep, f"`{text_col}` AS _t")
+    for i, ((pat, tok), kind) in enumerate(zip(PII_RULES, _KINDS)):
+        p = sql_str(pat)
+        d = d.selectExpr(
+            *keep, *counts[:i],
+            f"CAST(size(regexp_extract_all(_t, {p}, 0)) AS BIGINT) "
+            f"AS n_{kind}",
+            f"regexp_replace(_t, {p}, {sql_str(tok)}) AS _t",
+        )
+    return d.selectExpr(*keep, "_t AS clean_text", *counts)
 
 
 def pii_redact_sql(table: str = "documents", id_col: str = "doc_id",

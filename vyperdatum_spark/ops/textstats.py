@@ -233,7 +233,16 @@ def repetition_cols(text: Column,
     a lambda body, and lambda bodies re-evaluate inlined subtrees per
     element — with an inlined split() that is one full re-split of
     the text per DISTINCT TOKEN (measured 3× on text_repetition at
-    sf0.1; same trap as dedup.shingles_from_tokens)."""
+    sf0.1; same trap as dedup.shingles_from_tokens).
+
+    Staging in a projection is not enough under a ``Filter`` on these
+    columns: predicate pushdown substitutes aliases as it moves the
+    filter below the projections, so a staged ``toks`` (and whatever
+    computes ``text``) is re-inlined into the condition, and Spark does
+    not eliminate common subexpressions inside a ``Filter``.  Stage
+    ``text`` and ``toks`` behind a ``Generate`` instead, as fields of
+    a one-row ``explode(array(struct(...)))``, which the filter cannot
+    cross (see ``queries.webtext.q_curation_end_to_end``)."""
     toks = _toks(text) if toks is None else toks
     dtoks = F.array_distinct(toks)
     n_words = F.size(toks)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import sql_str
+
 # scheme://authority (everything before the first path slash)
 _AUTH_RE = r"^([A-Za-z][A-Za-z0-9+.-]*://[^/]*)"
 
@@ -185,22 +187,17 @@ def canonical_url_df(df: DataFrame, url_col: str = "url",
                      id_col: str = "doc_id",
                      extra_cols: list[str] | None = None) -> DataFrame:
     """(id, *extra_cols, canonical_url) projection — staged columns so
-    each regexp runs once per row."""
-    extra = list(extra_cols or [])
-    u0 = F.regexp_replace(F.col(url_col), r"#.*$", "")
-    d = df.select(F.col(id_col), *extra, u0.alias("_u"))
-    u = F.regexp_replace(F.col("_u"), r"\?utm_[^&#]*&", "?")
-    u = F.regexp_replace(u, r"[?&]utm_[^&#]*", "")
-    d = d.select(id_col, *extra, u.alias("_u"))
-    d = d.select(
-        id_col, *extra, "_u",
-        F.regexp_extract(F.col("_u"), _AUTH_RE, 1).alias("_auth"),
-    )
-    rest = F.expr("substring(_u, length(_auth) + 1)")
-    auth = F.lower(F.col("_auth"))
-    auth = F.regexp_replace(auth, r"^(https://.*):443$", "$1")
-    auth = F.regexp_replace(auth, r"^(http://.*):80$", "$1")
-    rest = F.regexp_replace(rest, r"(.+)/$", "$1")
-    return d.select(
-        F.col(id_col), *extra, F.concat(auth, rest).alias("canonical_url")
-    )
+    each regexp runs once per row, each stage one SQL-text select."""
+    keep = [f"`{c}`" for c in (id_col, *(extra_cols or []))]
+    frag, utm_lead, utm, p443, p80, slash = map(sql_str, (
+        r"#.*$", r"\?utm_[^&#]*&", r"[?&]utm_[^&#]*",
+        r"^(https://.*):443$", r"^(http://.*):80$", r"(.+)/$"))
+    d = df.selectExpr(*keep, f"regexp_replace(`{url_col}`, {frag}, '') AS _u")
+    d = d.selectExpr(*keep, f"regexp_replace(regexp_replace(_u, {utm_lead}, "
+                            f"'?'), {utm}, '') AS _u")
+    d = d.selectExpr(*keep, "_u",
+                     f"regexp_extract(_u, {sql_str(_AUTH_RE)}, 1) AS _auth")
+    auth = (f"regexp_replace(regexp_replace(lower(_auth), {p443}, '$1'), "
+            f"{p80}, '$1')")
+    rest = f"regexp_replace(substring(_u, length(_auth) + 1), {slash}, '$1')"
+    return d.selectExpr(*keep, f"concat({auth}, {rest}) AS canonical_url")

@@ -164,25 +164,31 @@ def q_stream_first_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Synthetic page fields in SQL text that Spark and DuckDB both parse,
+# so one builder serves the Spark plan (through F.expr: one py4j call
+# per column) and its oracle.
+
+# Deterministic synthetic URL per document (from doc_id+source),
+# exercising every canonicalization rule on rotating subsets:
+# scheme/host case, default :443 port, trailing slash, leading utm_*
+# param, fragment. The case-varied '/Docs/' path proves case-folding
+# stays off the path.
+_URL_SQL = (
+    "(CASE WHEN doc_id % 4 = 0 THEN 'HTTPS://WWW.' ELSE 'https://www.' END)"
+    " || source || "
+    "(CASE WHEN doc_id % 4 = 0 THEN '.EXAMPLE.com' ELSE '.example.com' END)"
+    " || (CASE WHEN doc_id % 3 = 0 THEN ':443' ELSE '' END)"
+    " || '/Docs/' || CAST(doc_id % 50 AS STRING)"
+    " || (CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END)"
+    " || (CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed&ref=' ||"
+    " CAST(doc_id % 9 AS STRING) ELSE '' END)"
+    " || (CASE WHEN doc_id % 6 = 0 THEN '#sec2' ELSE '' END)"
+)
+
+
 def _url_col() -> F.Column:
-    """Deterministic synthetic URL per document (from doc_id+source),
-    exercising every canonicalization rule on rotating subsets:
-    scheme/host case, default :443 port, trailing slash, leading
-    utm_* param, fragment. The case-varied '/Docs/' path proves
-    case-folding stays off the path."""
-    d = F.col("doc_id")
-    return F.concat(
-        F.when(d % 4 == 0, F.lit("HTTPS://WWW.")).otherwise(F.lit("https://www.")),
-        F.col("source"),
-        F.when(d % 4 == 0, F.lit(".EXAMPLE.com")).otherwise(F.lit(".example.com")),
-        F.when(d % 3 == 0, F.lit(":443")).otherwise(F.lit("")),
-        F.lit("/Docs/"), (d % 50).cast("string"),
-        F.when(d % 5 == 0, F.lit("/")).otherwise(F.lit("")),
-        F.when(d % 2 == 0,
-               F.concat(F.lit("?utm_source=feed&ref="), (d % 9).cast("string"))
-               ).otherwise(F.lit("")),
-        F.when(d % 6 == 0, F.lit("#sec2")).otherwise(F.lit("")),
-    )
+    """The synthetic URL over (doc_id, source)."""
+    return F.expr(_URL_SQL)
 
 
 def _doc_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,18 +196,6 @@ def _doc_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id"), _url_col().alias("url")
     )
 
-
-_URL_SQL = (
-    "(CASE WHEN doc_id % 4 = 0 THEN 'HTTPS://WWW.' ELSE 'https://www.' END)"
-    " || source || "
-    "(CASE WHEN doc_id % 4 = 0 THEN '.EXAMPLE.com' ELSE '.example.com' END)"
-    " || (CASE WHEN doc_id % 3 = 0 THEN ':443' ELSE '' END)"
-    " || '/Docs/' || CAST(doc_id % 50 AS VARCHAR)"
-    " || (CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END)"
-    " || (CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed&ref=' ||"
-    " CAST(doc_id % 9 AS VARCHAR) ELSE '' END)"
-    " || (CASE WHEN doc_id % 6 = 0 THEN '#sec2' ELSE '' END)"
-)
 
 _DOC_URLS_SQL = f"SELECT doc_id, {_URL_SQL} AS url FROM documents"
 
@@ -222,16 +216,16 @@ def url_dedup_oracle_sql() -> str:
 
 
 # ------------------------------------------------------- round-4 fixtures
-def _warc_ts_col() -> F.Column:
-    """Synthetic capture timestamp (epoch seconds, long): canonical
-    URL groups span many ts values with planted ties broken by id."""
-    d = F.col("doc_id")
-    return (F.lit(1700000000) + (d % 89) * 3600 + (d % 13)).cast("long")
-
-
+# Synthetic capture timestamp (epoch seconds, long): canonical URL
+# groups span many ts values with planted ties broken by id.
 _WARC_TS_SQL = (
     "CAST(1700000000 + (doc_id % 89) * 3600 + (doc_id % 13) AS BIGINT)"
 )
+
+
+def _warc_ts_col() -> F.Column:
+    """The synthetic capture timestamp over doc_id."""
+    return F.expr(_WARC_TS_SQL)
 
 
 def _doc_urls_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,36 +243,33 @@ _DOC_URLS_TS_SQL = (
 )
 
 
-def _page_html_col(text_col: str = "text") -> F.Column:
+def _page_html_sql(text_expr: str = "text") -> str:
     """documents.text wrapped in an html page string exercising every
     extraction rule on rotating subsets — uppercase SCRIPT tags,
     multi-line script bodies, comments containing tag-like junk,
     numeric/named entity encodings. Built so the extracted text is
     BYTE-IDENTICAL to the source text (the north-rule per-row
     invariant)."""
-    d = F.col("doc_id")
-    enc = F.replace(F.col(text_col), F.lit("e"), F.lit("&#101;"))
-    enc = F.when(d % 11 == 0,
-                 F.replace(enc, F.lit(" "), F.lit("&nbsp;"))).otherwise(enc)
-    script = F.when(
-        d % 3 == 0,
-        F.concat(F.lit('<SCRIPT type="text/javascript">var a=1;'),
-                 F.lit("</SCRIPT>")),
-    ).otherwise(
-        F.concat(F.lit("<script>if(a<b){"), F.lit("\n"),
-                 F.lit('f("x &amp; y");}</script>'))
+    return (
+        "'<!DOCTYPE html><html><head><title></title>'"
+        " || (CASE WHEN doc_id % 3 = 0 THEN"
+        " '<SCRIPT type=\"text/javascript\">var a=1;</SCRIPT>'"
+        " ELSE '<script>if(a<b){' || chr(10) || 'f(\"x &amp; y\");}</script>'"
+        " END)"
+        " || '<style>.c{color:#fff}</style></head><body class=\"m\">'"
+        " || (CASE WHEN doc_id % 5 = 0 THEN"
+        " '<!--<p>junk ' || CAST(doc_id AS STRING) || '</p>-->'"
+        " ELSE '<!-- c' || CAST(doc_id AS STRING) || ' -->' END)"
+        " || '<p>' || (CASE WHEN doc_id % 11 = 0 THEN"
+        f" replace(replace({text_expr}, 'e', '&#101;'), ' ', '&nbsp;')"
+        f" ELSE replace({text_expr}, 'e', '&#101;') END)"
+        " || '</p><br/></body></html>'"
     )
-    comment = F.when(
-        d % 5 == 0,
-        F.concat(F.lit("<!--<p>junk "), d.cast("string"), F.lit("</p>-->")),
-    ).otherwise(F.concat(F.lit("<!-- c"), d.cast("string"), F.lit(" -->")))
-    return F.concat(
-        F.lit("<!DOCTYPE html><html><head><title></title>"),
-        script,
-        F.lit("<style>.c{color:#fff}</style></head><body class=\"m\">"),
-        comment,
-        F.lit("<p>"), enc, F.lit("</p><br/></body></html>"),
-    )
+
+
+def _page_html_col(text_col: str = "text") -> F.Column:
+    """The synthetic page string over (doc_id, ``text_col``)."""
+    return F.expr(_page_html_sql(f"`{text_col}`"))
 
 
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,25 +291,6 @@ def _cc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(_page_html_col(), "UTF-8").alias("html"),
         F.col("text"),
         F.col("lang"),
-    )
-
-
-def _page_html_sql(text_expr: str = "text") -> str:
-    """DuckDB twin of _page_html_col (the page string, pre-encode)."""
-    return (
-        "'<!DOCTYPE html><html><head><title></title>'"
-        " || (CASE WHEN doc_id % 3 = 0 THEN"
-        " '<SCRIPT type=\"text/javascript\">var a=1;</SCRIPT>'"
-        " ELSE '<script>if(a<b){' || chr(10) || 'f(\"x &amp; y\");}</script>'"
-        " END)"
-        " || '<style>.c{color:#fff}</style></head><body class=\"m\">'"
-        " || (CASE WHEN doc_id % 5 = 0 THEN"
-        " '<!--<p>junk ' || CAST(doc_id AS VARCHAR) || '</p>-->'"
-        " ELSE '<!-- c' || CAST(doc_id AS VARCHAR) || ' -->' END)"
-        " || '<p>' || (CASE WHEN doc_id % 11 = 0 THEN"
-        f" replace(replace({text_expr}, 'e', '&#101;'), ' ', '&nbsp;')"
-        f" ELSE replace({text_expr}, 'e', '&#101;') END)"
-        " || '</p><br/></body></html>'"
     )
 
 
@@ -358,46 +330,30 @@ _ML_DOCS_SQL = (
 )
 
 
-def _pii_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.text with synthetic PII appended on rotating subsets:
-    an e-mail, an IPv4, a phone number — each kind independently
-    present/absent so counts vary 0..3 per row."""
-    d = F.col("doc_id")
-    email = F.when(
-        d % 3 == 0,
-        F.concat(F.lit(" contact user"), (d % 50).cast("string"),
-                 F.lit("@mail"), (d % 7).cast("string"),
-                 F.lit(".example.com now")),
-    ).otherwise(F.lit(""))
-    ip = F.when(
-        d % 4 == 0,
-        F.concat(F.lit(" server "), (d % 256).cast("string"),
-                 F.lit(".0."), (d % 100).cast("string"), F.lit(".7 up")),
-    ).otherwise(F.lit(""))
-    phone = F.when(
-        d % 6 == 0,
-        F.concat(F.lit(" call +1-555-"),
-                 F.lpad((d % 10000).cast("string"), 4, "0")),
-    ).otherwise(F.lit(""))
-    return _docs(spark, sf_dir).select(
-        d.alias("doc_id"),
-        F.col("source"),
-        F.concat(F.col("text"), email, ip, phone).alias("text"),
-    )
-
+# documents.text with synthetic PII appended on rotating subsets: an
+# e-mail, an IPv4, a phone number — each kind independently
+# present/absent so counts vary 0..3 per row.
+_PII_TEXT_SQL = (
+    "text || "
+    "(CASE WHEN doc_id % 3 = 0 THEN ' contact user' || "
+    "CAST(doc_id % 50 AS STRING) || '@mail' || "
+    "CAST(doc_id % 7 AS STRING) || '.example.com now' ELSE '' END) || "
+    "(CASE WHEN doc_id % 4 = 0 THEN ' server ' || "
+    "CAST(doc_id % 256 AS STRING) || '.0.' || "
+    "CAST(doc_id % 100 AS STRING) || '.7 up' ELSE '' END) || "
+    "(CASE WHEN doc_id % 6 = 0 THEN ' call +1-555-' || "
+    "lpad(CAST(doc_id % 10000 AS STRING), 4, '0') ELSE '' END)"
+)
 
 _PII_DOCS_SQL = (
-    "SELECT doc_id, source, text || "
-    "(CASE WHEN doc_id % 3 = 0 THEN ' contact user' || "
-    "CAST(doc_id % 50 AS VARCHAR) || '@mail' || "
-    "CAST(doc_id % 7 AS VARCHAR) || '.example.com now' ELSE '' END) || "
-    "(CASE WHEN doc_id % 4 = 0 THEN ' server ' || "
-    "CAST(doc_id % 256 AS VARCHAR) || '.0.' || "
-    "CAST(doc_id % 100 AS VARCHAR) || '.7 up' ELSE '' END) || "
-    "(CASE WHEN doc_id % 6 = 0 THEN ' call +1-555-' || "
-    "lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END) AS text "
-    "FROM documents"
+    f"SELECT doc_id, source, {_PII_TEXT_SQL} AS text FROM documents"
 )
+
+
+def _pii_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, text) with the synthetic PII appended."""
+    return _docs(spark, sf_dir).select(
+        "doc_id", "source", F.expr(_PII_TEXT_SQL).alias("text"))
 
 
 # exact host + parent-domain entries, exercising both match modes
@@ -472,10 +428,12 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter → latest-capture-per-canonical-URL dedup. Output: one clean
     row per kept page.
 
-    Plan shape at 100 TB: projections (extract/redact/filter) fuse
-    into one codegen stage; the only shuffles are the latest-capture
-    aggregate on the canonical key and its join back — the same
-    two-exchange shape as dedup.exact_duplicates + keeper join."""
+    Plan shape at 100 TB: projections (extract/redact), the token
+    Generate and the filter fuse into one codegen stage, with every
+    regexp chain evaluated once per row; the only shuffles are the
+    latest-capture aggregate on the canonical key and its join back —
+    the same two-exchange shape as dedup.exact_duplicates + keeper
+    join."""
     from ..ops import html as html_ops
     from ..ops import pii as pii_ops
     from ..ops import textstats as ts
@@ -490,32 +448,32 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(_page_html_col("text"), "UTF-8").alias("html"),
     )
     canon = urls.canonical_url_df(pages, extra_cols=["warc_ts", "html"])
-    # 1-element explode = a Generate barrier: the optimizer cannot
-    # push the gopher filter through a Generate, so the huge HTML
-    # extraction chain is code-generated exactly ONCE instead of being
-    # duplicated into the pushed-down Filter — the duplicated copy
-    # blew janino's 64 KB method limit and silently disabled
-    # whole-stage codegen for the entire fused stage (same defect
-    # class as the round-4 kNN argmin fix)
+    # extraction and redaction are plain projections, where codegen
+    # evaluates each regexp chain once per row
     ext = canon.select(
-        "doc_id", "warc_ts", "canonical_url",
-        F.explode(
-            F.array(html_ops.extract_text_col(F.col("html")))
-        ).alias("text_out"),
+        "doc_id", "canonical_url",
+        html_ops.extract_text_col(F.col("html")).alias("text_out"),
     )
     red = pii_ops.pii_annotate(ext, "text_out")
-    # gopher_keep/n_words only — neither contains the top_cnt fold,
-    # so no token staging is needed here (see repetition_cols)
-    rep = ts.repetition_cols(F.col("clean_text"))
-    kept = red.withColumn("n_words", rep["n_words"]).filter(
-        rep["gopher_keep"]
+    # 1-row explode = a Generate barrier the Gopher filter cannot cross.
+    # Without it, predicate pushdown substitutes clean_text's alias into
+    # the filter (~10 copies of the PII chain; a Filter has no common-
+    # subexpression elimination).  The text travels inside the struct:
+    # as a plain child column, constraint inference would push
+    # isnotnull(<whole HTML+PII chain>) down to the scan instead.
+    tok = red.select(
+        "doc_id", "canonical_url", "n_email", "n_ip", "n_phone",
+        F.explode(F.array(F.struct(
+            F.col("clean_text").alias("t"),
+            ts._toks(F.col("clean_text")).alias("tk"),
+        ))).alias("_r"),
     )
+    rep = ts.repetition_cols(F.col("_r.t"), toks=F.col("_r.tk"))
+    kept = tok.filter(rep["gopher_keep"])
     # latest capture per canonical key, directly on the already-
     # canonical column (same map-combining max-struct shape as
-    # urls.latest_capture, minus the redundant re-canonicalization)
-    # built from canon, not ext: this branch never needs the HTML
-    # extraction, and keeping it upstream of the Generate barrier lets
-    # column pruning drop html from the aggregate's scan entirely
+    # urls.latest_capture, minus the redundant re-canonicalization);
+    # built from canon, so column pruning drops html from this branch
     latest_ids = (
         canon.groupBy("canonical_url")
         .agg(F.max(F.struct("warc_ts", "doc_id")).alias("_b"))
@@ -523,10 +481,10 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = kept.join(latest_ids, "doc_id")
     return out.select(
-        "doc_id", "canonical_url", "clean_text",
+        "doc_id", "canonical_url", F.col("_r.t").alias("clean_text"),
         (F.col("n_email") + F.col("n_ip") + F.col("n_phone"))
         .cast("long").alias("n_pii"),
-        "n_words",
+        rep["n_words"].alias("n_words"),
     )
 
 
