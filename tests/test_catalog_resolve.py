@@ -64,6 +64,28 @@ def test_register_rejects_duplicates_and_foreign_grids(clean_catalog):
             new, {"RGNAcoast01_8301/tss.gtx": (0, 0, 0)}, {})
 
 
+def test_register_rejects_unsafe_region_ids(clean_catalog):
+    # ids are interpolated into generated SQL text: a quote must be
+    # refused at registration, before any Spark job
+    r = catalog.REGIONS[0]
+    bad = catalog.Region("RGN'x", 9, r.polygon, "core/geoid12b/gsynthe.gtx")
+    with pytest.raises(ValueError, match="not a safe identifier"):
+        catalog.register_region(bad, {}, {})
+    good = {"region_id": "RGNDok01_8301", "region_ord": 8,
+            "polygon": [list(p) for p in r.polygon],
+            "geoid": "core/geoid12b/gsynthd.gtx", "planes": {}, "sigmas": {}}
+    v0 = catalog.catalog_version()
+    with pytest.raises(ValueError, match="not a safe identifier"):
+        catalog.register_regions_from_config({"regions": [
+            good, {**good, "region_id": "RGN' OR '1'='1"}]})
+    # a config with one bad id registers nothing
+    assert catalog.catalog_version() == v0
+    assert "RGNDok01_8301" not in catalog.REGION_BY_ID
+    # the built-in ids pass the same check
+    for reg in catalog.REGIONS:
+        assert catalog.check_region_id(reg.region_id) == reg.region_id
+
+
 def test_resolve_epsg_tuple_wkt():
     assert resolve.resolve(6319) == ("nad83s", "ellipse")
     assert resolve.resolve(5866) == (None, "mllw")

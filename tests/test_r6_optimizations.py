@@ -12,6 +12,8 @@ pieces):
   (rect AND general polygons; interior, edge, outside).
 - read_input: repartitions a 1-partition scan up to default
   parallelism, leaves an already-parallel scan untouched.
+- cell_sql / frame_dz_spark_sql: parse to the Column builders' trees.
+- get_spark: the tmpfs spark.local.dir is opt-in.
 """
 
 from __future__ import annotations
@@ -117,3 +119,55 @@ def test_read_input_parallelizes_only_small_scans(spark, tmp_path):
     wide = spark.range(100).repartition(
         spark.sparkContext.defaultParallelism + 4)
     assert parallelize_scan(wide, spark) is wide
+
+
+def _analyzed(df, col):
+    """The analyzed expression tree of ``col`` over ``df``."""
+    qe = df.select(col.alias("_o"))._jdf.queryExecution()
+    return qe.analyzed().expressions().head().child()
+
+
+def test_sql_twins_are_the_column_trees(spark):
+    """The transform builds cell ids and the output-frame correction
+    from SQL text; each must parse to the very tree the Column builder
+    makes (a bare 180.0 would parse as DECIMAL and change the math)."""
+    from vyperdatum_spark.spatial import cells, crs as hcrs
+
+    pts = spark.range(1).selectExpr("-76.5D AS x", "34.25D AS y")
+    x, y = F.col("x"), F.col("y")
+    pairs = [
+        (cells.encode_col(x, y, res), tsql.cell_sql("`x`", "`y`", res))
+        for res in (cells.COARSE_RES, cells.FINE_RES)
+    ]
+    pairs.append((hcrs.frame_dz_cols(x, y), hcrs.frame_dz_spark_sql("x", "y")))
+    for dsl, txt in pairs:
+        assert _analyzed(pts, dsl).semanticEquals(
+            _analyzed(pts, F.expr(txt))), txt
+
+
+def test_spark_local_dir_is_opt_in(monkeypatch):
+    """No RAM-backed scratch dir unless $SPARK_GRAFT_LOCAL_DIR asks."""
+    from pyspark.sql import SparkSession
+
+    from vyperdatum_spark.session import get_spark
+
+    seen = {}
+
+    class Built(Exception):
+        pass
+
+    def capture(builder):
+        seen.clear()
+        seen.update(builder._options)
+        raise Built
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR", raising=False)
+    with pytest.raises(Built):
+        get_spark()
+    assert "spark.local.dir" not in seen
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/scratch/spark")
+    with pytest.raises(Built):
+        get_spark()
+    assert seen["spark.local.dir"] == "/scratch/spark"

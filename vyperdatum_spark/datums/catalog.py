@@ -19,6 +19,7 @@ test (tests/test_core.py:295-310) and raster stacking
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 from . import pipeline as pl
@@ -129,6 +130,21 @@ def catalog_version() -> int:
     return _CATALOG_VERSION
 
 
+# Region ids are interpolated into generated SQL text (string literals
+# in the transform's PIP/precedence/uncertainty CASEs) and prefix grid
+# ids, so they are checked once here instead of escaped at every site.
+REGION_ID_RE = re.compile(r"[A-Za-z][A-Za-z0-9_]*")
+
+
+def check_region_id(region_id) -> str:
+    if not isinstance(region_id, str) or not REGION_ID_RE.fullmatch(region_id):
+        raise ValueError(
+            f"region_id {region_id!r} is not a safe identifier: it must "
+            f"start with a letter and hold only letters, digits and '_'"
+        )
+    return region_id
+
+
 def register_region(
     region: Region,
     planes: dict[str, tuple[float, float, float]],
@@ -141,6 +157,7 @@ def register_region(
     participate in covers, precedence and the payload caches (which
     key on catalog_version and therefore invalidate)."""
     global REGIONS, _CATALOG_VERSION
+    check_region_id(region.region_id)
     if region.region_id in REGION_BY_ID:
         raise ValueError(f"region {region.region_id!r} already registered")
     missing = [g for g in planes if not (
@@ -161,8 +178,14 @@ def register_regions_from_config(config: dict) -> None:
         {"regions": [{"region_id", "region_ord", "polygon", "geoid",
                       "planes": {grid_id: [a, b, c]},
                       "sigmas": {datum: sigma}}]}
+
+    Every region id is checked before any region is registered, so a
+    config with a bad id registers nothing.
     """
-    for spec in config.get("regions", []):
+    specs = config.get("regions", [])
+    for spec in specs:
+        check_region_id(spec["region_id"])
+    for spec in specs:
         region = Region(
             spec["region_id"],
             int(spec["region_ord"]),

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import tables
+from .inputs import local_df
 
 METRICS_SCHEMA = (
     "run_id string, bucket int, partition_id int, rows_in long, "
@@ -249,4 +250,4 @@ def read_metrics(spark: SparkSession, out_dir: str,
                 int(m["rows_in"]), int(m["rows_out"]),
                 int(m["rows_error"]), int(m["rows_nocoverage"]),
             ))
-    return spark.createDataFrame(rows, METRICS_SCHEMA)
+    return local_df(spark, rows, METRICS_SCHEMA)

@@ -1,4 +1,7 @@
-"""Adaptive input-scan parallelization (r6, guide §2.5).
+"""Input construction: adaptive scan parallelization and driver-built
+local tables.
+
+Adaptive input-scan parallelization (r6, guide §2.5).
 
 A small parquet fixture arrives as ONE scan partition (a single file /
 row group cannot be split), so every downstream per-row explosion
@@ -18,7 +21,10 @@ per query).
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def parallelize_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -30,3 +36,34 @@ def parallelize_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
 
 def read_input(spark: SparkSession, path: str) -> DataFrame:
     return parallelize_scan(spark.read.parquet(path), spark)
+
+
+def local_df(spark: SparkSession, rows: Iterable[Sequence],
+             schema: str | StructType) -> DataFrame:
+    """Driver-built rows as a JVM-local ``LocalRelation``.
+
+    ``spark.createDataFrame(list_of_tuples, ddl)`` yields a
+    ``LogicalRDD`` over a pickled Python RDD: every query that reads it
+    (a broadcast build side, say) re-runs a job through Python workers
+    just to collect rows the driver already had. An Arrow table becomes
+    a ``LocalRelation`` instead — rows held in the plan, a broadcast
+    built without a job, and projections over it folded at optimize
+    time.
+
+    ``schema`` is a DDL string or ``StructType``. Each column is built
+    with ``pa.array(values, type=...)``: float NaN stays NaN and
+    ``None`` becomes NULL (a pandas→Arrow conversion would turn NaN
+    into NULL), numpy scalars and nested lists/tuples for
+    ``array<struct>`` columns are accepted as they are."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow = to_arrow_schema(st)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, st)

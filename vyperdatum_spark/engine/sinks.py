@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..datums import catalog
+from .inputs import local_df
 
 
 def to_csv(df: DataFrame, path: str, delimiter: str = ",",
@@ -99,7 +100,8 @@ def to_band_table(
     strips.write.mode("overwrite").partitionBy("band").parquet(
         f"{path}/strips"
     )
-    meta = cells_df.sparkSession.createDataFrame(
+    meta = local_df(
+        cells_df.sparkSession,
         [(origin_x, origin_y, dx, dy, width, height, nodata,
           rows_per_strip, list(bands))],
         "origin_x double, origin_y double, dx double, dy double, "

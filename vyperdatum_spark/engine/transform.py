@@ -68,6 +68,8 @@ from pyspark.sql import functions as F
 from ..datums import catalog, pipeline as pl
 from ..grids import bilinear, tiler
 from ..spatial import cells, crs as hcrs, pip
+from .inputs import local_df
+from .transform_sql import _d
 
 DEFAULT_N_SALT = 8
 
@@ -89,16 +91,16 @@ def region_cover_df(spark: SparkSession, res: int = cells.FINE_RES) -> DataFrame
                 (r.region_id, r.region_ord, int(cells.parent(c, cells.COARSE_RES)),
                  int(c))
             )
-    return spark.createDataFrame(
-        rows, "region_id string, region_ord int, cell5 long, _cellr long"
+    return local_df(
+        spark, rows, "region_id string, region_ord int, cell5 long, _cellr long"
     )
 
 
 def steps_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFrame:
     """(region_id, region_ord, step_ord, grid_id, sign) per region."""
     rows = catalog.region_steps(from_datum, to_datum)
-    return spark.createDataFrame(
-        rows,
+    return local_df(
+        spark, rows,
         "region_id string, region_ord int, step_ord int, grid_id string, sign double",
     )
 
@@ -113,7 +115,7 @@ def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFr
         )
         for r in catalog.REGIONS
     ]
-    return spark.createDataFrame(rows, "region_id string, unc double, pipeline_str string")
+    return local_df(spark, rows, "region_id string, unc double, pipeline_str string")
 
 
 def tile_bundles_df(spark: SparkSession, tiles: DataFrame,
@@ -569,11 +571,12 @@ def transform_points(
         if not out_is_in and out_frame != hcrs.GEOID_FRAME:
             # output-frame z-correction new_z -= (z - diffz): the net
             # in→out 3D frame shift evaluated at the geoid-frame point
-            dz_corr = F.lit(0.0)
+            dz = hcrs.frame_dz_spark_sql(x_col, y_col)
+            dz_corr = _d(0.0)
             if in_frame == "ITRFS":
-                dz_corr = dz_corr + hcrs.frame_dz_cols(x, y)
+                dz_corr = f"({dz_corr} + {dz})"
             if out_frame == "ITRFS":
-                dz_corr = dz_corr - hcrs.frame_dz_cols(x, y)
+                dz_corr = f"({dz_corr} - {dz})"
         if out_is_in:
             emit_out_xy = None  # original x/y already ARE the output
         elif out_frame == hcrs.GEOID_FRAME:
@@ -581,9 +584,6 @@ def transform_points(
         else:
             out_crs_name = "nad83s" if out_frame == "NAD83S" else "itrfs"
             emit_out_xy = hcrs.from_geoid_frame_cols(out_crs_name, x, y)
-
-    cell = cells.encode_col(x, y, cells.COARSE_RES)
-    base = points.withColumn("cell5", cell)
 
     def _emit(df: DataFrame) -> DataFrame:
         if emit_out_xy is not None:
@@ -597,6 +597,24 @@ def transform_points(
         return df.drop("_zg")
 
     null_steps = pl.compile_steps(from_datum, to_datum, "R", "G")
+
+    if strategy == "sql" and null_steps is not None:
+        from . import transform_sql
+
+        # transform_points_sql adds cell5 itself, in its one SQL-text
+        # projection
+        enriched = transform_sql.transform_points_sql(
+            spark, points, from_datum, to_datum, x_col, y_col,
+            grid_defs=grid_defs, knn_fallback=knn_fallback,
+            precedence=precedence, grid_cache_token=grid_cache_token,
+        )
+        return _emit(_finalize(
+            enriched, None, spark, from_datum, to_datum, z_col, flips,
+            allow_points_outside_coverage, include_uncertainty,
+            include_lineage, key_col, dz_corr,
+        ))
+
+    base = points.withColumn("cell5", cells.encode_col(x, y, cells.COARSE_RES))
 
     if null_steps is None:
         # identical datums: z passes through (flip/round still apply)
@@ -612,20 +630,6 @@ def transform_points(
         if include_lineage:
             out = out.withColumn("pipeline_str", F.lit(None).cast("string"))
         return _emit(out)
-
-    if strategy == "sql":
-        from . import transform_sql
-
-        enriched = transform_sql.transform_points_sql(
-            spark, base.drop("cell5"), from_datum, to_datum, x_col, y_col,
-            grid_defs=grid_defs, knn_fallback=knn_fallback,
-            precedence=precedence, grid_cache_token=grid_cache_token,
-        )
-        return _emit(_finalize(
-            enriched, None, spark, from_datum, to_datum, z, flips,
-            allow_points_outside_coverage, include_uncertainty,
-            include_lineage, key_col, dz_corr,
-        ))
 
     fixture_tiles = tiles is None
     if tiles is None and strategy == "cogroup":
@@ -675,7 +679,7 @@ def transform_points(
             ]
             enriched = base.mapInArrow(kernel, T.StructType(out_fields))
             return _emit(_finalize(
-                enriched, None, spark, from_datum, to_datum, z, flips,
+                enriched, None, spark, from_datum, to_datum, z_col, flips,
                 allow_points_outside_coverage, include_uncertainty,
                 include_lineage, key_col, dz_corr,
             ))
@@ -763,7 +767,7 @@ def transform_points(
         )
 
     return _emit(_finalize(
-        base, winners, spark, from_datum, to_datum, z, flips,
+        base, winners, spark, from_datum, to_datum, z_col, flips,
         allow_points_outside_coverage, include_uncertainty,
         include_lineage, key_col, dz_corr,
     ))
@@ -775,57 +779,53 @@ def _finalize(
     spark: SparkSession,
     from_datum: str,
     to_datum: str,
-    z: Column,
+    z_col: str,
     flips: tuple[float, float],
     allow_points_outside_coverage: bool,
     include_uncertainty: bool,
     include_lineage: bool,
     key_col: str,
-    dz_corr: Column | None = None,
+    dz_corr: str | None = None,
 ) -> DataFrame:
     """Attach winners back to the driving table (no-op for the
     passthrough strategy, which already carries them) and apply the
     output contracts: F1 coverage, F4 flip matrix, F5 round(3),
     F6 CATZOC, J6 unc, output-frame z-correction (core.py:443-444)."""
     out = base.join(winners, key_col, "left") if winners is not None else base
+    # one projection built from SQL text: each Column-DSL operator is a
+    # py4j round-trip
+    corr = dz_corr if dz_corr is not None else _d(0.0)
     # NaN-vs-NULL: Arrow maps pandas NaN to NULL, but guard both
-    covered = F.col("sep").isNotNull() & ~F.isnan(F.col("sep"))
-    fin, fout = F.lit(flips[0]), F.lit(flips[1])
-    z_h = fin * z  # input z in height (positive-up) convention
-    corr = dz_corr if dz_corr is not None else F.lit(0.0)
-    z_covered = F.round(fout * (z_h + F.col("sep") + corr), 3)
-
+    covered = "((sep IS NOT NULL) AND (NOT isnan(sep)))"
+    fout = _d(flips[1])
+    # input z in height (positive-up) convention
+    z_h = f"({_d(flips[0])} * `{z_col}`)"
+    z_out = f"CASE WHEN {covered} THEN round(({fout} * (({z_h} + sep) + {corr})), 3)"
     if allow_points_outside_coverage:
-        z_out = F.when(covered, z_covered).otherwise(F.round(fout * z_h, 3))
-    else:
-        z_out = F.when(covered, z_covered)
-    out = out.withColumn("z_out", z_out).withColumn("covered", covered)
+        z_out += f" ELSE round(({fout} * {z_h}), 3)"
+    cols = {"z_out": z_out + " END", "covered": covered}
 
     if include_uncertainty:
         # literal CASE over the (tiny) catalog instead of a broadcast
         # join (r6): same per-region combined_sigma doubles, same
         # left-join-miss null for uncovered rows, one less broadcast
         # exchange + dim build per transform query (guide §2.4)
-        unc_case = None
-        for r in catalog.REGIONS:
-            v = F.lit(float(catalog.combined_sigma(r.region_id, to_datum)))
-            unc_case = (
-                F.when(F.col("region_id") == r.region_id, v)
-                if unc_case is None
-                else unc_case.when(F.col("region_id") == r.region_id, v)
-            )
-        if unc_case is None:
-            unc_case = F.lit(None).cast("double")
-        out = out.withColumn("unc", unc_case)
+        unc = "CAST(NULL AS DOUBLE)"
+        if catalog.REGIONS:
+            unc = "CASE " + " ".join(
+                f"WHEN region_id = '{r.region_id}' "
+                f"THEN {_d(catalog.combined_sigma(r.region_id, to_datum))}"
+                for r in catalog.REGIONS
+            ) + " END"
         if allow_points_outside_coverage:
             # F6: CATZOC-D vertical uncertainty over the HEIGHT-axis z
             # (raster.py:384-390 negates a sounding input first)
-            catzoc = F.when(z_h > 0, F.lit(3.0)).otherwise(
-                F.lit(3.0) - F.lit(0.06) * z_h
-            )
-            out = out.withColumn("unc", F.when(covered, F.col("unc")).otherwise(catzoc))
+            catzoc = (f"CASE WHEN ({z_h} > 0) THEN {_d(3.0)} "
+                      f"ELSE ({_d(3.0)} - ({_d(0.06)} * {z_h})) END")
+            cols["unc"] = f"CASE WHEN {covered} THEN {unc} ELSE {catzoc} END"
         else:
-            out = out.withColumn("unc", F.when(covered, F.col("unc")))
+            cols["unc"] = f"CASE WHEN {covered} THEN {unc} END"
+    out = out.withColumns({c: F.expr(e) for c, e in cols.items()})
 
     if include_lineage:
         dim = region_dim_df(spark, from_datum, to_datum)

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 from ..datums import catalog, pipeline as pl
 from ..grids import tiler
 from ..spatial import cells, pip
+from .inputs import local_df
 
 
 # --------------------------------------------------------------------
@@ -296,8 +297,7 @@ def knn_cells_pdf(grids: dict, max_candidates: int = 64):
                     ],
                 })
     # plain row tuples, NOT a pandas frame (pandas None-padding would
-    # coerce ints to float64, rejected by the non-Arrow
-    # createDataFrame path under plain spark-submit). Candidates ride
+    # coerce the int columns to float64). Candidates ride
     # in ONE array<struct> column: resolving 4 attributes per join
     # instead of 4·C keeps Catalyst analysis time flat in C (a 24-col
     # variant cost ~8 s of driver-side analysis per query build).
@@ -328,6 +328,18 @@ def _d(v: float) -> str:
     """SQL double literal (the D suffix keeps the parser off DECIMAL,
     which would change the arithmetic; repr() round-trips exactly)."""
     return f"{float(v)!r}D"
+
+
+def cell_sql(x: str, y: str, res: int) -> str:
+    """Spark SQL twin of :func:`cells.encode_col`, operator for operator
+    (cells.encode_sql is the DuckDB form: its bare ``180.0`` parses as
+    DECIMAL in Spark)."""
+    sz = _d(cells.cell_size_deg(res))
+    return (
+        f"((shiftleft(CAST({int(res)} AS BIGINT), 58)"
+        f" | shiftleft(CAST(FLOOR(({x} + {_d(180.0)}) / {sz}) AS BIGINT), 29))"
+        f" | CAST(FLOOR(({y} + {_d(90.0)}) / {sz}) AS BIGINT))"
+    )
 
 
 def pip_literal_sql(x: str, y: str, poly: list[tuple[float, float]]) -> str:
@@ -568,24 +580,21 @@ def slots_dim_pdf(grids: dict, j_max: int) -> tuple[pd.DataFrame, str, int]:
     return merged, ", ".join(schema), depth
 
 
-def _py_rows(pdf: pd.DataFrame) -> list[tuple]:
-    """Plain-python row tuples (no numpy scalars): the non-Arrow
-    createDataFrame path under plain spark-submit rejects np.int64."""
-    out = []
-    for tup in pdf.itertuples(index=False, name=None):
-        out.append(tuple(
-            v.item() if isinstance(v, np.generic) else v for v in tup
-        ))
-    return out
-
-
 def _dims(spark: SparkSession, from_datum: str, to_datum: str,
           grid_defs=None, knn_fallback: bool = False,
           grid_cache_token: str | None = None):
     """Broadcast-dimension DataFrames cached per (session, catalog
     version, datum pair): the grid working set is immutable for a
     catalog version (the PROJ-grid-cache analog), and rebuilding the
-    pandas→Spark dims cost ~0.3-0.5 s of fixed driver time per query.
+    dims cost ~0.3-0.5 s of fixed driver time per query.
+
+    Both dims are Arrow-built ``LocalRelation``s (inputs.local_df), not
+    ``LogicalRDD``s over pickled Python rows: the rows live in the plan,
+    so each query's ``BroadcastExchange`` collects them on the driver
+    instead of running two jobs through Python workers (measured
+    0.4-0.9 s of "time to collect" per query, for tasks doing ~5 ms of
+    CPU), and the per-join renaming projections over ``corners`` fold
+    into the relation at optimize time.
 
     Caller-supplied ``grid_defs`` (runtime grids) bypass the cache
     UNLESS the caller also passes ``grid_cache_token`` — a promise
@@ -609,12 +618,13 @@ def _dims(spark: SparkSession, from_datum: str, to_datum: str,
     grids = combined_grids(from_datum, to_datum, grid_defs)
     j_max = max((len(g) for g in grids.values()), default=0)
     slots_merged, slots_schema, depth = slots_dim_pdf(grids, j_max)
-    slots = spark.createDataFrame(_py_rows(slots_merged), slots_schema)
+    slots = local_df(spark, slots_merged.itertuples(index=False, name=None),
+                     slots_schema)
     corner_schema = (
         "gkey string, ix long, iy long, "
         "v00 double, v01 double, v10 double, v11 double"
     )
-    cpdf = corners_pdf(grids)
+    rows = list(corners_pdf(grids).itertuples(index=False, name=None))
     if knn_fallback:
         # r6 plan slimming: the kNN candidate cells ride ON the corner
         # rows (outer-merged by (gkey, ix, iy) — exterior-ring cells
@@ -623,20 +633,16 @@ def _dims(spark: SparkSession, from_datum: str, to_datum: str,
         # each (slot, group) pays one broadcast join instead of two.
         knn_rows, n_cand = knn_cells_pdf(grids)
         knn_js = {int(r[0].rsplit("#g", 1)[1]) for r in knn_rows}
-        by_cell = {(g, int(ix), int(iy)): cands
-                   for g, ix, iy, cands in knn_rows}
-        rows = []
-        for tup in _py_rows(cpdf):
-            g, ix, iy = tup[0], tup[1], tup[2]
-            rows.append(tup + (by_cell.pop((g, ix, iy), None),))
-        for (g, ix, iy), cands in by_cell.items():
-            rows.append((g, ix, iy, None, None, None, None, cands))
+        by_cell = {(g, ix, iy): cands for g, ix, iy, cands in knn_rows}
+        rows = [tup + (by_cell.pop((tup[0], int(tup[1]), int(tup[2])), None),)
+                for tup in rows]
+        rows += [(g, ix, iy, None, None, None, None, cands)
+                 for (g, ix, iy), cands in by_cell.items()]
         corner_schema += (", cands array<struct<lon: double, lat: double, "
                           "v: double, i: bigint>>")
-        corners = spark.createDataFrame(rows, corner_schema)
     else:
         n_cand, knn_js = 0, set()
-        corners = spark.createDataFrame(_py_rows(cpdf), corner_schema)
+    corners = local_df(spark, rows, corner_schema)
     out = (slots, corners, depth, j_max, n_cand, knn_js)
     if cacheable:
         # bounded LRU, NOT evict-by-foreign-appId: a driver process can
@@ -649,6 +655,7 @@ def _dims(spark: SparkSession, from_datum: str, to_datum: str,
         while len(_DIM_CACHE) > _DIM_CACHE_MAX:
             _DIM_CACHE.pop(next(iter(_DIM_CACHE)))
     return out
+
 
 def transform_points_sql(
     spark: SparkSession,
@@ -680,50 +687,51 @@ def transform_points_sql(
       grid_defs      — caller-supplied runtime grids (tiler.GridDef
                        list), replacing the catalog fixture set.
     """
-    x, y = F.col(x_col), F.col(y_col)
     slots, corners, depth, j_max, n_cand, knn_js = _dims(
         spark, from_datum, to_datum, grid_defs, knn_fallback,
         grid_cache_token,
     )
-
-    out = points.withColumn("cell5", cells.encode_col(x, y, cells.COARSE_RES))
-    out = out.withColumn("_c9", cells.encode_col(x, y, cells.FINE_RES))
+    # The plan is built from SQL text: every Column-DSL operator is one
+    # py4j round-trip (the DSL form of this plan cost 2,300-3,000 per
+    # warm build, ~200 as text). Each string parses to the tree the DSL
+    # would build (D-suffixed double literals, same parenthesization),
+    # so results and codegen are the same.
+    # backticks: caller-supplied column names must survive the SQL
+    # parser (`lon-deg` would otherwise parse as a subtraction)
+    xs, ys = f"`{x_col}`", f"`{y_col}`"
+    out = points.withColumns({
+        "cell5": F.expr(cell_sql(xs, ys, cells.COARSE_RES)),
+        "_c9": F.expr(cell_sql(xs, ys, cells.FINE_RES)),
+    })
     # ONE denormalized prune join (slots_dim_pdf): rid/ord/ngr + lattice
     # params for every slot arrive together — the per-slot region-dim
     # joins of the two-level layout are gone (r6, guide §2.4: fewer
     # broadcast exchanges, flatter join tree for Catalyst).
-    out = out.join(F.broadcast(slots), out["_c9"] == slots["cell9"], "left")
+    out = out.join(F.broadcast(slots), F.expr("_c9 = cell9"), "left")
     out = out.drop("cell9")
 
     # ----- joins: combined-grid corners (+ kNN candidates) per slot --
     for k in range(depth):
-        sfx = f"_s{k}"
         for j in range(j_max):
-            # unbound F.col, NOT out[...]: Dataset.col() resolves
+            # unbound names, NOT out[...]: Dataset.col() resolves
             # against the ANALYZED plan, so a bound reference inside
             # this loop re-analyzes the whole growing join tree once
             # per iteration — O(joins²) driver time (measured ~8 s of
             # the 12.5 s geo_knn_edge wall).
-            ix = F.floor((x - F.col(f"lon0{sfx}_{j}")) / F.col(f"dlon{sfx}_{j}")).cast("long")
-            iy = F.floor((y - F.col(f"lat0{sfx}_{j}")) / F.col(f"dlat{sfx}_{j}")).cast("long")
+            sj = f"_s{k}_{j}"
             knn_here = knn_fallback and n_cand and j in knn_js
-            cn = corners.select(
-                F.col("gkey").alias(f"g{sfx}_{j}"),
-                F.col("ix").alias(f"ix{sfx}_{j}"),
-                F.col("iy").alias(f"iy{sfx}_{j}"),
-                F.col("v00").alias(f"v00{sfx}_{j}"),
-                F.col("v01").alias(f"v01{sfx}_{j}"),
-                F.col("v10").alias(f"v10{sfx}_{j}"),
-                F.col("v11").alias(f"v11{sfx}_{j}"),
-                *([F.col("cands").alias(f"kc{sfx}_{j}")] if knn_here
-                  else []),
+            cn = corners.selectExpr(
+                f"gkey AS g{sj}", f"ix AS ix{sj}", f"iy AS iy{sj}",
+                f"v00 AS v00{sj}", f"v01 AS v01{sj}",
+                f"v10 AS v10{sj}", f"v11 AS v11{sj}",
+                *([f"cands AS kc{sj}"] if knn_here else []),
             )
-            out = out.join(
-                F.broadcast(cn),
-                (F.col(f"gkey{sfx}_{j}") == cn[f"g{sfx}_{j}"])
-                & (ix == cn[f"ix{sfx}_{j}"]) & (iy == cn[f"iy{sfx}_{j}"]),
-                "left",
+            on = (
+                f"((gkey{sj} = g{sj}) "
+                f"AND (CAST(FLOOR(({xs} - lon0{sj}) / dlon{sj}) AS BIGINT) = ix{sj})) "
+                f"AND (CAST(FLOOR(({ys} - lat0{sj}) / dlat{sj}) AS BIGINT) = iy{sj})"
             )
+            out = out.join(F.broadcast(cn), F.expr(on), "left")
 
     # ----- stage the expensive per-slot expressions as REAL columns --
     # A column referenced more than once downstream would otherwise be
@@ -741,19 +749,10 @@ def transform_points_sql(
     # interior rows (≈ all rows at scale) never touch it — and (b)
     # avoids re-inlining the bilinear tree 3× through the
     # isNotNull/isnan/value references (the round-1 inlining trap).
-    # Staged expressions are built as SQL STRINGS and parsed with ONE
-    # F.expr each (r6): the Column-DSL builders paid one py4j
-    # round-trip per operator — ~11k round-trips ≈ 1.8 s of the 2.1 s
-    # kNN-edge plan build (cProfile).  The parsed trees are
-    # operator-identical (D-suffixed double literals, same
-    # parenthesization), so results and codegen are unchanged.
     knn_pairs = [
         (k, j) for k in range(depth) for j in range(j_max)
         if knn_fallback and n_cand and j in knn_js
     ]
-    # backticks: caller-supplied column names must survive the SQL
-    # parser (`lon-deg` would otherwise parse as a subtraction)
-    xs, ys = f"`{x_col}`", f"`{y_col}`"
     if knn_pairs:
         out = out.selectExpr("*", *[
             bilinear_sql(
@@ -832,7 +831,7 @@ def transform_points_sql(
         )
     out = out.selectExpr("*", *valids)
 
-    keep = points.columns + ["cell5"]
+    keep = [f"`{c}`" for c in points.columns if c != "cell5"] + ["cell5"]
 
     if precedence == "count":
         # W2 (raster.py:226-233): the region with the MOST valid
@@ -841,61 +840,45 @@ def transform_points_sql(
         # vector on the driver; the winner pick is then pure column
         # math with the counts as literals — the reference likewise
         # pre-scans for valid counts before stacking.
-        cnt_exprs = []
-        for r in catalog.REGIONS:
-            e = None
-            for k in range(depth):
-                term = F.when(
-                    (F.col(f"rid_s{k}") == r.region_id) & F.col(f"ok_s{k}"),
-                    1,
-                ).otherwise(0)
-                e = term if e is None else e + term
-            cnt_exprs.append(F.sum(e).alias(r.region_id))
-        crow = out.agg(*cnt_exprs).collect()[0]
-        counts = {r.region_id: int(crow[r.region_id] or 0)
-                  for r in catalog.REGIONS}
+        crow = out.agg(*[
+            F.expr("sum(" + " + ".join(
+                f"(CASE WHEN ((rid_s{k} = '{r.region_id}') AND ok_s{k}) "
+                f"THEN 1 ELSE 0 END)"
+                for k in range(depth)
+            ) + ")")
+            for r in catalog.REGIONS
+        ]).collect()[0]
 
-        def cnt_lit(rid: Column) -> Column:
-            e = None
-            for r in catalog.REGIONS:
-                c = F.lit(counts[r.region_id]).cast("long")
-                e = (F.when(rid == r.region_id, c) if e is None
-                     else e.when(rid == r.region_id, c))
-            return e
+        def cnt_lit(rid: str) -> str:
+            return "CASE " + " ".join(
+                f"WHEN {rid} = '{r.region_id}' THEN {int(c or 0)}L"
+                for r, c in zip(catalog.REGIONS, crow)
+            ) + " END"
 
-        slot_structs = []
-        for k in range(depth):
-            sfx = f"_s{k}"
-            slot_structs.append(F.when(
-                F.col(f"ok{sfx}"),
-                F.struct(
-                    cnt_lit(F.col(f"rid{sfx}")).alias("c"),
-                    F.col(f"ord{sfx}").alias("o"),
-                    F.col(f"rid{sfx}").alias("r"),
-                    F.col(f"tot{sfx}").alias("t"),
-                ),
-            ))
-        w = (F.greatest(*slot_structs) if len(slot_structs) > 1
+        slot_structs = [
+            f"(CASE WHEN ok_s{k} THEN named_struct("
+            f"'c', {cnt_lit(f'rid_s{k}')}, 'o', ord_s{k}, "
+            f"'r', rid_s{k}, 't', tot_s{k}) END)"
+            for k in range(depth)
+        ]
+        w = (f"greatest({', '.join(slot_structs)})" if depth > 1
              else slot_structs[0])
-        out = out.select("*", w.alias("_w2"))
-        return out.select(
-            *keep,
-            F.col("_w2.r").alias("region_id"),
-            F.col("_w2.o").cast("int").alias("region_ord"),
-            F.col("_w2.t").alias("sep"),
+        return out.selectExpr("*", f"{w} AS _w2").selectExpr(
+            *keep, "_w2.r AS region_id",
+            "CAST(_w2.o AS INT) AS region_ord", "_w2.t AS sep",
         )
 
     # ----- W1 winner: slots are ord-ascending, so last-write-wins =
     # first valid slot scanning DESCENDING
-    def pick(col_fmt: str) -> Column:
-        return F.coalesce(*[
-            F.when(F.col(f"ok_s{k}"), F.col(col_fmt.format(k=k)))
+    def pick(col: str) -> str:
+        return "coalesce(" + ", ".join(
+            f"(CASE WHEN ok_s{k} THEN {col}_s{k} END)"
             for k in reversed(range(depth))
-        ])
+        ) + ")"
 
-    return out.select(
+    return out.selectExpr(
         *keep,
-        pick("rid_s{k}").alias("region_id"),
-        pick("ord_s{k}").cast("int").alias("region_ord"),
-        pick("tot_s{k}").alias("sep"),
+        f"{pick('rid')} AS region_id",
+        f"CAST({pick('ord')} AS INT) AS region_ord",
+        f"{pick('tot')} AS sep",
     )

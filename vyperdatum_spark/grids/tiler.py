@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..datums import catalog
+from ..engine.inputs import local_df
 from ..spatial import cells
 
 TILE_SCHEMA = T.StructType(
@@ -137,4 +138,4 @@ def build_tile_df(spark: SparkSession,
     driver-built; production: written once to a partitioned table)."""
     defs = grid_defs if grid_defs is not None else fixture_grid_defs()
     rows = [r for gd in defs for r in tile_rows(gd)]
-    return spark.createDataFrame(rows, TILE_SCHEMA)
+    return local_df(spark, rows, TILE_SCHEMA)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine.inputs import local_df
 from . import sql_str
 
 # scheme://authority (everything before the first path slash)
@@ -70,8 +71,8 @@ def blocklist_filter(df: DataFrame, blocked_hosts: list[str],
     host (a host yields ≤ label-count suffixes, ~3-5), so the corpus
     side never shuffles."""
     spark = df.sparkSession
-    bl = spark.createDataFrame(
-        [(h.lower(),) for h in blocked_hosts], "blocked_host string"
+    bl = local_df(
+        spark, [(h.lower(),) for h in blocked_hosts], "blocked_host string"
     )
     host = host_of(url_col)
     with_host = df.withColumn("_host", host)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..datums import catalog, pipeline as pl, vypercrs
 from ..engine import transform as tx
+from ..engine.inputs import local_df
 from ..grids import tiler
 from ..spatial import cells, crs as hcrs, zorder as zorder_mod
 
@@ -303,7 +304,7 @@ def q_geo_pipeline_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
          pl.compile_pipeline_string("ellipse", "mllw", r.region_id, r.geoid))
         for r in catalog.REGIONS
     ]
-    return spark.createDataFrame(rows, "region_id string, pipeline_str string")
+    return local_df(spark, rows, "region_id string, pipeline_str string")
 
 
 def q_geo_chart_datum_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,7 +362,7 @@ def q_geo_version_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         (gid, repr(a), repr(b), repr(c))
         for gid, (a, b, c) in sorted(catalog.GRID_PLANES.items())
     ]
-    df = spark.createDataFrame(rows, "grid_id string, a string, b string, c string")
+    df = local_df(spark, rows, "grid_id string, a string, b string, c string")
     payload = F.concat_ws("|", "grid_id", "a", "b", "c")
     return df.select("grid_id", F.md5(payload).alias("grid_md5"))
 
@@ -896,8 +897,8 @@ def q_geo_lineage_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
          parsed["base_datum"], bool(parsed["is_height"]))
         for rid, pipe in zip(parsed["regions"], parsed["pipelines"])
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_df(
+        spark, rows,
         "region_id string, pipeline_str string, datum_name string, "
         "vdatum_version string, base_datum string, is_height boolean",
     )

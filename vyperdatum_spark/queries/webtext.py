@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine.inputs import local_df
 from ..ops import clustering, dedup, dsir, search, similarity, textstats
 
 
@@ -61,9 +62,7 @@ _POLICY_PLANTS = [
 
 
 def _policy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    plants = spark.createDataFrame(
-        _POLICY_PLANTS, "doc_id long, text string"
-    )
+    plants = local_df(spark, _POLICY_PLANTS, "doc_id long, text string")
     return _docs(spark, sf_dir).select("doc_id", "text").unionByName(plants)
 
 

@@ -60,17 +60,14 @@ def get_spark(
         # 10× slower: 28 s → 2.9 s on an 8M-row transform).
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
-        # shuffle/spill scratch on fast local storage (guide §2.1: the
-        # map side writes every shuffle block to spark.local.dir).
-        # This sandbox's /tmp disk serializes concurrent writers (the
-        # scaling children measured 3-10× wall variance from it), so
-        # default to tmpfs here; on a real cluster point
-        # $SPARK_GRAFT_LOCAL_DIR at the fast local SSD array instead.
     )
+    # shuffle/spill scratch (guide §2.1: the map side writes every
+    # shuffle block to spark.local.dir). Opt-in: point
+    # $SPARK_GRAFT_LOCAL_DIR at fast local storage (an SSD array, or
+    # tmpfs on a host whose disk serializes concurrent writers); unset,
+    # Spark's own default applies. A RAM-backed default would fill
+    # memory on any host whose shuffles outgrow it.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm") and os.access(
-            "/dev/shm", os.W_OK):
-        local_dir = "/dev/shm/spark-local"
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     # ad-hoc conf overrides for experiments: "k=v;k=v"

@@ -92,6 +92,12 @@ def frame_dz_sql(lon: str, lat: str) -> str:
     return f"({FR_A!r} + {FR_B!r} * {lat} + {FR_C!r} * {lon})"
 
 
+def frame_dz_spark_sql(lon: str, lat: str) -> str:
+    """Spark SQL twin of :func:`frame_dz_cols`, operator for operator
+    (D-suffixed doubles: Spark parses a bare ``0.83`` as DECIMAL)."""
+    return f"(({FR_A!r}D + ({FR_B!r}D * {lat})) + ({FR_C!r}D * {lon}))"
+
+
 # --------------------------------------------------------------------
 # to the geoid frame: (x, y, z) in `crs` → (lon, lat, z) in NAD83S
 # --------------------------------------------------------------------
