@@ -9,7 +9,6 @@ from vyperdatum_spark.session import get_spark
 def spark():
     s = get_spark(
         app_name="vyperdatum_spark_tests",
-        cores=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     yield s

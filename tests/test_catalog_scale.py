@@ -8,7 +8,7 @@ whole-stage codegen, and produces closed-form-correct answers — for
 the list-precedence, count-precedence, and kNN-fallback variants.
 
 Expression budget at this scale (see PLANS.md): the dominant term is
-slot_pip_expr = depth × (4 comparisons per axis-rect region × 50
+slot_pip_sql = depth × (4 comparisons per axis-rect region × 50
 regions in one CASE) ≈ 600 comparisons/row plus depth × j_max
 bilinears — well inside Janino's 64 KB method limit because the PIP
 CASE collapses each rectangle to 4 comparisons; a 50-vertex general

@@ -1,0 +1,58 @@
+"""The geo half of the correctness gate, under pytest.
+
+Every ``geo_*`` entry of ``__spark_entry__.queries_extended()`` runs at
+sf0.001 and must equal its ``oracle_sql_extended()`` DuckDB query:
+same row count, same column names, same order-insensitive values
+(``tools/check_oracles.py::canon``, NaN == NaN). Codegen is strict, as
+in ``tools/check_oracles.py``: a stage that exceeds janino's 64 KB
+method limit fails instead of silently running interpreted.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+duckdb = pytest.importorskip("duckdb")
+
+import __spark_entry__ as entry  # noqa: E402
+from tools.check_oracles import TABLES, canon  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+if not os.path.isdir(SF_DIR):
+    pytest.skip(f"fixture dir {SF_DIR} missing", allow_module_level=True)
+
+QUERIES = entry.queries_extended()
+ORACLES = entry.oracle_sql_extended()
+GEO = [name for name in QUERIES if name.startswith("geo_")]
+
+FALLBACK = "spark.sql.codegen.fallback"
+
+
+@pytest.fixture(scope="module")
+def oracle_db():
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
+@pytest.fixture(scope="module")
+def strict_codegen(spark):
+    old = spark.conf.get(FALLBACK)
+    spark.conf.set(FALLBACK, "false")
+    yield
+    spark.conf.set(FALLBACK, old)
+
+
+@pytest.mark.parametrize("name", GEO)
+def test_geo_query_matches_oracle(spark, oracle_db, strict_codegen, name):
+    got = QUERIES[name](spark, SF_DIR).toPandas()
+    exp = oracle_db.execute(ORACLES[name]).df()
+    assert len(got) == len(exp)
+    assert sorted(got.columns) == sorted(exp.columns)
+    assert canon(got) == canon(exp)

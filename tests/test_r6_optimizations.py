@@ -7,9 +7,11 @@ pieces):
 - slots_dim_pdf: the denormalized prune dim must carry REAL Nones for
   missing slots (pandas NaN would flip join-miss semantics) and agree
   row-for-row with the two-level slots->region-dim layout.
-- pip_literal_sql / slot_pip_sql / bilinear_sql: the SQL-string twins
-  must evaluate identically to the Column-DSL builders on a point grid
-  (rect AND general polygons; interior, edge, outside).
+- pip_literal_sql / slot_pip_sql / bilinear_sql: the SQL-string
+  builders must evaluate bit-identically to the numpy references they
+  mirror (spatial.pip.contains, grids.bilinear.interp_tile) on a point
+  grid (rect AND general polygons; interior, on edges and vertices,
+  outside).
 - read_input: repartitions a 1-partition scan up to default
   parallelism, leaves an already-parallel scan untouched.
 - cell_sql / frame_dz_spark_sql: parse to the Column builders' trees.
@@ -20,6 +22,8 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -63,48 +67,101 @@ def test_slots_dim_has_real_nones_and_matches_two_level_layout():
                 assert getattr(got, f"lon0_s{k}_0") == ref["lon0_0"]
 
 
-def test_pip_sql_string_matches_column_builder(spark):
-    rect = [(-78.0, 33.0), (-77.0, 33.0), (-77.0, 34.0), (-78.0, 34.0),
-            (-78.0, 33.0)]
-    octagon = [(-77.5, 33.2), (-77.2, 33.0), (-76.8, 33.1), (-76.6, 33.5),
-               (-76.7, 33.9), (-77.1, 34.1), (-77.6, 33.9), (-77.7, 33.5),
-               (-77.5, 33.2)]
-    pts = spark.range(4000).select(
-        (F.lit(-78.2) + (F.col("id") % 80).cast("double") * 0.02).alias("x"),
-        (F.lit(32.8) + (F.floor(F.col("id") / 80) % 50).cast("double") * 0.03)
-        .alias("y"),
-    )
-    for poly in (rect, octagon):
-        dsl = tsql.pip_literal_expr(F.col("x"), F.col("y"), poly)
-        txt = F.expr(tsql.pip_literal_sql("x", "y", poly))
-        n_diff = pts.filter(~dsl.eqNullSafe(txt)).count()
-        assert n_diff == 0
+RECT = [(-78.0, 33.0), (-77.0, 33.0), (-77.0, 34.0), (-78.0, 34.0),
+        (-78.0, 33.0)]
+OCTAGON = [(-77.5, 33.2), (-77.2, 33.0), (-76.8, 33.1), (-76.6, 33.5),
+           (-76.7, 33.9), (-77.1, 34.1), (-77.6, 33.9), (-77.7, 33.5),
+           (-77.5, 33.2)]
 
 
-def test_bilinear_sql_string_matches_column_builder(spark):
-    pts = spark.range(2000).select(
-        (F.lit(-78.0) + (F.col("id") % 50).cast("double") * 0.013).alias("x"),
-        (F.lit(33.0) + (F.floor(F.col("id") / 50) % 40).cast("double") * 0.017)
-        .alias("y"),
-        F.lit(-78.05).alias("lon0"), F.lit(32.95).alias("lat0"),
-        F.lit(0.05).alias("dlon"), F.lit(0.05).alias("dlat"),
-        (F.col("id") % 7).cast("double").alias("v00"),
-        (F.col("id") % 5).cast("double").alias("v01"),
-        (F.col("id") % 3).cast("double").alias("v10"),
-        (F.col("id") % 11).cast("double").alias("v11"),
-    )
-    dsl = tsql.bilinear_expr(
-        F.col("x"), F.col("y"), F.col("lon0"), F.col("lat0"),
-        F.col("dlon"), F.col("dlat"),
-        F.col("v00"), F.col("v01"), F.col("v10"), F.col("v11"),
-    )
-    txt = F.expr(tsql.bilinear_sql(
-        "x", "y", "lon0", "lat0", "dlon", "dlat",
+def _pip_points():
+    """The 80×50 grid over both polygons, plus points exactly on the
+    rectangle's edges and corners and on the octagon's vertices — where
+    the half-open crossing rule decides."""
+    k = np.arange(4000)
+    xs = [-78.2 + (k % 80) * 0.02]
+    ys = [32.8 + (k // 80 % 50) * 0.03]
+    t = np.linspace(-78.0, -77.0, 11)
+    u = np.linspace(33.0, 34.0, 11)
+    for ex, ey in ((t, np.full(11, 33.0)), (t, np.full(11, 34.0)),
+                   (np.full(11, -78.0), u), (np.full(11, -77.0), u)):
+        xs.append(ex)
+        ys.append(ey)
+    ov = np.asarray(OCTAGON[:-1])
+    xs.append(ov[:, 0])
+    ys.append(ov[:, 1])
+    return np.concatenate(xs), np.concatenate(ys)
+
+
+def _eval_sql(spark, pdf, exprs):
+    """Evaluate SQL-text expressions over ``pdf`` rows, in row order."""
+    df = spark.createDataFrame(pdf.assign(_i=np.arange(len(pdf))))
+    return (df.selectExpr("_i", *[f"{e} AS `{n}`" for n, e in exprs.items()])
+            .toPandas().sort_values("_i").reset_index(drop=True))
+
+
+def test_pip_sql_matches_numpy_ray_cast(spark, monkeypatch):
+    from vyperdatum_spark.datums import catalog
+    from vyperdatum_spark.spatial import pip
+
+    xs, ys = _pip_points()
+    pdf = pd.DataFrame({"x": xs, "y": ys})
+    got = _eval_sql(spark, pdf, {
+        "rect": tsql.pip_literal_sql("x", "y", RECT),
+        "oct": tsql.pip_literal_sql("x", "y", OCTAGON),
+    })
+    for name, poly in (("rect", RECT), ("oct", OCTAGON)):
+        exp = pip.contains(poly, xs, ys)
+        assert exp.any() and not exp.all()
+        assert np.array_equal(got[name].to_numpy(dtype=bool), exp), name
+
+    # slot_pip_sql: the region-literal CASE picks each slot's polygon
+    # (catalog rectangles + a general octagon); a null slot is null
+    monkeypatch.setattr(catalog, "REGIONS", list(catalog.REGIONS) + [
+        catalog.Region("RGNOct01_8301", len(catalog.REGIONS),
+                       tuple(OCTAGON[:-1]), catalog.REGIONS[0].geoid),
+    ])
+    rids = [r.region_id for r in catalog.REGIONS]
+    rid = np.array([rids[i % len(rids)] for i in range(len(xs))], dtype=object)
+    rid[::17] = None
+    got = _eval_sql(spark, pdf.assign(rid=rid),
+                    {"in": tsql.slot_pip_sql("x", "y", "rid")})["in"]
+    for r in catalog.REGIONS:
+        m = rid == r.region_id
+        exp = pip.contains(list(r.polygon), xs[m], ys[m])
+        assert np.array_equal(got[m].to_numpy(dtype=bool), exp), r.region_id
+    assert got[pd.isna(rid)].isna().all()
+
+
+def test_bilinear_sql_matches_numpy_interp_tile(spark):
+    from vyperdatum_spark.grids import bilinear
+
+    lon0, lat0, dlon, dlat, nx, ny = -78.05, 32.95, 0.05, 0.05, 16, 17
+    w = np.random.default_rng(3).normal(size=(ny, nx))
+    k = np.arange(2000)
+    # the 50×40 grid, plus points exactly on lattice nodes (t = 0)
+    xs = np.concatenate([-78.0 + (k % 50) * 0.013,
+                         lon0 + np.arange(1, nx - 1) * dlon])
+    ys = np.concatenate([33.0 + (k // 50 % 40) * 0.017,
+                         lat0 + np.arange(1, nx - 1) * dlat])
+    exp = bilinear.interp_tile(lon0, lat0, dlon, dlat, nx, ny, w, xs, ys,
+                               knn_fallback=False)
+    assert np.isfinite(exp).all()
+    # the corner join's output: the four nodes of each point's cell
+    ix = np.floor((xs - lon0) / dlon).astype(np.int64)
+    iy = np.floor((ys - lat0) / dlat).astype(np.int64)
+    pdf = pd.DataFrame({
+        "x": xs, "y": ys,
+        "v00": w[iy, ix], "v01": w[iy, ix + 1],
+        "v10": w[iy + 1, ix], "v11": w[iy + 1, ix + 1],
+    })
+    d = tsql._d
+    got = _eval_sql(spark, pdf, {"b": tsql.bilinear_sql(
+        "x", "y", d(lon0), d(lat0), d(dlon), d(dlat),
         "v00", "v01", "v10", "v11",
-    ))
-    # bit-exact equality, not approx: the twins must be the same tree
-    n_diff = pts.filter(~dsl.eqNullSafe(txt)).count()
-    assert n_diff == 0
+    )})["b"].to_numpy(dtype=np.float64)
+    # bit-exact, not approx: the same float64 ops in the same order
+    assert np.array_equal(got, exp)
 
 
 def test_read_input_parallelizes_only_small_scans(spark, tmp_path):

@@ -268,8 +268,7 @@ def main() -> None:
         "count so blocks subdivide (k ∝ √n keeps expected block work",
         "flat), OR salt the hot block (split cell c into c×s",
         "sub-blocks by a hash of the id, dedup within sub-blocks, then",
-        "one cross-sub-block pass on survivors) — the same two levers",
-        "as the skew-salted transform join (BENCH/SKEW.md).  The",
+        "one cross-sub-block pass on survivors).  The",
         "measured distribution above is the input to that sizing.",
         "",
     ]

@@ -34,7 +34,7 @@ def main(argv=None) -> int:
     p.add_argument("--allow-outside", action="store_true")
     p.add_argument("--knn", action="store_true")
     p.add_argument("--strategy", default="sql",
-                   choices=["sql", "broadcast", "cogroup"])
+                   choices=["sql", "broadcast"])
     p.add_argument("--cores", type=int, default=None)
     args = p.parse_args(argv)
 

@@ -9,15 +9,16 @@ as an idiomatic Spark DataFrame pipeline:
   (url, warc_ts, html, text, lang),
 - hierarchical cell-encoded (H3-analog, pure column math),
 - point-in-polygon matched against broadcast region polygons,
-- transformed via bilinear interpolation over a pre-tiled separation
-  grid side table (raster→vector tiling; cogrouped pandas kernel),
+- transformed via bilinear interpolation over the separation grids
+  (broadcast corner joins + column math; a numpy mapInArrow kernel
+  over cell-keyed tiles where SQL cannot go),
 - with last-write-wins / count-ranked region precedence, uncertainty
   joins, per-partition lineage + metrics, and bucket-level
   checkpoint/resume.
 
-No GDAL/PROJ/pyproj at executors: the numeric core is numpy inside
-Arrow-batched pandas UDFs; everything relational is Catalyst-planned
-DataFrame ops.
+No GDAL/PROJ/pyproj at executors: the numeric core is Catalyst column
+math, with numpy inside Arrow-batched kernels where SQL cannot go;
+everything relational is Catalyst-planned DataFrame ops.
 """
 
 __version__ = "0.1.0"

@@ -78,7 +78,6 @@ def transform_raster_points(
     include_uncertainty: bool = True,
     tiles: DataFrame | None = None,
     knn_fallback: bool = False,
-    n_salt: int = 0,
 ) -> DataFrame:
     """The full raster semantics over a cells-as-points DataFrame.
 
@@ -100,7 +99,6 @@ def transform_raster_points(
         include_uncertainty=include_uncertainty,
         precedence="count",  # W2: raster stacking order
         knn_fallback=knn_fallback,
-        n_salt=n_salt,
     )
     value = F.col("value")
     sep = F.col("sep")

@@ -3,32 +3,25 @@
 Spark-first re-expression of the reference's ``transform_dataset``
 (core.py:357-464). The reference loops regions in the driver and calls
 PROJ per region; here the whole thing is a declarative DataFrame plan
-with THREE physical strategies sharing one semantics:
+with TWO physical strategies sharing one semantics:
 
 sql (DEFAULT, engine/transform_sql.py) — the whole region loop as
     broadcast hash joins + whole-stage-codegen column math: cover-slot
     prune join [J1], literal-codegen ray-cast PIP [J2], pre-combined
     grid corner joins + bilinear expressions [J3/A4], ord-ascending
-    slot coalesce [W1]. ZERO shuffles, ZERO Python crossings; heavy
-    page columns never leave Tungsten rows.
+    slot coalesce [W1] or count-literal ranking [W2], kNN edge fill
+    [J8]. ZERO shuffles, ZERO Python crossings; heavy page columns
+    never leave Tungsten rows.
 
 broadcast — fused mapInArrow kernel: the region loop runs in numpy
     over Arrow batches, grids shipped once per executor via
-    sc.broadcast (the PROJ-grid-cache analog). Routes J8 kNN edge
-    fallback and W2 count precedence, which the SQL plan can't express
-    without extra passes.
+    sc.broadcast (the PROJ-grid-cache analog). It takes the two
+    requests the SQL plan cannot: catalogs whose literal PIP CASE is
+    past the codegen budget, and caller-supplied tile DataFrames. W1
+    and W2 are the same overwrite loop in a different region order;
+    W2 first counts each region's valid rows in one extra pass.
 
-cogroup — salted cogroup against the (grid_id, cell5) tile side
-    table, for grid working sets beyond broadcast budget:
-
-    points --cell5/cell9--> ⋈ broadcast(fine region cover)  [J1 prune]
-           cogroup (region_id, cell5[, salt]) with region tile bundles
-               -> ONE pandas kernel: ray-cast PIP [J2] +
-                  per-step bilinear [J3/J4/J8] + ordered sum [A4]
-           groupBy key -> precedence winner              [W1/W2]
-           ⋈ back to points on key                        [enrichment]
-
-All strategies end in the same finalize contract: F1 coverage, the F4
+Both strategies end in the same finalize contract: F1 coverage, the F4
 axis-flip matrix, F5 round(3), F6 CATZOC, J6 uncertainty, the
 output-frame z-correction — plus the horizontal-CRS pre-step
 (spatial/crs.py) when the input is projected or foreign-frame.
@@ -49,10 +42,8 @@ Scale notes (100 TB / 10^12 rows):
 - the prune join uses a FINE-res polygon cover (broadcast, a few
   hundred rows) so non-member points mostly skip the expensive math;
   exactness still comes from the exact PIP.
-- kernel strategies: each tile bundle ships once per cogroup/executor,
-  not once per point row; the hot-key problem (famous coordinates) is
-  handled by explicit salting (pmod(xxhash64(key), n_salt)) with AQE
-  skew-join as backstop.
+- the kernel ships each regional grid once per executor, not once per
+  point row, and never shuffles the driving table.
 - J5 sampled mode (transform_points_sampled) transforms O(distinct
   fine cells) and equi-joins back — the cheapest path when exact
   per-point PIP is not required.
@@ -61,48 +52,18 @@ Scale notes (100 TB / 10^12 rows):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..datums import catalog, pipeline as pl
 from ..grids import bilinear, tiler
 from ..spatial import cells, crs as hcrs, pip
+from . import transform_sql as tsql
 from .inputs import local_df
 from .transform_sql import _d
 
-DEFAULT_N_SALT = 8
-
-
-# --------------------------------------------------------------------
-# dimension tables (driver-built, broadcast at join time)
-# --------------------------------------------------------------------
-
-def region_cover_df(spark: SparkSession, res: int = cells.FINE_RES) -> DataFrame:
-    """(region_id, region_ord, cell5, cell_r) — the J1 prune dimension.
-
-    Fine-res cells tighten the prune (fewer non-member rows reach the
-    kernel); each row also carries the COARSE parent cell, the
-    tile-bundle cogroup key."""
-    rows = []
-    for r in catalog.REGIONS:
-        for c in pip.polygon_cover(list(r.polygon), res):
-            rows.append(
-                (r.region_id, r.region_ord, int(cells.parent(c, cells.COARSE_RES)),
-                 int(c))
-            )
-    return local_df(
-        spark, rows, "region_id string, region_ord int, cell5 long, _cellr long"
-    )
-
-
-def steps_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFrame:
-    """(region_id, region_ord, step_ord, grid_id, sign) per region."""
-    rows = catalog.region_steps(from_datum, to_datum)
-    return local_df(
-        spark, rows,
-        "region_id string, region_ord int, step_ord int, grid_id string, sign double",
-    )
+STRATEGIES = ("sql", "broadcast")
 
 
 def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFrame:
@@ -118,115 +79,85 @@ def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFr
     return local_df(spark, rows, "region_id string, unc double, pipeline_str string")
 
 
-def tile_bundles_df(spark: SparkSession, tiles: DataFrame,
-                    from_datum: str, to_datum: str) -> DataFrame:
-    """Right side of the transform cogroup: per (region_id, cell5),
-    one row per pipeline step carrying that step's tile lattice +
-    sign/order — the whole regional pipeline for a cell in one group."""
-    steps = steps_df(spark, from_datum, to_datum)
-    return tiles.join(F.broadcast(steps), "grid_id").select(
-        "region_id", "cell5", "step_ord", "sign",
-        "lon0", "lat0", "dlon", "dlat", "nx", "ny", "values",
-    )
-
-
 # --------------------------------------------------------------------
-# broadcast strategy: zero-shuffle fused kernel over mapInPandas
+# broadcast strategy: zero-shuffle fused kernel over mapInArrow
 # --------------------------------------------------------------------
 
-def _bundle_payload(spark: SparkSession, tiles: DataFrame,
-                    from_datum: str, to_datum: str):
-    """Collect the per-region step tiles into plain dicts for
-    broadcast: {region_id: [(step_ord, sign, {cell5: tile_tuple})]}.
+def _grid_payload(from_datum: str, to_datum: str,
+                  tiles: DataFrame | None = None, grid_defs: list | None = None):
+    """The kernel's grids as plain dicts for broadcast:
+    {region_id: [(sign, {cell5: tile})]} in pipeline step order, with
+    tile = (lon0, lat0, dlon, dlat, nx, ny, values).
 
     This is the Spark analog of PROJ's grid cache: the regional grids
-    needed by one job are a bounded, reusable working set (VDatum
-    grids are MBs) — shipping them once per executor beats shuffling
-    every point row to the tiles. The cogroup strategy remains for
-    grid sets beyond broadcast budget."""
-    rows = tile_bundles_df(spark, tiles, from_datum, to_datum).collect()
-    by_region: dict = {}
-    for r in rows:
-        step = by_region.setdefault(r["region_id"], {}).setdefault(
-            (r["step_ord"], r["sign"]), {}
-        )
-        step[r["cell5"]] = (
-            r["lon0"], r["lat0"], r["dlon"], r["dlat"], r["nx"], r["ny"],
-            np.asarray(r["values"], dtype=np.float64),
-        )
-    return {
-        rid: [(o, s, tiles_by_cell) for (o, s), tiles_by_cell in
-              sorted(steps.items())]
-        for rid, steps in by_region.items()
-    }
-
-
-def _fixture_payload(from_datum: str, to_datum: str):
-    """Same payload as :func:`_bundle_payload` but built directly from
-    the catalog's grid definitions in driver-side numpy — no Spark job.
-
-    ``_bundle_payload`` launched a createDataFrame → join → collect job
-    costing 0.8-2.6 s of FIXED driver time per transform call, which
-    capped N→4N scaling (Amdahl) in round 1. The result is cached per
-    (catalog version, datum pair): the grid working set is immutable
-    for a catalog version, exactly like PROJ's process-wide grid cache.
-    """
+    needed by one job are a bounded, reusable working set (VDatum grids
+    are MBs) — shipping them once per executor beats shuffling every
+    point row to the tiles. The tile rows come from one collect of the
+    caller's ``tiles`` (TILE_SCHEMA) filtered to the pipeline's grids,
+    or else from ``tiler.tile_rows`` over ``grid_defs`` or the catalog's
+    fixture grids, in driver-side numpy with no Spark job. The catalog
+    payload is cached per (catalog version, datum pair): the grid
+    working set is immutable for a catalog version, like PROJ's
+    process-wide grid cache."""
     key = (catalog.catalog_version(), from_datum.lower(), to_datum.lower())
-    hit = _FIXTURE_PAYLOAD_CACHE.get(key)
-    if hit is not None:
-        return hit
-    defs = {gd.grid_id: gd for gd in tiler.fixture_grid_defs()}
-    by_region: dict = {}
-    for region_id, _ord, step_ord, grid_id, sign in catalog.region_steps(
-        from_datum, to_datum
-    ):
-        step = by_region.setdefault(region_id, {}).setdefault(
-            (step_ord, sign), {}
+    cacheable = tiles is None and grid_defs is None
+    if cacheable and key in _PAYLOAD_CACHE:
+        return _PAYLOAD_CACHE[key]
+    steps = catalog.region_steps(from_datum, to_datum)
+    needed = sorted({grid_id for _rid, _o, _s, grid_id, _sign in steps})
+    if tiles is not None:
+        rows = (tiles.filter(F.col("grid_id").isin(needed))
+                .select(*tiler.TILE_SCHEMA.names).collect())
+    else:
+        defs = {gd.grid_id: gd for gd in (
+            grid_defs if grid_defs is not None else tiler.fixture_grid_defs())}
+        # a grid absent from the set leaves its steps tile-less, hence
+        # invalid everywhere — as a tile table without that grid does
+        rows = [row for g in needed if g in defs for row in tiler.tile_rows(defs[g])]
+    by_grid: dict = {}
+    for grid_id, cell5, lon0, lat0, dlon, dlat, nx, ny, values in rows:
+        by_grid.setdefault(grid_id, {})[cell5] = (
+            lon0, lat0, dlon, dlat, nx, ny, np.asarray(values, dtype=np.float64),
         )
-        for row in tiler.tile_rows(defs[grid_id]):
-            # row layout matches TILE_SCHEMA:
-            # (grid_id, cell5, lon0, lat0, dlon, dlat, nx, ny, values)
-            step[row[1]] = (
-                row[2], row[3], row[4], row[5], row[6], row[7],
-                np.asarray(row[8], dtype=np.float64),
-            )
-    payload = {
-        rid: [(o, s, tiles_by_cell) for (o, s), tiles_by_cell in
-              sorted(steps.items())]
-        for rid, steps in by_region.items()
-    }
-    _FIXTURE_PAYLOAD_CACHE[key] = payload
+    payload: dict = {}
+    for region_id, _ord, _step, grid_id, sign in steps:
+        payload.setdefault(region_id, []).append((sign, by_grid.get(grid_id, {})))
+    if cacheable:
+        _PAYLOAD_CACHE[key] = payload
     return payload
 
 
-_FIXTURE_PAYLOAD_CACHE: dict = {}
+_PAYLOAD_CACHE: dict = {}
 
 
 def make_broadcast_kernel(
-    key_col: str,
-    key_type: str,
     polygons: dict[str, list[tuple[float, float]]],
     covers: dict[str, np.ndarray],      # region -> sorted fine-cell ids
-    bc_bundles,                         # sc.broadcast(_bundle_payload output)
+    bc_bundles,                         # sc.broadcast(_grid_payload output)
     region_ords: dict[str, int],
     n_steps: dict[str, int],
     knn_fallback: bool,
-    emit: str,    # "passthrough" | "winner" (W1) | "per_region" (W2)
+    order: list[str],
     x_col: str = "x",
     y_col: str = "y",
 ):
-    """mapInPandas kernel mirroring the reference's region loop
-    (core.py:421-453) — regions in catalog order, later regions
+    """mapInArrow kernels mirroring the reference's region loop
+    (core.py:421-453) — regions visited in ``order``, later regions
     overwrite — vectorized numpy per Arrow batch, no shuffle.
+
+    ``order`` is the precedence: ascending ``region_ord`` is W1; W2
+    sorts by (valid count, region_ord), the tie rule of the SQL path's
+    ``greatest(named_struct('c', count, 'o', ord, …))``.
+
+    Returns ``(passthrough, count)``. ``passthrough`` appends region_id,
+    region_ord and sep to each input batch; ``count`` emits one
+    (region_id, n) row per region and batch, n = the region's valid
+    rows — the W2 pre-pass (order plays no part in it).
 
     The grid payload arrives as an EXPLICIT Spark broadcast (not a
     closure capture): the pickled task command stays small and the
     payload lands once per executor via the broadcast machinery,
     instead of being re-deserialized per task."""
-    out_schema = (
-        f"{key_col} {key_type}, region_id string, region_ord int, sep_total double"
-    )
-    order = sorted(region_ords, key=lambda r: region_ords[r])
 
     def _region_sep(region_id, xs, ys, c5s, idx):
         inside = pip.contains(polygons[region_id], xs[idx], ys[idx])
@@ -236,8 +167,10 @@ def make_broadcast_kernel(
         steps = bc_bundles.value.get(region_id, [])
         if len(steps) != n_steps.get(region_id, -1):
             return idx, np.full(len(idx), np.nan)
+        # zero steps (identity pipeline, e.g. mllw → 'noaa chart
+        # datum'): in-polygon points get sep 0, NOT out-of-coverage
         total = np.zeros(len(idx))
-        for _ord, sign, tiles_by_cell in steps:
+        for sign, tiles_by_cell in steps:
             v = np.full(len(idx), np.nan)
             for c5 in np.unique(c5s[idx]):
                 m = c5s[idx] == c5
@@ -250,14 +183,21 @@ def make_broadcast_kernel(
             total = total + sign * v  # pipeline order, float64
         return idx, total
 
-    def _winner_arrays_np(xs, ys, c5s, c9s):
+    def _region_loop(batch):
+        names = batch.schema.names
+        xs = batch.column(names.index(x_col)).to_numpy(zero_copy_only=False)
+        ys = batch.column(names.index(y_col)).to_numpy(zero_copy_only=False)
+        xs = np.asarray(xs, dtype=np.float64)
+        ys = np.asarray(ys, dtype=np.float64)
+        c9s = cells.encode_np(xs, ys, cells.FINE_RES)
+        c5s = cells.encode_np(xs, ys, cells.COARSE_RES)
         n = len(xs)
         best_sep = np.full(n, np.nan)
         best_ord = np.full(n, -1, dtype=np.int32)
         best_code = np.full(n, -1, dtype=np.int32)  # index into `order`
-        for code, rid in enumerate(order):  # ascending ord = W1
-            cand = np.isin(c9s, covers[rid])
-            idx = np.flatnonzero(cand)
+        n_valid = np.zeros(len(order), dtype=np.int64)
+        for code, rid in enumerate(order):
+            idx = np.flatnonzero(np.isin(c9s, covers[rid]))
             if len(idx) == 0:
                 continue
             idx, total = _region_sep(rid, xs, ys, c5s, idx)
@@ -268,26 +208,20 @@ def make_broadcast_kernel(
             best_sep[upd] = total[ok]
             best_ord[upd] = region_ords[rid]
             best_code[upd] = code
-        return best_code, best_ord, best_sep
+            n_valid[code] = len(upd)
+        return best_code, best_ord, best_sep, n_valid
 
-    def arrow_passthrough(it):
-        """mapInArrow kernel: heavy input columns pass through as raw
-        Arrow buffers (no pandas object materialization — measured 4×
-        collapse at 32 workers otherwise); string outputs are built in
-        Arrow C++ via dictionary take."""
+    def passthrough(it):
+        """Heavy input columns pass through as raw Arrow buffers (no
+        pandas object materialization — measured 4× collapse at 32
+        workers otherwise); string outputs are built in Arrow C++ via
+        dictionary take."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         region_dict = pa.array(order, type=pa.string())
         for batch in it:
-            names = batch.schema.names
-            xs = batch.column(names.index(x_col)).to_numpy(zero_copy_only=False)
-            ys = batch.column(names.index(y_col)).to_numpy(zero_copy_only=False)
-            xs = np.asarray(xs, dtype=np.float64)
-            ys = np.asarray(ys, dtype=np.float64)
-            c9s = cells.encode_np(xs, ys, cells.FINE_RES)
-            c5s = cells.encode_np(xs, ys, cells.COARSE_RES)
-            best_code, best_ord, best_sep = _winner_arrays_np(xs, ys, c5s, c9s)
+            best_code, best_ord, best_sep, _ = _region_loop(batch)
             member = best_code >= 0
             codes = pa.array(
                 np.where(member, best_code, 0).astype(np.int32),
@@ -298,142 +232,49 @@ def make_broadcast_kernel(
             sep_col = pa.array(best_sep, mask=~member)
             yield pa.RecordBatch.from_arrays(
                 list(batch.columns) + [region_col, ord_col, sep_col],
-                names + ["region_id", "region_ord", "sep"],
+                batch.schema.names + ["region_id", "region_ord", "sep"],
             )
 
-    def _winner_arrays(pdf, xs, ys, c5s, c9s):
-        n = len(pdf)
-        best_sep = np.full(n, np.nan)
-        best_ord = np.full(n, -1, dtype=np.int32)
-        best_region = np.full(n, None, dtype=object)
-        for rid in order:  # ascending ord: overwrite = W1
-            cand = np.isin(c9s, covers[rid])
-            idx = np.flatnonzero(cand)
-            if len(idx) == 0:
-                continue
-            idx, total = _region_sep(rid, xs, ys, c5s, idx)
-            if total is None or len(idx) == 0:
-                continue
-            ok = np.isfinite(total)
-            upd = idx[ok]
-            best_sep[upd] = total[ok]
-            best_ord[upd] = region_ords[rid]
-            best_region[upd] = rid
-        return best_region, best_ord, best_sep
+    def count(it):
+        import pyarrow as pa
 
-    if emit == "passthrough":
-        return arrow_passthrough, out_schema
+        region_col = pa.array(order, type=pa.string())
+        for batch in it:
+            n_valid = _region_loop(batch)[3]
+            yield pa.RecordBatch.from_arrays(
+                [region_col, pa.array(n_valid)], ["region_id", "n"]
+            )
 
-    def fn(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            xs = pdf[x_col].to_numpy(dtype=np.float64)
-            ys = pdf[y_col].to_numpy(dtype=np.float64)
-            c9s = cells.encode_np(xs, ys, cells.FINE_RES)
-            c5s = cells.encode_np(xs, ys, cells.COARSE_RES)
-            if emit == "winner":
-                best_region, best_ord, best_sep = _winner_arrays(
-                    pdf, xs, ys, c5s, c9s
-                )
-                member = best_ord >= 0
-                yield pd.DataFrame(
-                    {
-                        key_col: pdf[key_col].to_numpy()[member],
-                        "region_id": best_region[member],
-                        "region_ord": best_ord[member],
-                        "sep_total": best_sep[member],
-                    }
-                )
-            else:  # per_region rows for count-ranked precedence (W2)
-                parts = []
-                for rid in order:
-                    cand = np.isin(c9s, covers[rid])
-                    idx = np.flatnonzero(cand)
-                    if len(idx) == 0:
-                        continue
-                    idx, total = _region_sep(rid, xs, ys, c5s, idx)
-                    if total is None or len(idx) == 0:
-                        continue
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                key_col: pdf[key_col].to_numpy()[idx],
-                                "region_id": rid,
-                                "region_ord": region_ords[rid],
-                                "sep_total": total,
-                            }
-                        )
-                    )
-                if parts:
-                    yield pd.concat(parts, ignore_index=True)
-
-    return fn, out_schema
-
-
-# --------------------------------------------------------------------
-# cogroup strategy kernel: PIP + bilinear steps + ordered sum
-# --------------------------------------------------------------------
-
-def make_region_kernel(
-    key_col: str,
-    key_type: str,
-    polygons: dict[str, list[tuple[float, float]]],
-    n_steps: dict[str, int],
-    knn_fallback: bool,
-):
-    out_schema = (
-        f"{key_col} {key_type}, region_id string, region_ord int, sep_total double"
-    )
-    cols = [key_col, "region_id", "region_ord", "sep_total"]
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame({c: pd.Series(dtype=t) for c, t in zip(
-                cols, ["object", "object", "int32", "float64"])})
-        region_id = left["region_id"].iat[0]
-        xs = left["x"].to_numpy(dtype=np.float64)
-        ys = left["y"].to_numpy(dtype=np.float64)
-        inside = pip.contains(polygons[region_id], xs, ys)
-        expected = n_steps.get(region_id, 0)
-        if expected == 0:
-            # zero-step (identity) pipeline — datum pairs with equal
-            # step lists but different names (e.g. mllw → 'noaa chart
-            # datum') compile to []; the reference runs the empty PROJ
-            # pipeline as identity, so in-polygon points get sep 0,
-            # NOT out-of-coverage
-            total = np.zeros(len(left))
-        elif len(right) != expected:
-            # a step's tile is missing for this cell ⇒ outside grid
-            # coverage (PROJ-inf semantics, core.py:445-446)
-            total = np.full(len(left), np.nan)
-        else:
-            total = np.zeros(len(left))
-            for t in right.sort_values("step_ord").itertuples(index=False):
-                v = bilinear.interp_tile(
-                    float(t.lon0), float(t.lat0), float(t.dlon), float(t.dlat),
-                    int(t.nx), int(t.ny),
-                    np.asarray(t.values, dtype=np.float64),
-                    xs, ys, knn_fallback=knn_fallback,
-                )
-                total = total + float(t.sign) * v  # pipeline order, float64
-        sep = np.where(inside, total, np.nan)
-        return pd.DataFrame(
-            {
-                key_col: left[key_col],
-                "region_id": left["region_id"],
-                "region_ord": left["region_ord"],
-                "sep_total": sep,
-            }
-        )
-
-    return fn, out_schema
+    return passthrough, count
 
 
 # --------------------------------------------------------------------
 # the engine
 # --------------------------------------------------------------------
+
+def _resolve_specs(from_datum, to_datum, input_crs: str,
+                   output_frame: str | None):
+    """Resolve datum specs to catalog datum names. Specs may be EPSG
+    ints, WKT, (horizontal, vertical) tuples or names (reference
+    vypercrs.py:685-812); a horizontal component on the input side sets
+    ``input_crs`` (unless the caller chose one), on the output side the
+    output frame (unless the caller chose one).
+
+    Returns (from_datum, to_datum, input_crs, output_frame)."""
+    if not isinstance(from_datum, str) or from_datum.lower() not in pl.DATUM_DEFINITION:
+        from ..datums import resolve as _resolve
+
+        from_datum, in_horiz = _resolve.resolve_vertical(from_datum, "input")
+        if in_horiz is not None and input_crs == "nad83s":
+            input_crs = in_horiz
+    if not isinstance(to_datum, str) or to_datum.lower() not in pl.DATUM_DEFINITION:
+        from ..datums import resolve as _resolve
+
+        to_datum, out_horiz = _resolve.resolve_vertical(to_datum, "output")
+        if out_horiz is not None and output_frame is None:
+            output_frame = hcrs.CRS_FRAME[out_horiz]
+    return from_datum, to_datum, input_crs, output_frame
+
 
 def transform_points(
     spark: SparkSession,
@@ -450,8 +291,7 @@ def transform_points(
     include_lineage: bool = False,
     precedence: str = "list",  # "list" = W1 (points), "count" = W2 (raster)
     knn_fallback: bool = False,
-    n_salt: int = 0,
-    strategy: str = "sql",  # "sql" | "broadcast" | "cogroup"
+    strategy: str = "sql",  # "sql" | "broadcast"
     input_crs: str = "nad83s",
     output_frame: str | None = None,
     grid_defs: list | None = None,
@@ -465,6 +305,10 @@ def transform_points(
       none), sep (applied separation), z_out (rounded 3, null if
       uncovered and not allowed), unc (if requested), covered flag,
       pipeline_str (if include_lineage).
+
+    ``key_col`` names the caller's row key. Neither strategy joins
+    results back by key, so the engine does not read it; it stays in
+    the signature for the callers that pass it.
 
     Horizontal CRS handling (reference core.py:166-248, 437-445):
       input_crs     — the catalog CRS the x/y (and 3D-frame z) values
@@ -490,52 +334,26 @@ def transform_points(
                    few dozen crossing edges — janino's 64 KB method
                    limit; transform_sql.sql_strategy_within_budget).
       broadcast  — fused mapInArrow kernel, grids as an explicit Spark
-                   broadcast. Needed for J8 kNN and W2 count ranking.
-      cogroup    — salted cogroup join against the tile side table, for
-                   grid working sets beyond broadcast budget.
+                   broadcast; zero shuffle for W1 and W2.
     """
-    if strategy not in ("sql", "broadcast", "cogroup"):
-        raise ValueError(
-            f"strategy {strategy!r} not one of ('sql', 'broadcast', 'cogroup')"
-        )
-    # datum specs may be EPSG ints, WKT, (horizontal, vertical) tuples
-    # or names (reference vypercrs.py:685-812); a horizontal component
-    # on the input side sets input_crs, on the output side the frame
-    if not isinstance(from_datum, str) or from_datum.lower() not in pl.DATUM_DEFINITION:
-        from ..datums import resolve as _resolve
-
-        from_datum, in_horiz = _resolve.resolve_vertical(from_datum, "input")
-        if in_horiz is not None and input_crs == "nad83s":
-            input_crs = in_horiz
-    if not isinstance(to_datum, str) or to_datum.lower() not in pl.DATUM_DEFINITION:
-        from ..datums import resolve as _resolve
-
-        to_datum, out_horiz = _resolve.resolve_vertical(to_datum, "output")
-        if out_horiz is not None and output_frame is None:
-            from ..spatial import crs as _hc
-
-            output_frame = _hc.CRS_FRAME[out_horiz]
-    # the SQL strategy now covers W2 count precedence and J8 kNN edge
-    # fill (round-3); only a caller-supplied TILE DataFrame (no driver-
-    # side grid definitions to compile into the broadcast dims) still
-    # routes to the Python-kernel strategies
-    if strategy == "sql" and tiles is not None and grid_defs is None:
+    if strategy not in STRATEGIES:
+        raise ValueError(f"strategy {strategy!r} not one of {STRATEGIES}")
+    from_datum, to_datum, input_crs, output_frame = _resolve_specs(
+        from_datum, to_datum, input_crs, output_frame
+    )
+    # the SQL plan compiles driver-side grid definitions into its
+    # broadcast dims, so a caller-supplied TILE DataFrame (no grid_defs)
+    # routes to the kernel. So do catalogs past the expression budget
+    # (round-5): the SQL strategy bakes a PIP ray-cast CASE over the
+    # whole catalog into every slot; past transform_sql.PIP_CASE_BUDGET
+    # janino rejects the method and Spark silently degrades to
+    # interpreted evaluation, while the kernel's plan size is O(1) in
+    # catalog complexity.
+    if strategy == "sql" and (
+        (tiles is not None and grid_defs is None)
+        or not tsql.sql_strategy_within_budget()
+    ):
         strategy = "broadcast"
-    # expression-budget auto-route (round-5): the SQL strategy bakes a
-    # PIP ray-cast CASE over the whole catalog into every slot; past
-    # the measured codegen budget (transform_sql.PIP_CASE_BUDGET —
-    # general polygons hit janino's 64 KB method limit at a few dozen
-    # crossing edges) janino rejects the method and Spark silently
-    # degrades to interpreted evaluation. Route those catalogs to the
-    # broadcast kernel, where the region loop is numpy per Arrow batch
-    # and plan size is O(1) in catalog complexity.
-    if strategy == "sql":
-        from . import transform_sql as _tsql_budget
-
-        if not _tsql_budget.sql_strategy_within_budget():
-            strategy = "broadcast"
-    if grid_defs is not None and tiles is None and strategy != "sql":
-        tiles = tiler.build_tile_df(spark, grid_defs)
     # F4 sign matrix: depth-axis INPUT negates z before the pipeline,
     # depth-axis OUTPUT negates after (core.py:397-403, 441-449)
     flips = pl.axis_flips(from_datum, to_datum)
@@ -599,19 +417,17 @@ def transform_points(
     null_steps = pl.compile_steps(from_datum, to_datum, "R", "G")
 
     if strategy == "sql" and null_steps is not None:
-        from . import transform_sql
-
         # transform_points_sql adds cell5 itself, in its one SQL-text
         # projection
-        enriched = transform_sql.transform_points_sql(
+        enriched = tsql.transform_points_sql(
             spark, points, from_datum, to_datum, x_col, y_col,
             grid_defs=grid_defs, knn_fallback=knn_fallback,
             precedence=precedence, grid_cache_token=grid_cache_token,
         )
         return _emit(_finalize(
-            enriched, None, spark, from_datum, to_datum, z_col, flips,
+            enriched, spark, from_datum, to_datum, z_col, flips,
             allow_points_outside_coverage, include_uncertainty,
-            include_lineage, key_col, dz_corr,
+            include_lineage, dz_corr,
         ))
 
     base = points.withColumn("cell5", cells.encode_col(x, y, cells.COARSE_RES))
@@ -631,151 +447,60 @@ def transform_points(
             out = out.withColumn("pipeline_str", F.lit(None).cast("string"))
         return _emit(out)
 
-    fixture_tiles = tiles is None
-    if tiles is None and strategy == "cogroup":
-        tiles = tiler.build_tile_df(spark)
-
+    # broadcast strategy: the whole region loop runs inside one
+    # mapInArrow pass over the input partitions, every input column
+    # riding through Arrow
     polygons = {r.region_id: list(r.polygon) for r in catalog.REGIONS}
     region_ords = {r.region_id: r.region_ord for r in catalog.REGIONS}
     n_steps = {
         r.region_id: len(pl.compile_steps(from_datum, to_datum, r.region_id, r.geoid) or [])
         for r in catalog.REGIONS
     }
-    key_type = dict(points.dtypes)[key_col]
+    covers = {
+        r.region_id: np.array(
+            sorted(pip.polygon_cover(list(r.polygon), cells.FINE_RES)),
+            dtype=np.int64,
+        )
+        for r in catalog.REGIONS
+    }
+    bc_bundles = spark.sparkContext.broadcast(
+        _grid_payload(from_datum, to_datum, tiles, grid_defs)
+    )
 
-    if strategy == "broadcast":
-        # zero-shuffle path: regional grids fit the broadcast budget
-        # (the PROJ-grid-cache analog), so the whole region loop runs
-        # inside one mapInPandas pass over the input partitions.
-        covers = {
-            r.region_id: np.array(
-                sorted(pip.polygon_cover(list(r.polygon), cells.FINE_RES)),
-                dtype=np.int64,
-            )
-            for r in catalog.REGIONS
-        }
-        if fixture_tiles:
-            # catalog grids: pure driver-side numpy, cached — no Spark job
-            payload = _fixture_payload(from_datum, to_datum)
-        else:
-            payload = _bundle_payload(spark, tiles, from_datum, to_datum)
-        bc_bundles = spark.sparkContext.broadcast(payload)
-        if precedence == "list":
-            # passthrough: W1 winner resolved inside the kernel (the
-            # region overwrite loop) and every input column rides
-            # through Arrow — the WHOLE transform is one zero-shuffle
-            # mapInPandas pass
-            from pyspark.sql import types as T
-
-            kernel, _ = make_broadcast_kernel(
-                key_col, key_type, polygons, covers, bc_bundles,
-                region_ords, n_steps, knn_fallback, "passthrough",
-                x_col, y_col,
-            )
-            out_fields = list(base.schema.fields) + [
-                T.StructField("region_id", T.StringType(), True),
-                T.StructField("region_ord", T.IntegerType(), True),
-                T.StructField("sep", T.DoubleType(), True),
-            ]
-            enriched = base.mapInArrow(kernel, T.StructType(out_fields))
-            return _emit(_finalize(
-                enriched, None, spark, from_datum, to_datum, z_col, flips,
-                allow_points_outside_coverage, include_uncertainty,
-                include_lineage, key_col, dz_corr,
-            ))
-        kernel, out_schema = make_broadcast_kernel(
-            key_col, key_type, polygons, covers, bc_bundles,
-            region_ords, n_steps, knn_fallback, "per_region",
-            x_col, y_col,
-        )
-        narrow = points.select(
-            F.col(key_col), x.alias(x_col), y.alias(y_col)
-        )
-        per_region = narrow.mapInPandas(kernel, out_schema)
-        valid = per_region.filter(
-            F.col("sep_total").isNotNull() & ~F.isnan(F.col("sep_total"))
-        )
-    else:
-        cover = region_cover_df(spark)
-        bundles = tile_bundles_df(spark, tiles, from_datum, to_datum)
-        kernel, out_schema = make_region_kernel(
-            key_col, key_type, polygons, n_steps, knn_fallback
-        )
-        narrow = points.select(
-            F.col(key_col),
-            x.alias("x"),
-            y.alias("y"),
-            cells.encode_col(x, y, cells.FINE_RES).alias("_cellr"),
-        )
-        cand = narrow.join(F.broadcast(cover), "_cellr", "inner")
-
-        if n_salt and n_salt > 1:
-            cand = cand.withColumn(
-                "salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salt)).cast("int")
-            )
-            bundles_s = bundles.withColumn(
-                "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-            )
-            group_keys = ["region_id", "cell5", "salt"]
-        else:
-            bundles_s = bundles
-            group_keys = ["region_id", "cell5"]
-
-        per_region = (
-            cand.groupBy(*group_keys)
-            .cogroup(bundles_s.groupBy(*group_keys))
-            .applyInPandas(kernel, out_schema)
-        )
-        # Arrow converts pandas NaN to Spark NULL, and isnan(NULL) is
-        # false — both checks are required or out-of-coverage candidates
-        # survive into the precedence aggregation
-        valid = per_region.filter(
-            F.col("sep_total").isNotNull() & ~F.isnan(F.col("sep_total"))
+    def kernels(order):
+        return make_broadcast_kernel(
+            polygons, covers, bc_bundles, region_ords, n_steps,
+            knn_fallback, order, x_col, y_col,
         )
 
+    order = sorted(region_ords, key=region_ords.get)  # W1
     if precedence == "count":
-        # W2: region with the most valid points wins (ties → later ord)
-        counts = valid.groupBy("region_id").agg(F.count("*").alias("_cnt"))
-        ranked = valid.join(F.broadcast(counts), "region_id")
-        winner_struct = F.struct(
-            F.col("_cnt"), F.col("region_ord"), F.col("region_id"), F.col("sep_total")
+        # W2: one count pass over the same loop (the SQL path's count
+        # literals, raster.py:214-216 pre-scan), summed on the driver,
+        # then the overwrite loop runs count-ascending so the region
+        # with the most valid rows writes last
+        n_valid = dict.fromkeys(order, 0)
+        counted = base.select(x.alias(x_col), y.alias(y_col)).mapInArrow(
+            kernels(order)[1], "region_id string, n long"
         )
-        winners = (
-            ranked.groupBy(key_col)
-            .agg(F.max(winner_struct).alias("_w"))
-            .select(
-                key_col,
-                F.col("_w.region_id").alias("region_id"),
-                F.col("_w.region_ord").alias("region_ord"),
-                F.col("_w.sep_total").alias("sep"),
-            )
-        )
-    else:
-        # W1: last region in catalog order with valid data wins
-        winner_struct = F.struct(
-            F.col("region_ord"), F.col("region_id"), F.col("sep_total")
-        )
-        winners = (
-            valid.groupBy(key_col)
-            .agg(F.max(winner_struct).alias("_w"))
-            .select(
-                key_col,
-                F.col("_w.region_id").alias("region_id"),
-                F.col("_w.region_ord").alias("region_ord"),
-                F.col("_w.sep_total").alias("sep"),
-            )
-        )
-
+        for rid, n in counted.collect():
+            n_valid[rid] += n
+        order = sorted(order, key=lambda rid: (n_valid[rid], region_ords[rid]))
+    out_schema = T.StructType(list(base.schema.fields) + [
+        T.StructField("region_id", T.StringType(), True),
+        T.StructField("region_ord", T.IntegerType(), True),
+        T.StructField("sep", T.DoubleType(), True),
+    ])
+    enriched = base.mapInArrow(kernels(order)[0], out_schema)
     return _emit(_finalize(
-        base, winners, spark, from_datum, to_datum, z_col, flips,
+        enriched, spark, from_datum, to_datum, z_col, flips,
         allow_points_outside_coverage, include_uncertainty,
-        include_lineage, key_col, dz_corr,
+        include_lineage, dz_corr,
     ))
 
 
 def _finalize(
-    base: DataFrame,
-    winners: DataFrame | None,
+    out: DataFrame,
     spark: SparkSession,
     from_datum: str,
     to_datum: str,
@@ -784,14 +509,11 @@ def _finalize(
     allow_points_outside_coverage: bool,
     include_uncertainty: bool,
     include_lineage: bool,
-    key_col: str,
     dz_corr: str | None = None,
 ) -> DataFrame:
-    """Attach winners back to the driving table (no-op for the
-    passthrough strategy, which already carries them) and apply the
-    output contracts: F1 coverage, F4 flip matrix, F5 round(3),
+    """Apply the output contracts to a frame that carries the winning
+    region_id/region_ord/sep: F1 coverage, F4 flip matrix, F5 round(3),
     F6 CATZOC, J6 unc, output-frame z-correction (core.py:443-444)."""
-    out = base.join(winners, key_col, "left") if winners is not None else base
     # one projection built from SQL text: each Column-DSL operator is a
     # py4j round-trip
     corr = dz_corr if dz_corr is not None else _d(0.0)
@@ -878,20 +600,10 @@ def transform_points_sampled(
     """
     # resolve datum specs (EPSG/WKT/tuples) exactly as the full path
     # does so the frame detection below sees the resolved CRS
-    input_crs = kwargs.pop("input_crs", "nad83s")
-    output_frame = kwargs.pop("output_frame", None)
-    if not isinstance(from_datum, str) or from_datum.lower() not in pl.DATUM_DEFINITION:
-        from ..datums import resolve as _resolve
-
-        from_datum, in_horiz = _resolve.resolve_vertical(from_datum, "input")
-        if in_horiz is not None and input_crs == "nad83s":
-            input_crs = in_horiz
-    if not isinstance(to_datum, str) or to_datum.lower() not in pl.DATUM_DEFINITION:
-        from ..datums import resolve as _resolve
-
-        to_datum, out_horiz = _resolve.resolve_vertical(to_datum, "output")
-        if out_horiz is not None and output_frame is None:
-            output_frame = hcrs.CRS_FRAME[out_horiz]
+    from_datum, to_datum, input_crs, output_frame = _resolve_specs(
+        from_datum, to_datum, kwargs.pop("input_crs", "nad83s"),
+        kwargs.pop("output_frame", None),
+    )
     in_crs = hcrs.validate_crs(input_crs)
     in_frame = hcrs.CRS_FRAME[in_crs]
     frame_mode = in_crs != "nad83s" or (

@@ -1,9 +1,9 @@
 """Pure-JVM transform strategy: broadcast joins + column math only.
 
-Third execution strategy for :func:`transform_points` (alongside the
-Python-kernel ``broadcast`` and ``cogroup`` strategies): the ENTIRE
-region loop of the reference (core.py:421-453) — candidate pruning,
-exact point-in-polygon, per-step bilinear interpolation, ordered step
+The default execution strategy of :func:`transform_points` (the other
+is the Python-kernel ``broadcast`` strategy): the ENTIRE region loop
+of the reference (core.py:421-453) — candidate pruning, exact
+point-in-polygon, per-step bilinear interpolation, ordered step
 sum, last-write-wins precedence — is expressed as Catalyst column
 expressions and broadcast hash joins. No Python worker, no Arrow
 socket crossing, no shuffle: one whole-stage-codegen pass over the
@@ -43,9 +43,13 @@ union over the steps' nodes preserves the PROJ-inf coverage semantics
 step's surrounding corner is NaN, which is iff any combined corner is
 NaN. Steps on distinct lattices stay separate join groups.
 
-Limits: list precedence only (W1; raster count-ranking W2 needs a
-global count aggregate) and no kNN edge fallback (J8) — both keep the
-Python-kernel strategies. `transform_points(strategy=...)` routes.
+Precedence is W1 (coalesce over ord-ascending slots) or W2 (one extra
+aggregate pass for per-region valid counts, baked in as literals); J8
+kNN edge fill is a candidate-cell join plus an argmin expression.
+Limits, where `transform_points` routes to the broadcast kernel: a
+caller-supplied tile DataFrame (there are no grid definitions to
+compile into the dims) and catalogs whose literal PIP CASE exceeds
+PIP_CASE_BUDGET.
 
 Reference parity: region loop core.py:421-453, PROJ-inf coverage
 semantics core.py:445-446, bilinear grid sampling core.py:283-311.
@@ -57,7 +61,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datums import catalog, pipeline as pl
@@ -216,7 +220,7 @@ def knn_cells_pdf(grids: dict, max_candidates: int = 64):
     valid mask. Any node that can ever be kept satisfies
     d ≤ m + r (the fill gate), so the window search returns exactly
     the brute-force candidate set (parity pytest:
-    tests/test_transform_sql.py::test_knn_candidate_build_bucketed).
+    tests/test_transform_engine.py::test_knn_candidate_build_bucketed).
     """
     recs: list[dict] = []
     cmax = 0
@@ -343,15 +347,28 @@ def cell_sql(x: str, y: str, res: int) -> str:
 
 
 def pip_literal_sql(x: str, y: str, poly: list[tuple[float, float]]) -> str:
-    """String twin of :func:`pip_literal_expr` over column NAMES.
+    """Even-odd ray cast with the polygon baked in as literals, as SQL
+    text over column NAMES — pure whole-stage-codegen arithmetic, the
+    exact mirror of spatial.pip.contains (half-open crossing
+    (y1 <= y) != (y2 <= y), strict x < intersection, identical float64
+    op order; D-suffixed double literals).
 
-    Why strings (r6): the Column-DSL builders cost one py4j
-    round-trip per operator — the kNN-edge plan build spent 1.8 s of
-    its 2.1 s in ~11k socket round-trips (cProfile), with
-    slot_pip_expr + bilinear_expr the dominant leaves.  One F.expr per
-    staged column replaces hundreds of round-trips; the parsed tree is
-    operator-identical (double literals via the D suffix, same
-    parenthesization), so results and codegen are unchanged."""
+    Axis-aligned rectangles collapse to 4 comparisons with the SAME
+    half-open boundary semantics as the ray cast: a vertical edge
+    spanning [y0, y1] crosses iff (y0<=y) != (y1<=y) ⇔ y ∈ [y0, y1),
+    and the point is inside iff it is left of the far edge but not of
+    the near one ⇔ x ∈ [x0, x1). This keeps the generated method small
+    enough to JIT, which matters more than it reads: past 8 KB of
+    bytecode the whole fused stage drops to the JVM interpreter.
+
+    Horizontal edges can never satisfy the crossing test, so they are
+    dropped at generation time (also keeps ANSI mode away from the
+    zero division).
+
+    Why text (r6): a Column-DSL builder costs one py4j round-trip per
+    operator — the kNN-edge plan build spent 1.8 s of its 2.1 s in ~11k
+    socket round-trips; one F.expr per staged column replaces hundreds
+    of them."""
     ring = pip._ring(poly)
     rect = _axis_rect(ring)
     if rect is not None:
@@ -370,49 +387,6 @@ def pip_literal_sql(x: str, y: str, poly: list[tuple[float, float]]) -> str:
         count = (f"({count} + (CASE WHEN ({crosses} AND ({x} < {xint})) "
                  f"THEN 1 ELSE 0 END))")
     return f"(({count} % 2) = 1)"
-
-
-def pip_literal_expr(x: Column, y: Column,
-                     poly: list[tuple[float, float]]) -> Column:
-    """Even-odd ray cast with the polygon baked in as literals — pure
-    whole-stage-codegen arithmetic, the exact mirror of
-    spatial.pip.contains (half-open crossing (y1 <= y) != (y2 <= y),
-    strict x < intersection, identical float64 op order).
-
-    Axis-aligned rectangles collapse to 4 comparisons with the SAME
-    half-open boundary semantics as the ray cast: a vertical edge
-    spanning [y0, y1] crosses iff (y0<=y) != (y1<=y) ⇔ y ∈ [y0, y1),
-    and the point is inside iff it is left of the far edge but not of
-    the near one ⇔ x ∈ [x0, x1). This keeps the generated method small
-    enough to JIT, which matters more than it reads: past 8 KB of
-    bytecode the whole fused stage drops to the JVM interpreter.
-
-    Horizontal edges can never satisfy the crossing test, so they are
-    dropped at generation time (also keeps ANSI mode away from the
-    zero division).
-    """
-    ring = pip._ring(poly)
-    rect = _axis_rect(ring)
-    if rect is not None:
-        x0, y0, x1, y1 = rect
-        # ray-cast equivalence for an axis rect: the two vertical
-        # edges at x0 and x1 each cross iff y ∈ [y0, y1); the point is
-        # inside iff exactly the x1 edge is hit (x < x1) and not the
-        # x0 edge (x >= x0)
-        return (
-            (F.lit(y0) <= y) & (y < F.lit(y1))
-            & (F.lit(x0) <= x) & (x < F.lit(x1))
-        )
-    count: Column = F.lit(0)
-    for i in range(len(ring) - 1):
-        x1, y1 = float(ring[i, 0]), float(ring[i, 1])
-        x2, y2 = float(ring[i + 1, 0]), float(ring[i + 1, 1])
-        if y1 == y2:
-            continue
-        crosses = (F.lit(y1) <= y) != (F.lit(y2) <= y)
-        xint = F.lit(x1) + (y - F.lit(y1)) * F.lit(x2 - x1) / F.lit(y2 - y1)
-        count = count + F.when(crosses & (x < xint), F.lit(1)).otherwise(F.lit(0))
-    return count % 2 == 1
 
 
 # ------------------------------------------------------------------
@@ -439,7 +413,7 @@ PIP_CASE_BUDGET = 250
 
 def pip_case_cost() -> int:
     """Estimated codegen cost (in weighted comparison units, see the
-    budget note above) of ONE slot_pip_expr CASE over the current
+    budget note above) of ONE slot_pip_sql CASE over the current
     catalog."""
     total = 0
     for r in catalog.REGIONS:
@@ -461,21 +435,9 @@ def sql_strategy_within_budget() -> bool:
     return pip_case_cost() <= PIP_CASE_BUDGET
 
 
-def slot_pip_expr(x: Column, y: Column, rid: Column) -> Column:
+def slot_pip_sql(x: str, y: str, rid: str) -> str:
     """PIP for whichever region occupies a slot: a region-literal CASE
     over the catalog (null slot → null → invalid)."""
-    expr = None
-    for r in catalog.REGIONS:
-        branch = pip_literal_expr(x, y, list(r.polygon))
-        expr = (F.when(rid == r.region_id, branch) if expr is None
-                else expr.when(rid == r.region_id, branch))
-    if expr is None:
-        return F.lit(False)
-    return expr
-
-
-def slot_pip_sql(x: str, y: str, rid: str) -> str:
-    """String twin of :func:`slot_pip_expr` (see pip_literal_sql)."""
     if not catalog.REGIONS:
         return "false"
     whens = " ".join(
@@ -488,8 +450,9 @@ def slot_pip_sql(x: str, y: str, rid: str) -> str:
 
 def bilinear_sql(x: str, y: str, lon0: str, lat0: str, dlon: str, dlat: str,
                  v00: str, v01: str, v10: str, v11: str) -> str:
-    """String twin of :func:`bilinear_expr` — same float64 ops, same
-    parenthesization (left-assoc sum of the four corner terms)."""
+    """Same float64 expression as grids.bilinear.interp_tile (tx/ty
+    relative to the joined lattice cell's lower-left node; left-assoc
+    sum of the four corner terms)."""
     tx_ = f"(({x} - {lon0}) / {dlon} - FLOOR(({x} - {lon0}) / {dlon}))"
     ty_ = f"(({y} - {lat0}) / {dlat} - FLOOR(({y} - {lat0}) / {dlat}))"
     return (
@@ -497,23 +460,6 @@ def bilinear_sql(x: str, y: str, lon0: str, lat0: str, dlon: str, dlat: str,
         f" + {tx_} * (1.0D - {ty_}) * {v01}"
         f" + (1.0D - {tx_}) * {ty_} * {v10}"
         f" + {tx_} * {ty_} * {v11})"
-    )
-
-
-def bilinear_expr(
-    x: Column, y: Column,
-    lon0: Column, lat0: Column, dlon: Column, dlat: Column,
-    v00: Column, v01: Column, v10: Column, v11: Column,
-) -> Column:
-    """Same float64 expression as grids.bilinear.interp_tile (tx/ty
-    relative to the joined lattice cell's lower-left node)."""
-    tx = (x - lon0) / dlon - F.floor((x - lon0) / dlon)
-    ty = (y - lat0) / dlat - F.floor((y - lat0) / dlat)
-    return (
-        (F.lit(1.0) - tx) * (F.lit(1.0) - ty) * v00
-        + tx * (F.lit(1.0) - ty) * v01
-        + (F.lit(1.0) - tx) * ty * v10
-        + tx * ty * v11
     )
 
 
@@ -670,8 +616,8 @@ def transform_points_sql(
     grid_cache_token: str | None = None,
 ) -> DataFrame:
     """Enrich ``points`` with (cell5, region_id, region_ord, sep) via
-    the pure-JVM plan. Output contract matches the passthrough kernel
-    (transform.py ``emit='passthrough'``); transform._finalize applies
+    the pure-JVM plan. Output contract matches the broadcast kernel's
+    passthrough (transform.make_broadcast_kernel); transform._finalize applies
     flip/round/unc downstream.
 
     Round-3 extensions (previous limits, now lifted):

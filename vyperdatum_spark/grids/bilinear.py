@@ -2,9 +2,10 @@
 
 Replaces PROJ's ``vgridshift`` grid sampling (reference core.py:283-311
 delegates to ``Transformer.from_pipeline``; PROJ does bilinear reads of
-the GTX grid). Runs inside Arrow-batched pandas functions — one tile's
-node lattice in memory per cogroup, vectorized over all points of that
-(grid_id, cell) group. No per-row Python.
+the GTX grid). Runs inside the broadcast strategy's mapInArrow kernel
+— one tile's node lattice at a time, vectorized over all points of the
+batch in that (grid_id, cell). No per-row Python. The SQL strategy's
+``transform_sql.bilinear_sql`` is the same float64 expression.
 
 Semantics mirrored from the reference:
 - outside the node lattice -> NaN (PROJ returns inf outside grids,

@@ -1,6 +1,6 @@
 """Geospatial queries for the driver's correctness gate.
 
-Each query runs the REAL engine (region PIP join + cogrouped tile
+Each query runs the REAL engine (region PIP join + grid-corner
 bilinear) over points derived deterministically from the driver's
 ``events`` table; the paired oracle is closed-form ANSI SQL generated
 from the same catalog (analytic-plane grids ⇒ bilinear is exact, so
@@ -140,9 +140,7 @@ def transform_oracle_sql(from_datum: str, to_datum: str) -> str:
 def _transform_query(to_datum: str):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts = derived_points(spark, sf_dir)
-        out = tx.transform_points(
-            spark, pts, "ellipse", to_datum, key_col="pid", n_salt=8
-        )
+        out = tx.transform_points(spark, pts, "ellipse", to_datum, key_col="pid")
         return out.select("pid", "region_id", "z_out", "unc")
 
     return q
@@ -164,7 +162,7 @@ def q_geo_region_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # J1+J2+W1 region assignment, A2 per-region counts
     pts = derived_points(spark, sf_dir)
     out = tx.transform_points(spark, pts, "ellipse", "mllw", key_col="pid",
-                              include_uncertainty=False, n_salt=8)
+                              include_uncertainty=False)
     return (
         out.groupBy("region_id")
         .agg(
@@ -269,7 +267,7 @@ def q_geo_coverage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # F1/A3: covered vs outside-coverage accounting
     pts = derived_points(spark, sf_dir)
     out = tx.transform_points(spark, pts, "ellipse", "mllw", key_col="pid",
-                              include_uncertainty=False, n_salt=8)
+                              include_uncertainty=False)
     return out.agg(
         F.count("*").alias("n_total"),
         F.sum(F.col("covered").cast("long")).alias("n_covered"),
@@ -292,7 +290,7 @@ def q_geo_outside_catzoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = derived_points(spark, sf_dir)
     out = tx.transform_points(
         spark, pts, "ellipse", "mllw", key_col="pid",
-        allow_points_outside_coverage=True, n_salt=8,
+        allow_points_outside_coverage=True,
     )
     return out.select("pid", "region_id", "z_out", "unc")
 
@@ -312,7 +310,7 @@ def q_geo_chart_datum_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = derived_points(spark, sf_dir)
     out = tx.transform_points(
         spark, pts, "ellipse", "noaa chart datum", key_col="pid",
-        include_uncertainty=False, n_salt=8,
+        include_uncertainty=False,
     )
     return out.select("pid", "region_id", "z_out")
 
@@ -373,7 +371,7 @@ def q_geo_count_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = derived_points(spark, sf_dir)
     out = tx.transform_points(
         spark, pts, "ellipse", "mllw", key_col="pid",
-        include_uncertainty=False, precedence="count", n_salt=8,
+        include_uncertainty=False, precedence="count",
     )
     return out.select("pid", "region_id", "z_out")
 
