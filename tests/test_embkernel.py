@@ -1,22 +1,17 @@
-"""Broadcast-matrix embedding-scoring strategy (ops/embkernel):
-bit-exact parity with the literal-codegen path at fixture size, the
-auto-pick rule, and the dim=768 / k=256 scale case that the literal
-path cannot compile — run with codegen fallback disabled so a giant
-literal tree would fail loudly rather than fall back to the
-interpreter."""
+"""The broadcast-matrix Arrow kernels (ops/embkernel), the one
+embedding-scoring engine: zero-row inputs, and the dim=768 / k=256
+scale case — run with codegen fallback disabled so any giant
+generated expression would fail loudly rather than fall back to the
+interpreter.  Oracle parity of each op is pinned in
+tests/test_clustering.py, tests/test_webtext_ops.py and
+tests/test_oracle_gate.py."""
 
-import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
 from vyperdatum_spark.ops import clustering as C
 from vyperdatum_spark.ops import similarity as sim
-from vyperdatum_spark.ops.embkernel import (
-    LITERAL_DIM_BUDGET,
-    LITERAL_TERM_BUDGET,
-    pick_strategy,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,61 +21,17 @@ def embs(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet")
 
 
-def test_pick_strategy_rule():
-    assert pick_strategy(8, 16) == "literal"       # 128 terms: literal
-    assert pick_strategy(8, 32) == "literal"       # 256 terms: literal
-    # 512 terms: compiles fine but the kernel is 2× faster per ROW
-    # (measured at 4M rows, BENCH/EMBKERNEL.md) — auto now follows
-    # the per-row crossover, not just the compile budget
-    assert pick_strategy(8, 64) == "broadcast"
-    assert pick_strategy(16, 64) == "broadcast"
-    assert pick_strategy(256, 768) == "broadcast"  # real model sizes
-    assert pick_strategy(2, 768) == "broadcast"    # dim alone busts it
-    assert pick_strategy(64, 64) == "broadcast"    # k×dim busts it
-    # explicit literal still honored up to the COMPILE budget
-    assert pick_strategy(8, 64, "literal") == "literal"
-    # measured janino-failure config (BENCH/EMBKERNEL.md) must route
-    assert pick_strategy(16, 128) == "broadcast"
-    assert pick_strategy(256, 768, "literal") == "literal"  # explicit wins
-    with pytest.raises(ValueError):
-        pick_strategy(8, 64, "bogus")
-    # budget sanity: the largest literal plan the repo ships today
-    # (16 centroids × dim 64) must stay on the literal side of auto
-    assert 16 * 64 <= LITERAL_TERM_BUDGET and 64 <= LITERAL_DIM_BUDGET
-
-
-def test_kmeans_broadcast_parity(spark, embs):
-    """Same centroids, same clusters, bit-identical distances through
-    both strategies — and both match the DuckDB oracle."""
-    lit = (
-        C.kmeans_assign(embs, strategy="literal")
-        .toPandas().sort_values("vec_id").reset_index(drop=True)
-    )
-    bc = (
-        C.kmeans_assign(embs, strategy="broadcast")
-        .toPandas().sort_values("vec_id").reset_index(drop=True)
-    )
-    assert (lit["cluster"].values == bc["cluster"].values).all()
-    assert (lit["dist"].values == bc["dist"].values).all()  # bit-exact
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'"
-    )
-    oracle = con.execute(C.kmeans_assign_sql()).df()
-    assert (bc["cluster"].values == oracle["cluster"].values).all()
-    assert (bc["dist"].values == oracle["dist"].values).all()
-
-
-def test_ivf_trained_broadcast_parity(spark, embs):
-    lit = (
-        sim.ann_ivf_trained_topk(embs, strategy="literal")
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    bc = (
-        sim.ann_ivf_trained_topk(embs, strategy="broadcast")
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(lit, bc)
+@pytest.mark.parametrize(
+    "op", [C.kmeans_assign, sim.ann_ivf_trained_topk,
+           sim.semantic_dedup_trained],
+    ids=lambda op: op.__name__)
+def test_zero_row_input_gives_zero_row_frame(spark, embs, op):
+    """An empty input seeds an empty codebook; each trained op must
+    still build and return zero rows (as its DuckDB oracle does) with
+    the schema of a non-empty run."""
+    got = op(embs.limit(0))
+    assert got.collect() == []
+    assert got.dtypes == op(embs).dtypes
 
 
 def _big_model_df(spark, n=600, dim=768, seed=5):
@@ -97,7 +48,7 @@ def _big_model_df(spark, n=600, dim=768, seed=5):
 
 
 def _numpy_assign(mat, cents):
-    """Ordered-fold squared-L2 argmin — the engines' exact op order."""
+    """Ordered-fold squared-L2 argmin — the kernel's exact op order."""
     Cm = np.asarray(cents, dtype=np.float64)
     acc = np.zeros((mat.shape[0], Cm.shape[0]))
     for j in range(Cm.shape[1]):
@@ -108,12 +59,10 @@ def _numpy_assign(mat, cents):
 
 
 def test_dim768_k256_runs_without_codegen_fallback(spark):
-    """The round-4 weak: literal codegen cannot hold dim=768/k=256.
-    auto must route to the broadcast kernel and the whole job —
-    training aggregations included — must build and run with
+    """Real model size: the whole job — training aggregations
+    included — must build and run with
     spark.sql.codegen.fallback=false (no silent interpreter fallback,
     no janino blowup), matching a numpy replication exactly."""
-    assert pick_strategy(256, 768) == "broadcast"
     df, mat = _big_model_df(spark)
     old = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")

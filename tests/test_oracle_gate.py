@@ -1,9 +1,12 @@
-"""The geo half of the correctness gate, under pytest.
+"""The geo and embedding-scoring part of the correctness gate, under
+pytest.
 
-Every ``geo_*`` entry of ``__spark_entry__.queries_extended()`` runs at
-sf0.001 and must equal its ``oracle_sql_extended()`` DuckDB query:
-same row count, same column names, same order-insensitive values
-(``tools/check_oracles.py::canon``, NaN == NaN). Codegen is strict, as
+Every ``geo_*`` entry of ``__spark_entry__.queries_extended()``, plus
+the entries scored by the broadcast embedding kernel (``EMBEDDING``),
+runs at sf0.001 and must equal its ``oracle_sql_extended()`` DuckDB
+query: same row count, same column names, same order-insensitive
+values (``tools/check_oracles.py::canon``, NaN == NaN). The test keeps
+its ``geo`` name for stable test ids. Codegen is strict, as
 in ``tools/check_oracles.py``: a stage that exceeds janino's 64 KB
 method limit fails instead of silently running interpreted.
 """
@@ -26,6 +29,9 @@ if not os.path.isdir(SF_DIR):
 QUERIES = entry.queries_extended()
 ORACLES = entry.oracle_sql_extended()
 GEO = [name for name in QUERIES if name.startswith("geo_")]
+EMBEDDING = ["emb_kmeans", "ann_ivf_topk", "ann_ivf_trained_topk",
+             "dedup_semantic", "dedup_semantic_trained",
+             "doc_semantic_dedup", "hybrid_search_rrf"]
 
 FALLBACK = "spark.sql.codegen.fallback"
 
@@ -49,7 +55,7 @@ def strict_codegen(spark):
     spark.conf.set(FALLBACK, old)
 
 
-@pytest.mark.parametrize("name", GEO)
+@pytest.mark.parametrize("name", GEO + EMBEDDING)
 def test_geo_query_matches_oracle(spark, oracle_db, strict_codegen, name):
     got = QUERIES[name](spark, SF_DIR).toPandas()
     exp = oracle_db.execute(ORACLES[name]).df()

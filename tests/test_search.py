@@ -152,7 +152,7 @@ def test_hybrid_rrf_fuses_both_lists(spark, docs):
     vec_ids = {}
     for qid, terms in S.SEARCH_QUERIES:
         qv = np.array(S._query_embed_py(sorted(terms)))
-        # same left-to-right fold as the Spark leg's aggregate(zip_with)
+        # same left-to-right fold as the Spark leg's broadcast kernel
         dots = np.zeros(len(E))
         for j in range(E.shape[1]):
             dots += E[:, j] * qv[j]

@@ -175,11 +175,14 @@ def test_semantic_dedup_salted_parity(spark):
         similarity.semantic_dedup(df, salt=0)
 
 
-def test_semantic_dedup_trained_strategy_parity(spark):
+def test_semantic_dedup_trained_matches_oracle(spark):
     """SemDeDup over an in-job-trained k-means codebook (the paper's
-    actual flow): the literal-codegen and broadcast-Arrow-kernel
-    scoring strategies produce IDENTICAL verdicts, and the planted
-    near-duplicate family collapses to one keeper."""
+    actual flow): the kernel-scored verdicts equal the DuckDB oracle
+    (unrolled training CTEs + cosine-argmax assignment) row for row,
+    and the planted near-duplicate family collapses to one keeper."""
+    import duckdb
+    import pyarrow as pa
+
     rng = np.random.default_rng(41)
     vecs = rng.standard_normal((70, similarity.EMB_DIM)).astype(np.float32)
     for i in range(12):  # planted near-dup family
@@ -189,15 +192,22 @@ def test_semantic_dedup_trained_strategy_parity(spark):
         [(int(i), v.tolist()) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>",
     )
-    lit = (similarity.semantic_dedup_trained(
-        df, threshold=0.95, k_clusters=4, iters=2, strategy="literal")
+    got = (similarity.semantic_dedup_trained(
+        df, threshold=0.95, k_clusters=4, iters=2)
         .toPandas().sort_values("vec_id").reset_index(drop=True))
-    brd = (similarity.semantic_dedup_trained(
-        df, threshold=0.95, k_clusters=4, iters=2, strategy="broadcast")
-        .toPandas().sort_values("vec_id").reset_index(drop=True))
-    assert brd.equals(lit)
-    fam = lit[lit.vec_id.isin([9] + list(range(40, 52)))]
-    assert int(fam.keep.sum()) == 1 and bool(lit.loc[9, "keep"])
+    con = duckdb.connect()
+    con.register("embeddings", pa.table({
+        "vec_id": pa.array(np.arange(len(vecs)), pa.int64()),
+        "embedding": pa.array([v.tolist() for v in vecs],
+                              pa.list_(pa.float32())),
+    }))
+    exp = (con.execute(similarity.semantic_dedup_trained_sql(
+        threshold=0.95, k_clusters=4, iters=2)).df()
+        .sort_values("vec_id").reset_index(drop=True))
+    assert len(got) == len(vecs)
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    fam = got[got.vec_id.isin([9] + list(range(40, 52)))]
+    assert int(fam.keep.sum()) == 1 and bool(got.loc[9, "keep"])
 
 
 def test_ann_bruteforce_topk_is_exact(spark):

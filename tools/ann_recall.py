@@ -83,6 +83,7 @@ def _measure(spark, embs, n_vecs: int):
 
     from vyperdatum_spark.ops import clustering as C
     from vyperdatum_spark.ops import similarity as sim
+    from vyperdatum_spark.ops.embkernel import centroid_cos_broadcast_col
 
     exact = _topk_sets(
         sim.ann_bruteforce_topk(embs, n_queries=N_QUERIES, k=K), K
@@ -126,8 +127,7 @@ def _measure(spark, embs, n_vecs: int):
                      round(np_ / sim.N_CENTROIDS * n_vecs, 1)))
     kc, it = sim.N_CENTROIDS, 3
     cents = C.kmeans_train(embs, k=kc, iters=it)
-    ca_col = sim.trained_cos_array_col(
-        "embedding", sim.norm_spark_sql("embedding"), cents)
+    ca_col = centroid_cos_broadcast_col(embs, cents, "embedding")
     assigned = embs.select(
         F.col("vec_id"), ca_col.alias("_ca")
     ).select(
@@ -266,10 +266,15 @@ def main() -> None:
         "exactly the cluster-size distribution: when one semantic",
         "cluster holds a large corpus share, EITHER raise the centroid",
         "count so blocks subdivide (k ∝ √n keeps expected block work",
-        "flat), OR salt the hot block (split cell c into c×s",
-        "sub-blocks by a hash of the id, dedup within sub-blocks, then",
-        "one cross-sub-block pass on survivors).  The",
-        "measured distribution above is the input to that sizing.",
+        "flat), OR salt the hot cells.  The salt lever is",
+        "CODE since round 5: `semantic_dedup(salt=s)` gives side b a",
+        "deterministic xxhash64(id)%s sub-block key, replicates the",
+        "(id, emb, norm) a-projection s× across sub-blocks, and joins",
+        "on (cell, sub-block) — per-task pair work drops to block²/s",
+        "with the pair space (and output) exactly the unsalted one",
+        "(parity test with a planted 30-row hot cell at salt 2 and 5,",
+        "tests/test_webtext_ops.py::test_semantic_dedup_salted_parity).",
+        "The measured distribution above is the input to that sizing.",
         "",
     ]
     out_path = os.path.join(os.path.dirname(os.path.dirname(

@@ -4,18 +4,19 @@ Closes the honest gap in ``ops/similarity.py``: the IVF index there
 partitions by *seeded* centroids ("a production IVF trains these with
 k-means"); this module IS that trainer, expressed Spark-first:
 
-- **assignment** is pure literal column math — the k centroids are
-  baked as literal arrays, squared-L2 distance per centroid is a
-  ``zip_with``/``aggregate`` fold (same bit-exact discipline as
-  ``similarity.dot_col``), argmin is ``array_position(arr,
-  array_min(arr))`` (first match ⇒ lowest cluster wins ties).  Zero
-  shuffle, zero Python, whole-stage codegen.
+- **assignment** is one Arrow-batch kernel per scan against the
+  broadcast k×dim codebook (``ops/embkernel``): squared-L2 per
+  centroid is a left-to-right float64 fold (same bit-exact discipline
+  as ``similarity.dot_col``), argmin takes the first minimum (lowest
+  cluster wins ties).  Zero shuffle, no per-row Python, and the plan
+  does not grow with k×dim.
 - **update** is one map-side-combined partial aggregation per
   iteration (``groupBy(cluster).agg(sum(scaled dim_i) …)``) — each
   executor emits k×dim partial sums, the driver collects k tiny rows
-  and bakes the 1e-6-grid means as the next iteration's literals.  At
-  10^12 rows this is the canonical scale shape: per-iteration cost is
-  one scan + a k×dim-wide combine; nothing grows with n on the driver.
+  and broadcasts the 1e-6-grid means as the next iteration's
+  codebook.  At 10^12 rows this is the canonical scale shape:
+  per-iteration cost is one scan + a k×dim-wide combine; nothing
+  grows with n on the driver.
 - **determinism**: seeds are the k vectors with the smallest
   ``md5(cast(id as string))`` (portable to the DuckDB oracle), and
   every distance is a left-to-right double fold — the final
@@ -40,37 +41,12 @@ previous centroid (COALESCE in the oracle's update CTE).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EMB_DIM = 64
 K_CLUSTERS = 8
 N_ITERS = 3
-
-
-def sqdist_col(emb: str, cent: list[float]) -> Column:
-    """Squared L2 distance to a literal centroid over the column NAMED
-    ``emb``, as one UNROLLED arithmetic expression — plain element_at
-    math stays inside whole-stage codegen (a zip_with/aggregate HOF is
-    CodegenFallback, ~10× slower per row at training scale; same
-    device as ``similarity.centroid_cos_array_col``).  The left-assoc
-    sum ``0.0D + t1 + t2 + …`` is bit-identical to the oracle's
-    ``0.0 + list_reduce(list_transform(...), +)`` fold."""
-    terms = " + ".join(
-        f"(CAST(element_at({emb}, {i + 1}) AS DOUBLE) - {float(w)!r}D) * "
-        f"(CAST(element_at({emb}, {i + 1}) AS DOUBLE) - {float(w)!r}D)"
-        for i, w in enumerate(cent)
-    )
-    return F.expr(f"(0.0D + {terms})")
-
-
-def _assign_cols(emb: str, cents: list[list[float]]) -> tuple[Column, Column]:
-    """(cluster, sqdist) vs the literal centroid list.  array_position
-    returns the FIRST index holding the min ⇒ ties break to the lowest
-    cluster id, matching the oracle's ORDER BY dist, cluster."""
-    dists = F.array(*[sqdist_col(emb, c) for c in cents])
-    mind = F.array_min(dists)
-    return F.array_position(dists, mind).cast("int"), mind
 
 
 def seed_centroids(df: DataFrame, k: int, id_col: str,
@@ -87,44 +63,22 @@ def seed_centroids(df: DataFrame, k: int, id_col: str,
     return [[float(v) for v in r[emb_col]] for r in rows]
 
 
-def _cluster_col(df: DataFrame, emb_col: str, cents: list[list[float]],
-                 strategy: str) -> tuple[Column, Column]:
-    """(cluster, sqdist) via the resolved strategy — 'literal'
-    (unrolled codegen arithmetic, fastest at fixture model sizes) or
-    'broadcast' (Arrow-batch kernel vs a broadcast centroid matrix,
-    the dim=768/k=256 scale path; see ops/embkernel).  Both are
-    bit-identical (same float64 fold order, same first-min ties)."""
-    if strategy == "broadcast":
-        from .embkernel import kmeans_assign_broadcast_col
-
-        a = kmeans_assign_broadcast_col(df, cents, emb_col)
-        return a.getField("cluster"), a.getField("sqdist")
-    return _assign_cols(emb_col, cents)
-
-
 def kmeans_train(df: DataFrame, k: int = K_CLUSTERS, iters: int = N_ITERS,
                  id_col: str = "vec_id", emb_col: str = "embedding",
-                 dim: int = EMB_DIM,
-                 strategy: str = "auto") -> list[list[float]]:
+                 dim: int = EMB_DIM) -> list[list[float]]:
     """Lloyd's iterations; returns the trained centroid list (each a
     dim-long list of doubles rounded to 6 dp, except iteration-0 seeds
     which are the raw vectors).  ``iters`` assignments are implied;
     only ``iters - 1`` mean-updates run (the final assignment is the
-    caller's, e.g. ``kmeans_assign``).
+    caller's, e.g. ``kmeans_assign``)."""
+    from .embkernel import kmeans_assign_broadcast_col
 
-    ``strategy``: 'literal' | 'broadcast' | 'auto' — auto picks
-    literal codegen while k×dim fits the codegen budget and the
-    broadcast Arrow kernel beyond it (ops/embkernel.pick_strategy),
-    so per-iteration cost stops growing with k×dim compile time at
-    real embedding dimensions."""
-    from .embkernel import pick_strategy
-
-    strategy = pick_strategy(k, dim, strategy)
     cents = seed_centroids(df, k, id_col, emb_col)
     for _ in range(iters - 1):
-        cluster, _d = _cluster_col(df, emb_col, cents, strategy)
+        a = kmeans_assign_broadcast_col(df, cents, emb_col)
         means = (
-            df.select(cluster.alias("cluster"), F.col(emb_col).alias("e"))
+            df.select(a.getField("cluster").alias("cluster"),
+                      F.col(emb_col).alias("e"))
             .groupBy("cluster")
             .agg(*[
                 # exact integer sum of 1e-6-quantized components →
@@ -156,24 +110,21 @@ def kmeans_train(df: DataFrame, k: int = K_CLUSTERS, iters: int = N_ITERS,
 
 def kmeans_assign(df: DataFrame, k: int = K_CLUSTERS, iters: int = N_ITERS,
                   id_col: str = "vec_id", emb_col: str = "embedding",
-                  dim: int = EMB_DIM, strategy: str = "auto") -> DataFrame:
+                  dim: int = EMB_DIM) -> DataFrame:
     """Train, then return the final assignment — (id, cluster, dist)
-    with dist = round(sqrt(squared-L2), 6).  On the literal strategy
-    the returned plan is pure literal column math over one scan
-    (0 shuffles, codegen); on the broadcast strategy (auto-picked past
-    the codegen budget) the scoring is one Arrow-batch kernel per scan
-    — still one pass, still zero per-row Python.  Training cost is
-    ``iters - 1`` tiny map-side-combined aggregations either way."""
-    from .embkernel import pick_strategy
+    with dist = round(sqrt(squared-L2), 6).  The returned plan is one
+    Arrow-batch kernel over one scan: 0 shuffles, zero per-row Python.
+    Training cost is ``iters - 1`` tiny map-side-combined
+    aggregations."""
+    from .embkernel import kmeans_assign_broadcast_col
 
-    strategy = pick_strategy(k, dim, strategy)
     cents = kmeans_train(df, k=k, iters=iters, id_col=id_col,
-                         emb_col=emb_col, dim=dim, strategy=strategy)
-    cluster, sqd = _cluster_col(df, emb_col, cents, strategy)
+                         emb_col=emb_col, dim=dim)
+    a = kmeans_assign_broadcast_col(df, cents, emb_col)
     return df.select(
         F.col(id_col),
-        cluster.alias("cluster"),
-        F.round(F.sqrt(sqd), 6).alias("dist"),
+        a.getField("cluster").alias("cluster"),
+        F.round(F.sqrt(a.getField("sqdist")), 6).alias("dist"),
     )
 
 

@@ -1,51 +1,33 @@
-"""Broadcast-matrix Arrow kernels for embedding scoring — the
-model-size scale path for k-means assignment and IVF probing.
+"""Broadcast-matrix Arrow kernels: the one embedding-scoring engine
+for k-means assignment, IVF probing, SemDeDup cell assignment and the
+hybrid-search vector leg.
 
-The literal-codegen strategy (`ops/clustering.sqdist_col`,
-`ops/similarity.trained_cos_array_col`) bakes the k×dim codebook into
-unrolled arithmetic: at fixture sizes (k=8..16, dim=64) it is the
-fastest possible plan — zero Python, whole-stage codegen — but the
-generated expression grows as k×dim terms and a fresh janino compile
-runs per literal set (per Lloyd's iteration).  At real training-
-pipeline model sizes (dim=768, k in the hundreds) it blows the repo's
-documented codegen budgets (COVERAGE.md expression-budget note: past
-~8 KB of bytecode per method the fused stage drops to the
-interpreter; 64 KB is a hard janino limit) and compile time grows
-with k×dim×iterations.
+The codebook (or query matrix) is an EXPLICIT Spark broadcast — one
+numpy matrix per executor, the same device as
+`engine/transform.py::make_broadcast_kernel`'s grid payload — and
+scoring is an Arrow-batched UDF: vectorized numpy over each batch,
+never per-row Python.  Per-batch cost is a dim-step loop of n×k fused
+multiply-adds; plan-build and compile cost are O(1) in the model size,
+so dim=768 / k=256 codebooks run under ``codegen.fallback=false``
+(an unrolled k×dim expression tree cannot: janino fails past ~1,024
+terms).
 
-This module is the other strategy: the codebook is an EXPLICIT Spark
-broadcast (one numpy matrix per executor, the same device as
-`engine/transform.py::make_broadcast_kernel`'s grid payload), and
-scoring is an Arrow-batched pandas UDF — vectorized numpy over each
-batch, never per-row Python.  Per-batch cost is a dim-step loop of
-n×k fused multiply-adds; plan-build and compile cost are O(1) in the
-model size.
+Exactness vs the DuckDB oracles (``clustering.kmeans_ctes``,
+``similarity.centroid_cos_array_sql`` and the ``*_sql`` twins): every
+accumulation runs in float64 in the SAME left-to-right dimension
+order as the oracle folds —
 
-Bit-exactness vs the literal path (so parity is EXACT, not
-approximate): every accumulation runs in float64 in the SAME
-left-to-right dimension order as the literal expressions —
-
-- squared L2: literal is ``0.0D + (x₁-w₁)² + (x₂-w₂)² + …`` (left
-  assoc); the kernel starts from zeros and adds the j-th term for all
+- squared L2: the oracle folds ``0.0 + (x₁-w₁)² + (x₂-w₂)² + …``; the
+  kernel starts from zeros and adds the j-th term for all
   (row, centroid) pairs at once, j = 1..dim — identical op order per
   accumulator element.
-- cosine: literal is ``(0.0D + w₁x₁ + …) / (nrm · cnorm)`` with nrm
-  the left fold of xⱼ² and cnorm folded left-to-right in Python; the
-  kernel mirrors all three folds.
+- cosine: ``(0.0 + w₁x₁ + …) / (nrm · cnorm)`` with nrm the left fold
+  of xⱼ² and cnorm folded left-to-right (or passed in, for codebooks
+  whose oracle bakes pre-computed norms); the kernel mirrors all
+  three folds.
 - argmin/argmax ties: ``np.argmin``/``np.argmax`` return the FIRST
   extremal index — the same rule as ``array_position(arr,
-  array_min(arr))``.
-
-Strategy auto-pick (`pick_strategy`): literal iff the codebook is
-BOTH compilable (dim ≤ LITERAL_DIM_BUDGET, k×dim ≤
-LITERAL_TERM_BUDGET — janino limits) AND per-row faster (k×dim ≤
-LITERAL_PERF_TERMS — the measured large-n crossover, r5 re-pinned on
-array<float> input with the arrow_udf kernel: at 8M rows × local[16]
-the unrolled literal scores 8.8M rows/s at k×dim=128 and 5.2M at 256
-vs the kernel's 4.7M/2.4M, but from 512 the kernel is AHEAD — 2.9M
-vs 2.3M at 8×64 and 2.6× ahead at 16×64, checksums identical;
-BENCH/EMBKERNEL.md).  Explicit 'literal' is honored up to the
-compile budget.
+  array_min(arr))`` and the oracles' ``ORDER BY dist, cluster``.
 """
 
 from __future__ import annotations
@@ -61,40 +43,11 @@ try:  # Spark 4.1+: pyarrow in/out, no pandas detour (see _flat below)
 except ImportError:  # pragma: no cover — older clusters
     _arrow_udf = None
 
-# the budget is EMPIRICAL, not theoretical: the deeply-nested
-# left-assoc folds compile by recursive descent in janino, so past a
-# size the compile itself dies (measured: k=16 × dim=128 sqdist fails
-# janino and silently falls back to the interpreter — 4.5× slower
-# than the Arrow kernel; BENCH/EMBKERNEL.md).  The budget is pinned
-# to the largest family the repo ships and has always compiled: the
-# 16-centroid × dim-64 seeded-IVF cosine array (1024 terms) and the
-# 8×64 k-means sqdist array.
-LITERAL_DIM_BUDGET = 64
-LITERAL_TERM_BUDGET = 1024
-# the PERF threshold is the measured per-row crossover (module
-# docstring): past ~256 unrolled terms the Arrow kernel out-scores
-# whole-stage codegen per ROW, not just per plan-compile
-LITERAL_PERF_TERMS = 256
-
-STRATEGIES = ("literal", "broadcast", "auto")
-
-
-def pick_strategy(k: int, dim: int, strategy: str = "auto") -> str:
-    """Resolve 'auto' on the codegen budget AND the measured per-row
-    crossover; validate explicit picks."""
-    if strategy not in STRATEGIES:
-        raise ValueError(f"strategy {strategy!r} not one of {STRATEGIES}")
-    if strategy != "auto":
-        return strategy
-    if dim <= LITERAL_DIM_BUDGET and k * dim <= LITERAL_PERF_TERMS:
-        return "literal"
-    return "broadcast"
-
 
 def _stack(emb: pd.Series, dim: int) -> np.ndarray:
     """n×dim float64 matrix from an Arrow list column's pandas Series.
     Widening float32 → float64 is exact, and happens BEFORE any
-    arithmetic — mirroring the literal path's CAST(… AS DOUBLE)."""
+    arithmetic — mirroring the oracles' CAST(… AS DOUBLE)."""
     if len(emb) == 0:
         return np.empty((0, dim), dtype=np.float64)
     return np.vstack(emb.to_numpy()).astype(np.float64, copy=False)
@@ -109,7 +62,7 @@ def _flat(emb: pa.Array, dim: int) -> np.ndarray:
     per 10k×64 batch, >60% of the kernel's python time — while
     `flatten().reshape()` is one offsets-aware buffer view (~0.3 ms).
     float32 → float64 widening is exact and happens before any
-    arithmetic, mirroring the literal path's CAST(… AS DOUBLE)."""
+    arithmetic, mirroring the oracles' CAST(… AS DOUBLE)."""
     flat = emb.flatten().to_numpy(zero_copy_only=False)
     return flat.reshape(-1, dim).astype(np.float64, copy=False)
 
@@ -127,7 +80,10 @@ def kmeans_assign_broadcast_col(df: DataFrame, cents: list[list[float]],
                                 emb_col: str = "embedding") -> Column:
     """struct<cluster:int, sqdist:double> column: nearest trained
     centroid per row, computed against a broadcast k×dim matrix.
-    Exactly equals `clustering._assign_cols` on the same centroids."""
+    Exactly equals the squared-L2 argmin of `clustering.kmeans_ctes`
+    on the same centroids."""
+    if not cents:  # seeded from a zero-row input: nothing to score
+        return F.lit(None).cast("struct<cluster:int, sqdist:double>")
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast(np.asarray(cents, dtype=np.float64))
     dim = len(cents[0])
@@ -136,7 +92,7 @@ def kmeans_assign_broadcast_col(df: DataFrame, cents: list[list[float]],
         C = bc.value                       # k×dim
         n = E.shape[0]
         acc = np.zeros((n, C.shape[0]))
-        for j in range(C.shape[1]):        # dimension order = literal fold order
+        for j in range(C.shape[1]):        # dimension order = oracle fold order
             d = E[:, j, None] - C[None, :, j]
             acc += d * d
         if n == 0:
@@ -166,9 +122,9 @@ def dot_array_broadcast_col(df: DataFrame, vecs: list[list[float]],
                             emb_col: str = "embedding") -> Column:
     """array<double> of dot(emb, vec_i) against a broadcast matrix of
     fixed vectors (e.g. the hybrid-search query embeddings) — exactly
-    equals the per-vector ``aggregate(zip_with(emb, vec, *), 0.0, +)``
-    left fold: the accumulator adds the j-th product for every
-    (row, vec) pair at once, j = 1..dim."""
+    equals the oracle's per-vector ``0.0 + list_reduce(…, +)`` left
+    fold: the accumulator adds the j-th product for every (row, vec)
+    pair at once, j = 1..dim."""
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast(np.asarray(vecs, dtype=np.float64))
     dim = len(vecs[0])
@@ -196,18 +152,21 @@ def centroid_cos_broadcast_col(df: DataFrame, cents: list[list[float]],
                                emb_col: str = "embedding",
                                cnorms: list[float] | None = None) -> Column:
     """array<double> column of cosine(emb, centroid_i) against a
-    broadcast codebook — exactly equals
-    `similarity.trained_cos_array_col` on the same centroids.
+    broadcast codebook — exactly equals the oracles' cosine folds
+    (``similarity.centroid_cos_array_sql``, the trained ``cellcos``
+    CTEs) on the same centroids.
 
     ``cnorms`` overrides the centroid norms for codebooks whose
-    literal twin bakes PRE-COMPUTED norms (the seeded
+    oracle bakes PRE-COMPUTED norms (the seeded
     `similarity.CENTROID_NORMS` are numpy pairwise sums, which can
     differ from this left-to-right fold by an ulp)."""
+    if not cents:  # seeded from a zero-row input: nothing to score
+        return F.lit(None).cast("array<double>")
     sc = df.sparkSession.sparkContext
     C = np.asarray(cents, dtype=np.float64)
     if cnorms is None:
-        # centroid norms: the trained literal path folds these
-        # left-to-right in driver Python — do the identical fold once
+        # centroid norms: the trained oracle folds these left to
+        # right (list_reduce) — do the identical fold once
         cn = np.empty(C.shape[0])
         for i, cent in enumerate(cents):
             acc = 0.0

@@ -341,37 +341,21 @@ def hybrid_search_rrf(df: DataFrame,
         "qid", id_col, F.col("rank").alias("rank_bm"))
     emb = doc_hash_embed(df, id_col=id_col, text_col=text_col)
     qvs = [_query_embed_py(sorted(terms)) for _qid, terms in queries]
-    from .embkernel import dot_array_broadcast_col, pick_strategy
+    from .embkernel import dot_array_broadcast_col
 
-    if pick_strategy(len(queries), EMBED_DIM) == "broadcast":
-        # all-queries-at-once Arrow matmul (|q|×dim is past the
-        # measured per-row literal crossover at the shipped dims);
-        # bit-identical to the per-query zip_with fold
-        qid_arr = F.array(*[F.lit(q) for q, _t in queries])
-        vec_cand = (
-            emb.select(
-                F.col(id_col),
-                F.posexplode(
-                    dot_array_broadcast_col(emb, qvs, "embedding")
-                ).alias("_qi", "dot"),
-            )
-            .select(F.element_at(qid_arr, F.col("_qi") + 1).alias("qid"),
-                    id_col, "dot")
+    # all queries at once: one Arrow matmul against the broadcast
+    # |q|×dim query matrix, exploded back to (qid, doc, dot)
+    qid_arr = F.array(*[F.lit(q) for q, _t in queries])
+    vec_cand = (
+        emb.select(
+            F.col(id_col),
+            F.posexplode(
+                dot_array_broadcast_col(emb, qvs, "embedding")
+            ).alias("_qi", "dot"),
         )
-    else:
-        per_q = []
-        for (qid, _terms), qv in zip(queries, qvs):
-            arr = F.array(*[F.lit(v) for v in qv])
-            dot = F.aggregate(
-                F.zip_with(F.col("embedding"), arr, lambda e, q: e * q),
-                F.lit(0.0), lambda a, v: a + v)
-            per_q.append(F.struct(F.lit(qid).alias("qid"),
-                                  dot.alias("dot")))
-        vec_cand = (
-            emb.select(F.col(id_col), F.explode(F.array(*per_q)).alias("q"))
-            .select(F.col("q.qid").alias("qid"), id_col,
-                    F.col("q.dot").alias("dot"))
-        )
+        .select(F.element_at(qid_arr, F.col("_qi") + 1).alias("qid"),
+                id_col, "dot")
+    )
     vec = _topk_per_qid(vec_cand, id_col, "dot", k).select(
         "qid", id_col, F.col("rank").alias("rank_v")
     )

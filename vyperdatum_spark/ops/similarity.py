@@ -53,17 +53,6 @@ def norm_col(a: Column) -> Column:
     return F.sqrt(dot_col(a, a))
 
 
-def norm_spark_sql(a: str) -> str:
-    """Spark-SQL text that parses to exactly ``norm_col(F.col(a))``:
-    same zip_with/aggregate catalyst ops, same 0.0 double seed, same
-    left-to-right accumulation — bit-identical results."""
-    return (
-        f"sqrt(aggregate(zip_with({a}, {a}, "
-        f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0.0D, (acc, v) -> acc + v))"
-    )
-
-
 def cosine_col(a: Column, b: Column) -> Column:
     return dot_col(a, b) / (norm_col(a) * norm_col(b))
 
@@ -297,55 +286,6 @@ CENTROIDS = _centroids()
 CENTROID_NORMS = [float(np.sqrt((c * c).sum())) for c in CENTROIDS]
 
 
-_CA_CACHE: dict = {}
-
-
-def centroid_cos_array_col(emb: str, nrm: str) -> Column:
-    """array<double> of cosine(emb, centroid_i) — literal column math.
-
-    Takes SQL FRAGMENT STRINGS (a column name, or the full norm
-    expression from ``norm_spark_sql``). Driver-cost engineering
-    (measured at dim=64, 16 centroids): building the tree
-    term-by-term with Column operators costs ~3 py4j round-trips per
-    term (~14 s); parsing the whole array as ONE F.expr string makes
-    ANTLR the bottleneck (~20 s on the 46 KB expression). Sixteen
-    per-centroid F.expr parses (~3 KB each) cost well under a second,
-    and the finished Column is memoized per JVM so repeated query
-    builds in the same driver pay nothing. Literals carry the D
-    suffix (Spark parses bare decimals as DECIMAL) and centroid
-    weights are fixed-point formatted (they are round(6) values), so
-    the doubles match the F.lit construction bit-for-bit.
-
-    Callers must pass the norm INLINE (``norm_spark_sql(emb)``), not
-    a staged column name: staging the norm in its own projection
-    stops CollapseProject from folding it, and the resulting extra
-    Project chain fuses into the downstream window-sort's
-    ``addToSorter`` codegen past janino's 64 KB method limit (the
-    strict ``codegen.fallback=false`` gate raises). Inlined, the
-    plan keeps the single-projection shape whole-stage codegen
-    compiles, and runtime subexpression elimination shares the 16
-    sqrt-dot copies anyway."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    key = (emb, nrm, id(sc) if sc is not None else None)
-    hit = _CA_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cols = []
-    for i, cent in enumerate(CENTROIDS):
-        dot = " + ".join(
-            f"{float(w):.6f}D * CAST(element_at({emb}, {j + 1}) AS DOUBLE)"
-            for j, w in enumerate(cent)
-        )
-        cols.append(F.expr(f"(0.0D + {dot}) / ({nrm} * {CENTROID_NORMS[i]!r}D)"))
-    out = F.array(*cols)
-    for k in [k for k in _CA_CACHE if k[2] != key[2]]:
-        del _CA_CACHE[k]  # drop Columns bound to a previous JVM
-    _CA_CACHE[key] = out
-    return out
-
-
 def centroid_cos_array_sql(emb: str, nrm: str) -> str:
     parts = []
     for i, cent in enumerate(CENTROIDS):
@@ -398,31 +338,23 @@ def _ivf_body(base: DataFrame, id_col: str, emb_col: str,
     )
 
 
-def ann_ivf_topk(df: DataFrame, id_col: str = "vec_id",
-                 emb_col: str = "embedding",
-                 n_queries: int = 10, k: int = 3,
-                 nprobe: int = N_PROBE,
-                 strategy: str = "auto") -> DataFrame:
-    """IVF approximate top-k: vectors land in the inverted list of
-    their nearest centroid; a query probes its ``nprobe`` closest
-    lists; exact cosine only within the probed lists.
+def _cell_assign(df: DataFrame, id_col: str, emb_col: str,
+                 centroids: list[list[float]] | None = None) -> DataFrame:
+    """(id, emb, nrm, _ca, cell): cosine to every centroid (``_ca``,
+    one broadcast Arrow-kernel pass, ops/embkernel) and the nearest
+    centroid's 1-based id (first max ⇒ lowest cell wins ties) —
+    shared by IVF ANN and SemDeDup.
 
-    Scale shape: assignment is one scoring pass (literal codegen or
-    broadcast Arrow kernel per ``pick_strategy`` — the seeded 16×64
-    codebook is past the measured per-row crossover, so auto takes
-    the kernel; bit-identical either way); the probe join is a
-    (centroid_id) equi-join — candidates per query ≈ nprobe/C of the
-    corpus, never all-pairs; raising nprobe trades cost for recall.
-    """
-    from .embkernel import centroid_cos_broadcast_col, pick_strategy
+    ``centroids`` None → the seeded module codebook, scored with the
+    same pre-computed ``CENTROID_NORMS`` its oracle bakes; a runtime
+    codebook (k-means output) folds its norms left to right, like the
+    trained oracles."""
+    from .embkernel import centroid_cos_broadcast_col
 
-    if pick_strategy(N_CENTROIDS, EMB_DIM, strategy) == "broadcast":
-        ca = centroid_cos_broadcast_col(
-            df, [[float(w) for w in c] for c in CENTROIDS], emb_col,
-            cnorms=CENTROID_NORMS)
-    else:
-        ca = centroid_cos_array_col(emb_col, norm_spark_sql(emb_col))
-    base = df.select(
+    ca = centroid_cos_broadcast_col(
+        df, CENTROIDS.tolist() if centroids is None else centroids, emb_col,
+        cnorms=CENTROID_NORMS if centroids is None else None)
+    return df.select(
         F.col(id_col), F.col(emb_col),
         norm_col(F.col(emb_col)).alias("nrm"),
         ca.alias("_ca"),
@@ -431,68 +363,42 @@ def ann_ivf_topk(df: DataFrame, id_col: str = "vec_id",
         F.array_position(F.col("_ca"), F.array_max(F.col("_ca")))
         .cast("int").alias("cell"),
     )
-    return _ivf_body(base, id_col, emb_col, n_queries, k, nprobe)
 
 
-def trained_cos_array_col(emb: str, nrm: str,
-                          cents: list[list[float]]) -> Column:
-    """array<double> of cosine(emb, trained_centroid_i) — same
-    expression shape as ``centroid_cos_array_col`` but over a RUNTIME
-    codebook (k-means output), so no cross-build memoization; centroid
-    norms are folded left-to-right in Python to match the oracle's
-    ``list_reduce`` exactly."""
-    cols = []
-    for cent in cents:
-        acc = 0.0
-        for w in cent:
-            acc += w * w
-        cnorm = acc ** 0.5
-        dot = " + ".join(
-            f"{float(w)!r}D * CAST(element_at({emb}, {j + 1}) AS DOUBLE)"
-            for j, w in enumerate(cent)
-        )
-        cols.append(F.expr(f"(0.0D + {dot}) / ({nrm} * {cnorm!r}D)"))
-    return F.array(*cols)
+def ann_ivf_topk(df: DataFrame, id_col: str = "vec_id",
+                 emb_col: str = "embedding",
+                 n_queries: int = 10, k: int = 3,
+                 nprobe: int = N_PROBE) -> DataFrame:
+    """IVF approximate top-k: vectors land in the inverted list of
+    their nearest centroid; a query probes its ``nprobe`` closest
+    lists; exact cosine only within the probed lists.
+
+    Scale shape: assignment is one broadcast-kernel scoring pass; the
+    probe join is a (centroid_id) equi-join — candidates per query ≈
+    nprobe/C of the corpus, never all-pairs; raising nprobe trades
+    cost for recall.
+    """
+    return _ivf_body(_cell_assign(df, id_col, emb_col), id_col, emb_col,
+                     n_queries, k, nprobe)
 
 
 def ann_ivf_trained_topk(df: DataFrame, id_col: str = "vec_id",
                          emb_col: str = "embedding",
                          n_queries: int = 10, k: int = 3,
                          nprobe: int = N_PROBE, k_clusters: int = 8,
-                         iters: int = 2, dim: int = EMB_DIM,
-                         strategy: str = "auto") -> DataFrame:
+                         iters: int = 2, dim: int = EMB_DIM) -> DataFrame:
     """IVF whose codebook is TRAINED in-job (``ops/clustering``
     Lloyd's) instead of seeded — the full train → index → search
     composition.  Training adds ``iters - 1`` tiny map-side-combined
     aggregations up front; the search plan is then identical in shape
-    to ``ann_ivf_topk`` (codegen assignment, (cell) equi-join probes,
-    exact re-rank on candidates only).
-
-    ``strategy`` ('literal' | 'broadcast' | 'auto'): how the
-    k_clusters×dim probe cosines are scored — unrolled literal
-    codegen while the codebook fits the codegen budget, a broadcast
-    Arrow-batch matmul kernel past it (ops/embkernel); both are
-    bit-identical, so either route stays oracle-exact."""
+    to ``ann_ivf_topk`` (kernel assignment, (cell) equi-join probes,
+    exact re-rank on candidates only)."""
     from .clustering import kmeans_train
-    from .embkernel import centroid_cos_broadcast_col, pick_strategy
 
-    strategy = pick_strategy(k_clusters, dim, strategy)
     cents = kmeans_train(df, k=k_clusters, iters=iters, id_col=id_col,
-                         emb_col=emb_col, dim=dim, strategy=strategy)
-    if strategy == "broadcast":
-        ca = centroid_cos_broadcast_col(df, cents, emb_col)
-    else:
-        ca = trained_cos_array_col(emb_col, norm_spark_sql(emb_col), cents)
-    base = df.select(
-        F.col(id_col), F.col(emb_col),
-        norm_col(F.col(emb_col)).alias("nrm"),
-        ca.alias("_ca"),
-    ).select(
-        id_col, emb_col, "nrm", "_ca",
-        F.array_position(F.col("_ca"), F.array_max(F.col("_ca")))
-        .cast("int").alias("cell"),
-    )
-    return _ivf_body(base, id_col, emb_col, n_queries, k, nprobe)
+                         emb_col=emb_col, dim=dim)
+    return _ivf_body(_cell_assign(df, id_col, emb_col, cents), id_col,
+                     emb_col, n_queries, k, nprobe)
 
 
 def ann_ivf_trained_topk_sql(table: str = "embeddings",
@@ -610,62 +516,19 @@ def cosine_dup_pairs_sql(table: str = "embeddings", id_col: str = "vec_id",
 
 
 # ---------------------------------------------------- semantic dedup
-def _cell_assign(df: DataFrame, id_col: str, emb_col: str,
-                 centroids: list[list[float]] | None = None,
-                 strategy: str = "auto") -> DataFrame:
-    """(id, emb, nrm, cell): nearest-centroid assignment, one codegen
-    pass of literal column math (shared by IVF ANN and SemDeDup).
-    The norm is INLINED into each cosine slot (see
-    centroid_cos_array_col's codegen note); runtime subexpression
-    elimination shares the copies.
-
-    ``centroids`` None → the seeded module codebook; a runtime
-    codebook (k-means output) scores via ``trained_cos_array_col``.
-    Either way ``pick_strategy`` routes between literal codegen and
-    the broadcast Arrow kernel — the seeded 16×dim-64 array is 1024
-    unrolled terms, past the measured per-row crossover
-    (BENCH/EMBKERNEL.md r5), so at the shipped dims the kernel wins
-    per ROW as well as per plan-compile; both are bit-identical."""
-    from .embkernel import centroid_cos_broadcast_col, pick_strategy
-
-    cents = ([[float(w) for w in c] for c in CENTROIDS]
-             if centroids is None else centroids)
-    strategy = pick_strategy(len(cents), len(cents[0]), strategy)
-    if strategy == "broadcast":
-        # the seeded literal twin bakes CENTROID_NORMS (numpy pairwise
-        # sums) — pass them through so the kernel stays bit-identical
-        ca = centroid_cos_broadcast_col(
-            df, cents, emb_col,
-            cnorms=CENTROID_NORMS if centroids is None else None)
-    elif centroids is None:
-        ca = centroid_cos_array_col(emb_col, norm_spark_sql(emb_col))
-    else:
-        ca = trained_cos_array_col(emb_col, norm_spark_sql(emb_col),
-                                   centroids)
-    return df.select(
-        F.col(id_col), F.col(emb_col),
-        norm_col(F.col(emb_col)).alias("nrm"),
-        ca.alias("_ca"),
-    ).select(
-        id_col, emb_col, "nrm",
-        F.array_position(F.col("_ca"), F.array_max(F.col("_ca")))
-        .cast("int").alias("cell"),
-    )
-
-
 def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
                    emb_col: str = "embedding",
                    threshold: float = 0.3, salt: int = 1,
-                   centroids: list[list[float]] | None = None,
-                   strategy: str = "auto") -> DataFrame:
+                   centroids: list[list[float]] | None = None) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): embeddings are clustered by nearest centroid,
     and within each cluster a vector is DROPPED iff some lower-id
     vector in the same cluster has cosine similarity >= threshold
     (cosine rounded to 6 dp so both engines agree bit-for-bit).
 
-    Scale shape: the centroid assignment is one whole-stage-codegen
-    pass; the only join is the within-cell self-join — the cells are
+    Scale shape: the centroid assignment is one broadcast Arrow-kernel
+    pass (``centroids`` None → the seeded codebook, else e.g. a
+    trained one); the only join is the within-cell self-join — the cells are
     the blocking key, so the pair space is sum(|cell|²), never n².
     At 100 TB the control knob is N_CENTROIDS (the paper uses ~11k
     clusters for 5B embeddings); skewed cells are split by raising
@@ -680,7 +543,7 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
     Plan note: the assignment is materialized through ONE explicit
     repartition(cell) exchange so BOTH self-join sides read the same
     shuffle via ReusedExchange instead of each re-scanning the table
-    and re-evaluating the 16×dim-literal argmax (3 scans → 2 in the
+    and re-running the centroid-scoring kernel (3 scans → 2 in the
     physical plan). The remaining scan is the verdict join-back,
     which column-pruning reduces to (id, cell) — at petabyte scale
     persist the assignment explicitly if even that pass matters.
@@ -697,8 +560,8 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
     """
     if salt < 1:
         raise ValueError(f"salt must be >= 1, got {salt}")
-    base = _cell_assign(df, id_col, emb_col, centroids,
-                        strategy).repartition(F.col("cell"))
+    base = (_cell_assign(df, id_col, emb_col, centroids).drop("_ca")
+            .repartition(F.col("cell")))
     a = base.select(
         F.col("cell"),
         F.col(id_col).alias("_ia"), F.col(emb_col).alias("_ea"),
@@ -762,24 +625,21 @@ def semantic_dedup_trained(df: DataFrame, id_col: str = "vec_id",
                            emb_col: str = "embedding",
                            threshold: float = 0.3, k_clusters: int = 8,
                            iters: int = 2, dim: int = EMB_DIM,
-                           strategy: str = "auto",
                            salt: int = 1) -> DataFrame:
     """SemDeDup as the paper actually runs it (arXiv:2303.09540 §3):
     k-means is TRAINED on the corpus in-job (``ops/clustering``
     Lloyd's, the same trainer the IVF index uses), then duplicates
     are dropped within the trained clusters — cluster sizing tracks
-    the data instead of a fixed seeded codebook.  ``strategy`` routes
-    the k_clusters×dim scoring between literal codegen and the
-    broadcast Arrow kernel exactly as in ``ann_ivf_trained_topk``, so
-    the composition holds at real embedding dimensions; ``salt``
-    passes through as the hot-cluster skew lever."""
+    the data instead of a fixed seeded codebook.  Scoring is the
+    broadcast Arrow kernel, as in ``ann_ivf_trained_topk``, so the
+    composition holds at real embedding dimensions; ``salt`` passes
+    through as the hot-cluster skew lever."""
     from .clustering import kmeans_train
 
     cents = kmeans_train(df, k=k_clusters, iters=iters, id_col=id_col,
-                         emb_col=emb_col, dim=dim, strategy=strategy)
+                         emb_col=emb_col, dim=dim)
     return semantic_dedup(df, id_col=id_col, emb_col=emb_col,
-                          threshold=threshold, salt=salt,
-                          centroids=cents, strategy=strategy)
+                          threshold=threshold, salt=salt, centroids=cents)
 
 
 def semantic_dedup_trained_sql(table: str = "embeddings",
