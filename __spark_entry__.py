@@ -42,7 +42,8 @@ from vyperdatum_spark.queries import geo
 #   ann_lsh_topk — strict subset of ann_lsh_multi_topk;
 #   dedup_ngram_jaccard — the all-pairs opt-in recall reference;
 #     dedup_lsh_verified is the exposed production path;
-#   geo_knn_edge_kernel — bench twin of the exposed geo_knn_edge;
+#   geo_knn_edge_kernel — alias of the exposed geo_knn_edge (bench.py
+#     lists the name);
 #   rel_events_hourly / rel_custs_without_orders /
 #   rel_top_orders_per_cust / rel_nation_revenue — relational shapes
 #     subsumed by rel_pricing_summary + stream_events_hourly +

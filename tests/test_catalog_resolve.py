@@ -113,11 +113,13 @@ def test_transform_accepts_epsg_and_tuple(spark):
     assert by_tuple.loc[0, "z_out"] == by_name.loc[0, "z_out"]
 
 
-def test_registered_triangle_region_sql_vs_kernel(spark, clean_catalog):
-    """A NON-rectangular runtime region exercises the generic ray-cast
-    codegen path of the SQL strategy (fixture regions are rectangles,
-    which take the 4-comparison fast path); SQL and kernel strategies
-    must agree bit-for-bit."""
+def test_registered_triangle_region_matches_oracle(spark, clean_catalog):
+    """A NON-rectangular runtime region takes the general per-cell ray
+    cast of the plan (its boundary cells keep diagonal-edge terms); the
+    engine must equal the pip.contains W1 winner and the closed-form
+    z bit for bit."""
+    from vyperdatum_spark.spatial import pip
+
     rid = "RGNTri01_8301"
     catalog.register_regions_from_config({"regions": [{
         "region_id": rid,
@@ -140,14 +142,17 @@ def test_registered_triangle_region_sql_vs_kernel(spark, clean_catalog):
         "y": rng.uniform(32.9, 34.1, n),
         "z": np.round(rng.uniform(-5, 15, n), 2),
     })
-    pts = spark.createDataFrame(pdf)
-    a = tx.transform_points(spark, pts, "ellipse", "mllw",
-                            strategy="sql").toPandas().set_index("pid")
-    b = tx.transform_points(spark, pts, "ellipse", "mllw",
-                            strategy="broadcast").toPandas().set_index("pid")
-    assert (a.region_id.fillna("∅") == b.region_id.fillna("∅")).all()
+    a = tx.transform_points(spark, spark.createDataFrame(pdf), "ellipse",
+                            "mllw").toPandas().set_index("pid").sort_index()
+    win = np.full(n, None, dtype=object)
+    for r in sorted(catalog.REGIONS, key=lambda r: r.region_ord):
+        win[pip.contains(list(r.polygon), pdf.x.values, pdf.y.values)] = r.region_id
+    z_exp = [np.nan if w is None else round(catalog.transform_closed_form(
+        w, "ellipse", "mllw", x, y, z), 3)
+        for w, x, y, z in zip(win, pdf.x, pdf.y, pdf.z)]
+    assert (a.region_id.fillna("∅").values == pd.Series(win).fillna("∅").values).all()
     assert np.array_equal(a.z_out.fillna(-9e9).values,
-                          b.z_out.fillna(-9e9).values)
+                          np.nan_to_num(np.array(z_exp), nan=-9e9))
     # the triangle actually wins somewhere (ord 4 > A's 0)
     assert (a.region_id == rid).sum() > 0
     # and points in A outside the triangle still resolve to A

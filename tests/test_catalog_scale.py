@@ -1,19 +1,14 @@
 """Plan stability at catalog scale (VERDICT round-4 #9).
 
-The SQL strategy bakes the catalog into literals: PIP ray casts per
-region, per-region count literals (W2), and per-(slot, group)
-candidate joins (J8). This test registers a ~50-region × 8-grid
-catalog at runtime and asserts the plan still compiles, stays on
-whole-stage codegen, and produces closed-form-correct answers — for
-the list-precedence, count-precedence, and kNN-fallback variants.
-
-Expression budget at this scale (see PLANS.md): the dominant term is
-slot_pip_sql = depth × (4 comparisons per axis-rect region × 50
-regions in one CASE) ≈ 600 comparisons/row plus depth × j_max
-bilinears — well inside Janino's 64 KB method limit because the PIP
-CASE collapses each rectangle to 4 comparisons; a 50-vertex general
-polygon per region would NOT fit and must route to the kernel
-strategy.
+The transform plan bakes the catalog into its broadcast dims: per
+fine cell, each candidate region's PIP terms (a constant or a few
+dozen crossing terms, whatever the polygon's vertex count), per-region
+count literals (W2) and per-(slot, group) candidate joins (J8). These
+tests register ~50-region catalogs at runtime and assert the plan
+still compiles under whole-stage codegen and answers exactly like the
+numpy references: axis-rect regions with 8 grids each (list, count
+and kNN variants), and 500-vertex general polygons run with codegen
+fallback disabled, checked on every vertex and edge midpoint.
 """
 
 import numpy as np
@@ -129,15 +124,18 @@ def test_sql_plan_compiles_and_answers_at_52_regions(spark, big_catalog, kwargs)
 
 
 # ------------------------------------------------------------------
-# round-5 VERDICT #2: general polygons past the codegen budget must
-# TRANSPARENTLY route sql → broadcast kernel (no silent interpreted
-# fallback, no janino error) and stay closed-form-correct.
+# general polygons: the per-cell PIP keeps the generated code the same
+# size for a 500-vertex ring as for a rectangle, and stays bit-exact
 # ------------------------------------------------------------------
 
-def _register_general_catalog(n_side=7, n_vertices=50):
-    """49 × 50-vertex near-circular regions on the same 7×7 block —
-    the documented SQL-strategy failure mode (measured: janino's
-    64 KB method limit falls at a few dozen crossing edges)."""
+PYTHON_NODES = ("MapInArrow", "ArrowEvalPython", "BatchEvalPython",
+                "MapInPandas", "FlatMapGroupsInPandas")
+
+
+def _register_general_catalog(n_side=7, n_vertices=500):
+    """49 × 500-vertex star-shaped rings (5 lobes, so each has concave
+    stretches) on the same 7×7 block; horizontal neighbors overlap, so
+    the seams hold depth-2 cells."""
     import math
 
     specs = []
@@ -146,11 +144,12 @@ def _register_general_catalog(n_side=7, n_vertices=50):
             rid = f"RGNG{i}{j}_9901"
             cx = -130.0005 + j * 1.0 + 0.6
             cy = 20.0005 + i * 1.0 + 0.5
-            polygon = [
-                [round(cx + 0.55 * math.cos(2 * math.pi * v / n_vertices), 6),
-                 round(cy + 0.45 * math.sin(2 * math.pi * v / n_vertices), 6)]
-                for v in range(n_vertices)
-            ]
+            polygon = []
+            for v in range(n_vertices):
+                t = 2 * math.pi * v / n_vertices
+                r = 1.0 + 0.15 * math.sin(5 * t + i + j)
+                polygon.append([round(cx + 0.55 * r * math.cos(t), 6),
+                                round(cy + 0.42 * r * math.sin(t), 6)])
             geoid = f"core/geoid12b/g{rid}.gtx"
             planes = {geoid: [0.001 * ((i + j) % 5), -0.002, -34.0 - 0.01 * i]}
             for k, d in enumerate(_DATUMS):
@@ -176,61 +175,76 @@ def general_catalog():
         catalog.reset_catalog()
 
 
-def test_general_polygons_autoroute_to_kernel(spark, general_catalog):
-    """52-region catalog of 50-vertex general polygons: the budget
-    estimator must reject the literal PIP CASE, transform_points must
-    transparently run via the broadcast kernel (proven by running
-    with codegen fallback DISABLED — the sql route would raise), and
-    the answers must match the pip.contains/closed-form reference."""
-    from vyperdatum_spark.engine import transform_sql as tsql
+def _boundary_points(pdf):
+    """``pdf`` plus every vertex and every edge midpoint of every
+    registered general ring — where the half-open crossing rule and
+    the per-cell term pruning decide."""
     from vyperdatum_spark.spatial import pip
 
-    assert not tsql.sql_strategy_within_budget()
-    assert tsql.pip_case_cost() > tsql.PIP_CASE_BUDGET
+    xs, ys = [pdf.x.to_numpy()], [pdf.y.to_numpy()]
+    for r in catalog.REGIONS:
+        if r.region_id.startswith("RGNG"):
+            ring = pip._ring(list(r.polygon))
+            xs += [ring[:-1, 0], (ring[:-1, 0] + ring[1:, 0]) / 2]
+            ys += [ring[:-1, 1], (ring[:-1, 1] + ring[1:, 1]) / 2]
+    x, y = np.concatenate(xs), np.concatenate(ys)
+    k = np.arange(len(x))
+    return pd.DataFrame({"pid": k, "x": x, "y": y, "z": (k % 13) * 0.2})
 
-    pts, pdf = _points(spark, n=250)
+
+def _pip_oracle(pdf, precedence):
+    """Winner per point from spatial.pip.contains (grids cover every
+    region's bbox, so membership is the PIP): W1 = highest ord, W2 =
+    highest (member count, ord)."""
+    from vyperdatum_spark.spatial import pip
+
+    xs, ys = pdf.x.to_numpy(), pdf.y.to_numpy()
+    member = {}
+    for r in catalog.REGIONS:
+        x0, y0, x1, y1 = pip.polygon_bbox(list(r.polygon))
+        m = np.zeros(len(xs), dtype=bool)
+        near = np.flatnonzero((xs >= x0) & (xs <= x1) & (ys >= y0) & (ys <= y1))
+        m[near] = pip.contains(list(r.polygon), xs[near], ys[near])
+        member[r.region_id] = m
+    rank = {r.region_id: (int(member[r.region_id].sum()) if precedence == "count"
+                          else 0, r.region_ord) for r in catalog.REGIONS}
+    win = np.full(len(xs), None, dtype=object)
+    for r in sorted(catalog.REGIONS, key=lambda r: rank[r.region_id]):
+        win[member[r.region_id]] = r.region_id
+    return win
+
+
+@pytest.mark.parametrize("precedence", ["list", "count"])
+def test_general_polygons_per_cell_pip_exact(spark, general_catalog, precedence):
+    """49 regions of 500-vertex general polygons (+ the 3 built-ins)
+    through the one plan, with codegen fallback DISABLED (a generated
+    method past janino's 64 KB limit raises instead of silently running
+    interpreted): region_id must equal the spatial.pip.contains winner
+    and z_out the closed form, row for row, on every vertex and edge
+    midpoint; the executed plan holds no Python node."""
+    _pts, grid_pdf = _points(spark, n=300)
+    pdf = _boundary_points(grid_pdf)
     old = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
         out = tx.transform_points(
-            spark, pts, "ellipse", "mllw", key_col="pid"
+            spark, spark.createDataFrame(pdf), "ellipse", "mllw",
+            key_col="pid", precedence=precedence,
         ).select("pid", "region_id", "z_out")
         got = out.toPandas().set_index("pid").sort_index()
         plan = out._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.codegen.fallback", old)
-    # the kernel strategy is an Arrow map, not a literal-join plan
-    assert "InArrow" in plan or "ArrowEval" in plan, plan[:2000]
+    assert not any(node in plan for node in PYTHON_NODES), plan[:2000]
 
-    covered = 0
-    for pid, row in pdf.iterrows():
-        win = None
-        for r in catalog.REGIONS:
-            if pip.contains(list(r.polygon),
-                            np.array([row.x]), np.array([row.y]))[0]:
-                if win is None or r.region_ord > win.region_ord:
-                    win = r
-        grid = got.loc[row.pid]
-        if win is None:
-            assert pd.isna(grid.region_id), row.pid
-        else:
-            covered += 1
-            assert grid.region_id == win.region_id, row.pid
-            ez = round(catalog.transform_closed_form(
-                win.region_id, "ellipse", "mllw", row.x, row.y, row.z), 3)
-            assert abs(grid.z_out - ez) < 1e-9, (row.pid, grid.z_out, ez)
-    assert covered > 80  # plenty of in-polygon points exercised
-
-
-def test_pip_budget_estimator_on_builtin_catalog():
-    """The shipped catalog (3 axis-rects) and the 52-axis-rect scale
-    catalog must stay on the literal SQL strategy."""
-    from vyperdatum_spark.engine import transform_sql as tsql
-
-    assert tsql.sql_strategy_within_budget()
-    assert tsql.pip_case_cost() == 3 * tsql.PIP_RECT_UNITS
-    _register_big_catalog()
-    try:
-        assert tsql.sql_strategy_within_budget()
-    finally:
-        catalog.reset_catalog()
+    win = _pip_oracle(pdf, precedence)
+    rid = got.region_id.to_numpy(dtype=object)
+    assert np.array_equal(pd.isna(rid), pd.isna(win))
+    assert (rid[pd.notna(win)] == win[pd.notna(win)]).all()
+    assert pd.notna(win).sum() > 20_000  # vertices, midpoints, interiors
+    xs, ys, zs = pdf.x.to_numpy(), pdf.y.to_numpy(), pdf.z.to_numpy()
+    z_out = got.z_out.to_numpy(dtype=float)
+    for i in np.flatnonzero(pd.notna(win)):
+        ez = round(catalog.transform_closed_form(
+            win[i], "ellipse", "mllw", xs[i], ys[i], zs[i]), 3)
+        assert abs(z_out[i] - ez) < 1e-9, (i, z_out[i], ez)

@@ -80,3 +80,16 @@ def test_dim768_k256_runs_without_codegen_fallback(spark):
     assert (out["cluster"].values == exp_cl).all()
     assert np.allclose(out["dist"].values, np.round(np.sqrt(exp_sq), 6),
                        atol=0, rtol=0)
+
+
+def test_centroid_kernel_runs_once_per_scan(spark, embs):
+    """ann_ivf_topk scans the embeddings twice (the indexed corpus and
+    the query sample); the centroid-cosine kernel must run once per
+    scan. Catalyst used to push the probe join's inferred
+    isnotnull(cell) filter below the projection with the UDF inlined,
+    running the kernel twice per scan (4 nodes)."""
+    out = sim.ann_ivf_topk(embs)
+    out.collect()  # AQE: read the final plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython [cosines") == 2, final

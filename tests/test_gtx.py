@@ -82,11 +82,10 @@ def _f32_exact_defs():
     return base + [gd], base + [ag]
 
 
-@pytest.mark.parametrize("strategy", ["sql", "broadcast"])
-def test_gtx_transform_hash_parity(spark, strategy):
+def test_gtx_transform_hash_parity(spark):
     """ellipse→MLLW through a GTX-ingested grid must match the same
     transform over the analytically-defined grid exactly (z_out,
-    region_id, covered), through both execution strategies."""
+    region_id, covered)."""
     defs_analytic, defs_gtx = _f32_exact_defs()
     k = np.arange(400)
     pdf = pd.DataFrame({
@@ -98,11 +97,11 @@ def test_gtx_transform_hash_parity(spark, strategy):
     pts = spark.createDataFrame(pdf)
     a = tx.transform_points(
         spark, pts, "ellipse", "mllw", key_col="pid",
-        grid_defs=defs_analytic, strategy=strategy,
+        grid_defs=defs_analytic,
     ).toPandas().set_index("pid").sort_index()
     b = tx.transform_points(
         spark, pts, "ellipse", "mllw", key_col="pid",
-        grid_defs=defs_gtx, strategy=strategy,
+        grid_defs=defs_gtx,
     ).toPandas().set_index("pid").sort_index()
     assert a.covered.any() and (~a.covered).any()  # NaN holes exercised
     assert a.region_id.fillna("-").equals(b.region_id.fillna("-"))

@@ -4,14 +4,14 @@ Covers the three r6 rewrites whose equivalence arguments are local
 invariants (the oracle gate proves end-to-end equality; these pin the
 pieces):
 
-- slots_dim_pdf: the denormalized prune dim must carry REAL Nones for
-  missing slots (pandas NaN would flip join-miss semantics) and agree
-  row-for-row with the two-level slots->region-dim layout.
-- pip_literal_sql / slot_pip_sql / bilinear_sql: the SQL-string
-  builders must evaluate bit-identically to the numpy references they
-  mirror (spatial.pip.contains, grids.bilinear.interp_tile) on a point
-  grid (rect AND general polygons; interior, on edges and vertices,
-  outside).
+- slots_dim: the denormalized prune dim must carry REAL Nones for
+  missing slots (a NaN would flip join-miss semantics) and agree
+  row-for-row with the two-level cell -> regions -> lattice layout.
+- cell_pip_sql / bilinear_sql: the SQL-string builders must evaluate
+  bit-identically to the numpy references they mirror
+  (spatial.pip.contains, grids.bilinear.interp_tile) on a point grid
+  (a rectangle on cell boundaries, an octagon and a 500-vertex ring;
+  interior, on edges and vertices, outside).
 - read_input: repartitions a 1-partition scan up to default
   parallelism, leaves an already-parallel scan untouched.
 - cell_sql / frame_dz_spark_sql: parse to the Column builders' trees.
@@ -38,33 +38,50 @@ def spark():
                      extra_conf={"spark.ui.showConsoleProgress": "false"})
 
 
-def test_slots_dim_has_real_nones_and_matches_two_level_layout():
+def test_slots_dim_has_real_nones_and_matches_two_level_layout(spark):
+    from pyspark.sql.types import DataType
+
+    from vyperdatum_spark.datums import catalog
+    from vyperdatum_spark.spatial import cells, pip
+
     grids = tsql.combined_grids("ellipse", "mllw")
     j_max = max(len(g) for g in grids.values())
-    pdf, schema, depth = tsql.slots_dim_pdf(grids, j_max)
+    rows, schema, depth, n_terms = tsql.slots_dim(grids, j_max)
+    names = DataType.fromDDL(schema).names
     # no NaN anywhere (a float NaN in ord/ngr/lon0 would silently
     # change join-miss comparisons: j < NaN is TRUE, j < NULL is NULL)
-    for col in pdf.columns:
-        for v in pdf[col]:
-            assert not (isinstance(v, float) and math.isnan(v)), col
-    # row-for-row agreement with the two-level layout
-    slots, _depth = tsql.cover_slots_pdf()
-    rd = tsql.region_dim_pdf(grids, j_max).set_index("region_id")
-    by_cell = {int(r.cell9): r for r in pdf.itertuples(index=False)}
-    assert len(by_cell) == len(slots)
-    for row in slots.itertuples(index=False):
-        got = by_cell[int(row.cell9)]
+    for row in rows:
+        assert len(row) == len(names)
+        for v in row:
+            assert not (isinstance(v, float) and math.isnan(v))
+    # row-for-row agreement with the two-level layout: cell -> its
+    # candidate regions (ord-ascending, cells wholly outside dropped)
+    # -> each region's lattice groups
+    cands: dict = {}
+    for r in sorted(catalog.REGIONS, key=lambda r: r.region_ord):
+        for cell, pt in pip.cell_terms(list(r.polygon), cells.FINE_RES).items():
+            cands.setdefault(cell, []).append((r, pt))
+    assert depth == max(map(len, cands.values()))
+    assert n_terms == max(len(t) for slots in cands.values()
+                          for _r, (_p, t) in slots if t is not None)
+    for row in rows:
+        got = dict(zip(names, row))
+        slots = cands.pop(got["cell9"])
         for k in range(depth):
-            rid = getattr(row, f"slot_{k}")
-            assert getattr(got, f"rid_s{k}") == rid
-            if rid is None:
-                assert getattr(got, f"ord_s{k}") is None
-                assert getattr(got, f"gkey_s{k}_0") is None
-            else:
-                ref = rd.loc[rid]
-                assert getattr(got, f"ord_s{k}") == int(ref["region_ord"])
-                assert getattr(got, f"ngr_s{k}") == int(ref["n_groups"])
-                assert getattr(got, f"lon0_s{k}_0") == ref["lon0_0"]
+            pcols = [c.split(" ")[0] for c in tsql.pip_columns(f"_s{k}", n_terms)]
+            if k >= len(slots):
+                for c in (f"rid_s{k}", f"ord_s{k}", f"gkey_s{k}_0",
+                          f"lon0_s{k}_0", *pcols):
+                    assert got[c] is None, c
+                continue
+            r, (par, terms) = slots[k]
+            assert got[f"rid_s{k}"] == r.region_id
+            assert got[f"ord_s{k}"] == r.region_ord
+            assert got[f"ngr_s{k}"] == len(grids[r.region_id])
+            assert tuple(got[c] for c in pcols) == tsql.pip_values(par, terms, n_terms)
+            assert got[f"gkey_s{k}_0"] == f"{r.region_id}#g0"
+            assert got[f"lon0_s{k}_0"] == grids[r.region_id][0][0]
+    assert not cands
 
 
 RECT = [(-78.0, 33.0), (-77.0, 33.0), (-77.0, 34.0), (-78.0, 34.0),
@@ -74,22 +91,40 @@ OCTAGON = [(-77.5, 33.2), (-77.2, 33.0), (-76.8, 33.1), (-76.6, 33.5),
            (-77.5, 33.2)]
 
 
-def _pip_points():
-    """The 80×50 grid over both polygons, plus points exactly on the
-    rectangle's edges and corners and on the octagon's vertices — where
-    the half-open crossing rule decides."""
+_SZ = 180.0 / 1024  # fine-cell size (cells.FINE_RES)
+# a rectangle whose edges lie ON fine-cell boundaries
+CELL_RECT = [(-180.0 + 583 * _SZ, -90.0 + 700 * _SZ),
+             (-180.0 + 586 * _SZ, -90.0 + 700 * _SZ),
+             (-180.0 + 586 * _SZ, -90.0 + 702 * _SZ),
+             (-180.0 + 583 * _SZ, -90.0 + 702 * _SZ)]
+
+
+def _ring500():
+    t = 2 * np.pi * np.arange(500) / 500
+    r = 1.0 + 0.2 * np.sin(7 * t)
+    return [(round(-77.2 + 0.5 * a * np.cos(b), 6),
+             round(33.5 + 0.4 * a * np.sin(b), 6)) for a, b in zip(r, t)]
+
+
+def _pip_points(polys):
+    """The 80×50 grid over the polygons, plus every vertex and edge
+    midpoint of each and points along the rectangles' edges and
+    corners — where the half-open crossing rule and the per-cell term
+    pruning decide."""
+    from vyperdatum_spark.spatial import pip
+
     k = np.arange(4000)
     xs = [-78.2 + (k % 80) * 0.02]
     ys = [32.8 + (k // 80 % 50) * 0.03]
-    t = np.linspace(-78.0, -77.0, 11)
-    u = np.linspace(33.0, 34.0, 11)
-    for ex, ey in ((t, np.full(11, 33.0)), (t, np.full(11, 34.0)),
-                   (np.full(11, -78.0), u), (np.full(11, -77.0), u)):
-        xs.append(ex)
-        ys.append(ey)
-    ov = np.asarray(OCTAGON[:-1])
-    xs.append(ov[:, 0])
-    ys.append(ov[:, 1])
+    for poly in polys:
+        ring = pip._ring(poly)
+        xs += [ring[:-1, 0], (ring[:-1, 0] + ring[1:, 0]) / 2]
+        ys += [ring[:-1, 1], (ring[:-1, 1] + ring[1:, 1]) / 2]
+        if len(ring) == 5:
+            for a, b in zip(ring[:-1], ring[1:]):
+                t = np.linspace(0.0, 1.0, 11)
+                xs.append(a[0] + t * (b[0] - a[0]))
+                ys.append(a[1] + t * (b[1] - a[1]))
     return np.concatenate(xs), np.concatenate(ys)
 
 
@@ -100,37 +135,41 @@ def _eval_sql(spark, pdf, exprs):
             .toPandas().sort_values("_i").reset_index(drop=True))
 
 
-def test_pip_sql_matches_numpy_ray_cast(spark, monkeypatch):
-    from vyperdatum_spark.datums import catalog
-    from vyperdatum_spark.spatial import pip
+def test_pip_sql_matches_numpy_ray_cast(spark):
+    """cell_pip_sql over each point's spatial.pip.cell_terms row equals
+    spatial.pip.contains bit for bit, in both forms (short term lists
+    as plain expressions, long ones through ``aggregate``); a cell the
+    terms leave out holds only outside points."""
+    from vyperdatum_spark.engine.inputs import local_df
+    from vyperdatum_spark.spatial import cells, pip
 
-    xs, ys = _pip_points()
-    pdf = pd.DataFrame({"x": xs, "y": ys})
-    got = _eval_sql(spark, pdf, {
-        "rect": tsql.pip_literal_sql("x", "y", RECT),
-        "oct": tsql.pip_literal_sql("x", "y", OCTAGON),
-    })
-    for name, poly in (("rect", RECT), ("oct", OCTAGON)):
+    polys = {"rect": RECT, "cell_rect": CELL_RECT, "oct": OCTAGON,
+             "ring500": _ring500()}
+    xs, ys = _pip_points(polys.values())
+    c9 = cells.encode_np(xs, ys, cells.FINE_RES)
+    lambda_form = tsql.PIP_CODEGEN_TERMS + 1
+    for name, poly in polys.items():
+        terms = pip.cell_terms(poly, cells.FINE_RES)
+        n_terms = max(len(t) for _p, t in terms.values() if t)
         exp = pip.contains(poly, xs, ys)
-        assert exp.any() and not exp.all()
-        assert np.array_equal(got[name].to_numpy(dtype=bool), exp), name
-
-    # slot_pip_sql: the region-literal CASE picks each slot's polygon
-    # (catalog rectangles + a general octagon); a null slot is null
-    monkeypatch.setattr(catalog, "REGIONS", list(catalog.REGIONS) + [
-        catalog.Region("RGNOct01_8301", len(catalog.REGIONS),
-                       tuple(OCTAGON[:-1]), catalog.REGIONS[0].geoid),
-    ])
-    rids = [r.region_id for r in catalog.REGIONS]
-    rid = np.array([rids[i % len(rids)] for i in range(len(xs))], dtype=object)
-    rid[::17] = None
-    got = _eval_sql(spark, pdf.assign(rid=rid),
-                    {"in": tsql.slot_pip_sql("x", "y", "rid")})["in"]
-    for r in catalog.REGIONS:
-        m = rid == r.region_id
-        exp = pip.contains(list(r.polygon), xs[m], ys[m])
-        assert np.array_equal(got[m].to_numpy(dtype=bool), exp), r.region_id
-    assert got[pd.isna(rid)].isna().all()
+        assert exp.any() and not exp.all(), name
+        listed = np.array([int(c) in terms for c in c9])
+        assert not exp[~listed].any(), name
+        for n in {n_terms, lambda_form}:
+            rows = [(i, float(x), float(y),
+                     *tsql.pip_values(*terms.get(int(c), (None, None)), n))
+                    for i, (x, y, c) in enumerate(zip(xs, ys, c9))]
+            df = local_df(spark, rows, ", ".join(
+                ["i long", "x double", "y double", *tsql.pip_columns("", n)]))
+            inside = (df.selectExpr("i", tsql.cell_pip_sql("x", "y", "", n) + " AS inside")
+                      .toPandas().sort_values("i").inside.to_numpy())
+            assert pd.isna(inside[~listed]).all(), (name, n)
+            assert np.array_equal(inside[listed].astype(bool), exp[listed]), (name, n)
+    # the rectangles keep at most 2 terms per cell (plain expressions);
+    # the ring keeps a few dozen on its worst cell, not 500
+    assert max(len(t) for _p, t in pip.cell_terms(RECT, cells.FINE_RES).values()
+               if t) <= 2 < tsql.PIP_CODEGEN_TERMS
+    assert tsql.PIP_CODEGEN_TERMS < n_terms < 60
 
 
 def test_bilinear_sql_matches_numpy_interp_tile(spark):

@@ -169,6 +169,14 @@ def test_hybrid_rrf_fuses_both_lists(spark, docs):
         assert grp.sort_values("rank")["rrf"].is_monotonic_decreasing
 
 
+def test_empty_query_list_is_refused_on_the_driver(spark, docs):
+    """queries=[] raises a ValueError up front (it used to fail inside
+    Spark analysis on a VOID-typed array)."""
+    for fn in (S.hybrid_search_rrf, S.bm25_topk):
+        with pytest.raises(ValueError, match="queries is empty"):
+            fn(docs, queries=[])
+
+
 def test_doc_semantic_dedup_drops_planted_duplicates(spark):
     """SemDeDup over raw text: every planted exact duplicate (same
     text, higher id) must be dropped; its lower-id original kept."""

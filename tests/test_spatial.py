@@ -73,15 +73,18 @@ def test_pip_concave_polygon():
 
 
 def test_polygon_cover_superset_of_region_points():
+    """The cells pip.cell_terms lists (the polygon's cover in the prune
+    join) hold every inside point, at the coarse and the fine res."""
     r = catalog.REGIONS[0]
-    cov = set(pip.polygon_cover(list(r.polygon), 5))
     x0, y0, x1, y1 = r.bbox
     rng = np.random.default_rng(19)
     lon = rng.uniform(x0, x1, 200)
     lat = rng.uniform(y0, y1, 200)
     inside = pip.contains(list(r.polygon), lon, lat)
-    enc = cells.encode_np(lon, lat, 5)
-    assert set(int(e) for e in enc[inside]) <= cov
+    for res in (cells.COARSE_RES, cells.FINE_RES):
+        cov = set(pip.cell_terms(list(r.polygon), res))
+        enc = cells.encode_np(lon, lat, res)
+        assert set(int(e) for e in enc[inside]) <= cov
 
 
 # ------------------------------------------------------------- z-order

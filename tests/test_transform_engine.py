@@ -253,8 +253,7 @@ def test_tile_assignment_matches_oracle(spark, fixture_points):
     assert np.array_equal(out["cell5"].to_numpy(), exp)
 
 
-@pytest.mark.parametrize("strategy", ["sql", "broadcast"])
-def test_sign_matrix_four_quadrants(spark, fixture_points, strategy):
+def test_sign_matrix_four_quadrants(spark, fixture_points):
     """F4 matrix (reference core.py:397-403 negates a depth INPUT,
     :441-449 flips a depth OUTPUT; raster.py:356-364 combined form):
     all four height/depth in × out quadrants, engine vs closed form."""
@@ -269,7 +268,7 @@ def test_sign_matrix_four_quadrants(spark, fixture_points, strategy):
         ("noaa chart datum", "noaa chart datum"),  # depth → depth (null)
     ]
     for from_d, to_d in quadrants:
-        out = run_engine(spark, pdf, from_d, to_d, strategy=strategy)
+        out = run_engine(spark, pdf, from_d, to_d)
         if from_d == to_d:
             # null transform: z passes through, double flip cancels
             assert np.allclose(
@@ -313,100 +312,124 @@ def test_depth_input_hand_checked(spark):
     assert out2.loc[1, "z_out"] == pytest.approx(round(-12.3 + sep, 3), abs=1e-9)
 
 
-@pytest.mark.parametrize("strategy", ["sql", "broadcast"])
-def test_empty_input_all_strategies(spark, strategy):
-    """Zero-row input: every strategy returns an empty frame with the
-    full output schema (no crash in kernels, joins, or codegen)."""
+def test_empty_input(spark):
+    """Zero-row input returns an empty frame with the full output
+    schema (no crash in joins, the W2 count pass or codegen)."""
     empty = spark.createDataFrame(
         [], "pid long, x double, y double, z double"
     )
-    out = tx.transform_points(
-        spark, empty, "ellipse", "mllw", strategy=strategy,
-    )
-    assert out.count() == 0
-    assert {"region_id", "z_out", "covered", "sep", "unc"} <= set(out.columns)
+    for precedence in ("list", "count"):
+        out = tx.transform_points(
+            spark, empty, "ellipse", "mllw", precedence=precedence,
+        )
+        assert out.count() == 0
+        assert {"region_id", "z_out", "covered", "sep", "unc"} <= set(out.columns)
 
 
-def test_unknown_strategy_names_the_allowed_values(spark):
-    """Two strategies remain; any other name is refused up front."""
-    empty = spark.createDataFrame(
-        [], "pid long, x double, y double, z double"
-    )
-    with pytest.raises(ValueError, match=re.escape("('sql', 'broadcast')")):
-        tx.transform_points(spark, empty, "ellipse", "mllw",
-                            strategy="cogroup")
-
-
-def test_kernel_w2_from_tile_table_matches_sql_w2(spark, fixture_points):
-    """A caller-supplied tile DataFrame routes to the broadcast kernel;
-    its count-ranked W2 must equal the SQL plan's W2 over the same
-    grid definitions, row for row."""
+@pytest.mark.parametrize("precedence", ["list", "count"])
+def test_tile_table_matches_grid_defs(spark, fixture_points, precedence):
+    """A caller-supplied tile DataFrame is collected once and
+    reassembled into the grids it was cut from (tiler.grids_from_tiles),
+    so its W1 and W2 output equal the ``grid_defs`` output exactly —
+    region_id, region_ord, covered, sep and z_out."""
     from vyperdatum_spark.grids import tiler
 
     pts = spark.createDataFrame(fixture_points)
     defs = tiler.fixture_grid_defs()
-    kernel_df = tx.transform_points(
-        spark, pts, "ellipse", "mllw", precedence="count",
+    cols = ["region_id", "region_ord", "covered", "sep", "z_out"]
+    a = tx.transform_points(
+        spark, pts, "ellipse", "mllw", precedence=precedence,
         tiles=tiler.build_tile_df(spark, defs),
-    )
-    a = kernel_df.toPandas().set_index("pid").sort_index()
-    assert "MapInArrow" in kernel_df._jdf.queryExecution().executedPlan().toString()
+    ).toPandas().set_index("pid").sort_index()[cols]
     b = tx.transform_points(
-        spark, pts, "ellipse", "mllw", precedence="count", grid_defs=defs,
-    ).toPandas().set_index("pid").sort_index()
+        spark, pts, "ellipse", "mllw", precedence=precedence, grid_defs=defs,
+    ).toPandas().set_index("pid").sort_index()[cols]
     assert a.covered.any() and a.region_id.nunique() > 1
-    assert a.region_id.fillna("-").equals(b.region_id.fillna("-"))
-    assert a.region_ord.fillna(-1).equals(b.region_ord.fillna(-1))
-    assert a.covered.equals(b.covered)
-    assert np.array_equal(
-        np.nan_to_num(a.z_out.to_numpy(dtype=float), nan=-9e9),
-        np.nan_to_num(b.z_out.to_numpy(dtype=float), nan=-9e9),
-    )
-    # the SQL plan sums pre-combined step grids, the kernel sums per
-    # step: the same value up to float64 rounding
-    assert np.allclose(a.sep.to_numpy(dtype=float), b.sep.to_numpy(dtype=float),
-                       rtol=0, atol=1e-12, equal_nan=True)
+    assert a.fillna(-9e9).equals(b.fillna(-9e9))
+
+
+def test_tiles_reassemble_to_their_grids(spark):
+    """grids_from_tiles gives back each grid's origin, shape and node
+    values bit for bit; a grid with no tile rows is absent."""
+    from vyperdatum_spark.grids import tiler
+
+    defs = tiler.fixture_grid_defs()
+    grids = tiler.grids_from_tiles(tiler.build_tile_df(spark, defs[1:]),
+                                   [gd.grid_id for gd in defs])
+    assert [g.grid_id for g in grids] == sorted(gd.grid_id for gd in defs[1:])
+    by_id = {g.grid_id: g for g in grids}
+    for gd in defs[1:]:
+        g = by_id[gd.grid_id]
+        assert (g.lon0, g.lat0, g.dlon, g.dlat, g.nx, g.ny) == (
+            gd.lon0, gd.lat0, gd.dlon, gd.dlat, gd.nx, gd.ny)
+        ixs, iys = np.meshgrid(np.arange(gd.nx), np.arange(gd.ny))
+        assert np.array_equal(
+            g.values, gd.node_values(ixs.ravel(), iys.ravel()).reshape(gd.ny, gd.nx),
+            equal_nan=True)
 
 
 @pytest.mark.parametrize("precedence", ["list", "count"])
-def test_kernel_plan_has_no_shuffle(spark, fixture_points, precedence):
-    """Kernel W1 and W2 are one mapInArrow pass over the input
-    partitions: the executed plan holds no Exchange."""
-    from vyperdatum_spark.sources.bucketed import assert_no_exchange
-
+def test_transform_plan_has_no_shuffle_or_python(spark, fixture_points, precedence):
+    """W1 and W2 run as broadcast joins and codegen column math: the
+    executed plan holds no shuffle Exchange and no Python node."""
     out = tx.transform_points(
         spark, spark.createDataFrame(fixture_points), "ellipse", "mllw",
-        precedence=precedence, strategy="broadcast",
+        precedence=precedence,
     )
     assert out.filter("covered").count() > 0
     out.collect()  # AQE: inspect the final plan
-    assert "MapInArrow" in out._jdf.queryExecution().executedPlan().toString()
-    assert_no_exchange(out)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "ShuffleQueryStage" not in plan, plan
+    assert not re.search(r"Exchange (hashpartitioning|rangepartitioning|"
+                         r"RoundRobinPartitioning|SinglePartition)", plan), plan
+    assert not re.search(r"MapInArrow|ArrowEvalPython|BatchEvalPython", plan), plan
 
 
-def test_sql_count_precedence_matches_broadcast(spark, fixture_points):
-    """Round-3: W2 count-ranked precedence in the pure-JVM SQL
-    strategy must be row-identical to the Python-kernel path."""
+def _w1_w2_oracle(xs, ys, zs, from_datum, to_datum, precedence):
+    """numpy_oracle's W1, or W2: the region with the most member points
+    wins (ties to the higher ord)."""
+    if precedence == "list":
+        return numpy_oracle(xs, ys, zs, from_datum, to_datum)[:2]
+    member = {r.region_id: pip.contains(list(r.polygon), xs, ys)
+              for r in catalog.REGIONS}
+    order = sorted(catalog.REGIONS,
+                   key=lambda r: (int(member[r.region_id].sum()), r.region_ord))
+    region = np.full(len(xs), None, dtype=object)
+    for r in order:
+        region[member[r.region_id]] = r.region_id
+    z_out = np.array([
+        np.nan if rid is None else round(catalog.transform_closed_form(
+            rid, from_datum, to_datum, x, y, z), 3)
+        for rid, x, y, z in zip(region, xs, ys, zs)
+    ])
+    return region, z_out
+
+
+def test_sql_count_precedence_matches_oracle(spark, fixture_points):
+    """W2 count-ranked precedence equals the pip.contains/closed-form
+    W2 row for row (and differs from W1 on the overlap points)."""
     pdf = fixture_points
-    pts = spark.createDataFrame(pdf)
-    a = tx.transform_points(
-        spark, pts, "ellipse", "mllw", precedence="count", strategy="sql",
-    ).toPandas().set_index("pid").sort_index()
-    b = tx.transform_points(
-        spark, pts, "ellipse", "mllw", precedence="count",
-        strategy="broadcast",
-    ).toPandas().set_index("pid").sort_index()
-    assert a.region_id.fillna("-").equals(b.region_id.fillna("-"))
+    out = run_engine(spark, pdf, "ellipse", "mllw", precedence="count")
+    region, z_exp = _w1_w2_oracle(pdf.x.values, pdf.y.values, pdf.z.values,
+                                  "ellipse", "mllw", "count")
+    assert (out.region_id.fillna("-").to_numpy()
+            == pd.Series(region).fillna("-").to_numpy()).all()
     assert np.array_equal(
-        np.nan_to_num(a.z_out.to_numpy(dtype=float), nan=-9e9),
-        np.nan_to_num(b.z_out.to_numpy(dtype=float), nan=-9e9),
+        np.nan_to_num(out.z_out.to_numpy(dtype=float), nan=-9e9),
+        np.nan_to_num(z_exp, nan=-9e9),
     )
+    w1 = numpy_oracle(pdf.x.values, pdf.y.values, pdf.z.values, "ellipse", "mllw")[0]
+    assert (pd.Series(region).fillna("-") != pd.Series(w1).fillna("-")).any()
 
 
-def test_sql_knn_edge_matches_broadcast(spark):
-    """Round-3: J8 kNN edge fill in the SQL strategy (candidate-cell
-    broadcast join + argmin column math) vs the numpy kernel, on a
-    NaN-masked runtime grid."""
+def test_sql_knn_edge_matches_numpy(spark):
+    """J8 kNN edge fill (candidate-cell broadcast join + argmin column
+    math) vs the numpy reference on a NaN-masked runtime grid: per
+    region, Σ sign·bilinear.interp_tile(knn_fallback=True) over the
+    pipeline's grids, pip.contains membership, W1 over valid regions."""
+    from vyperdatum_spark.datums import pipeline as pl
+    from vyperdatum_spark.grids import bilinear
     from vyperdatum_spark.queries.geo import _knn_grid_defs, KNN_NODE_LON
 
     k = np.arange(200)
@@ -416,21 +439,37 @@ def test_sql_knn_edge_matches_broadcast(spark):
         "y": 33.2005 + ((k * 7919) % 100) * 0.008,
         "z": (k % 17) * 0.25,
     })
-    pts = spark.createDataFrame(pdf)
-    defs = _knn_grid_defs()
-    a = tx.transform_points(
-        spark, pts, "ellipse", "mllw", grid_defs=defs,
-        knn_fallback=True, strategy="sql",
+    defs = {gd.grid_id: gd for gd in _knn_grid_defs()}
+    got = tx.transform_points(
+        spark, spark.createDataFrame(pdf), "ellipse", "mllw",
+        grid_defs=list(defs.values()), knn_fallback=True,
     ).toPandas().set_index("pid").sort_index()
-    b = tx.transform_points(
-        spark, pts, "ellipse", "mllw", grid_defs=defs,
-        knn_fallback=True, strategy="broadcast",
-    ).toPandas().set_index("pid").sort_index()
-    assert a.covered.any()
-    assert a.region_id.fillna("-").equals(b.region_id.fillna("-"))
+
+    xs, ys = pdf.x.to_numpy(), pdf.y.to_numpy()
+    region = np.full(len(xs), None, dtype=object)
+    sep = np.full(len(xs), np.nan)
+    for r in sorted(catalog.REGIONS, key=lambda r: r.region_ord):
+        total = np.zeros(len(xs))
+        for grid_id, sign in pl.compile_steps("ellipse", "mllw", r.region_id, r.geoid):
+            gd = defs[grid_id]
+            ixs, iys = np.meshgrid(np.arange(gd.nx), np.arange(gd.ny))
+            total = total + sign * bilinear.interp_tile(
+                gd.lon0, gd.lat0, gd.dlon, gd.dlat, gd.nx, gd.ny,
+                gd.node_values(ixs.ravel(), iys.ravel()), xs, ys,
+                knn_fallback=True)
+        ok = pip.contains(list(r.polygon), xs, ys) & np.isfinite(total)
+        region[ok] = r.region_id
+        sep[ok] = total[ok]
+    fin, fout = pl.axis_flips("ellipse", "mllw")
+    z_exp = np.array([round(v, 3) for v in fout * (fin * pdf.z.to_numpy() + sep)])
+    assert got.covered.any() and (got.sep.isna() == np.isnan(sep)).all()
+    assert (got.region_id.fillna("-").to_numpy()
+            == pd.Series(region).fillna("-").to_numpy()).all()
+    assert np.allclose(got.sep.to_numpy(dtype=float), sep,
+                       rtol=0, atol=1e-12, equal_nan=True)
     assert np.array_equal(
-        np.nan_to_num(a.z_out.to_numpy(dtype=float), nan=-9e9),
-        np.nan_to_num(b.z_out.to_numpy(dtype=float), nan=-9e9),
+        np.nan_to_num(got.z_out.to_numpy(dtype=float), nan=-9e9),
+        np.nan_to_num(z_exp, nan=-9e9),
     )
 
 

@@ -22,10 +22,10 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 AUDIT = [
-    ("geo_transform_mllw", "flagship transform (SQL strategy)"),
+    ("geo_transform_mllw", "flagship transform"),
     ("geo_transform_projected", "projected-CRS transform"),
     ("geo_sampled_mllw", "sampled (distinct-cell) transform"),
-    ("geo_knn_edge", "kNN edge fallback (SQL strategy)"),
+    ("geo_knn_edge", "kNN edge fallback"),
     ("geo_count_precedence", "W2 count precedence"),
     ("dedup_minhash_lsh", "MinHash LSH candidate pairs"),
     ("dedup_simhash_hamming", "SimHash Hamming-band pairs"),
@@ -143,10 +143,10 @@ def main() -> None:
     out += [
         "",
         "Reading guide:",
-        "- `geo_transform_*` via the SQL strategy: **0 shuffles, 0 Python**",
+        "- `geo_transform_*`: **0 shuffles, 0 Python**",
         "  — the whole region loop is broadcast joins + codegen math.",
         "- `geo_knn_edge` / `geo_count_precedence` / `geo_raster_transform`",
-        "  run the SQL strategy since round 3: J8 kNN edge fill is a",
+        "  run the same plan: J8 kNN edge fill is a",
         "  broadcast join to the precomputed candidate-cell table plus an",
         "  argmin column expression; W2 count precedence bakes the",
         "  (tiny) per-region valid counts — computed by one extra",

@@ -3,7 +3,7 @@
     spark-submit --master <master> --py-files vyperdatum_spark.zip \\
         tools/run_job.py --pages /path/pages_parquet --out /path/out \\
         --from-datum ellipse --to-datum mllw --run-id r1 \\
-        [--buckets 64] [--allow-outside] [--knn] [--strategy broadcast]
+        [--buckets 64] [--allow-outside] [--knn]
 
 Reads the Common-Crawl-shaped pages table, geoparses coordinates,
 transforms z between vertical datums, and writes the enrichment table
@@ -33,8 +33,6 @@ def main(argv=None) -> int:
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--allow-outside", action="store_true")
     p.add_argument("--knn", action="store_true")
-    p.add_argument("--strategy", default="sql",
-                   choices=["sql", "broadcast"])
     p.add_argument("--cores", type=int, default=None)
     args = p.parse_args(argv)
 
@@ -49,7 +47,6 @@ def main(argv=None) -> int:
             allow_points_outside_coverage=args.allow_outside,
             knn_fallback=args.knn,
             include_lineage=True,
-            strategy=args.strategy,
         ).select(
             "url", "warc_ts", "x", "y", "z", "cell5",
             "region_id", "region_ord", "sep", "z_out", "unc",

@@ -2,29 +2,18 @@
 
 Spark-first re-expression of the reference's ``transform_dataset``
 (core.py:357-464). The reference loops regions in the driver and calls
-PROJ per region; here the whole thing is a declarative DataFrame plan
-with TWO physical strategies sharing one semantics:
+PROJ per region; here the whole region loop is one declarative plan
+(engine/transform_sql.py): cover-slot prune join [J1], per-cell PIP
+[J2], pre-combined grid corner joins + bilinear expressions [J3/A4],
+ord-ascending slot coalesce [W1] or count-literal ranking [W2], kNN
+edge fill [J8]. Broadcast hash joins and whole-stage-codegen column
+math only: ZERO shuffles, ZERO Python workers; heavy page columns
+never leave Tungsten rows.
 
-sql (DEFAULT, engine/transform_sql.py) — the whole region loop as
-    broadcast hash joins + whole-stage-codegen column math: cover-slot
-    prune join [J1], literal-codegen ray-cast PIP [J2], pre-combined
-    grid corner joins + bilinear expressions [J3/A4], ord-ascending
-    slot coalesce [W1] or count-literal ranking [W2], kNN edge fill
-    [J8]. ZERO shuffles, ZERO Python crossings; heavy page columns
-    never leave Tungsten rows.
-
-broadcast — fused mapInArrow kernel: the region loop runs in numpy
-    over Arrow batches, grids shipped once per executor via
-    sc.broadcast (the PROJ-grid-cache analog). It takes the two
-    requests the SQL plan cannot: catalogs whose literal PIP CASE is
-    past the codegen budget, and caller-supplied tile DataFrames. W1
-    and W2 are the same overwrite loop in a different region order;
-    W2 first counts each region's valid rows in one extra pass.
-
-Both strategies end in the same finalize contract: F1 coverage, the F4
-axis-flip matrix, F5 round(3), F6 CATZOC, J6 uncertainty, the
-output-frame z-correction — plus the horizontal-CRS pre-step
-(spatial/crs.py) when the input is projected or foreign-frame.
+The plan ends in the finalize contract: F1 coverage, the F4 axis-flip
+matrix, F5 round(3), F6 CATZOC, J6 uncertainty, the output-frame
+z-correction — plus the horizontal-CRS pre-step (spatial/crs.py) when
+the input is projected or foreign-frame.
 
 Region membership matches the reference's semantics: a point belongs
 to a region iff it is inside the region polygon AND every pipeline
@@ -34,16 +23,14 @@ valid regions is last-write-wins in catalog order (W1, core.py:446-453)
 or count-ranked for raster mode (W2, raster.py:226-233).
 
 Scale notes (100 TB / 10^12 rows):
-- the sql strategy is the production path: one codegen pass over the
-  driving table, all join sides O(grid nodes + polygons) ≈ MBs; it
-  measured 0.865 N→4N scaling efficiency (BENCH/BASELINE.md) because
-  there is nothing to shuffle and no Python worker boundary to
-  contend on.
-- the prune join uses a FINE-res polygon cover (broadcast, a few
-  hundred rows) so non-member points mostly skip the expensive math;
-  exactness still comes from the exact PIP.
-- the kernel ships each regional grid once per executor, not once per
-  point row, and never shuffles the driving table.
+- one codegen pass over the driving table, all join sides O(grid
+  nodes + polygon cells) ≈ MBs; it measured 0.865 N→4N scaling
+  efficiency (BENCH/BASELINE.md) because there is nothing to shuffle
+  and no Python worker boundary to contend on.
+- the prune join uses a FINE-res polygon cover (broadcast) so
+  non-member points skip the expensive math, and points in cells
+  wholly inside a region skip the ray cast; exactness comes from the
+  per-cell PIP terms.
 - J5 sampled mode (transform_points_sampled) transforms O(distinct
   fine cells) and equi-joins back — the cheapest path when exact
   per-point PIP is not required.
@@ -51,20 +38,15 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..datums import catalog, pipeline as pl
-from ..grids import bilinear, tiler
-from ..spatial import cells, crs as hcrs, pip
+from ..grids import tiler
+from ..spatial import cells, crs as hcrs
 from . import transform_sql as tsql
 from .inputs import local_df
 from .transform_sql import _d
-
-STRATEGIES = ("sql", "broadcast")
-
 
 def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFrame:
     """(region_id, unc, pipeline_str) — J6 uncertainty + lineage dim."""
@@ -77,175 +59,6 @@ def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFr
         for r in catalog.REGIONS
     ]
     return local_df(spark, rows, "region_id string, unc double, pipeline_str string")
-
-
-# --------------------------------------------------------------------
-# broadcast strategy: zero-shuffle fused kernel over mapInArrow
-# --------------------------------------------------------------------
-
-def _grid_payload(from_datum: str, to_datum: str,
-                  tiles: DataFrame | None = None, grid_defs: list | None = None):
-    """The kernel's grids as plain dicts for broadcast:
-    {region_id: [(sign, {cell5: tile})]} in pipeline step order, with
-    tile = (lon0, lat0, dlon, dlat, nx, ny, values).
-
-    This is the Spark analog of PROJ's grid cache: the regional grids
-    needed by one job are a bounded, reusable working set (VDatum grids
-    are MBs) — shipping them once per executor beats shuffling every
-    point row to the tiles. The tile rows come from one collect of the
-    caller's ``tiles`` (TILE_SCHEMA) filtered to the pipeline's grids,
-    or else from ``tiler.tile_rows`` over ``grid_defs`` or the catalog's
-    fixture grids, in driver-side numpy with no Spark job. The catalog
-    payload is cached per (catalog version, datum pair): the grid
-    working set is immutable for a catalog version, like PROJ's
-    process-wide grid cache."""
-    key = (catalog.catalog_version(), from_datum.lower(), to_datum.lower())
-    cacheable = tiles is None and grid_defs is None
-    if cacheable and key in _PAYLOAD_CACHE:
-        return _PAYLOAD_CACHE[key]
-    steps = catalog.region_steps(from_datum, to_datum)
-    needed = sorted({grid_id for _rid, _o, _s, grid_id, _sign in steps})
-    if tiles is not None:
-        rows = (tiles.filter(F.col("grid_id").isin(needed))
-                .select(*tiler.TILE_SCHEMA.names).collect())
-    else:
-        defs = {gd.grid_id: gd for gd in (
-            grid_defs if grid_defs is not None else tiler.fixture_grid_defs())}
-        # a grid absent from the set leaves its steps tile-less, hence
-        # invalid everywhere — as a tile table without that grid does
-        rows = [row for g in needed if g in defs for row in tiler.tile_rows(defs[g])]
-    by_grid: dict = {}
-    for grid_id, cell5, lon0, lat0, dlon, dlat, nx, ny, values in rows:
-        by_grid.setdefault(grid_id, {})[cell5] = (
-            lon0, lat0, dlon, dlat, nx, ny, np.asarray(values, dtype=np.float64),
-        )
-    payload: dict = {}
-    for region_id, _ord, _step, grid_id, sign in steps:
-        payload.setdefault(region_id, []).append((sign, by_grid.get(grid_id, {})))
-    if cacheable:
-        _PAYLOAD_CACHE[key] = payload
-    return payload
-
-
-_PAYLOAD_CACHE: dict = {}
-
-
-def make_broadcast_kernel(
-    polygons: dict[str, list[tuple[float, float]]],
-    covers: dict[str, np.ndarray],      # region -> sorted fine-cell ids
-    bc_bundles,                         # sc.broadcast(_grid_payload output)
-    region_ords: dict[str, int],
-    n_steps: dict[str, int],
-    knn_fallback: bool,
-    order: list[str],
-    x_col: str = "x",
-    y_col: str = "y",
-):
-    """mapInArrow kernels mirroring the reference's region loop
-    (core.py:421-453) — regions visited in ``order``, later regions
-    overwrite — vectorized numpy per Arrow batch, no shuffle.
-
-    ``order`` is the precedence: ascending ``region_ord`` is W1; W2
-    sorts by (valid count, region_ord), the tie rule of the SQL path's
-    ``greatest(named_struct('c', count, 'o', ord, …))``.
-
-    Returns ``(passthrough, count)``. ``passthrough`` appends region_id,
-    region_ord and sep to each input batch; ``count`` emits one
-    (region_id, n) row per region and batch, n = the region's valid
-    rows — the W2 pre-pass (order plays no part in it).
-
-    The grid payload arrives as an EXPLICIT Spark broadcast (not a
-    closure capture): the pickled task command stays small and the
-    payload lands once per executor via the broadcast machinery,
-    instead of being re-deserialized per task."""
-
-    def _region_sep(region_id, xs, ys, c5s, idx):
-        inside = pip.contains(polygons[region_id], xs[idx], ys[idx])
-        idx = idx[inside]
-        if len(idx) == 0:
-            return idx, None
-        steps = bc_bundles.value.get(region_id, [])
-        if len(steps) != n_steps.get(region_id, -1):
-            return idx, np.full(len(idx), np.nan)
-        # zero steps (identity pipeline, e.g. mllw → 'noaa chart
-        # datum'): in-polygon points get sep 0, NOT out-of-coverage
-        total = np.zeros(len(idx))
-        for sign, tiles_by_cell in steps:
-            v = np.full(len(idx), np.nan)
-            for c5 in np.unique(c5s[idx]):
-                m = c5s[idx] == c5
-                t = tiles_by_cell.get(int(c5))
-                if t is not None:
-                    v[m] = bilinear.interp_tile(
-                        t[0], t[1], t[2], t[3], t[4], t[5], t[6],
-                        xs[idx][m], ys[idx][m], knn_fallback=knn_fallback,
-                    )
-            total = total + sign * v  # pipeline order, float64
-        return idx, total
-
-    def _region_loop(batch):
-        names = batch.schema.names
-        xs = batch.column(names.index(x_col)).to_numpy(zero_copy_only=False)
-        ys = batch.column(names.index(y_col)).to_numpy(zero_copy_only=False)
-        xs = np.asarray(xs, dtype=np.float64)
-        ys = np.asarray(ys, dtype=np.float64)
-        c9s = cells.encode_np(xs, ys, cells.FINE_RES)
-        c5s = cells.encode_np(xs, ys, cells.COARSE_RES)
-        n = len(xs)
-        best_sep = np.full(n, np.nan)
-        best_ord = np.full(n, -1, dtype=np.int32)
-        best_code = np.full(n, -1, dtype=np.int32)  # index into `order`
-        n_valid = np.zeros(len(order), dtype=np.int64)
-        for code, rid in enumerate(order):
-            idx = np.flatnonzero(np.isin(c9s, covers[rid]))
-            if len(idx) == 0:
-                continue
-            idx, total = _region_sep(rid, xs, ys, c5s, idx)
-            if total is None or len(idx) == 0:
-                continue
-            ok = np.isfinite(total)
-            upd = idx[ok]
-            best_sep[upd] = total[ok]
-            best_ord[upd] = region_ords[rid]
-            best_code[upd] = code
-            n_valid[code] = len(upd)
-        return best_code, best_ord, best_sep, n_valid
-
-    def passthrough(it):
-        """Heavy input columns pass through as raw Arrow buffers (no
-        pandas object materialization — measured 4× collapse at 32
-        workers otherwise); string outputs are built in Arrow C++ via
-        dictionary take."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        region_dict = pa.array(order, type=pa.string())
-        for batch in it:
-            best_code, best_ord, best_sep, _ = _region_loop(batch)
-            member = best_code >= 0
-            codes = pa.array(
-                np.where(member, best_code, 0).astype(np.int32),
-                mask=~member,
-            )
-            region_col = pc.take(region_dict, codes)
-            ord_col = pa.array(best_ord, mask=~member)
-            sep_col = pa.array(best_sep, mask=~member)
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [region_col, ord_col, sep_col],
-                batch.schema.names + ["region_id", "region_ord", "sep"],
-            )
-
-    def count(it):
-        import pyarrow as pa
-
-        region_col = pa.array(order, type=pa.string())
-        for batch in it:
-            n_valid = _region_loop(batch)[3]
-            yield pa.RecordBatch.from_arrays(
-                [region_col, pa.array(n_valid)], ["region_id", "n"]
-            )
-
-    return passthrough, count
 
 
 # --------------------------------------------------------------------
@@ -291,7 +104,6 @@ def transform_points(
     include_lineage: bool = False,
     precedence: str = "list",  # "list" = W1 (points), "count" = W2 (raster)
     knn_fallback: bool = False,
-    strategy: str = "sql",  # "sql" | "broadcast"
     input_crs: str = "nad83s",
     output_frame: str | None = None,
     grid_defs: list | None = None,
@@ -306,9 +118,18 @@ def transform_points(
       uncovered and not allowed), unc (if requested), covered flag,
       pipeline_str (if include_lineage).
 
-    ``key_col`` names the caller's row key. Neither strategy joins
-    results back by key, so the engine does not read it; it stays in
-    the signature for the callers that pass it.
+    ``key_col`` names the caller's row key. The engine never joins
+    results back by key, so it does not read it; it stays in the
+    signature for the callers that pass it.
+
+    Grids: the catalog's fixture grids by default; ``grid_defs``
+    (tiler.GridDef / gtx.ArrayGrid list) replaces them, or ``tiles``
+    (a grid_tiles table, tiler.TILE_SCHEMA) does: its rows for the
+    pipeline's grids are collected once and reassembled into one
+    lattice per grid (tiler.grids_from_tiles). A region whose pipeline
+    needs a grid missing from the set is uncovered everywhere.
+    ``grid_cache_token`` promises that same token ⇒ same grid content,
+    so the compiled dims of caller-supplied grids are reused.
 
     Horizontal CRS handling (reference core.py:166-248, 437-445):
       input_crs     — the catalog CRS the x/y (and 3D-frame z) values
@@ -324,36 +145,12 @@ def transform_points(
                       the reference's output-frame correction
                       ``new_z = new_z - (z - diffz)``.
 
-    Strategies:
-      sql        — pure-JVM broadcast-join plan (transform_sql.py):
-                   zero Python, zero shuffle, whole-stage codegen. THE
-                   default. Auto-routes to `broadcast` when it can't
-                   express the request (caller-supplied tile table) or
-                   when the catalog's literal PIP CASE exceeds the
-                   measured codegen budget (general polygons past a
-                   few dozen crossing edges — janino's 64 KB method
-                   limit; transform_sql.sql_strategy_within_budget).
-      broadcast  — fused mapInArrow kernel, grids as an explicit Spark
-                   broadcast; zero shuffle for W1 and W2.
+    The plan (transform_sql.py) is broadcast joins + whole-stage
+    codegen column math: no Python worker, no shuffle.
     """
-    if strategy not in STRATEGIES:
-        raise ValueError(f"strategy {strategy!r} not one of {STRATEGIES}")
     from_datum, to_datum, input_crs, output_frame = _resolve_specs(
         from_datum, to_datum, input_crs, output_frame
     )
-    # the SQL plan compiles driver-side grid definitions into its
-    # broadcast dims, so a caller-supplied TILE DataFrame (no grid_defs)
-    # routes to the kernel. So do catalogs past the expression budget
-    # (round-5): the SQL strategy bakes a PIP ray-cast CASE over the
-    # whole catalog into every slot; past transform_sql.PIP_CASE_BUDGET
-    # janino rejects the method and Spark silently degrades to
-    # interpreted evaluation, while the kernel's plan size is O(1) in
-    # catalog complexity.
-    if strategy == "sql" and (
-        (tiles is not None and grid_defs is None)
-        or not tsql.sql_strategy_within_budget()
-    ):
-        strategy = "broadcast"
     # F4 sign matrix: depth-axis INPUT negates z before the pipeline,
     # depth-axis OUTPUT negates after (core.py:397-403, 441-449)
     flips = pl.axis_flips(from_datum, to_datum)
@@ -414,27 +211,10 @@ def transform_points(
             ).withColumn("y_out", F.when(cov, emit_out_xy[1]))
         return df.drop("_zg")
 
-    null_steps = pl.compile_steps(from_datum, to_datum, "R", "G")
-
-    if strategy == "sql" and null_steps is not None:
-        # transform_points_sql adds cell5 itself, in its one SQL-text
-        # projection
-        enriched = tsql.transform_points_sql(
-            spark, points, from_datum, to_datum, x_col, y_col,
-            grid_defs=grid_defs, knn_fallback=knn_fallback,
-            precedence=precedence, grid_cache_token=grid_cache_token,
-        )
-        return _emit(_finalize(
-            enriched, spark, from_datum, to_datum, z_col, flips,
-            allow_points_outside_coverage, include_uncertainty,
-            include_lineage, dz_corr,
-        ))
-
-    base = points.withColumn("cell5", cells.encode_col(x, y, cells.COARSE_RES))
-
-    if null_steps is None:
+    if pl.compile_steps(from_datum, to_datum, "R", "G") is None:
         # identical datums: z passes through (flip/round still apply)
-        out = base.withColumn("region_id", F.lit(None).cast("string"))
+        out = points.withColumn("cell5", cells.encode_col(x, y, cells.COARSE_RES))
+        out = out.withColumn("region_id", F.lit(None).cast("string"))
         out = out.withColumn("region_ord", F.lit(None).cast("int"))
         out = out.withColumn("sep", F.lit(0.0))
         out = out.withColumn(
@@ -447,51 +227,17 @@ def transform_points(
             out = out.withColumn("pipeline_str", F.lit(None).cast("string"))
         return _emit(out)
 
-    # broadcast strategy: the whole region loop runs inside one
-    # mapInArrow pass over the input partitions, every input column
-    # riding through Arrow
-    polygons = {r.region_id: list(r.polygon) for r in catalog.REGIONS}
-    region_ords = {r.region_id: r.region_ord for r in catalog.REGIONS}
-    n_steps = {
-        r.region_id: len(pl.compile_steps(from_datum, to_datum, r.region_id, r.geoid) or [])
-        for r in catalog.REGIONS
-    }
-    covers = {
-        r.region_id: np.array(
-            sorted(pip.polygon_cover(list(r.polygon), cells.FINE_RES)),
-            dtype=np.int64,
-        )
-        for r in catalog.REGIONS
-    }
-    bc_bundles = spark.sparkContext.broadcast(
-        _grid_payload(from_datum, to_datum, tiles, grid_defs)
+    if tiles is not None and grid_defs is None:
+        needed = {grid_id for *_, grid_id, _sign
+                  in catalog.region_steps(from_datum, to_datum)}
+        grid_defs = tiler.grids_from_tiles(tiles, needed)
+    # transform_points_sql adds cell5 itself, in its one SQL-text
+    # projection
+    enriched = tsql.transform_points_sql(
+        spark, points, from_datum, to_datum, x_col, y_col,
+        grid_defs=grid_defs, knn_fallback=knn_fallback,
+        precedence=precedence, grid_cache_token=grid_cache_token,
     )
-
-    def kernels(order):
-        return make_broadcast_kernel(
-            polygons, covers, bc_bundles, region_ords, n_steps,
-            knn_fallback, order, x_col, y_col,
-        )
-
-    order = sorted(region_ords, key=region_ords.get)  # W1
-    if precedence == "count":
-        # W2: one count pass over the same loop (the SQL path's count
-        # literals, raster.py:214-216 pre-scan), summed on the driver,
-        # then the overwrite loop runs count-ascending so the region
-        # with the most valid rows writes last
-        n_valid = dict.fromkeys(order, 0)
-        counted = base.select(x.alias(x_col), y.alias(y_col)).mapInArrow(
-            kernels(order)[1], "region_id string, n long"
-        )
-        for rid, n in counted.collect():
-            n_valid[rid] += n
-        order = sorted(order, key=lambda rid: (n_valid[rid], region_ords[rid]))
-    out_schema = T.StructType(list(base.schema.fields) + [
-        T.StructField("region_id", T.StringType(), True),
-        T.StructField("region_ord", T.IntegerType(), True),
-        T.StructField("sep", T.DoubleType(), True),
-    ])
-    enriched = base.mapInArrow(kernels(order)[0], out_schema)
     return _emit(_finalize(
         enriched, spark, from_datum, to_datum, z_col, flips,
         allow_points_outside_coverage, include_uncertainty,
@@ -528,17 +274,17 @@ def _finalize(
     cols = {"z_out": z_out + " END", "covered": covered}
 
     if include_uncertainty:
-        # literal CASE over the (tiny) catalog instead of a broadcast
+        # literal map over the (tiny) catalog instead of a broadcast
         # join (r6): same per-region combined_sigma doubles, same
         # left-join-miss null for uncovered rows, one less broadcast
         # exchange + dim build per transform query (guide §2.4)
         unc = "CAST(NULL AS DOUBLE)"
         if catalog.REGIONS:
-            unc = "CASE " + " ".join(
-                f"WHEN region_id = '{r.region_id}' "
-                f"THEN {_d(catalog.combined_sigma(r.region_id, to_datum))}"
+            unc = "map(" + ", ".join(
+                f"'{r.region_id}', "
+                f"{_d(catalog.combined_sigma(r.region_id, to_datum))}"
                 for r in catalog.REGIONS
-            ) + " END"
+            ) + ")[region_id]"
         if allow_points_outside_coverage:
             # F6: CATZOC-D vertical uncertainty over the HEIGHT-axis z
             # (raster.py:384-390 negates a sounding input first)

@@ -1,7 +1,6 @@
-"""Pure-JVM transform strategy: broadcast joins + column math only.
+"""The transform plan: broadcast joins + column math only.
 
-The default execution strategy of :func:`transform_points` (the other
-is the Python-kernel ``broadcast`` strategy): the ENTIRE region loop
+The execution plan of :func:`transform_points`: the ENTIRE region loop
 of the reference (core.py:421-453) — candidate pruning, exact
 point-in-polygon, per-step bilinear interpolation, ordered step
 sum, last-write-wins precedence — is expressed as Catalyst column
@@ -9,29 +8,40 @@ expressions and broadcast hash joins. No Python worker, no Arrow
 socket crossing, no shuffle: one whole-stage-codegen pass over the
 driving table.
 
-Why this exists (measured on this box, 2M-row job):
-- the mapInArrow kernel moves every heavy column (html/text) through
-  the JVM↔Python worker sockets twice; under host CPU-steal bursts the
-  32 executor threads collapse into a kernel/futex convoy (80%+ sys
-  time, 5-10× wall-time variance),
-- the SQL plan touches heavy columns only in the parquet scan and the
+Why this shape (measured on a 32-thread host, 2M-row job):
+- a Python (Arrow-batch) region loop moves every heavy column
+  (html/text) through the JVM↔Python worker sockets twice; under host
+  CPU-steal bursts the 32 executor threads collapsed into a
+  kernel/futex convoy (80%+ sys time, 5-10× wall-time variance),
+- this plan touches heavy columns only in the parquet scan and the
   sink boundary — they never leave Tungsten rows — so per-core work is
   pure user-space compute and scales with cores.
 
 At 100 TB this is also the better plan: every join side here is O(grid
-nodes + region polygons) ≈ MBs (broadcast once per executor), the
+nodes + polygon cells) ≈ MBs (broadcast once per executor), the
 driving table is never shuffled, re-partitioned, or serialized to
 Python; AQE has nothing to re-plan because there is no exchange.
 
-Plan shape (D = max region-overlap depth, J = distinct lattices per
-region after step combination — 1 for the fixture catalog):
+Plan shape (D = max candidate regions per fine cell, J = distinct
+lattices per region after step combination — 1 for the fixture
+catalog):
 
-    base ──⋈ broadcast cover_slots(cell9 → r0..r{D-1})      [J1 prune]
-         ──⋈ broadcast region_dim   ×D   (ord, lattice params)
-         ── literal-codegen ray-cast PIP per slot            [J2]
+    base ──⋈ broadcast slots(cell9 → D × (region, PIP terms,   [J1 prune]
+                                          lattice params))
+         ── per-cell PIP: constant, or ≤ a few dozen terms   [J2]
          ──⋈ broadcast combined_corners ×D×J ((gkey,ix,iy) → v00..v11)
          ── bilinear column math                             [J3]
          ── coalesce(slot D-1 … slot 0) winner               [W1]
+
+Per-cell PIP (the cell-level coverage index of *Joinable Search Over
+Multi-Source Spatial Datasets*, ICDE 2025): each region polygon is cut
+into its fine cells at dim-build time (spatial.pip.cell_terms). A cell
+wholly inside is a constant; a cell wholly outside drops the region
+from its slots; a boundary cell keeps only the edges a rightward ray
+from it can meet, evaluated by the same crossing formula as
+spatial.pip.contains (cell_pip_sql). So the generated code stays
+bounded however detailed the polygons are, and the answer stays
+bit-exact.
 
 Step combination: bilinear interpolation is LINEAR in node values, so
 pipeline steps whose grids share a lattice (origin/spacing/shape)
@@ -44,12 +54,14 @@ step's surrounding corner is NaN, which is iff any combined corner is
 NaN. Steps on distinct lattices stay separate join groups.
 
 Precedence is W1 (coalesce over ord-ascending slots) or W2 (one extra
-aggregate pass for per-region valid counts, baked in as literals); J8
-kNN edge fill is a candidate-cell join plus an argmin expression.
-Limits, where `transform_points` routes to the broadcast kernel: a
-caller-supplied tile DataFrame (there are no grid definitions to
-compile into the dims) and catalogs whose literal PIP CASE exceeds
-PIP_CASE_BUDGET.
+aggregate pass for per-region valid counts, baked in as a literal
+map); J8 kNN edge fill is a candidate-cell join plus an argmin
+expression.
+Limits: the grids are compiled into driver-built broadcast dims, so
+the grid working set must fit the driver (VDatum grids are MBs; a
+caller's tile table is collected and reassembled first, see
+grids.tiler.grids_from_tiles); a kNN candidate set past 64 nodes per
+lattice cell raises.
 
 Reference parity: region loop core.py:421-453, PROJ-inf coverage
 semantics core.py:445-446, bilinear grid sampling core.py:283-311.
@@ -74,29 +86,6 @@ from .inputs import local_df
 # broadcast dimensions (all O(regions + grid nodes), built driver-side)
 # --------------------------------------------------------------------
 
-def cover_slots_pdf() -> tuple[pd.DataFrame, int]:
-    """(cell9 → slot_0..slot_{D-1} region ids, ord-ascending) + D.
-
-    One row per fine cell intersecting any region; slot columns hold
-    the candidate regions of that cell in catalog (precedence) order,
-    padded with None. D = max observed overlap depth.
-    """
-    by_cell: dict[int, list[str]] = {}
-    order = sorted(catalog.REGIONS, key=lambda r: r.region_ord)
-    for r in order:
-        for c in pip.polygon_cover(list(r.polygon), cells.FINE_RES):
-            by_cell.setdefault(int(c), []).append(r.region_id)
-    depth = max((len(v) for v in by_cell.values()), default=1)
-    rows = {
-        "cell9": list(by_cell.keys()),
-    }
-    for k in range(depth):
-        rows[f"slot_{k}"] = [
-            v[k] if len(v) > k else None for v in by_cell.values()
-        ]
-    return pd.DataFrame(rows), depth
-
-
 def combined_grids(from_datum: str, to_datum: str, defs=None):
     """Per region: the pipeline's steps grouped by (lattice signature,
     NaN-mask signature), each group pre-combined into one node array
@@ -109,13 +98,17 @@ def combined_grids(from_datum: str, to_datum: str, defs=None):
     node where another step is NaN. Fixture grids share the all-valid
     mask per lattice, so the default grouping is unchanged.
 
-    Returns {region_id: [(lon0, lat0, dlon, dlat, nx, ny, w), ...]}.
+    Returns {region_id: [(lon0, lat0, dlon, dlat, nx, ny, w), ...]}. A
+    region whose pipeline needs a grid absent from ``defs`` is left
+    out: it has no valid point anywhere (PROJ-inf), so it never wins.
     """
     gdefs = {gd.grid_id: gd
              for gd in (defs if defs is not None else tiler.fixture_grid_defs())}
     out: dict[str, list] = {}
     for r in catalog.REGIONS:
         steps = pl.compile_steps(from_datum, to_datum, r.region_id, r.geoid) or []
+        if any(grid_id not in gdefs for grid_id, _sign in steps):
+            continue
         groups: dict[tuple, np.ndarray] = {}
         order: list[tuple] = []
         for grid_id, sign in steps:
@@ -135,41 +128,13 @@ def combined_grids(from_datum: str, to_datum: str, defs=None):
     return out
 
 
-def region_dim_pdf(grids: dict, j_max: int) -> pd.DataFrame:
-    """Per-region row: ord, n_groups, per-group lattice params and the
-    synthetic grid key ``region#j`` the corner join resolves."""
-    recs = []
-    for r in catalog.REGIONS:
-        gs = grids.get(r.region_id, [])
-        rec = {
-            "region_id": r.region_id,
-            "region_ord": r.region_ord,
-            "n_groups": len(gs),
-        }
-        for j in range(j_max):
-            if j < len(gs):
-                lon0, lat0, dlon, dlat, _nx, _ny, _w = gs[j]
-                rec.update({
-                    f"gkey_{j}": f"{r.region_id}#g{j}",
-                    f"lon0_{j}": lon0, f"lat0_{j}": lat0,
-                    f"dlon_{j}": dlon, f"dlat_{j}": dlat,
-                })
-            else:
-                rec.update({
-                    f"gkey_{j}": None, f"lon0_{j}": None, f"lat0_{j}": None,
-                    f"dlon_{j}": None, f"dlat_{j}": None,
-                })
-        recs.append(rec)
-    return pd.DataFrame(recs)
-
-
 def corners_pdf(grids: dict) -> pd.DataFrame:
     """One row per combined-grid LATTICE CELL:
     (gkey, ix, iy, v00 v01 v10 v11).
 
     v01 is the +x neighbor and v10 the +y neighbor, matching
     grids.bilinear.interp_tile's corner layout, so the SQL bilinear is
-    the same float64 expression the numpy kernel evaluates.
+    the same float64 expression the numpy reference evaluates.
     """
     frames = []
     for region_id, gs in grids.items():
@@ -289,7 +254,7 @@ def knn_cells_pdf(grids: dict, max_candidates: int = 64):
                     raise RuntimeError(
                         f"kNN candidate set {cmax} exceeds "
                         f"{max_candidates} for {region_id}#g{j} "
-                        f"cell ({ix},{iy}); use the broadcast strategy"
+                        f"cell ({ix},{iy})"
                     )
                 nval = w[niy, nix]
                 recs.append({
@@ -315,19 +280,6 @@ def knn_cells_pdf(grids: dict, max_candidates: int = 64):
 # column expressions
 # --------------------------------------------------------------------
 
-def _axis_rect(ring: np.ndarray) -> tuple[float, float, float, float] | None:
-    """(x0, y0, x1, y1) if the ring is an axis-aligned rectangle."""
-    if len(ring) != 5:
-        return None
-    xs, ys = set(ring[:-1, 0]), set(ring[:-1, 1])
-    if len(xs) != 2 or len(ys) != 2:
-        return None
-    for i in range(4):
-        if ring[i, 0] != ring[i + 1, 0] and ring[i, 1] != ring[i + 1, 1]:
-            return None  # diagonal edge
-    return min(xs), min(ys), max(xs), max(ys)
-
-
 def _d(v: float) -> str:
     """SQL double literal (the D suffix keeps the parser off DECIMAL,
     which would change the arithmetic; repr() round-trips exactly)."""
@@ -346,106 +298,67 @@ def cell_sql(x: str, y: str, res: int) -> str:
     )
 
 
-def pip_literal_sql(x: str, y: str, poly: list[tuple[float, float]]) -> str:
-    """Even-odd ray cast with the polygon baked in as literals, as SQL
-    text over column NAMES — pure whole-stage-codegen arithmetic, the
-    exact mirror of spatial.pip.contains (half-open crossing
-    (y1 <= y) != (y2 <= y), strict x < intersection, identical float64
-    op order; D-suffixed double literals).
-
-    Axis-aligned rectangles collapse to 4 comparisons with the SAME
-    half-open boundary semantics as the ray cast: a vertical edge
-    spanning [y0, y1] crosses iff (y0<=y) != (y1<=y) ⇔ y ∈ [y0, y1),
-    and the point is inside iff it is left of the far edge but not of
-    the near one ⇔ x ∈ [x0, x1). This keeps the generated method small
-    enough to JIT, which matters more than it reads: past 8 KB of
-    bytecode the whole fused stage drops to the JVM interpreter.
-
-    Horizontal edges can never satisfy the crossing test, so they are
-    dropped at generation time (also keeps ANSI mode away from the
-    zero division).
-
-    Why text (r6): a Column-DSL builder costs one py4j round-trip per
-    operator — the kNN-edge plan build spent 1.8 s of its 2.1 s in ~11k
-    socket round-trips; one F.expr per staged column replaces hundreds
-    of them."""
-    ring = pip._ring(poly)
-    rect = _axis_rect(ring)
-    if rect is not None:
-        x0, y0, x1, y1 = rect
-        return (f"(({_d(y0)} <= {y}) AND ({y} < {_d(y1)}) "
-                f"AND ({_d(x0)} <= {x}) AND ({x} < {_d(x1)}))")
-    count = "0"
-    for i in range(len(ring) - 1):
-        x1, y1 = float(ring[i, 0]), float(ring[i, 1])
-        x2, y2 = float(ring[i + 1, 0]), float(ring[i + 1, 1])
-        if y1 == y2:
-            continue
-        crosses = f"(({_d(y1)} <= {y}) != ({_d(y2)} <= {y}))"
-        xint = (f"({_d(x1)} + ({y} - {_d(y1)}) * {_d(x2 - x1)}"
-                f" / {_d(y2 - y1)})")
-        count = (f"({count} + (CASE WHEN ({crosses} AND ({x} < {xint})) "
-                 f"THEN 1 ELSE 0 END))")
-    return f"(({count} % 2) = 1)"
+PIP_CODEGEN_TERMS = 4  # longest term list evaluated without a lambda
+_TERM_FIELDS = ("x1", "y1", "y2", "dx", "dy")
+_TERMS_TYPE = ("array<struct<" + ", ".join(f"{f}: double" for f in _TERM_FIELDS)
+               + ">>")
 
 
-# ------------------------------------------------------------------
-# expression budget (round-5 VERDICT #2): the PIP CASE is the
-# dominant literal expression the SQL strategy bakes per slot, and
-# janino's 64 KB method limit is a hard cliff — measured with
-# spark.sql.codegen.fallback=false on this substrate:
-#   52 axis-rect regions (4 comparisons each, 208 units)      → compiles
-#   3 general 8-gons   (21 crossing edges ≈ 189 units at 9×)  → compiles
-#   3 general 16-gons  (45 crossing edges ≈ 405 units)        → 64 KB FAIL
-#   1 general 50-gon   (49 crossing edges ≈ 441 units)        → 64 KB FAIL
-# A crossing term (when + float division + count accumulation) costs
-# ~9× an axis-rect comparison in generated bytecode, hence the
-# weights.  The budget sits at half the measured failure point so
-# depth-2/3 cover overlap (several CASE columns fused into one
-# generated method) keeps margin.  Callers (engine.transform.
-# transform_points) route to the broadcast kernel strategy instead of
-# shipping a plan that janino rejects and Spark silently degrades to
-# the interpreter.
-PIP_RECT_UNITS = 4
-PIP_GENERAL_EDGE_UNITS = 9
-PIP_CASE_BUDGET = 250
+def pip_columns(sfx: str, n_terms: int) -> list[str]:
+    """DDL of one slot's PIP columns, given the catalog's longest term
+    list: ``par{sfx}`` (the parity) plus either one double column per
+    term field (``x1_0{sfx}`` …, up to PIP_CODEGEN_TERMS terms) or the
+    term array ``pe{sfx}`` (null for a cell wholly inside)."""
+    if n_terms <= PIP_CODEGEN_TERMS:
+        return [f"par{sfx} int"] + [f"{f}_{i}{sfx} double"
+                                    for i in range(n_terms) for f in _TERM_FIELDS]
+    return [f"par{sfx} int", f"pe{sfx} {_TERMS_TYPE}"]
 
 
-def pip_case_cost() -> int:
-    """Estimated codegen cost (in weighted comparison units, see the
-    budget note above) of ONE slot_pip_sql CASE over the current
-    catalog."""
-    total = 0
-    for r in catalog.REGIONS:
-        ring = pip._ring(list(r.polygon))
-        if _axis_rect(ring) is not None:
-            total += PIP_RECT_UNITS
-        else:
-            nh_edges = sum(
-                1 for i in range(len(ring) - 1)
-                if ring[i, 1] != ring[i + 1, 1]
-            )
-            total += PIP_GENERAL_EDGE_UNITS * nh_edges
-    return total
+def pip_values(par, terms, n_terms: int) -> tuple:
+    """One slot's values for :func:`pip_columns`, from a
+    spatial.pip.cell_terms entry (missing terms are nulls)."""
+    if n_terms <= PIP_CODEGEN_TERMS:
+        flat = [v for t in terms or () for v in t]
+        return (par, *flat, *([None] * (len(_TERM_FIELDS) * n_terms - len(flat))))
+    return (par, terms)
 
 
-def sql_strategy_within_budget() -> bool:
-    """True iff the current catalog's literal PIP CASE fits the
-    measured codegen budget — the transform_points auto-route guard."""
-    return pip_case_cost() <= PIP_CASE_BUDGET
+def cell_pip_sql(x: str, y: str, sfx: str, n_terms: int) -> str:
+    """Point-in-polygon for one (fine cell, region) slot of the prune
+    dim, as SQL text over the :func:`pip_columns` NAMES: the point is
+    inside iff ``par`` plus the number of terms that hit is odd — the
+    crossing test of spatial.pip.contains per term (half-open
+    (y1 <= y) != (y2 <= y), strict x < intersection, same float64 op
+    order), so the answer is bit-exact (spatial.pip.cell_terms). A
+    cell wholly inside has no terms and ``par`` = 1; an empty slot has
+    a null ``par``, hence a null answer.
 
+    Up to PIP_CODEGEN_TERMS terms per cell (a straight boundary
+    through a cell keeps 1-2) each term is plain column arithmetic; a
+    missing term is null and never hits. Longer lists — a cell on a
+    detailed coastline keeps a few dozen — are walked by
+    ``aggregate``, NOT unrolled: a few dozen crossing terms per slot
+    is past janino's 64 KB method limit. HigherOrderFunction is
+    CodegenFallback, which takes its whole projection out of
+    whole-stage codegen (measured on the rectangle catalog, 400k
+    points at local[4]: transform exec +15% warm, +2 s on a first
+    run), so the lambda is planned only for catalogs that need it,
+    behind a gate that keeps interior cells out of it."""
+    def hit(x1: str, y1: str, y2: str, dx: str, dy: str) -> str:
+        return (f"(CASE WHEN ((({y1} <= {y}) != ({y2} <= {y})) AND "
+                f"({x} < ({x1} + ((({y} - {y1}) * {dx}) / {dy})))) "
+                f"THEN 1 ELSE 0 END)")
 
-def slot_pip_sql(x: str, y: str, rid: str) -> str:
-    """PIP for whichever region occupies a slot: a region-literal CASE
-    over the catalog (null slot → null → invalid)."""
-    if not catalog.REGIONS:
-        return "false"
-    whens = " ".join(
-        f"WHEN {rid} = '{r.region_id}' "
-        f"THEN {pip_literal_sql(x, y, list(r.polygon))}"
-        for r in catalog.REGIONS
-    )
-    return f"(CASE {whens} END)"
+    par = f"par{sfx}"
+    if n_terms <= PIP_CODEGEN_TERMS:
+        count = " + ".join([par] + [
+            hit(*(f"{f}_{i}{sfx}" for f in _TERM_FIELDS)) for i in range(n_terms)])
+        return f"((({count}) % 2) = 1)"
+    terms = f"pe{sfx}"
+    lam = hit(*(f"_pe_.{f}" for f in _TERM_FIELDS))
+    return (f"(CASE WHEN {terms} IS NULL THEN ({par} = 1) ELSE "
+            f"(((aggregate({terms}, {par}, (_pn_, _pe_) -> _pn_ + {lam})) % 2) = 1) END)")
 
 
 def bilinear_sql(x: str, y: str, lon0: str, lat0: str, dlon: str, dlat: str,
@@ -464,66 +377,63 @@ def bilinear_sql(x: str, y: str, lon0: str, lat0: str, dlon: str, dlat: str,
 
 
 # --------------------------------------------------------------------
-# the strategy
+# the plan
 # --------------------------------------------------------------------
 
 _DIM_CACHE: dict = {}
 _DIM_CACHE_MAX = 32
 
 
-def slots_dim_pdf(grids: dict, j_max: int) -> tuple[pd.DataFrame, str, int]:
-    """The J1 prune dim DENORMALIZED with the per-region lattice params
-    (r6 plan slimming): one broadcast row per covered fine cell carrying
-    rid/ord/ngr and the per-group gkey+lattice for every slot, so the
-    runtime plan pays ONE broadcast hash join where it previously paid
-    1 + depth (slots, then a region-dim join per slot).  Values are the
-    same region_dim_pdf rows keyed through slot_k, so the joined columns
-    are bit-identical to the two-level join.
+def slots_dim(grids: dict, j_max: int) -> tuple[list[tuple], str, int, int]:
+    """The J1 prune dim: one row per fine cell that some region's
+    polygon reaches, its candidate regions in ord-ascending slots.
+    Per slot k the row carries the region (rid/ord, ngr = lattice
+    groups), the cell's PIP terms (:func:`pip_columns`,
+    spatial.pip.cell_terms; cells wholly outside a region never list
+    it) and, per group j, the gkey + lattice params the corner join
+    resolves — so the plan pays ONE broadcast hash join for the whole
+    region lookup.
 
-    Returns (pdf, explicit schema, depth).  The schema is explicit and
-    the frame object-typed with real ``None``s: pandas' NaN-padding of
-    missing slots would otherwise surface as float NaN columns in Spark
-    (NaN != NULL — e.g. ``j < NaN`` is TRUE under NaN-greatest ordering
-    where ``j < NULL`` is NULL), silently flipping join-miss semantics.
-    """
-    slots_pdf, depth = cover_slots_pdf()
-    rd = region_dim_pdf(grids, j_max)
-    merged = slots_pdf
+    Returns (rows, explicit schema, depth D = max candidates per cell,
+    longest term list). Rows are plain tuples with real ``None``s in
+    empty slots: a NaN there would flip join-miss semantics
+    (``j < NaN`` is TRUE under NaN-greatest ordering where
+    ``j < NULL`` is NULL)."""
+    by_cell: dict[int, list[tuple]] = {}
+    n_terms = 0
+    for r in sorted(catalog.REGIONS, key=lambda r: r.region_ord):
+        gs = grids.get(r.region_id)
+        if gs is None:
+            continue
+        lattice: list = []
+        for j in range(j_max):
+            lattice += ([f"{r.region_id}#g{j}", *gs[j][:4]] if j < len(gs)
+                        else [None] * 5)
+        for cell, (par, terms) in pip.cell_terms(list(r.polygon),
+                                                 cells.FINE_RES).items():
+            n_terms = max(n_terms, len(terms or ()))
+            by_cell.setdefault(cell, []).append(
+                (r.region_id, r.region_ord, len(gs), par, terms, lattice))
+    depth = max(map(len, by_cell.values()), default=1)
+
+    def slot_values(slot) -> tuple:
+        rid, ord_, ngr, par, terms, lattice = slot
+        return (rid, ord_, ngr, *pip_values(par, terms, n_terms), *lattice)
+
+    empty = (None,) * (3 + len(pip_columns("", n_terms)) + 5 * j_max)
+    rows = [
+        (cell, *(v for k in range(depth)
+                 for v in (slot_values(slots[k]) if k < len(slots) else empty)))
+        for cell, slots in by_cell.items()
+    ]
     schema = ["cell9 long"]
     for k in range(depth):
-        ren = {"region_id": f"rid_s{k}", "region_ord": f"ord_s{k}",
-               "n_groups": f"ngr_s{k}"}
-        schema += [f"rid_s{k} string", f"ord_s{k} long", f"ngr_s{k} long"]
+        schema += [f"rid_s{k} string", f"ord_s{k} long", f"ngr_s{k} long",
+                   *pip_columns(f"_s{k}", n_terms)]
         for j in range(j_max):
-            for c in ("gkey", "lon0", "lat0", "dlon", "dlat"):
-                ren[f"{c}_{j}"] = f"{c}_s{k}_{j}"
-                schema.append(
-                    f"{c}_s{k}_{j} " + ("string" if c == "gkey" else "double")
-                )
-        merged = merged.merge(
-            rd.rename(columns=ren), how="left",
-            left_on=f"slot_{k}", right_on=f"rid_s{k}",
-        ).drop(columns=[f"slot_{k}"])
-    cols = [s.split(" ")[0] for s in schema]
-    merged = merged[cols].astype(object)
-    # pandas' left merge promotes int columns with missing slots to
-    # float (2 → 2.0) and renders the misses as float NaN even in
-    # object columns; restore exact ints / real Nones per the schema
-    # (this dim has no legitimate NaN — only join-miss nulls)
-    def _clean(v, typ):
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return None
-        return int(v) if typ == "long" else v
-
-    for s in schema:
-        name, typ = s.split(" ")
-        # dtype=object: a plain list assignment re-upcasts int+None
-        # columns straight back to float64/NaN
-        merged[name] = pd.Series(
-            [_clean(v, typ) for v in merged[name]],
-            dtype=object, index=merged.index,
-        )
-    return merged, ", ".join(schema), depth
+            schema += [f"gkey_s{k}_{j} string"] + [
+                f"{c}_s{k}_{j} double" for c in ("lon0", "lat0", "dlon", "dlat")]
+    return rows, ", ".join(schema), depth, n_terms
 
 
 def _dims(spark: SparkSession, from_datum: str, to_datum: str,
@@ -563,9 +473,8 @@ def _dims(spark: SparkSession, from_datum: str, to_datum: str,
             return hit
     grids = combined_grids(from_datum, to_datum, grid_defs)
     j_max = max((len(g) for g in grids.values()), default=0)
-    slots_merged, slots_schema, depth = slots_dim_pdf(grids, j_max)
-    slots = local_df(spark, slots_merged.itertuples(index=False, name=None),
-                     slots_schema)
+    slot_rows, slots_schema, depth, n_terms = slots_dim(grids, j_max)
+    slots = local_df(spark, slot_rows, slots_schema)
     corner_schema = (
         "gkey string, ix long, iy long, "
         "v00 double, v01 double, v10 double, v11 double"
@@ -589,7 +498,7 @@ def _dims(spark: SparkSession, from_datum: str, to_datum: str,
     else:
         n_cand, knn_js = 0, set()
     corners = local_df(spark, rows, corner_schema)
-    out = (slots, corners, depth, j_max, n_cand, knn_js)
+    out = (slots, corners, depth, n_terms, j_max, n_cand, knn_js)
     if cacheable:
         # bounded LRU, NOT evict-by-foreign-appId: a driver process can
         # host several live sessions concurrently, and evicting every
@@ -616,11 +525,9 @@ def transform_points_sql(
     grid_cache_token: str | None = None,
 ) -> DataFrame:
     """Enrich ``points`` with (cell5, region_id, region_ord, sep) via
-    the pure-JVM plan. Output contract matches the broadcast kernel's
-    passthrough (transform.make_broadcast_kernel); transform._finalize applies
-    flip/round/unc downstream.
+    the pure-JVM plan; transform._finalize applies flip/round/unc
+    downstream.
 
-    Round-3 extensions (previous limits, now lifted):
       knn_fallback   — J8 edge fill as a broadcast join to the
                        precomputed candidate-cell table + a ≤C-way
                        argmin column expression (no Python).
@@ -630,10 +537,11 @@ def transform_points_sql(
                        (the reference also pre-scans for counts,
                        raster.py:214-216) and baked into the winner
                        comparison as literals.
-      grid_defs      — caller-supplied runtime grids (tiler.GridDef
-                       list), replacing the catalog fixture set.
+      grid_defs      — caller-supplied runtime grids (tiler.GridDef /
+                       gtx.ArrayGrid list), replacing the catalog
+                       fixture set.
     """
-    slots, corners, depth, j_max, n_cand, knn_js = _dims(
+    slots, corners, depth, n_terms, j_max, n_cand, knn_js = _dims(
         spark, from_datum, to_datum, grid_defs, knn_fallback,
         grid_cache_token,
     )
@@ -649,10 +557,9 @@ def transform_points_sql(
         "cell5": F.expr(cell_sql(xs, ys, cells.COARSE_RES)),
         "_c9": F.expr(cell_sql(xs, ys, cells.FINE_RES)),
     })
-    # ONE denormalized prune join (slots_dim_pdf): rid/ord/ngr + lattice
-    # params for every slot arrive together — the per-slot region-dim
-    # joins of the two-level layout are gone (r6, guide §2.4: fewer
-    # broadcast exchanges, flatter join tree for Catalyst).
+    # ONE denormalized prune join (slots_dim): rid/ord/ngr, PIP terms
+    # and lattice params for every slot arrive together (one broadcast
+    # exchange, a flat join tree for Catalyst).
     out = out.join(F.broadcast(slots), F.expr("_c9 = cell9"), "left")
     out = out.drop("cell9")
 
@@ -727,7 +634,7 @@ def transform_points_sql(
                 # the unrolled form blew the generated-code limit and
                 # DISABLED whole-stage codegen for the entire final
                 # projection ("Whole-stage codegen disabled for plan",
-                # measured 11 s vs the kernel twin's 1.8 s at sf0.1).
+                # measured 11 s vs a Python kernel's 1.8 s at sf0.1).
                 # HigherOrderFunction is CodegenFallback — one opaque
                 # interpreted call per EDGE row (join-miss rows pass a
                 # null array through to a null fill), while the rest of
@@ -763,7 +670,7 @@ def transform_points_sql(
             # beyond the region's pipeline ⇒ identity 0.0
             total = (f"({total} + (CASE WHEN {j} < ngr{sfx} "
                      f"THEN {bil} ELSE 0.0D END))")
-        staged.append(f"{slot_pip_sql(xs, ys, f'rid{sfx}')} AS pip{sfx}")
+        staged.append(f"{cell_pip_sql(xs, ys, sfx, n_terms)} AS pip{sfx}")
         staged.append(f"{total} AS tot{sfx}")
     out = out.selectExpr("*", *staged)
 
@@ -795,15 +702,13 @@ def transform_points_sql(
             for r in catalog.REGIONS
         ]).collect()[0]
 
-        def cnt_lit(rid: str) -> str:
-            return "CASE " + " ".join(
-                f"WHEN {rid} = '{r.region_id}' THEN {int(c or 0)}L"
-                for r, c in zip(catalog.REGIONS, crow)
-            ) + " END"
-
+        counts = "map(" + ", ".join(
+            f"'{r.region_id}', {int(c or 0)}L"
+            for r, c in zip(catalog.REGIONS, crow)
+        ) + ")"
         slot_structs = [
             f"(CASE WHEN ok_s{k} THEN named_struct("
-            f"'c', {cnt_lit(f'rid_s{k}')}, 'o', ord_s{k}, "
+            f"'c', {counts}[rid_s{k}], 'o', ord_s{k}, "
             f"'r', rid_s{k}, 't', tot_s{k}) END)"
             for k in range(depth)
         ]

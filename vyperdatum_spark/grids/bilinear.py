@@ -2,10 +2,11 @@
 
 Replaces PROJ's ``vgridshift`` grid sampling (reference core.py:283-311
 delegates to ``Transformer.from_pipeline``; PROJ does bilinear reads of
-the GTX grid). Runs inside the broadcast strategy's mapInArrow kernel
-— one tile's node lattice at a time, vectorized over all points of the
-batch in that (grid_id, cell). No per-row Python. The SQL strategy's
-``transform_sql.bilinear_sql`` is the same float64 expression.
+the GTX grid). The numpy reference of the transform plan's grid
+math: ``transform_sql.bilinear_sql`` is the same float64 expression,
+and the plan's kNN edge fill (``transform_sql.knn_cells_pdf`` + an
+argmin column) reproduces :func:`_knn_fill`. Vectorized over points,
+one lattice at a time.
 
 Semantics mirrored from the reference:
 - outside the node lattice -> NaN (PROJ returns inf outside grids,

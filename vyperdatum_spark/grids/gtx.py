@@ -43,10 +43,10 @@ class ArrayGrid:
 
     Same attribute surface as ``tiler.GridDef`` (which computes node
     values from an analytic plane); everything downstream
-    (``tiler.tile_rows``, ``transform_sql.combined_grids``, the
-    broadcast kernel payloads) consumes grids through
-    ``node_values``/the lattice attrs only, so the two are
-    interchangeable.
+    (``tiler.tile_rows``, ``transform_sql.combined_grids``) consumes
+    grids through ``node_values``/the lattice attrs only, so the two
+    are interchangeable. ``tiler.grids_from_tiles`` rebuilds one from
+    a grid_tiles table.
     """
 
     grid_id: str

@@ -28,11 +28,13 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..datums import catalog
 from ..engine.inputs import local_df
 from ..spatial import cells
+from .gtx import ArrayGrid
 
 TILE_SCHEMA = T.StructType(
     [
@@ -139,3 +141,33 @@ def build_tile_df(spark: SparkSession,
     defs = grid_defs if grid_defs is not None else fixture_grid_defs()
     rows = [r for gd in defs for r in tile_rows(gd)]
     return local_df(spark, rows, TILE_SCHEMA)
+
+
+def grids_from_tiles(tiles: DataFrame, grid_ids) -> list[ArrayGrid]:
+    """The inverse of :func:`tile_rows`: one collect of the ``tiles``
+    rows (TILE_SCHEMA) for ``grid_ids``, reassembled into one
+    :class:`gtx.ArrayGrid` per grid id. Each tile's lon0/lat0 sits at
+    an integer node offset from the grid's lowest tile origin, so a
+    complete tile set gives back the grid's own origin and node values
+    bit for bit. Nodes no tile carries stay NaN (no coverage); a grid
+    with no rows is absent from the result."""
+    rows = (tiles.filter(F.col("grid_id").isin(sorted(grid_ids)))
+            .select(*TILE_SCHEMA.names).collect())
+    by_grid: dict[str, list] = {}
+    for row in rows:
+        by_grid.setdefault(row.grid_id, []).append(row)
+    out = []
+    for grid_id, ts in sorted(by_grid.items()):
+        lon0 = min(t.lon0 for t in ts)
+        lat0 = min(t.lat0 for t in ts)
+        dlon, dlat = ts[0].dlon, ts[0].dlat
+        offs = [(round((t.lon0 - lon0) / dlon), round((t.lat0 - lat0) / dlat))
+                for t in ts]
+        nx = max(ox + t.nx for t, (ox, _oy) in zip(ts, offs))
+        ny = max(oy + t.ny for t, (_ox, oy) in zip(ts, offs))
+        values = np.full((ny, nx), np.nan)
+        for t, (ox, oy) in zip(ts, offs):
+            values[oy:oy + t.ny, ox:ox + t.nx] = np.asarray(
+                t.values, dtype=np.float64).reshape(t.ny, t.nx)
+        out.append(ArrayGrid(grid_id, lon0, lat0, dlon, dlat, nx, ny, values))
+    return out

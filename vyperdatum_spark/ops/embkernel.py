@@ -3,10 +3,9 @@ for k-means assignment, IVF probing, SemDeDup cell assignment and the
 hybrid-search vector leg.
 
 The codebook (or query matrix) is an EXPLICIT Spark broadcast — one
-numpy matrix per executor, the same device as
-`engine/transform.py::make_broadcast_kernel`'s grid payload — and
-scoring is an Arrow-batched UDF: vectorized numpy over each batch,
-never per-row Python.  Per-batch cost is a dim-step loop of n×k fused
+numpy matrix per executor, shipped once instead of inside every task
+closure — and scoring is an Arrow-batched UDF: vectorized numpy over
+each batch, never per-row Python.  Per-batch cost is a dim-step loop of n×k fused
 multiply-adds; plan-build and compile cost are O(1) in the model size,
 so dim=768 / k=256 codebooks run under ``codegen.fallback=false``
 (an unrolled k×dim expression tree cannot: janino fails past ~1,024
@@ -197,4 +196,8 @@ def centroid_cos_broadcast_col(df: DataFrame, cents: list[list[float]],
         def cosines(emb: pd.Series) -> pd.Series:
             return pd.Series(list(_score(_stack(emb, dim))))
 
-    return cosines(F.col(emb_col))
+    # marked nondeterministic so Catalyst never copies it: a filter
+    # inferred on a column derived from it (isnotnull(cell) from the
+    # probe join) would otherwise be pushed below the projection with
+    # the UDF inlined, and the kernel would run twice per scan
+    return cosines.asNondeterministic()(F.col(emb_col))

@@ -99,13 +99,23 @@ def _idf(n: int, df_t: int) -> float:
     return math.log((n - df_t + 0.5) / (df_t + 0.5) + 1.0)
 
 
+def _query_list(queries: list[tuple[int, list[str]]] | None):
+    """``queries``, or the seeded SEARCH_QUERIES when None. An empty
+    list is refused on the driver: its plan would fail deep in Spark
+    analysis (an empty ``array()`` is typed VOID)."""
+    queries = SEARCH_QUERIES if queries is None else queries
+    if not queries:
+        raise ValueError("queries is empty: pass at least one (qid, terms) pair")
+    return queries
+
+
 def bm25_topk(df: DataFrame, queries: list[tuple[int, list[str]]] | None = None,
               id_col: str = "doc_id", text_col: str = "text",
               k: int = TOP_K) -> DataFrame:
     """(qid, doc_id, score, rank) — BM25 top-k per query.  Scores are
     rounded to 6 dp and the rank is computed on the ROUNDED score so
     the ordering is engine-portable."""
-    queries = queries if queries is not None else SEARCH_QUERIES
+    queries = _query_list(queries)
     all_terms = sorted({t for _, ts in queries for t in ts})
     toks = _toks(F.col(text_col))
     dl = F.size(toks)
@@ -335,7 +345,7 @@ def hybrid_search_rrf(df: DataFrame,
     a literal handful); at 10^12 docs it swaps in the trained-IVF
     probe (`ops/similarity.ann_ivf_trained_topk`) over the SAME
     hashed embeddings — the fusion join is unchanged."""
-    queries = queries if queries is not None else SEARCH_QUERIES
+    queries = _query_list(queries)
     bm = bm25_topk(df, queries=queries, id_col=id_col,
                    text_col=text_col, k=k).select(
         "qid", id_col, F.col("rank").alias("rank_bm"))

@@ -560,7 +560,7 @@ def q_geo_transform_from_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----- J8/W3: kNN fallback at a grid coverage edge -------------------
 # A custom tile set NaN-masks region A's mllw grid east of a node
 # column; query points sit in the NaN strip within one node spacing,
-# so bilinear yields NaN and the kernel falls back to the nearest
+# so bilinear yields NaN and the kNN fill falls back to the nearest
 # valid node (reference coverage-edge semantics). Geometry is chosen
 # so the nearest valid node is ALWAYS the L column at the nearest row
 # (strip width 0.039 < spacing 0.05) — closed-form in SQL.
@@ -605,27 +605,14 @@ def _knn_points_sql() -> str:
 
 def q_geo_knn_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _knn_points(spark, sf_dir)
-    # grid_defs (not a tile DF) so the default SQL strategy compiles
-    # the NaN-masked grid + kNN candidate dims — pure-JVM J8 path
+    # the NaN-masked grid + kNN candidate dims compile into the plan:
+    # pure-JVM J8 path
     out = tx.transform_points(
         spark, pts, "ellipse", "mllw", key_col="pid",
         grid_defs=_knn_grid_defs(), knn_fallback=True,
         # fixture grid set is deterministic per catalog version →
         # dims cacheable across calls (the PROJ-grid-cache analog)
         grid_cache_token="knn_edge_fixture",
-    )
-    return out.select("pid", "region_id", "z_out")
-
-
-def q_geo_knn_edge_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same J8 query through the BROADCAST strategy (fused mapInArrow
-    numpy kernel). Extended-registry + bench twin of geo_knn_edge so
-    SQL-vs-kernel cost stays visible per round (VERDICT round-4 #7);
-    shares knn_edge_oracle_sql."""
-    pts = _knn_points(spark, sf_dir)
-    out = tx.transform_points(
-        spark, pts, "ellipse", "mllw", key_col="pid",
-        grid_defs=_knn_grid_defs(), knn_fallback=True, strategy="broadcast",
     )
     return out.select("pid", "region_id", "z_out")
 
@@ -1000,7 +987,8 @@ def queries() -> dict:
         "geo_transform_mllw_to_mhw": q_geo_transform_mllw_to_mhw,
         "geo_transform_from_depth": q_geo_transform_from_depth,
         "geo_knn_edge": q_geo_knn_edge,
-        "geo_knn_edge_kernel": q_geo_knn_edge_kernel,
+        # alias: bench.py lists the name
+        "geo_knn_edge_kernel": q_geo_knn_edge,
         "geo_raster_transform": q_geo_raster_transform,
         "geo_geotiff_roundtrip": q_geo_geotiff_roundtrip,
         "geo_csv_roundtrip": q_geo_csv_roundtrip,

@@ -7,8 +7,8 @@ not isolated operators):
 
     pages (url, warc_ts, text, lang)
       → geoparse (regexp column math, text untouched)
-      → vertical transform ellipse→mllw (SQL strategy: broadcast
-        joins + codegen, zero shuffle)
+      → vertical transform ellipse→mllw (broadcast joins + codegen,
+        zero shuffle)
       → exact dedup (md5 groupBy, min-url keeper)
       → benchmark decontamination (broadcast semi-join of eval
         n-gram hashes; drop any doc sharing a shingle)
@@ -93,7 +93,7 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = pages.filter(F.col("pid") % 97 != 0).drop("pid")
 
     # geoparse + transform: text rides through untouched (projection
-    # guarantee); the SQL strategy never ships it to Python.
+    # guarantee); the transform plan never ships it to Python.
     # localCheckpoint boundary (r5): the transform subtree is
     # zero-shuffle, so ReuseExchange cannot deduplicate it — without
     # the boundary the dedup self-join and the decontamination/keep

@@ -53,7 +53,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # The SQL transform strategy fuses 7+ broadcast joins and the
+        # The transform plan fuses 7+ broadcast joins and the
         # PIP/bilinear math into ONE whole-stage-codegen method that
         # can exceed HotSpot's 8000-byte JIT ceiling; without this flag
         # the stage silently runs in the bytecode INTERPRETER (measured

@@ -4,17 +4,21 @@ The reference assigns region membership implicitly via PROJ grid
 coverage (core.py:421-453) after a coarse bbox-intersect prune
 (core.py:86-158). We make it explicit and Spark-shaped:
 
-1. driver-side: each region polygon gets a coarse-cell *cover* list
-   (J1 prune -> broadcast equi-join on the cell key),
-2. executor-side: an exact even-odd ray-cast containment test inside
-   a vectorized pandas UDF (J2).
+1. driver-side: each region polygon is cut into its fine cells
+   (:func:`cell_terms`): constant-inside cells, and per boundary cell
+   the few ray-cast terms its points still need (J1 prune -> broadcast
+   equi-join on the cell key),
+2. executor-side: the exact even-odd ray cast over those terms, as a
+   Catalyst expression (transform_sql.cell_pip_sql, J2).
 
 Polygons are simple rings [(lon, lat), ...] (closing vertex optional).
-The ray cast is the standard crossing-number algorithm, vectorized
-over all points × edges in numpy — no per-row Python.
+The ray cast is the standard crossing-number algorithm; :func:`contains`
+is its numpy reference, vectorized over all points × edges.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
@@ -51,6 +55,79 @@ def contains(
     return (hit.sum(axis=1) % 2).astype(bool)
 
 
+CELL_EPS = 1e-9  # degrees; far above the cell-encoding rounding (~1e-13)
+
+
+def cell_terms(
+    poly: list[tuple[float, float]], res: int
+) -> dict[int, tuple[int, list[tuple] | None]]:
+    """Per covered cell: what the ray cast of :func:`contains` still
+    needs at runtime for points in that cell.
+
+    Returns ``{cell: (parity, terms)}``. ``terms`` is None when every
+    point of the cell gets the same answer; the parity is then 1
+    (inside). Cells where every point is outside are left out. Else
+    the point is inside iff ``parity + Σ hit(term)`` is odd, where a
+    term ``(x1, y1, y2, dx, dy)`` hits iff
+    ``((y1 <= y) != (y2 <= y)) and x < x1 + (y - y1) * dx / dy`` —
+    the crossing test of :func:`contains`, same float64 op order.
+
+    Exactness, per non-horizontal edge, for a cell widened by
+    ``CELL_EPS`` on every side (the cell a point encodes to is exact
+    up to ~1e-13°):
+
+    - an edge whose y-range misses the cell's band never crosses;
+    - an edge wholly left of the cell crosses only at an intersection
+      x below every point's x: it never hits;
+    - an edge wholly right of the cell hits iff it crosses, and its
+      crossing is ``[y1 <= y] XOR [y2 <= y]``. Those endpoint
+      comparisons are constant for endpoints outside the band (they
+      fold into the parity) and cancel in pairs for equal y; each one
+      left is a term ``(+inf, vy, +inf, 0, 1)``, which hits iff
+      ``vy <= y``;
+    - every other edge is kept as its own term.
+    """
+    ring = _ring(poly)
+    x1, y1, x2, y2 = ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1]
+    live = y1 != y2  # a horizontal edge never crosses
+    x1, y1, x2, y2 = x1[live], y1[live], x2[live], y2[live]
+    xlo, xhi = np.minimum(x1, x2), np.maximum(x1, x2)
+    ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
+    sz = cells.cell_size_deg(res)
+    x0, y0, xm, ym = polygon_bbox(poly)
+    ix0, iy0 = int(math.floor((x0 + 180.0) / sz)), int(math.floor((y0 + 90.0) / sz))
+    ix1, iy1 = int(math.floor((xm + 180.0) / sz)), int(math.floor((ym + 90.0) / sz))
+    ixs = np.arange(ix0, ix1 + 1)
+    ax0 = -180.0 + ixs * sz - CELL_EPS
+    ax1 = -180.0 + (ixs + 1) * sz + CELL_EPS
+    out: dict[int, tuple[int, list[tuple] | None]] = {}
+    for iy in range(iy0, iy1 + 1):
+        b0 = -90.0 + iy * sz - CELL_EPS
+        b1 = -90.0 + (iy + 1) * sz + CELL_EPS
+        e = np.flatnonzero((yhi >= b0) & (ylo <= b1))
+        if len(e) == 0:
+            continue  # no edge reaches the band: the whole row is outside
+        right = xlo[e][None, :] > ax1[:, None]
+        mid = ~right & ~(xhi[e][None, :] < ax0[:, None])
+        for c, ix in enumerate(ixs):
+            r = e[right[c]]
+            ends = np.concatenate([y1[r], y2[r]])
+            parity = int(np.count_nonzero(ends < b0) % 2)
+            vys, n = np.unique(ends[(ends >= b0) & (ends <= b1)],
+                               return_counts=True)
+            terms = [
+                (float(x1[i]), float(y1[i]), float(y2[i]),
+                 float(x2[i] - x1[i]), float(y2[i] - y1[i]))
+                for i in e[mid[c]]
+            ] + [(math.inf, float(v), math.inf, 0.0, 1.0) for v in vys[n % 2 == 1]]
+            cell = (res << 58) | (int(ix) << 29) | iy
+            if terms:
+                out[cell] = (parity, terms)
+            elif parity:
+                out[cell] = (1, None)
+    return out
+
+
 def polygon_bbox(poly: list[tuple[float, float]]) -> tuple[float, float, float, float]:
     ring = _ring(poly)
     return (
@@ -59,35 +136,3 @@ def polygon_bbox(poly: list[tuple[float, float]]) -> tuple[float, float, float, 
         float(ring[:, 0].max()),
         float(ring[:, 1].max()),
     )
-
-
-def polygon_cover(
-    poly: list[tuple[float, float]], res: int, refine: bool = False
-) -> list[int]:
-    """Coarse-cell cover for the prune join.
-
-    Default (refine=False) is the polygon-bbox cover — strictly
-    conservative (a superset of intersecting cells), which is all the
-    prune join needs for correctness; the exact PIP test downstream
-    removes false positives. ``refine=True`` additionally drops bbox
-    cells that fail a corner/center-in-polygon and vertex-in-rect
-    test — tighter for convex-ish rings (smaller broadcast), still a
-    superset for rectangles and convex polygons whose edges don't
-    slice a cell between its sampled corners."""
-    bbox_cells = cells.cover_bbox(*polygon_bbox(poly), res)
-    if not refine:
-        return bbox_cells
-    ring = _ring(poly)
-    keep = []
-    for c in bbox_cells:
-        x0, y0, x1, y1 = cells.cell_bounds(c)
-        corners_lon = np.array([x0, x1, x0, x1, (x0 + x1) / 2])
-        corners_lat = np.array([y0, y0, y1, y1, (y0 + y1) / 2])
-        if contains(poly, corners_lon, corners_lat).any():
-            keep.append(c)
-            continue
-        inx = (ring[:, 0] >= x0) & (ring[:, 0] <= x1)
-        iny = (ring[:, 1] >= y0) & (ring[:, 1] <= y1)
-        if (inx & iny).any():
-            keep.append(c)
-    return keep
