@@ -63,12 +63,25 @@ def main() -> None:
         import shutil
         from pyspark.sql import functions as F
         x_dir = "/tmp/vyspark_scale10"
-        if not os.path.exists(f"{x_dir}/_DONE"):
+        sources = (("documents", "doc_id", 10_000_000),
+                   ("events", "event_id", 100_000_000),
+                   ("embeddings", "vec_id", 10_000_000))
+        # the replica is keyed on its sources: rebuilt when sf_dir or the
+        # size or mtime of a source table differs from the last build
+        stats = [os.stat(f"{sf_dir}/{t}.parquet") for t, _c, _o in sources]
+        key = json.dumps([os.path.abspath(sf_dir)] + [
+            (t, st.st_size, st.st_mtime_ns)
+            for (t, _c, _o), st in zip(sources, stats)
+        ])
+        try:
+            with open(f"{x_dir}/_DONE") as f:
+                built = f.read()
+        except OSError:
+            built = None
+        if built != key:
             shutil.rmtree(x_dir, ignore_errors=True)
             os.makedirs(x_dir, exist_ok=True)
-            for table, id_c, off in (("documents", "doc_id", 10_000_000),
-                                     ("events", "event_id", 100_000_000),
-                                     ("embeddings", "vec_id", 10_000_000)):
+            for table, id_c, off in sources:
                 src = spark.read.parquet(f"{sf_dir}/{table}.parquet")
                 uni = None
                 for r in range(10):
@@ -76,7 +89,8 @@ def main() -> None:
                     uni = d if uni is None else uni.unionByName(d)
                 uni.repartition(32).write.mode("overwrite").parquet(
                     f"{x_dir}/{table}.parquet")
-            open(f"{x_dir}/_DONE", "w").write("ok")
+            with open(f"{x_dir}/_DONE", "w") as f:
+                f.write(key)
         out = {}
         for name in names:
             t_small = None

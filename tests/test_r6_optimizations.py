@@ -1,8 +1,9 @@
 """Focused tests for the round-6 optimization internals.
 
-Covers the three r6 rewrites whose equivalence arguments are local
+Covers the r6 rewrites whose equivalence arguments are local
 invariants (the oracle gate proves end-to-end equality; these pin the
-pieces):
+pieces). The cell, CRS and Morton SQL-text builders are tested against
+numpy in tests/test_spark_sql_builders.py.
 
 - slots_dim: the denormalized prune dim must carry REAL Nones for
   missing slots (a NaN would flip join-miss semantics) and agree
@@ -14,7 +15,6 @@ pieces):
   interior, on edges and vertices, outside).
 - read_input: repartitions a 1-partition scan up to default
   parallelism, leaves an already-parallel scan untouched.
-- cell_sql / frame_dz_spark_sql: parse to the Column builders' trees.
 - get_spark: the tmpfs spark.local.dir is opt-in.
 """
 
@@ -25,7 +25,6 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from vyperdatum_spark.engine import transform_sql as tsql
 
@@ -174,6 +173,7 @@ def test_pip_sql_matches_numpy_ray_cast(spark):
 
 def test_bilinear_sql_matches_numpy_interp_tile(spark):
     from vyperdatum_spark.grids import bilinear
+    from vyperdatum_spark.spatial import cells
 
     lon0, lat0, dlon, dlat, nx, ny = -78.05, 32.95, 0.05, 0.05, 16, 17
     w = np.random.default_rng(3).normal(size=(ny, nx))
@@ -194,7 +194,7 @@ def test_bilinear_sql_matches_numpy_interp_tile(spark):
         "v00": w[iy, ix], "v01": w[iy, ix + 1],
         "v10": w[iy + 1, ix], "v11": w[iy + 1, ix + 1],
     })
-    d = tsql._d
+    d = cells.dlit
     got = _eval_sql(spark, pdf, {"b": tsql.bilinear_sql(
         "x", "y", d(lon0), d(lat0), d(dlon), d(dlat),
         "v00", "v01", "v10", "v11",
@@ -215,30 +215,6 @@ def test_read_input_parallelizes_only_small_scans(spark, tmp_path):
     wide = spark.range(100).repartition(
         spark.sparkContext.defaultParallelism + 4)
     assert parallelize_scan(wide, spark) is wide
-
-
-def _analyzed(df, col):
-    """The analyzed expression tree of ``col`` over ``df``."""
-    qe = df.select(col.alias("_o"))._jdf.queryExecution()
-    return qe.analyzed().expressions().head().child()
-
-
-def test_sql_twins_are_the_column_trees(spark):
-    """The transform builds cell ids and the output-frame correction
-    from SQL text; each must parse to the very tree the Column builder
-    makes (a bare 180.0 would parse as DECIMAL and change the math)."""
-    from vyperdatum_spark.spatial import cells, crs as hcrs
-
-    pts = spark.range(1).selectExpr("-76.5D AS x", "34.25D AS y")
-    x, y = F.col("x"), F.col("y")
-    pairs = [
-        (cells.encode_col(x, y, res), tsql.cell_sql("`x`", "`y`", res))
-        for res in (cells.COARSE_RES, cells.FINE_RES)
-    ]
-    pairs.append((hcrs.frame_dz_cols(x, y), hcrs.frame_dz_spark_sql("x", "y")))
-    for dsl, txt in pairs:
-        assert _analyzed(pts, dsl).semanticEquals(
-            _analyzed(pts, F.expr(txt))), txt
 
 
 def test_spark_local_dir_is_opt_in(monkeypatch):

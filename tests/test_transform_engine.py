@@ -574,3 +574,61 @@ def test_knn_candidate_build_linear_in_edge_cells():
     assert len(rows) >= int(inv.sum())  # all fillable interior cells present
     assert cmax <= 64
     assert dt < 30.0, f"candidate build took {dt:.1f}s — not linear?"
+
+
+@pytest.mark.parametrize("crs", ["utm_syn", "itrfs"])
+def test_utm_and_itrfs_input(spark, fixture_points, crs):
+    """Foreign input CRSes through transform_points: x_geo/y_geo are
+    the numpy inverse (bit for bit for itrfs, 1e-12 relative for
+    utm_syn's trig), regions those of the geoid-frame point, and z_out
+    the closed form at the reference's ±0.002."""
+    from vyperdatum_spark.spatial import crs as hcrs
+
+    pdf = fixture_points
+    x, y = hcrs.from_geoid_frame_np(crs, pdf.x.values, pdf.y.values)
+    out = run_engine(spark, pdf.assign(x=x, y=y), "ellipse", "mllw",
+                     input_crs=crs)
+    lon, lat, zg = hcrs.to_geoid_frame_np(crs, x, y, pdf.z.values)
+    got = out[["x_geo", "y_geo"]].to_numpy().T
+    if crs == "utm_syn":
+        np.testing.assert_allclose(got, [lon, lat], rtol=1e-12, atol=0)
+    else:
+        assert np.array_equal(got, [lon, lat])
+    region, _z, _u = numpy_oracle(lon, lat, zg, "ellipse", "mllw")
+    assert (out["region_id"].fillna("∅").to_numpy()
+            == pd.Series(region).fillna("∅").to_numpy()).all()
+    cov = out[out.covered]
+    assert 0 < len(cov) < len(out)
+    exp = [catalog.transform_closed_form(r, "ellipse", "mllw", lon[i], lat[i], zg[i])
+           for i, r in zip(cov.index, cov.region_id)]
+    assert np.abs(cov.z_out.to_numpy() - exp).max() <= 0.002
+
+
+@pytest.mark.parametrize("kwargs", [{}, {"output_frame": "ITRFS"}],
+                         ids=["default", "itrfs_output"])
+def test_sampled_uncovered_rows_pass_through(spark, fixture_points, kwargs):
+    """allow_points_outside_coverage in sampled mode: a point whose cell
+    center is uncovered gets covered=false, no region and the exact
+    path's passthrough z_out (the default mode gave it a NULL z_out,
+    the frame mode covered=true)."""
+    pts = spark.createDataFrame(fixture_points)
+    kw = dict(allow_points_outside_coverage=True, **kwargs)
+    exact = tx.transform_points(
+        spark, pts, "ellipse", "mllw", **kw).toPandas().set_index("pid")
+    sampled = tx.transform_points_sampled(
+        spark, pts, "ellipse", "mllw", res=cells.FINE_RES, **kw,
+    ).toPandas().set_index("pid")
+    both = exact.join(sampled, rsuffix="_s")
+    off = both[~both.covered_s]
+    # sampling moves only the few points near a coverage edge
+    assert 0.9 * (~both.covered).sum() <= len(off) <= 1.1 * (~both.covered).sum()
+    assert off.region_id_s.isna().all()
+    assert off.z_out_s.notna().all()
+    # the passthrough is flip·z: the exact path's value wherever it too
+    # is uncovered
+    both_off = off[~off.covered]
+    assert len(both_off) > 0
+    assert np.array_equal(both_off.z_out_s.to_numpy(), both_off.z_out.to_numpy())
+    assert np.array_equal(off.z_out_s.to_numpy(), -off.z.to_numpy())
+    on = both[both.covered_s]
+    assert on.region_id_s.notna().all() and on.z_out_s.notna().all()

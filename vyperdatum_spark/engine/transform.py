@@ -38,15 +38,15 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datums import catalog, pipeline as pl
 from ..grids import tiler
 from ..spatial import cells, crs as hcrs
+from ..spatial.cells import dlit
 from . import transform_sql as tsql
 from .inputs import local_df
-from .transform_sql import _d
 
 def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFrame:
     """(region_id, unc, pipeline_str) — J6 uncertainty + lineage dim."""
@@ -154,7 +154,10 @@ def transform_points(
     # F4 sign matrix: depth-axis INPUT negates z before the pipeline,
     # depth-axis OUTPUT negates after (core.py:397-403, 441-449)
     flips = pl.axis_flips(from_datum, to_datum)
-    x, y, z = F.col(x_col), F.col(y_col), F.col(z_col)
+    # the plan is built from SQL text (one py4j round-trip per
+    # expression, not per operator); backticks keep caller-supplied
+    # column names whole
+    xs, ys, zs = f"`{x_col}`", f"`{y_col}`", f"`{z_col}`"
 
     # ----- horizontal CRS pre-step (core.py:397-403 then :419) -------
     in_crs = hcrs.validate_crs(input_crs)
@@ -172,22 +175,20 @@ def transform_points(
     if in_crs != "nad83s" or out_frame != hcrs.GEOID_FRAME:
         # depth-axis negation FIRST, then the 3D transform to the
         # geoid frame (matches the reference's operation order)
-        lon_c, lat_c, zg_c = hcrs.to_geoid_frame_cols(
-            in_crs, x, y, F.lit(flips[0]) * z
+        geo = hcrs.to_geoid_frame_spark_sql(
+            in_crs, xs, ys, f"({dlit(flips[0])} * {zs})"
         )
-        points = (
-            points.withColumn("x_geo", lon_c)
-            .withColumn("y_geo", lat_c)
-            .withColumn("_zg", zg_c)
+        points = points.withColumns(
+            {c: F.expr(e) for c, e in zip(("x_geo", "y_geo", "_zg"), geo)}
         )
         x_col, y_col, z_col = "x_geo", "y_geo", "_zg"
-        x, y, z = F.col(x_col), F.col(y_col), F.col(z_col)
+        xs, ys, zs = f"`{x_col}`", f"`{y_col}`", f"`{z_col}`"
         flips = (1.0, flips[1])  # input flip folded into _zg
         if not out_is_in and out_frame != hcrs.GEOID_FRAME:
             # output-frame z-correction new_z -= (z - diffz): the net
             # in→out 3D frame shift evaluated at the geoid-frame point
             dz = hcrs.frame_dz_spark_sql(x_col, y_col)
-            dz_corr = _d(0.0)
+            dz_corr = dlit(0.0)
             if in_frame == "ITRFS":
                 dz_corr = f"({dz_corr} + {dz})"
             if out_frame == "ITRFS":
@@ -195,37 +196,37 @@ def transform_points(
         if out_is_in:
             emit_out_xy = None  # original x/y already ARE the output
         elif out_frame == hcrs.GEOID_FRAME:
-            emit_out_xy = (x, y)
+            emit_out_xy = (xs, ys)
         else:
             out_crs_name = "nad83s" if out_frame == "NAD83S" else "itrfs"
-            emit_out_xy = hcrs.from_geoid_frame_cols(out_crs_name, x, y)
+            emit_out_xy = hcrs.from_geoid_frame_spark_sql(out_crs_name, xs, ys)
 
     def _emit(df: DataFrame) -> DataFrame:
         if emit_out_xy is not None:
             # reference writes output coords only for valid (covered)
             # points (ans_x[valid_index], core.py:446-448); uncovered
             # rows keep null x_out/y_out
-            cov = F.col("covered") if "covered" in df.columns else F.lit(True)
-            df = df.withColumn(
-                "x_out", F.when(cov, emit_out_xy[0])
-            ).withColumn("y_out", F.when(cov, emit_out_xy[1]))
+            df = df.withColumns({
+                c: F.expr(f"CASE WHEN covered THEN {e} END")
+                for c, e in zip(("x_out", "y_out"), emit_out_xy)
+            })
         return df.drop("_zg")
 
     if pl.compile_steps(from_datum, to_datum, "R", "G") is None:
         # identical datums: z passes through (flip/round still apply)
-        out = points.withColumn("cell5", cells.encode_col(x, y, cells.COARSE_RES))
-        out = out.withColumn("region_id", F.lit(None).cast("string"))
-        out = out.withColumn("region_ord", F.lit(None).cast("int"))
-        out = out.withColumn("sep", F.lit(0.0))
-        out = out.withColumn(
-            "z_out", F.round(F.lit(flips[1]) * (F.lit(flips[0]) * z), 3)
-        )
-        out = out.withColumn("covered", F.lit(True))
+        cols = {
+            "cell5": cells.encode_spark_sql(xs, ys, cells.COARSE_RES),
+            "region_id": "CAST(NULL AS STRING)",
+            "region_ord": "CAST(NULL AS INT)",
+            "sep": dlit(0.0),
+            "z_out": f"round(({dlit(flips[1])} * ({dlit(flips[0])} * {zs})), 3)",
+            "covered": "true",
+        }
         if include_uncertainty:
-            out = out.withColumn("unc", F.lit(0.0))
+            cols["unc"] = dlit(0.0)
         if include_lineage:
-            out = out.withColumn("pipeline_str", F.lit(None).cast("string"))
-        return _emit(out)
+            cols["pipeline_str"] = "CAST(NULL AS STRING)"
+        return _emit(points.withColumns({c: F.expr(e) for c, e in cols.items()}))
 
     if tiles is not None and grid_defs is None:
         needed = {grid_id for *_, grid_id, _sign
@@ -260,14 +261,12 @@ def _finalize(
     """Apply the output contracts to a frame that carries the winning
     region_id/region_ord/sep: F1 coverage, F4 flip matrix, F5 round(3),
     F6 CATZOC, J6 unc, output-frame z-correction (core.py:443-444)."""
-    # one projection built from SQL text: each Column-DSL operator is a
-    # py4j round-trip
-    corr = dz_corr if dz_corr is not None else _d(0.0)
+    corr = dz_corr if dz_corr is not None else dlit(0.0)
     # NaN-vs-NULL: Arrow maps pandas NaN to NULL, but guard both
     covered = "((sep IS NOT NULL) AND (NOT isnan(sep)))"
-    fout = _d(flips[1])
+    fout = dlit(flips[1])
     # input z in height (positive-up) convention
-    z_h = f"({_d(flips[0])} * `{z_col}`)"
+    z_h = f"({dlit(flips[0])} * `{z_col}`)"
     z_out = f"CASE WHEN {covered} THEN round(({fout} * (({z_h} + sep) + {corr})), 3)"
     if allow_points_outside_coverage:
         z_out += f" ELSE round(({fout} * {z_h}), 3)"
@@ -282,14 +281,14 @@ def _finalize(
         if catalog.REGIONS:
             unc = "map(" + ", ".join(
                 f"'{r.region_id}', "
-                f"{_d(catalog.combined_sigma(r.region_id, to_datum))}"
+                f"{dlit(catalog.combined_sigma(r.region_id, to_datum))}"
                 for r in catalog.REGIONS
             ) + ")[region_id]"
         if allow_points_outside_coverage:
             # F6: CATZOC-D vertical uncertainty over the HEIGHT-axis z
             # (raster.py:384-390 negates a sounding input first)
-            catzoc = (f"CASE WHEN ({z_h} > 0) THEN {_d(3.0)} "
-                      f"ELSE ({_d(3.0)} - ({_d(0.06)} * {z_h})) END")
+            catzoc = (f"CASE WHEN ({z_h} > 0) THEN {dlit(3.0)} "
+                      f"ELSE ({dlit(3.0)} - ({dlit(0.06)} * {z_h})) END")
             cols["unc"] = f"CASE WHEN {covered} THEN {unc} ELSE {catzoc} END"
         else:
             cols["unc"] = f"CASE WHEN {covered} THEN {unc} END"
@@ -308,16 +307,6 @@ def _finalize(
 # J5: sampled mode — transform distinct fine cells, join back
 # --------------------------------------------------------------------
 
-def cell_center_cols(cell: Column, res: int) -> tuple[Column, Column]:
-    """Center lon/lat of a fine cell — pure column math."""
-    sz = F.lit(cells.cell_size_deg(res))
-    ix = F.shiftrightunsigned(cell, 29).bitwiseAND(F.lit((1 << 29) - 1)).cast("double")
-    iy = cell.bitwiseAND(F.lit((1 << 29) - 1)).cast("double")
-    lon = F.lit(-180.0) + (ix + F.lit(0.5)) * sz
-    lat = F.lit(-90.0) + (iy + F.lit(0.5)) * sz
-    return lon, lat
-
-
 def transform_points_sampled(
     spark: SparkSession,
     points: DataFrame,
@@ -331,18 +320,23 @@ def transform_points_sampled(
     **kwargs,
 ) -> DataFrame:
     """Sampled-grid mode (reference points.py:63-102, J5): transform
-    only the distinct fine-cell centers, then equi-join the separation
+    only the distinct fine-cell centers, then equi-join the result
     back to the full point set. THE production path at 10^12 rows —
-    O(distinct cells) pandas work instead of O(points).
+    O(distinct cells) transform work instead of O(points).
 
-    Horizontal-CRS handling: a non-default ``input_crs`` /
-    ``output_frame`` routes to the frame-aware path — cells are binned
-    on geoid-frame lon/lat and the FULL transform (projection, frame
-    δz, output-frame z-correction) is evaluated at each cell center
-    with z=0, exactly the reference's sampled semantics
-    (points.py:67: centers run through transform_dataset, :85:
-    ``newz = z_sep[cell] + flip·z``). Like the reference, sampled mode
-    emits no per-point output x/y (points.py:78-79).
+    Cells bin on geoid-frame lon/lat, so cell keys are degree-scaled
+    whatever the input CRS's units; the centers go back to the input
+    CRS and through the full transform (projection, frame δz,
+    output-frame z-correction) with z=0, exactly the reference's
+    sampled semantics (points.py:67). A covered point gets
+    ``round(fout·(fin·z + sep), 3)`` with the center's separation, or,
+    under a non-default ``input_crs`` / ``output_frame``, the center's
+    transformed value plus the axis-flipped point z
+    (``z_out(center) + fin·fout·z``, points.py:85). A point whose
+    center is uncovered gets covered=false, a NULL region_id, and with
+    ``allow_points_outside_coverage`` the full path's passthrough z.
+    Like the reference, sampled mode emits no per-point output x/y
+    (points.py:78-79).
     """
     # resolve datum specs (EPSG/WKT/tuples) exactly as the full path
     # does so the frame detection below sees the resolved CRS
@@ -351,117 +345,49 @@ def transform_points_sampled(
         kwargs.pop("output_frame", None),
     )
     in_crs = hcrs.validate_crs(input_crs)
-    in_frame = hcrs.CRS_FRAME[in_crs]
     frame_mode = in_crs != "nad83s" or (
-        output_frame is not None and output_frame.upper() != in_frame
+        output_frame is not None
+        and output_frame.upper() != hcrs.CRS_FRAME[in_crs]
     )
-    if frame_mode:
-        return _transform_sampled_frame(
-            spark, points, from_datum, to_datum, key_col, x_col, y_col,
-            z_col, res, in_crs, output_frame, **kwargs,
-        )
-
-    x, y, z = F.col(x_col), F.col(y_col), F.col(z_col)
     fin, fout = pl.axis_flips(from_datum, to_datum)
-
-    with_cell = points.withColumn("cell_r", cells.encode_col(x, y, res))
-    distinct_cells = with_cell.select("cell_r").distinct()
-    lon, lat = cell_center_cols(F.col("cell_r"), res)
-    centers = distinct_cells.select(
-        F.col("cell_r"), lon.alias("x"), lat.alias("y"), F.lit(0.0).alias("z")
+    zs = f"`{z_col}`"
+    # the point in the geoid frame: binning lon/lat, passthrough z
+    lon, lat, z_geo = hcrs.to_geoid_frame_spark_sql(
+        in_crs, f"`{x_col}`", f"`{y_col}`", f"({dlit(fin)} * {zs})"
     )
-    tc = transform_points(
-        spark, centers, from_datum, to_datum,
-        key_col="cell_r", x_col="x", y_col="y", z_col="z", **kwargs,
-    )
-    cell_sep = tc.select(
-        "cell_r",
-        F.col("sep").alias("cell_sep"),
-        F.col("region_id").alias("region_id"),
-        F.col("region_ord").alias("region_ord"),
-        *(["unc"] if "unc" in tc.columns else []),
-    )
-    # no broadcast hint: cell_sep is O(distinct fine cells) of the
-    # input — bounded globally (~2M res-9 cells ≈ 100 MB+) but not
-    # small; AQE broadcasts it when the runtime size allows
-    out = with_cell.join(cell_sep, "cell_r", "left")
-    covered = F.col("cell_sep").isNotNull()
-    out = (
-        out.withColumn("sep", F.col("cell_sep"))
-        .withColumn("z_out", F.when(
-            covered,
-            F.round(F.lit(fout) * (F.lit(fin) * z + F.col("sep")), 3),
-        ))
-        .withColumn("covered", covered)
-        .drop("cell_sep")
-    )
-    return out
-
-
-def _transform_sampled_frame(
-    spark: SparkSession,
-    points: DataFrame,
-    from_datum: str,
-    to_datum: str,
-    key_col: str,
-    x_col: str,
-    y_col: str,
-    z_col: str,
-    res: int,
-    in_crs: str,
-    output_frame: str | None,
-    **kwargs,
-) -> DataFrame:
-    """Sampled mode with a non-default horizontal CRS / output frame.
-
-    The reference evaluates EVERYTHING (projection inverse, frame δz,
-    grid separation, output-frame z-correction) at the sampled cell
-    center with z=0 (points.py:67), then adds the axis-flipped point z
-    to the center's transformed value (points.py:85). We mirror that:
-    ``z_out = z_out(center, z=0) + fin·fout·z``. Binning runs on
-    geoid-frame lon/lat so cell keys are degree-scaled regardless of
-    the input CRS's units."""
-    x, y, z = F.col(x_col), F.col(y_col), F.col(z_col)
-    fin, fout = pl.axis_flips(from_datum, to_datum)
-
-    lon_g, lat_g, _zg = hcrs.to_geoid_frame_cols(in_crs, x, y, F.lit(0.0))
     with_cell = points.withColumn(
-        "cell_r", cells.encode_col(lon_g, lat_g, res)
+        "cell_r", F.expr(cells.encode_spark_sql(lon, lat, res))
     )
-    distinct_cells = with_cell.select("cell_r").distinct()
-    lon, lat = cell_center_cols(F.col("cell_r"), res)
     # centers expressed back in the INPUT CRS so the inner transform
     # applies the same frame path as the full engine
-    cx, cy = hcrs.from_geoid_frame_cols(in_crs, lon, lat)
-    centers = distinct_cells.select(
-        F.col("cell_r"), cx.alias("x"), cy.alias("y"), F.lit(0.0).alias("z")
+    cx, cy = hcrs.from_geoid_frame_spark_sql(
+        in_crs, *cells.center_spark_sql("cell_r", res)
+    )
+    centers = with_cell.select("cell_r").distinct().selectExpr(
+        "cell_r", f"{cx} AS x", f"{cy} AS y", f"{dlit(0.0)} AS z"
     )
     tc = transform_points(
         spark, centers, from_datum, to_datum,
         key_col="cell_r", x_col="x", y_col="y", z_col="z",
         input_crs=in_crs, output_frame=output_frame, **kwargs,
     )
-    cell_sep = tc.select(
-        "cell_r",
-        F.col("z_out").alias("_cell_z0"),
-        F.col("sep").alias("sep"),
-        F.col("region_id").alias("region_id"),
-        F.col("region_ord").alias("region_ord"),
+    cell_sep = tc.selectExpr(
+        "cell_r", "region_id", "region_ord",
         *(["unc"] if "unc" in tc.columns else []),
+        "sep", "covered AS _cov", "z_out AS _z0",
     )
+    # no broadcast hint: cell_sep is O(distinct fine cells) of the
+    # input — bounded globally (~2M res-9 cells ≈ 100 MB+) but not
+    # small; AQE broadcasts it when the runtime size allows
     out = with_cell.join(cell_sep, "cell_r", "left")
-    covered = F.col("_cell_z0").isNotNull()
-    # final round(3) mirrors the default sampled path and the full
-    # path (core.py:462 rounds once at output): both sampled modes
-    # must emit the same precision for the same request shape
-    return (
-        out.withColumn(
-            "z_out",
-            F.when(
-                covered,
-                F.round(F.col("_cell_z0") + F.lit(fin * fout) * z, 3),
-            ),
-        )
-        .withColumn("covered", covered)
-        .drop("_cell_z0")
-    )
+    if frame_mode:
+        z_cov = f"(_z0 + ({dlit(fin * fout)} * {zs}))"
+    else:
+        z_cov = f"({dlit(fout)} * (({dlit(fin)} * {zs}) + sep))"
+    z_out = f"CASE WHEN _cov THEN round({z_cov}, 3)"
+    if kwargs.get("allow_points_outside_coverage", False):
+        z_out += f" ELSE round(({dlit(fout)} * {z_geo}), 3)"
+    return out.withColumns({
+        "z_out": F.expr(z_out + " END"),
+        "covered": F.expr("coalesce(_cov, false)"),
+    }).drop("_cov", "_z0")

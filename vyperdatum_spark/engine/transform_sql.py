@@ -280,24 +280,6 @@ def knn_cells_pdf(grids: dict, max_candidates: int = 64):
 # column expressions
 # --------------------------------------------------------------------
 
-def _d(v: float) -> str:
-    """SQL double literal (the D suffix keeps the parser off DECIMAL,
-    which would change the arithmetic; repr() round-trips exactly)."""
-    return f"{float(v)!r}D"
-
-
-def cell_sql(x: str, y: str, res: int) -> str:
-    """Spark SQL twin of :func:`cells.encode_col`, operator for operator
-    (cells.encode_sql is the DuckDB form: its bare ``180.0`` parses as
-    DECIMAL in Spark)."""
-    sz = _d(cells.cell_size_deg(res))
-    return (
-        f"((shiftleft(CAST({int(res)} AS BIGINT), 58)"
-        f" | shiftleft(CAST(FLOOR(({x} + {_d(180.0)}) / {sz}) AS BIGINT), 29))"
-        f" | CAST(FLOOR(({y} + {_d(90.0)}) / {sz}) AS BIGINT))"
-    )
-
-
 PIP_CODEGEN_TERMS = 4  # longest term list evaluated without a lambda
 _TERM_FIELDS = ("x1", "y1", "y2", "dx", "dy")
 _TERMS_TYPE = ("array<struct<" + ", ".join(f"{f}: double" for f in _TERM_FIELDS)
@@ -547,15 +529,14 @@ def transform_points_sql(
     )
     # The plan is built from SQL text: every Column-DSL operator is one
     # py4j round-trip (the DSL form of this plan cost 2,300-3,000 per
-    # warm build, ~200 as text). Each string parses to the tree the DSL
-    # would build (D-suffixed double literals, same parenthesization),
-    # so results and codegen are the same.
+    # warm build, ~200 as text). Double literals carry the D suffix
+    # (cells.dlit): a bare 180.0 parses as DECIMAL.
     # backticks: caller-supplied column names must survive the SQL
     # parser (`lon-deg` would otherwise parse as a subtraction)
     xs, ys = f"`{x_col}`", f"`{y_col}`"
     out = points.withColumns({
-        "cell5": F.expr(cell_sql(xs, ys, cells.COARSE_RES)),
-        "_c9": F.expr(cell_sql(xs, ys, cells.FINE_RES)),
+        "cell5": F.expr(cells.encode_spark_sql(xs, ys, cells.COARSE_RES)),
+        "_c9": F.expr(cells.encode_spark_sql(xs, ys, cells.FINE_RES)),
     })
     # ONE denormalized prune join (slots_dim): rid/ord/ngr, PIP terms
     # and lattice params for every slot arrive together (one broadcast

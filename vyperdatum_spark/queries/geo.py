@@ -179,10 +179,10 @@ def q_geo_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallel=False: pure column math, no heavy per-row work - the
     # read_input pre-shuffle only adds a stage (r6 A/B)
     pts = derived_points(spark, sf_dir, parallel=False)
-    return pts.select(
+    return pts.selectExpr(
         "pid",
-        cells.encode_col(F.col("x"), F.col("y"), cells.COARSE_RES).alias("cell5"),
-        cells.encode_col(F.col("x"), F.col("y"), cells.FINE_RES).alias("cell9"),
+        cells.encode_spark_sql("x", "y", cells.COARSE_RES) + " AS cell5",
+        cells.encode_spark_sql("x", "y", cells.FINE_RES) + " AS cell9",
     )
 
 
@@ -202,18 +202,17 @@ def q_geo_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-partitions anyway; the read_input pre-shuffle only adds a
     # stage (r6 A/B: 0.70 -> 0.46 s)
     pts = derived_points(spark, sf_dir, parallel=False)
-    base = pts.select(
-        cells.encode_col(F.col("x"), F.col("y"), cells.FINE_RES).alias("cell"),
-        "z",
-    ).filter(F.col("cell") >= 0)
+    base = pts.selectExpr(
+        cells.encode_spark_sql("x", "y", cells.FINE_RES) + " AS cell", "z",
+    ).filter("cell >= 0")
     l9 = base.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_points"), F.sum("z").alias("_s")
     )
 
     def up(df: DataFrame, res: int) -> DataFrame:
         return (
-            df.select(
-                cells.parent_col(F.col("cell"), res, res - 1).alias("cell"),
+            df.selectExpr(
+                cells.parent_spark_sql("cell", res, res - 1) + " AS cell",
                 "n_points",
                 "_s",
             )
@@ -251,15 +250,11 @@ def q_geo_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, interleaved instead of concatenated bit layout), used by
     spatial.zorder.zorder_write to make bbox predicates prune at
     parquet-file level."""
-    from ..spatial import zorder
-
     pts = derived_points(spark, sf_dir)
-    return pts.select(
+    return pts.selectExpr(
         "pid",
-        zorder.morton_from_lonlat_col(
-            F.col("x"), F.col("y"), cells.COARSE_RES).alias("z5"),
-        zorder.morton_from_lonlat_col(
-            F.col("x"), F.col("y"), cells.FINE_RES).alias("z9"),
+        zorder_mod.morton_from_lonlat_spark_sql("x", "y", cells.COARSE_RES) + " AS z5",
+        zorder_mod.morton_from_lonlat_spark_sql("x", "y", cells.FINE_RES) + " AS z9",
     )
 
 
@@ -413,8 +408,8 @@ def q_geo_transform_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     plane). The projection is linear, so the DuckDB oracle reproduces
     the float64 math exactly."""
     pts = derived_points(spark, sf_dir)
-    px, py = hcrs.from_geoid_frame_cols("spcs_syn", F.col("x"), F.col("y"))
-    proj = pts.select("pid", px.alias("x"), py.alias("y"), "z")
+    px, py = hcrs.from_geoid_frame_spark_sql("spcs_syn", "x", "y")
+    proj = pts.selectExpr("pid", f"{px} AS x", f"{py} AS y", "z")
     out = tx.transform_points(
         spark, proj, "ellipse", "mllw", key_col="pid", input_crs="spcs_syn"
     )
@@ -442,8 +437,8 @@ def q_geo_sampled_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     center with z=0 (reference points.py:67), and per-point z adds the
     axis-flipped input z to the center value (points.py:85)."""
     pts = derived_points(spark, sf_dir)
-    px, py = hcrs.from_geoid_frame_cols("spcs_syn", F.col("x"), F.col("y"))
-    proj = pts.select("pid", px.alias("x"), py.alias("y"), "z")
+    px, py = hcrs.from_geoid_frame_spark_sql("spcs_syn", "x", "y")
+    proj = pts.selectExpr("pid", f"{px} AS x", f"{py} AS y", "z")
     out = tx.transform_points_sampled(
         spark, proj, "ellipse", "mllw", key_col="pid",
         input_crs="spcs_syn", res=cells.FINE_RES,

@@ -12,15 +12,18 @@ size = 180 / 2^(r+1) degrees). Cell ids are 64-bit:
 
     cell = (r << 58) | (ix << 29) | iy
 
-Crucially the encoding is pure integer/double arithmetic, so it exists
-in four equivalent forms used throughout the repo:
+The encoding is pure integer/double arithmetic, so each engine gets
+its own builder of the same math:
 
-- numpy (tiler, kernels, test oracles)          -> :func:`encode_np`
-- Spark Column (JVM-side, whole-stage codegen)  -> :func:`encode_col`
-- ANSI SQL text (DuckDB correctness oracles)    -> :func:`encode_sql`
+- numpy (tiler, dims, test references)          -> :func:`encode_np`
 - scalar Python (driver-side covers)            -> :func:`encode_one`
+- Spark SQL text (the one Spark-side builder)   -> :func:`encode_spark_sql`
+- ANSI SQL text (DuckDB correctness oracles)    -> :func:`encode_sql`
 
-All four are bit-identical by construction; tests assert it.
+The DuckDB builder is written apart from the Spark one on purpose, so
+the oracle stays an independent check. The Spark builders here
+(:func:`encode_spark_sql`, :func:`parent_spark_sql`,
+:func:`center_spark_sql`) are tested against the numpy forms.
 
 Replaces: the reference has no spatial index at all (it loops region
 files and lets PROJ grid I/O resolve coverage — core.py:86-158,
@@ -33,8 +36,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 COARSE_RES = 5  # grid-tile / cover join key (~2.8° cells)
 FINE_RES = 9  # sampled-transform key (~0.18° cells)
@@ -63,16 +64,31 @@ def encode_one(lon: float, lat: float, res: int) -> int:
     return (res << 58) | (ix << 29) | iy
 
 
-def encode_col(lon: Column, lat: Column, res: int) -> Column:
-    """Spark Column form — stays inside whole-stage codegen."""
-    sz = F.lit(cell_size_deg(res))
-    ix = F.floor((lon + F.lit(180.0)) / sz).cast("long")
-    iy = F.floor((lat + F.lit(90.0)) / sz).cast("long")
-    return (
-        F.shiftleft(F.lit(int(res)).cast("long"), 58)
-        .bitwiseOR(F.shiftleft(ix, 29))
-        .bitwiseOR(iy)
-    )
+def dlit(v: float) -> str:
+    """Spark SQL double literal: the D suffix keeps the parser off
+    DECIMAL, which would change the arithmetic; repr() round-trips
+    exactly."""
+    return f"{float(v)!r}D"
+
+
+def cell_index_spark_sql(lon: str, lat: str, res: int) -> tuple[str, str]:
+    """(ix, iy) of the cell holding (lon, lat) at ``res``, as Spark SQL
+    text."""
+    sz = dlit(cell_size_deg(res))
+    return (f"CAST(FLOOR((({lon} + {dlit(180.0)}) / {sz})) AS BIGINT)",
+            f"CAST(FLOOR((({lat} + {dlit(90.0)}) / {sz})) AS BIGINT)")
+
+
+def encode_spark_sql(lon: str, lat: str, res: int) -> str:
+    """Spark SQL text of :func:`encode_np`: a non-finite lon or lat
+    gives -1, a NULL one NULL."""
+    ix, iy = cell_index_spark_sql(lon, lat, res)
+    cell = (f"((shiftleft(CAST({int(res)} AS BIGINT), 58)"
+            f" | shiftleft({ix}, 29)) | {iy})")
+    # v - v is NaN exactly when v is NaN or ±inf, NULL when v is NULL
+    # (isnan(NULL) is false, so the cell branch yields the NULL)
+    return (f"CASE WHEN isnan((({lon} - {lon}) + ({lat} - {lat})))"
+            f" THEN -1L ELSE {cell} END")
 
 
 def encode_sql(lon_sql: str, lat_sql: str, res: int) -> str:
@@ -115,16 +131,26 @@ def parent(cell: int, parent_res: int) -> int:
     return (parent_res << 58) | ((ix >> shift) << 29) | (iy >> shift)
 
 
-def parent_col(cell: Column, res: int, parent_res: int) -> Column:
-    """Column form of parent() for fixed res->parent_res."""
+def _ix_iy_spark_sql(cell: str) -> tuple[str, str]:
+    mask = (1 << 29) - 1
+    return f"(shiftrightunsigned({cell}, 29) & {mask})", f"({cell} & {mask})"
+
+
+def parent_spark_sql(cell: str, res: int, parent_res: int) -> str:
+    """Spark SQL text of :func:`parent` for a fixed res -> parent_res."""
     shift = res - parent_res
-    ix = F.shiftrightunsigned(cell, 29).bitwiseAND(F.lit((1 << 29) - 1))
-    iy = cell.bitwiseAND(F.lit((1 << 29) - 1))
-    return (
-        F.shiftleft(F.lit(parent_res).cast("long"), 58)
-        .bitwiseOR(F.shiftleft(F.shiftrightunsigned(ix, shift), 29))
-        .bitwiseOR(F.shiftrightunsigned(iy, shift))
-    )
+    ix, iy = _ix_iy_spark_sql(cell)
+    return (f"((shiftleft(CAST({int(parent_res)} AS BIGINT), 58)"
+            f" | shiftleft(shiftrightunsigned({ix}, {shift}), 29))"
+            f" | shiftrightunsigned({iy}, {shift}))")
+
+
+def center_spark_sql(cell: str, res: int) -> tuple[str, str]:
+    """Spark SQL text of :func:`cell_center`: (lon, lat)."""
+    sz = dlit(cell_size_deg(res))
+    ix, iy = _ix_iy_spark_sql(cell)
+    return (f"({dlit(-180.0)} + ((CAST({ix} AS DOUBLE) + {dlit(0.5)}) * {sz}))",
+            f"({dlit(-90.0)} + ((CAST({iy} AS DOUBLE) + {dlit(0.5)}) * {sz}))")
 
 
 def neighbors(cell: int, k: int = 1) -> list[int]:

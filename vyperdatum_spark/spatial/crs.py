@@ -7,11 +7,14 @@ output frame and applies the z-correction ``new_z = new_z - (z -
 diffz)`` (core.py:437-445). pyproj is not in this container, so the
 synthetic catalog defines its own horizontal CRSes from public
 closed-form projection formulas (Snyder, "Map Projections — A Working
-Manual"), each in THREE equivalent dialects like the cell index:
+Manual"). Like the cell index, each expression has one builder per
+engine:
 
-- Spark Column expressions (JVM, whole-stage codegen — the hot path),
-- numpy (test oracles),
-- ANSI SQL text (DuckDB correctness oracles).
+- ``*_spark_sql`` — Spark SQL text, the one Spark-side form (JVM,
+  whole-stage codegen — the hot path),
+- ``*_np`` — numpy (test references),
+- ``*_sql`` — ANSI SQL text for the DuckDB correctness oracles, kept
+  apart from the Spark form so the oracle stays an independent check.
 
 Registry:
 - ``nad83s``   — geographic lon/lat in the geoid frame (identity).
@@ -25,9 +28,10 @@ Registry:
                  reproduce them bit-for-bit.
 - ``utm_syn``  — projected (spherical transverse Mercator, k0=0.9996,
                  central meridian −75°) on the NAD83S frame. Real trig
-                 (closed-form inverse); verified in pytest with the
-                 reference's ±0.002 tolerance rather than hash-exact
-                 oracles (libm ulp differences across engines).
+                 (closed-form inverse); tested against numpy and the
+                 closed-form catalog at the reference's ±0.002
+                 tolerance rather than by hash-exact oracles (libm ulp
+                 differences across engines).
 """
 
 from __future__ import annotations
@@ -35,8 +39,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from .cells import dlit
 
 GEOID_FRAME = "NAD83S"
 
@@ -84,47 +88,40 @@ def frame_dz_np(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
     return FR_A + FR_B * lat + FR_C * lon
 
 
-def frame_dz_cols(lon: Column, lat: Column) -> Column:
-    return F.lit(FR_A) + F.lit(FR_B) * lat + F.lit(FR_C) * lon
-
-
 def frame_dz_sql(lon: str, lat: str) -> str:
     return f"({FR_A!r} + {FR_B!r} * {lat} + {FR_C!r} * {lon})"
 
 
 def frame_dz_spark_sql(lon: str, lat: str) -> str:
-    """Spark SQL twin of :func:`frame_dz_cols`, operator for operator
-    (D-suffixed doubles: Spark parses a bare ``0.83`` as DECIMAL)."""
-    return f"(({FR_A!r}D + ({FR_B!r}D * {lat})) + ({FR_C!r}D * {lon}))"
+    return f"(({dlit(FR_A)} + ({dlit(FR_B)} * {lat})) + ({dlit(FR_C)} * {lon}))"
 
 
 # --------------------------------------------------------------------
 # to the geoid frame: (x, y, z) in `crs` → (lon, lat, z) in NAD83S
 # --------------------------------------------------------------------
 
-def to_geoid_frame_cols(crs: str, x: Column, y: Column, z: Column):
-    """Column-math mirror of reference _transform_to_geoid_frame
+def to_geoid_frame_spark_sql(crs: str, x: str, y: str, z: str):
+    """Spark SQL text of reference _transform_to_geoid_frame
     (core.py:198-248): projected → inverse-project; foreign frame →
-    shift lon/lat and apply the 3D δz."""
+    shift lon/lat and apply the 3D δz. Returns (lon, lat, z)."""
     crs = validate_crs(crs)
     if crs == "nad83s":
         return x, y, z
     if crs == "spcs_syn":
-        lon = F.lit(PC_LON0) + (x - F.lit(PC_E0)) / F.lit(PC_KX)
-        lat = F.lit(PC_LAT0) + (y - F.lit(PC_N0)) / F.lit(PC_KY)
-        return lon, lat, z
+        return (f"({dlit(PC_LON0)} + (({x} - {dlit(PC_E0)}) / {dlit(PC_KX)}))",
+                f"({dlit(PC_LAT0)} + (({y} - {dlit(PC_N0)}) / {dlit(PC_KY)}))", z)
     if crs == "utm_syn":
         # spherical TM inverse (Snyder eq. 8-6..8-8), closed form
-        xs = (x - F.lit(TM_E0)) / F.lit(TM_K0 * R)
-        ys = y / F.lit(TM_K0 * R)
-        d = F.lit(1.0 / DEG)
-        lon = F.lit(TM_LON0) + d * F.atan(F.sinh(xs) / F.cos(ys))
-        lat = d * F.asin(F.sin(ys) / F.cosh(xs))
-        return lon, lat, z
+        k = dlit(TM_K0 * R)
+        xs = f"(({x} - {dlit(TM_E0)}) / {k})"
+        ys = f"({y} / {k})"
+        d = dlit(1.0 / DEG)
+        return (f"({dlit(TM_LON0)} + ({d} * atan((sinh({xs}) / cos({ys})))))",
+                f"({d} * asin((sin({ys}) / cosh({xs}))))", z)
     # itrfs: geographic in the shifted frame
-    lon = x + F.lit(FR_DLON)
-    lat = y + F.lit(FR_DLAT)
-    return lon, lat, z + frame_dz_cols(lon, lat)
+    lon = f"({x} + {dlit(FR_DLON)})"
+    lat = f"({y} + {dlit(FR_DLAT)})"
+    return lon, lat, f"({z} + {frame_dz_spark_sql(lon, lat)})"
 
 
 def to_geoid_frame_np(crs: str, x, y, z):
@@ -149,8 +146,8 @@ def to_geoid_frame_np(crs: str, x, y, z):
 
 
 def to_geoid_frame_sql(crs: str, x: str, y: str, z: str):
-    """(lon_sql, lat_sql, z_sql) — identical float64 op order to the
-    Column dialect (exact parity for the linear CRSes)."""
+    """(lon_sql, lat_sql, z_sql) — the float64 op order of the Spark
+    form (exact parity for the linear CRSes)."""
     crs = validate_crs(crs)
     if crs == "nad83s":
         return x, y, z
@@ -173,23 +170,23 @@ def to_geoid_frame_sql(crs: str, x: str, y: str, z: str):
 # from the geoid frame: NAD83S (lon, lat) → output-frame coordinates
 # --------------------------------------------------------------------
 
-def from_geoid_frame_cols(crs: str, lon: Column, lat: Column):
-    """Forward projection / frame shift of geoid-frame coordinates —
-    the output x/y of reference core.py:437-444."""
+def from_geoid_frame_spark_sql(crs: str, lon: str, lat: str):
+    """Spark SQL text of the forward projection / frame shift of
+    geoid-frame coordinates — the output x/y of reference
+    core.py:437-444. Returns (x, y)."""
     crs = validate_crs(crs)
     if crs == "nad83s":
         return lon, lat
     if crs == "spcs_syn":
-        return (F.lit(PC_E0) + (lon - F.lit(PC_LON0)) * F.lit(PC_KX),
-                F.lit(PC_N0) + (lat - F.lit(PC_LAT0)) * F.lit(PC_KY))
+        return (f"({dlit(PC_E0)} + (({lon} - {dlit(PC_LON0)}) * {dlit(PC_KX)}))",
+                f"({dlit(PC_N0)} + (({lat} - {dlit(PC_LAT0)}) * {dlit(PC_KY)}))")
     if crs == "utm_syn":
-        b = F.cos(F.radians(lat)) * F.sin(F.radians(lon - F.lit(TM_LON0)))
-        xx = F.lit(TM_E0) + F.lit(TM_K0 * R) * F.atanh(b)
-        yy = F.lit(TM_K0 * R) * F.atan(
-            F.tan(F.radians(lat)) / F.cos(F.radians(lon - F.lit(TM_LON0)))
-        )
-        return xx, yy
-    return lon - F.lit(FR_DLON), lat - F.lit(FR_DLAT)
+        k = dlit(TM_K0 * R)
+        dlon = f"radians(({lon} - {dlit(TM_LON0)}))"
+        b = f"(cos(radians({lat})) * sin({dlon}))"
+        return (f"({dlit(TM_E0)} + ({k} * atanh({b})))",
+                f"({k} * atan((tan(radians({lat})) / cos({dlon}))))")
+    return f"({lon} - {dlit(FR_DLON)})", f"({lat} - {dlit(FR_DLAT)})"
 
 
 def from_geoid_frame_np(crs: str, lon, lat):

@@ -12,9 +12,11 @@ plain parquet and the snapshot layer alike.
 
 The interleave is the classic magic-number bit spread (public
 domain "Interleave bits by Binary Magic Numbers", e.g. Stanford
-Bit Twiddling Hacks) — five shift/mask stages per axis, pure int64
-ops, whole-stage-codegen in Spark and bit-identical in DuckDB SQL
-and numpy (all three dialects tested against each other).
+Bit Twiddling Hacks) — a 16-bit mask and four shift/mask stages per
+axis, pure int64 ops, with one builder per engine: Spark SQL text
+(:func:`morton_spark_sql`, whole-stage codegen), DuckDB SQL
+(:func:`morton_sql`) and numpy (:func:`morton_np`); the Spark and
+DuckDB forms are tested bit for bit against numpy.
 
 Reference analog: none — the reference reads whole GTX files; layout
 locality is a cluster-scale concern it never faces.
@@ -23,7 +25,7 @@ locality is a cluster-scale concern it never faces.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import cells
@@ -38,24 +40,21 @@ _STAGES = (
 MORTON_BITS = 16  # 16 bits/axis → 32-bit key; cells.py idx fits at res ≤ 13
 
 
-def _spread_col(x: Column) -> Column:
-    x = x.bitwiseAND(F.lit(0xFFFF))
+def _spread_spark_sql(x: str) -> str:
+    out = f"({x} & 65535)"
     for sh, mask in _STAGES:
-        x = x.bitwiseOR(F.shiftleft(x, sh)).bitwiseAND(F.lit(mask))
-    return x
+        out = f"(({out} | shiftleft({out}, {sh})) & {mask})"
+    return out
 
 
-def morton_col(ix: Column, iy: Column) -> Column:
-    """Morton key from integer cell coordinates (codegen column math)."""
-    return _spread_col(ix).bitwiseOR(F.shiftleft(_spread_col(iy), 1))
+def morton_spark_sql(ix: str, iy: str) -> str:
+    """Morton key from integer cell coordinates (Spark SQL text)."""
+    return f"({_spread_spark_sql(ix)} | shiftleft({_spread_spark_sql(iy)}, 1))"
 
 
-def morton_from_lonlat_col(lon: Column, lat: Column,
-                           res: int = cells.COARSE_RES) -> Column:
-    sz = cells.cell_size_deg(res)
-    ix = F.floor((lon + F.lit(180.0)) / F.lit(sz)).cast("long")
-    iy = F.floor((lat + F.lit(90.0)) / F.lit(sz)).cast("long")
-    return morton_col(ix, iy)
+def morton_from_lonlat_spark_sql(lon: str, lat: str,
+                                 res: int = cells.COARSE_RES) -> str:
+    return morton_spark_sql(*cells.cell_index_spark_sql(lon, lat, res))
 
 
 def _spread_sql(x: str) -> str:
@@ -96,9 +95,9 @@ def zorder_write(df: DataFrame, path: str, lon_col: str, lat_col: str,
     then sort within partitions. File-level lon/lat min/max stats
     become tight boxes instead of full-extent boxes, which is what
     lets a bbox filter skip files."""
-    key = morton_from_lonlat_col(F.col(lon_col), F.col(lat_col), res)
+    key = morton_from_lonlat_spark_sql(f"`{lon_col}`", f"`{lat_col}`", res)
     (
-        df.withColumn("_z", key)
+        df.withColumn("_z", F.expr(key))
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
