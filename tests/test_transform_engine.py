@@ -348,6 +348,47 @@ def test_tile_table_matches_grid_defs(spark, fixture_points, precedence):
     assert a.fillna(-9e9).equals(b.fillna(-9e9))
 
 
+def test_tile_dims_are_cached_by_grid_content(spark, fixture_points,
+                                              monkeypatch):
+    """Repeated calls with the same tile table build the broadcast dims
+    once; new node values under the same grid ids rebuild them and
+    give the new z_out (that of ``grid_defs`` with those values)."""
+    import dataclasses
+
+    from vyperdatum_spark.engine import transform_sql as tsql
+    from vyperdatum_spark.grids import tiler
+
+    builds = []
+    slots_dim = tsql.slots_dim
+    monkeypatch.setattr(tsql, "slots_dim",
+                        lambda *a: builds.append(1) or slots_dim(*a))
+    pts = spark.createDataFrame(fixture_points)
+    defs = tiler.fixture_grid_defs()
+    # geoid planes only: shifting every grid alike could cancel in sep
+    shifted = [dataclasses.replace(gd, plane=(*gd.plane[:2], gd.plane[2] + 0.25))
+               if gd.grid_id.startswith("core/") else gd for gd in defs]
+
+    def run(**kw):
+        return (tx.transform_points(spark, pts, "ellipse", "mllw", **kw)
+                .toPandas().set_index("pid").sort_index())
+
+    monkeypatch.setattr(tsql, "_DIM_CACHE", {})
+    ref = run(grid_defs=shifted)
+    monkeypatch.setattr(tsql, "_DIM_CACHE", {})
+    builds.clear()
+    tiles = tiler.build_tile_df(spark, defs)
+    first = run(tiles=tiles)
+    again = run(tiles=tiles)
+    assert len(builds) == 1
+    assert first.z_out.fillna(-9e9).equals(again.z_out.fillna(-9e9))
+    moved = run(tiles=tiler.build_tile_df(spark, shifted))
+    assert len(builds) == 2
+    cov = first.covered
+    assert cov.any() and (moved.covered == cov).all()
+    assert (np.abs(moved.z_out[cov] - first.z_out[cov]) > 0.2).all()
+    assert moved.z_out.fillna(-9e9).equals(ref.z_out.fillna(-9e9))
+
+
 def test_tiles_reassemble_to_their_grids(spark):
     """grids_from_tiles gives back each grid's origin, shape and node
     values bit for bit; a grid with no tile rows is absent."""
@@ -632,3 +673,28 @@ def test_sampled_uncovered_rows_pass_through(spark, fixture_points, kwargs):
     assert np.array_equal(off.z_out_s.to_numpy(), -off.z.to_numpy())
     on = both[both.covered_s]
     assert on.region_id_s.notna().all() and on.z_out_s.notna().all()
+
+
+@pytest.mark.parametrize("kwargs", [{}, {"output_frame": "ITRFS"}],
+                         ids=["default", "itrfs_output"])
+def test_sampled_uncovered_rows_get_point_catzoc(spark, fixture_points,
+                                                 kwargs):
+    """allow_points_outside_coverage in sampled mode: a point whose cell
+    center is uncovered gets the CATZOC uncertainty of its own z, as on
+    the exact path, not the center's (z=0 → always 3.0). Depths (z < 0
+    on the height axis) are where the two differ."""
+    pdf = fixture_points.assign(z=-fixture_points.z)
+    pts = spark.createDataFrame(pdf)
+    kw = dict(allow_points_outside_coverage=True, **kwargs)
+    exact = tx.transform_points(
+        spark, pts, "ellipse", "mllw", **kw).toPandas().set_index("pid")
+    sampled = tx.transform_points_sampled(
+        spark, pts, "ellipse", "mllw", res=cells.FINE_RES, **kw,
+    ).toPandas().set_index("pid")
+    both = exact.join(sampled, rsuffix="_s")
+    off = both[~both.covered & ~both.covered_s]
+    assert len(off) > 0
+    assert (off.unc > 3.0).all()
+    assert np.array_equal(off.unc_s.to_numpy(), off.unc.to_numpy())
+    on = both[both.covered_s]
+    assert on.unc_s.notna().all()

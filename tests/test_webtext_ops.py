@@ -5,6 +5,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from vyperdatum_spark.ops import dedup, multimodal, similarity, textstats
@@ -45,6 +46,34 @@ def test_minhash_matches_python(spark):
             for a, b in dedup.PERMS
         ]
         assert list(got.loc[doc_id, "sig"]) == exp
+
+
+@pytest.mark.parametrize("n", [2, 3, textstats.DUP_K])
+def test_word_tokens_and_ngrams_match_python(spark, n):
+    """dedup.tokens_col / shingles_from_tokens, the one tokenizer and
+    word n-gram builder (bigrams in lm_score_df and dsir, shingles at
+    3, duplicate spans at DUP_K), against single-space ``str.split``
+    and list slicing: 0, n-1, n and n+1 tokens, double, leading and
+    trailing spaces, the empty string and a NULL text. Fewer than n
+    tokens must give [] — Spark's sequence(1, 0) counts DOWN."""
+    def words(m):
+        return " ".join(f"w{i}" for i in range(m))
+
+    texts = [None, "", " ", words(1), words(n - 1), words(n), words(n + 1),
+             "a  b " + words(n), " " + words(n) + " ", "  ".join("xyz" * n)]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    got = (
+        df.select("id", dedup.tokens_col(F.col("text")).alias("tk"))
+        .select("id", "tk", dedup.shingles_from_tokens(F.col("tk"), n).alias("g"))
+        .toPandas().set_index("id").sort_index()
+    )
+    for i, text in enumerate(texts):
+        toks = None if text is None else text.split(" ")
+        exp = [] if toks is None else [
+            " ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)]
+        tk, g = got.loc[i, "tk"], got.loc[i, "g"]
+        assert (None if tk is None else list(tk)) == toks, text
+        assert list(g) == exp, text
 
 
 def test_exact_dup_and_lsh_find_the_duplicate_pair(spark):
@@ -383,9 +412,9 @@ def test_sample_stratified_deterministic_and_rated(spark):
 
 
 def test_multi_table_lsh_recall_dominates_single(spark):
-    """TABLE_PLANES[0] is the single-table plane set, so the
-    multi-table candidate set is a superset — and top-k-by-exact-score
-    recall is monotone in the candidate set."""
+    """The one-table candidate set is a subset of the three-table one
+    (table 0 is in both), and top-k-by-exact-score recall is monotone
+    in the candidate set."""
     rng = np.random.default_rng(21)
     # planted near-duplicate clusters: 20 bases x 4 noisy copies —
     # random gaussians have no near neighbors at all (every 8-bit
@@ -400,8 +429,10 @@ def test_multi_table_lsh_recall_dominates_single(spark):
     )
     nq, k = 5, 3
     bf = similarity.ann_bruteforce_topk(df, n_queries=nq, k=k).toPandas()
-    single = similarity.ann_lsh_topk(df, n_queries=nq, k=k).toPandas()
-    multi = similarity.ann_lsh_multi_topk(df, n_queries=nq, k=k).toPandas()
+    single = similarity.ann_lsh_multi_topk(df, n_queries=nq, k=k,
+                                           n_tables=1).toPandas()
+    multi = similarity.ann_lsh_multi_topk(df, n_queries=nq, k=k,
+                                          n_tables=3).toPandas()
     truth = set(map(tuple, bf[["query_id", "neighbor_id"]].to_numpy()))
     r_single = len(set(map(tuple, single[["query_id", "neighbor_id"]].to_numpy())) & truth)
     r_multi = len(set(map(tuple, multi[["query_id", "neighbor_id"]].to_numpy())) & truth)

@@ -1,9 +1,9 @@
 """Measured ANN recall@k vs the exact brute-force baseline.
 
 Round-3 VERDICT item 7 (level measurement) + round-5 item 5
-(clustered-regime measurement): for each ANN variant (single-table
-LSH, multi-table LSH at 1..N_TABLES tables, seeded IVF and trained
-IVF at nprobe 1/2/4) compute
+(clustered-regime measurement): for each ANN variant (LSH at
+1..N_TABLES tables, seeded IVF and trained IVF at nprobe 1/2/4)
+compute
 
     recall@k = mean over queries of |approx topk ∩ exact topk| / k
 
@@ -93,13 +93,6 @@ def _measure(spark, embs, n_vecs: int):
         return round(df_pairs / max(len(exact), 1), 1)
 
     rows = []
-    lsh = sim.ann_lsh_topk(embs, n_queries=N_QUERIES, k=K)
-    b = sim.lsh_bucket_col(F.col("embedding"))
-    wb = embs.select(F.col("vec_id"), b.alias("bucket"))
-    qn = wb.filter(F.col("vec_id") < N_QUERIES).withColumnRenamed("vec_id", "q")
-    n_pairs = qn.join(wb, "bucket").filter(F.col("vec_id") != F.col("q")).count()
-    rows.append(("lsh (1 table, 8 planes)",
-                 _recall(exact, _topk_sets(lsh, K), K), cand_pairs(n_pairs)))
     for t in range(1, sim.N_TABLES + 1):
         approx = _topk_sets(
             sim.ann_lsh_multi_topk(embs, n_queries=N_QUERIES, k=K,

@@ -107,7 +107,6 @@ def transform_points(
     input_crs: str = "nad83s",
     output_frame: str | None = None,
     grid_defs: list | None = None,
-    grid_cache_token: str | None = None,
 ) -> DataFrame:
     """Transform ``points[z_col]`` from ``from_datum`` to ``to_datum``.
 
@@ -127,9 +126,9 @@ def transform_points(
     (a grid_tiles table, tiler.TILE_SCHEMA) does: its rows for the
     pipeline's grids are collected once and reassembled into one
     lattice per grid (tiler.grids_from_tiles). A region whose pipeline
-    needs a grid missing from the set is uncovered everywhere.
-    ``grid_cache_token`` promises that same token ⇒ same grid content,
-    so the compiled dims of caller-supplied grids are reused.
+    needs a grid missing from the set is uncovered everywhere. The
+    compiled dims are cached by grid content, so repeated calls over
+    the same grids (or tile table) reuse them.
 
     Horizontal CRS handling (reference core.py:166-248, 437-445):
       input_crs     — the catalog CRS the x/y (and 3D-frame z) values
@@ -237,13 +236,20 @@ def transform_points(
     enriched = tsql.transform_points_sql(
         spark, points, from_datum, to_datum, x_col, y_col,
         grid_defs=grid_defs, knn_fallback=knn_fallback,
-        precedence=precedence, grid_cache_token=grid_cache_token,
+        precedence=precedence,
     )
     return _emit(_finalize(
         enriched, spark, from_datum, to_datum, z_col, flips,
         allow_points_outside_coverage, include_uncertainty,
         include_lineage, dz_corr,
     ))
+
+
+def _catzoc_sql(z_h: str) -> str:
+    """F6: CATZOC-D vertical uncertainty of an uncovered point over its
+    HEIGHT-axis z (raster.py:384-390 negates a sounding input first)."""
+    return (f"CASE WHEN ({z_h} > 0) THEN {dlit(3.0)} "
+            f"ELSE ({dlit(3.0)} - ({dlit(0.06)} * {z_h})) END")
 
 
 def _finalize(
@@ -285,11 +291,8 @@ def _finalize(
                 for r in catalog.REGIONS
             ) + ")[region_id]"
         if allow_points_outside_coverage:
-            # F6: CATZOC-D vertical uncertainty over the HEIGHT-axis z
-            # (raster.py:384-390 negates a sounding input first)
-            catzoc = (f"CASE WHEN ({z_h} > 0) THEN {dlit(3.0)} "
-                      f"ELSE ({dlit(3.0)} - ({dlit(0.06)} * {z_h})) END")
-            cols["unc"] = f"CASE WHEN {covered} THEN {unc} ELSE {catzoc} END"
+            cols["unc"] = (f"CASE WHEN {covered} THEN {unc} "
+                           f"ELSE {_catzoc_sql(z_h)} END")
         else:
             cols["unc"] = f"CASE WHEN {covered} THEN {unc} END"
     out = out.withColumns({c: F.expr(e) for c, e in cols.items()})
@@ -334,7 +337,8 @@ def transform_points_sampled(
     transformed value plus the axis-flipped point z
     (``z_out(center) + fin·fout·z``, points.py:85). A point whose
     center is uncovered gets covered=false, a NULL region_id, and with
-    ``allow_points_outside_coverage`` the full path's passthrough z.
+    ``allow_points_outside_coverage`` the full path's passthrough z and
+    CATZOC uncertainty over its own z.
     Like the reference, sampled mode emits no per-point output x/y
     (points.py:78-79).
     """
@@ -385,9 +389,15 @@ def transform_points_sampled(
     else:
         z_cov = f"({dlit(fout)} * (({dlit(fin)} * {zs}) + sep))"
     z_out = f"CASE WHEN _cov THEN round({z_cov}, 3)"
+    unc = {}
     if kwargs.get("allow_points_outside_coverage", False):
         z_out += f" ELSE round(({dlit(fout)} * {z_geo}), 3)"
+        if "unc" in tc.columns:
+            # an uncovered center's CATZOC is that of z=0, not the point's
+            unc = {"unc": F.expr(
+                f"CASE WHEN _cov THEN unc ELSE {_catzoc_sql(z_geo)} END")}
     return out.withColumns({
         "z_out": F.expr(z_out + " END"),
         "covered": F.expr("coalesce(_cov, false)"),
+        **unc,
     }).drop("_cov", "_z0")

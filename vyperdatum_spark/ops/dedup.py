@@ -65,11 +65,19 @@ def exact_duplicates_sql(table: str = "documents", id_col: str = "doc_id",
 
 # ------------------------------------------------------------- shingles
 def tokens_col(text: Column) -> Column:
+    """The word tokenizer of every text op: split on each single space,
+    so a double space yields an empty token, "" yields [""] and a NULL
+    text a NULL array — Python's ``str.split`` with an explicit single
+    space separator, and the oracles' ``string_split(text, ' ')``."""
     return F.split(text, " ")
 
 
 def shingles_from_tokens(toks: Column, w: int = SHINGLE_W) -> Column:
-    """Word w-grams from a MATERIALIZED token-array column.
+    """The word n-gram builder of every text op: the space-joined
+    ``w``-token windows of a MATERIALIZED token-array column, in
+    document order (Python ``[" ".join(t[i:i + w]) for i in
+    range(len(t) - w + 1)]``); fewer than ``w`` tokens or NULL
+    tokens give [].
 
     Two pitfalls shape this function:
     - Spark's sequence(1, 0) yields a DESCENDING [1, 0] (not an empty
@@ -77,7 +85,9 @@ def shingles_from_tokens(toks: Column, w: int = SHINGLE_W) -> Column:
     - ``toks`` must be a real column, not an inlined split(): lambda
       bodies re-evaluate inlined subtrees per element, turning the
       shingle build into O(n_tokens²) string splitting per document
-      (observed: 29 s for 5 k docs vs <2 s staged)."""
+      (observed: 29 s for 5 k docs vs <2 s staged). Stage it in a
+      projection below the ``Generate`` that explodes the grams; a
+      Generate is not a Project, so CollapseProject keeps the staging."""
     n = F.size(toks) - (w - 1)
     sh = F.transform(
         F.sequence(F.lit(1), n),
@@ -386,55 +396,39 @@ def simhash_hamming_pairs_sql(table: str = "documents",
 
 
 # -------------------------------------------------- decontamination
-def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  w: int = SHINGLE_W) -> DataFrame:
-    """Benchmark decontamination: per corpus doc, the fraction of its
-    distinct word w-grams that appear anywhere in the benchmark set
-    (the standard eval-leak check in training-data pipelines).
+def _hashed_shingles(df: DataFrame, id_col: str, text_col: str, w: int,
+                     keep_id: bool) -> DataFrame:
+    """Each doc's distinct word w-grams as 60-bit md5 hashes: rows of
+    (id, _s), or of _s alone without ``keep_id``.
 
-    Scale shape: the benchmark shingle set is small by definition
-    (eval suites, not corpora) ⇒ broadcast semi-join against the
-    exploded corpus shingles; one groupBy(doc) shuffle for the
-    counts. Never all-pairs, never per-row Python.
-
-    Output: (id, n_sh, n_hit, contamination∈[0,1] | null for
-    unshingleable docs).
-    """
-    # shingles are compared by their 60-bit md5 hash, not the string:
-    # the distinct + join then shuffle 8-byte longs instead of ~50-char
-    # strings (≈3× wall measured), and both engines derive the hash
-    # identically so the (astronomically rare) collision is part of
-    # the spec, exactly as in MinHash
-    # explode_OUTER + null filter, not inner explode: for a
-    # CodegenFallback generator input (the interpreted shingle HOF)
-    # the codegen'd inner-explode path re-evaluates the input per
-    # OUTPUT element — measured 8 s vs 0.4 s on 258k shingles; outer
-    # generate evaluates it once per row. Same trick as minhash.
-    bench_sh = (
-        shingled_df(benchmark, id_col, text_col, w)
-        .select(F.explode_outer(F.col("_sh")).alias("_raw"))
+    Shingles are compared by hash, not string: the distinct + join then
+    shuffle 8-byte longs instead of ~50-char strings (≈3× wall
+    measured), and both engines derive the hash identically, so the
+    (astronomically rare) collision is part of the spec, exactly as in
+    MinHash. explode_OUTER + null filter, not inner explode: for a
+    CodegenFallback generator input (the interpreted shingle HOF) the
+    codegen'd inner-explode path re-evaluates the input per OUTPUT
+    element — measured 8 s vs 0.4 s on 258k shingles; outer generate
+    evaluates it once per row."""
+    cols = [F.col(id_col)] if keep_id else []
+    return (
+        shingled_df(df, id_col, text_col, w)
+        .select(*cols, F.explode_outer(F.col("_sh")).alias("_raw"))
         .filter(F.col("_raw").isNotNull())
-        .select(hash60(F.col("_raw")).alias("_s"))
-        .distinct()
-        .withColumn("_hit", F.lit(1))
-    )
-    corp = (
-        shingled_df(corpus, id_col, text_col, w)
-        .select(F.col(id_col), F.explode_outer(F.col("_sh")).alias("_raw"))
-        .filter(F.col("_raw").isNotNull())
-        .select(F.col(id_col), hash60(F.col("_raw")).alias("_s"))
+        .select(*cols, hash60(F.col("_raw")).alias("_s"))
         .distinct()
     )
-    # single pass: a broadcast LEFT join marks benchmark shingles, one
-    # aggregate produces both counts — totals and hits as separate
-    # aggregations would recompute the whole explode+distinct lineage
-    # twice (measured 2× wall time) and add a merge join
-    agg = (
-        corp.join(F.broadcast(bench_sh), "_s", "left")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("_t"), F.count("_hit").alias("_h"))
-    )
+
+
+def _contamination(corpus: DataFrame, marked: DataFrame,
+                   id_col: str) -> DataFrame:
+    """(id, n_sh, n_hit, contamination) from ``marked``: one row per
+    distinct corpus shingle, ``_hit`` non-null where the benchmark has
+    it. One aggregate produces both counts — totals and hits as
+    separate aggregations would recompute the whole explode+distinct
+    lineage twice (measured 2× wall time) and add a merge join."""
+    agg = marked.groupBy(id_col).agg(
+        F.count("*").alias("_t"), F.count("_hit").alias("_h"))
     out = corpus.select(F.col(id_col)).join(agg, id_col, "left")
     n_sh = F.coalesce(F.col("_t"), F.lit(0)).cast("long")
     n_hit = F.coalesce(F.col("_h"), F.lit(0)).cast("long")
@@ -447,6 +441,30 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
         n_hit.alias("n_hit"),
         contamination.alias("contamination"),
     )
+
+
+def decontaminate(corpus: DataFrame, benchmark: DataFrame,
+                  id_col: str = "doc_id", text_col: str = "text",
+                  w: int = SHINGLE_W) -> DataFrame:
+    """Benchmark decontamination: per corpus doc, the fraction of its
+    distinct word w-grams that appear anywhere in the benchmark set
+    (the standard eval-leak check in training-data pipelines).
+
+    Scale shape: the benchmark shingle set is small by definition
+    (eval suites, not corpora) ⇒ broadcast LEFT join against the
+    exploded corpus shingles; one groupBy(doc) shuffle for the
+    counts. Never all-pairs, never per-row Python. The broadcast is
+    forced: for an eval set past the broadcast limit use
+    :func:`decontaminate_bloom`.
+
+    Output: (id, n_sh, n_hit, contamination∈[0,1] | null for
+    unshingleable docs).
+    """
+    bench_sh = _hashed_shingles(benchmark, id_col, text_col, w,
+                                keep_id=False).withColumn("_hit", F.lit(1))
+    corp = _hashed_shingles(corpus, id_col, text_col, w, keep_id=True)
+    return _contamination(
+        corpus, corp.join(F.broadcast(bench_sh), "_s", "left"), id_col)
 
 
 def decontaminate_sql(corpus: str, benchmark: str,
@@ -503,16 +521,6 @@ def decontaminate_bloom(corpus: DataFrame, benchmark: DataFrame,
     (md5-derived h1, xxhash64-derived h2); no Python crosses the
     executor boundary.
     """
-    def _hashed_shingles(df: DataFrame, keep_id: bool) -> DataFrame:
-        cols = [F.col(id_col)] if keep_id else []
-        return (
-            shingled_df(df, id_col, text_col, w)
-            .select(*cols, F.explode_outer(F.col("_sh")).alias("_raw"))
-            .filter(F.col("_raw").isNotNull())
-            .select(*cols, hash60(F.col("_raw")).alias("_s"))
-            .distinct()
-        )
-
     def _probe_positions(s: Column) -> list[Column]:
         # double hashing: h1 from the md5-derived 60-bit value itself,
         # h2 from an independent xxhash64 re-mix; i*h2 stays < k*m so
@@ -522,7 +530,7 @@ def decontaminate_bloom(corpus: DataFrame, benchmark: DataFrame,
         return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits).cast("long"))
                 for i in range(k)]
 
-    bench_sh = _hashed_shingles(benchmark, keep_id=False)
+    bench_sh = _hashed_shingles(benchmark, id_col, text_col, w, keep_id=False)
 
     # 1. fold the benchmark hashes into the (word_idx, bits) bloom dim
     bloom = (
@@ -536,7 +544,7 @@ def decontaminate_bloom(corpus: DataFrame, benchmark: DataFrame,
         .agg(F.expr("bit_or(_m)").alias("_bits"))
     )
 
-    corp = _hashed_shingles(corpus, keep_id=True)
+    corp = _hashed_shingles(corpus, id_col, text_col, w, keep_id=True)
     probes = _probe_positions(F.col("_s"))
     staged = corp.select(
         F.col(id_col), F.col("_s"),
@@ -564,29 +572,40 @@ def decontaminate_bloom(corpus: DataFrame, benchmark: DataFrame,
         F.col(id_col),
         F.when(cand, F.col("_s")).alias("_sj"),
     )
-    agg = (
-        probed.join(
-            bench_sh.select(F.col("_s").alias("_sj"),
-                            F.lit(1).alias("_hit")),
-            "_sj", "left")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("_t"), F.count("_hit").alias("_h"))
-    )
-    out = corpus.select(F.col(id_col)).join(agg, id_col, "left")
-    n_sh = F.coalesce(F.col("_t"), F.lit(0)).cast("long")
-    n_hit = F.coalesce(F.col("_h"), F.lit(0)).cast("long")
-    contamination = F.when(
-        n_sh > 0, n_hit.cast("double") / n_sh.cast("double")
-    )
-    return out.select(
-        F.col(id_col),
-        n_sh.alias("n_sh"),
-        n_hit.alias("n_hit"),
-        contamination.alias("contamination"),
-    )
+    marked = probed.join(
+        bench_sh.select(F.col("_s").alias("_sj"), F.lit(1).alias("_hit")),
+        "_sj", "left")
+    return _contamination(corpus, marked, id_col)
 
 
 # ------------------------------------------------------ n-gram jaccard
+def _shingle_sets(df: DataFrame, id_col: str, text_col: str,
+                  extra_cols: tuple = ()) -> DataFrame:
+    """(id, [extra...], sset): each doc's DISTINCT word shingles."""
+    return shingled_df(df, id_col, text_col, extra_cols=extra_cols).select(
+        F.col(id_col), *[F.col(c) for c in extra_cols],
+        F.array_distinct(F.col("_sh")).alias("sset"),
+    )
+
+
+def _jaccard_verify(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard ≥ threshold) over pairs carrying the two
+    shingle sets ``set_a``/``set_b``. Two empty sets (docs shorter
+    than the shingle width) have undefined similarity → NULL, which
+    the threshold drops."""
+    staged = pairs.select(
+        "doc_a",
+        "doc_b",
+        F.size(F.array_intersect("set_a", "set_b")).alias("_i"),
+        F.size(F.array_union("set_a", "set_b")).alias("_u"),
+    )
+    jac = F.when(F.col("_u") > 0, F.col("_i").cast("double") / F.col("_u").cast("double"))
+    return (
+        staged.select("doc_a", "doc_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", lang_col: str = "lang",
                   threshold: float = 0.5,
@@ -604,11 +623,7 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     """
     if candidates is None and not allow_all_pairs:
         candidates = minhash_lsh_pairs(df, id_col, text_col)
-    sets = shingled_df(df, id_col, text_col, extra_cols=(lang_col,)).select(
-        F.col(id_col),
-        F.col(lang_col),
-        F.array_distinct(F.col("_sh")).alias("sset"),
-    )
+    sets = _shingle_sets(df, id_col, text_col, extra_cols=(lang_col,))
     a = sets.select(
         F.col(lang_col).alias("_lang_a"),
         F.col(id_col).alias("doc_a"),
@@ -650,19 +665,7 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         F.least("sz_a", "sz_b").cast("double")
         >= F.lit(threshold) * F.greatest("sz_a", "sz_b").cast("double")
     )
-    staged = joined.select(
-        "doc_a",
-        "doc_b",
-        F.size(F.array_intersect("set_a", "set_b")).alias("_i"),
-        F.size(F.array_union("set_a", "set_b")).alias("_u"),
-    )
-    # two empty shingle sets (docs shorter than the shingle width)
-    # have undefined similarity -> NULL, filtered by the threshold
-    jac = F.when(F.col("_u") > 0, F.col("_i").cast("double") / F.col("_u").cast("double"))
-    return (
-        staged.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_verify(joined, threshold)
 
 
 def lsh_verified_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -672,26 +675,10 @@ def lsh_verified_pairs(df: DataFrame, id_col: str = "doc_id",
     exact Jaccard verification on candidates only — O(n·bands) +
     O(candidates) instead of the all-pairs O(n²) join."""
     cand = minhash_lsh_pairs(df, id_col, text_col)
-    sets = shingled_df(df, id_col, text_col).select(
-        F.col(id_col), F.array_distinct(F.col("_sh")).alias("sset")
-    )
+    sets = _shingle_sets(df, id_col, text_col)
     a = sets.select(F.col(id_col).alias("doc_a"), F.col("sset").alias("set_a"))
     b = sets.select(F.col(id_col).alias("doc_b"), F.col("sset").alias("set_b"))
-    staged = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("set_a", "set_b")).alias("_i"),
-            F.size(F.array_union("set_a", "set_b")).alias("_u"),
-        )
-    )
-    jac = F.when(F.col("_u") > 0, F.col("_i").cast("double") / F.col("_u").cast("double"))
-    return (
-        staged.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_verify(cand.join(a, "doc_a").join(b, "doc_b"), threshold)
 
 
 def lsh_verified_pairs_sql(table: str = "documents", id_col: str = "doc_id",

@@ -39,24 +39,9 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import hash60, hash60_sql
+from .dedup import hash60, hash60_sql, shingles_from_tokens, tokens_col
 
 N_BUCKETS = 64
-
-
-def _grams_col(toks: Column) -> Column:
-    """unigrams ++ word-bigrams, in document order."""
-    n = F.size(toks)
-    bi = F.when(
-        n > 1,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat(
-                F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(toks, bi)
 
 
 def _grams_sql(toks: str) -> str:
@@ -75,59 +60,21 @@ def _bucket_sql(g: str) -> str:
 
 def _bucketed_grams(df: DataFrame, target_filter: Column, id_col: str,
                     text_col: str) -> DataFrame:
-    """(id, is_t, b) — one gram per row with its hash bucket.
-
-    The token array is STAGED in its own projection below the
-    Generate (r5 perf, load-bearing): inlined, the generator
-    expression re-evaluates ``split(text)`` inside the bigram
-    lambda's ``element_at`` calls — once per BIGRAM, O(tokens²)
-    splits per document, measured 4× slower at sf0.1. Generate is
-    not a Project, so CollapseProject leaves the staging in place."""
-    toks = F.split(F.col(text_col), " ")
+    """(id, is_t, b) — one gram (unigrams ++ word bigrams, in document
+    order) per row with its hash bucket."""
+    toks = F.col("_toks")
     return (
         df.select(
             F.col(id_col),
             target_filter.cast("long").alias("is_t"),
-            toks.alias("_toks"),
+            tokens_col(F.col(text_col)).alias("_toks"),
         )
         .select(
             F.col(id_col), "is_t",
-            F.explode(_grams_col(F.col("_toks"))).alias("g"),
+            F.explode(F.concat(toks, shingles_from_tokens(toks, 2))).alias("g"),
         )
         .select(F.col(id_col), "is_t", _bucket_col(F.col("g")).alias("b"))
     )
-
-
-def train_lambdas(df: DataFrame, target_filter: Column,
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> list[float]:
-    """One explode+agg pass over the corpus → the 64 per-bucket
-    log-importance weights ln(p̂_target(b) / p̂_raw(b)), add-one
-    smoothed.  Buckets unseen in either distribution get the smoothed
-    prior ratio."""
-    bk = _bucketed_grams(df, target_filter, id_col, text_col)
-    return _lambdas_from_buckets(bk)
-
-
-def _lambdas_from_buckets(bk: DataFrame) -> list[float]:
-    rows = (
-        bk.groupBy("b")
-        .agg(F.count(F.lit(1)).alias("r"), F.sum("is_t").alias("t"))
-        .collect()
-    )
-    r = [0] * N_BUCKETS
-    t = [0] * N_BUCKETS
-    for row in rows:
-        r[row["b"]] = int(row["r"])
-        t[row["b"]] = int(row["t"])
-    rr, tt = sum(r), sum(t)
-    return [
-        math.log(
-            ((t[b] + 1.0) / (tt + N_BUCKETS))
-            / ((r[b] + 1.0) / (rr + N_BUCKETS))
-        )
-        for b in range(N_BUCKETS)
-    ]
 
 
 def dsir_weights(df: DataFrame, id_col: str = "doc_id",

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import hash60, hash60_sql, tokens_col
+
 K1 = 1.2
 B = 0.75
 TOP_K = 10
@@ -44,10 +46,6 @@ SEARCH_QUERIES: list[tuple[int, list[str]]] = [
     (2, ["join", "spark", "window"]),
     (3, ["customer", "filter", "slow"]),
 ]
-
-
-def _toks(text: Column) -> Column:
-    return F.split(text, " ")
 
 
 N_TOPK_SALTS = 16
@@ -117,7 +115,7 @@ def bm25_topk(df: DataFrame, queries: list[tuple[int, list[str]]] | None = None,
     the ordering is engine-portable."""
     queries = _query_list(queries)
     all_terms = sorted({t for _, ts in queries for t in ts})
-    toks = _toks(F.col(text_col))
+    toks = tokens_col(F.col(text_col))
     dl = F.size(toks)
     # stage the narrow (id, dl, tf…) base ONCE (r6, guide §8 "decide
     # with small rows"): the stats pass and the scoring pass both need
@@ -230,14 +228,10 @@ EMBED_DIM = 64
 
 
 def _bucket_col(t: Column) -> Column:
-    from .dedup import hash60
-
     return (hash60(t) % EMBED_DIM).cast("int")
 
 
 def _bucket_sql(t: str) -> str:
-    from .dedup import hash60_sql
-
     return f"({hash60_sql(t)} % {EMBED_DIM})"
 
 
@@ -261,7 +255,7 @@ def doc_hash_embed(df: DataFrame, id_col: str = "doc_id",
     7× slower on the bench corpus.  The norm is the same left-assoc
     ``0.0 + c₀² + c₁² + …`` fold as the oracle's ``list_reduce``, so
     embeddings stay bit-exact."""
-    toks = _toks(F.col(text_col))
+    toks = tokens_col(F.col(text_col))
     ex = df.select(F.col(id_col), F.explode(toks).alias("_t"))
     bk = ex.select(F.col(id_col), _bucket_col(F.col("_t")).alias("_b"))
     # two-stage count matrix (same shape as ops/dsir, r5): the

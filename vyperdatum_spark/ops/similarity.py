@@ -3,12 +3,15 @@
 - brute-force cosine top-k (the exactness baseline): cross join
   pruned by a label/bucket key, dot products as built-in
   ``zip_with``/``aggregate`` column math (JVM-side), window top-k.
-- random-hyperplane LSH (the scale path): 8 seeded hyperplanes →
-  sign-bit bucket (pure column math), equi-join on bucket, top-k
-  within bucket. At 10^12 rows the bucket join replaces the O(n²)
-  cross join. ``ann_lsh_multi_topk`` runs N_TABLES independent
-  hyperplane tables and unions candidates — the standard recall
+- random-hyperplane LSH (the scale path): 8 seeded hyperplanes per
+  table → sign-bit bucket (pure column math), equi-join on (table,
+  bucket), top-k within the candidates. At 10^12 rows the bucket join
+  replaces the O(n²) cross join. ``ann_lsh_multi_topk`` unions the
+  candidates of ``n_tables`` independent tables — the standard recall
   lever (P(miss) decays exponentially in tables) — still oracle-exact.
+
+Every ANN op is a candidate generator followed by the same exact
+refine stage, ``_rerank_topk``.
 
 Float discipline: embeddings are float32 on disk; every product is
 computed after an explicit cast to double, and accumulation is
@@ -35,8 +38,8 @@ def _hyperplanes(dim: int = EMB_DIM, n: int = N_PLANES, seed: int = 7):
     return rng.standard_normal((n, dim)).round(6)  # short literals, exact doubles
 
 
-PLANES = _hyperplanes()
 TABLE_PLANES = [_hyperplanes(seed=7 + t) for t in range(N_TABLES)]
+PLANES = TABLE_PLANES[0]  # single-table LSH = ann_lsh_multi_topk(n_tables=1)
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -63,6 +66,25 @@ def cosine_sql(a: str, b: str) -> str:
     )
 
 
+def _rerank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The refine stage every ANN op shares: exact cosine over candidate
+    pairs (query_id, neighbor_id, q_emb, c_emb, q_norm, c_norm), top-k
+    per query by (cos DESC, neighbor_id) → (query_id, neighbor_id,
+    rank, cos_r)."""
+    cos = dot_col(F.col("q_emb"), F.col("c_emb")) / (
+        F.col("q_norm") * F.col("c_norm")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id")
+    )
+    return (
+        pairs.select("query_id", "neighbor_id", cos.alias("cos"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r"))
+    )
+
+
 # ---------------------------------------------------------- brute force
 def ann_bruteforce_topk(df: DataFrame, id_col: str = "vec_id",
                         emb_col: str = "embedding",
@@ -82,18 +104,8 @@ def ann_bruteforce_topk(df: DataFrame, id_col: str = "vec_id",
         F.col(emb_col).alias("c_emb"),
         norm_col(F.col(emb_col)).alias("c_norm"),
     )
-    joined = q.crossJoin(c).filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = dot_col(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        joined.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r"))
+    return _rerank_topk(
+        q.crossJoin(c).filter(F.col("neighbor_id") != F.col("query_id")), k
     )
 
 
@@ -114,10 +126,10 @@ def ann_bruteforce_topk_sql(table: str = "embeddings", id_col: str = "vec_id",
 
 
 # ------------------------------------------------------------------ lsh
-def lsh_bucket_col(emb: Column, planes=None) -> Column:
+def lsh_bucket_col(emb: Column, planes) -> Column:
     """Sign-bit bucket from the seeded hyperplanes (pure column math)."""
     v = F.lit(0).cast("long")
-    for i, plane in enumerate(PLANES if planes is None else planes):
+    for i, plane in enumerate(planes):
         dot = F.lit(0.0)
         for j, wgt in enumerate(plane):
             dot = dot + F.lit(float(wgt)) * F.element_at(emb, j + 1).cast("double")
@@ -134,39 +146,6 @@ def lsh_bucket_sql(emb: str, planes=None) -> str:
         )
         parts.append(f"(CASE WHEN (0.0 + {dot}) > 0 THEN CAST({1 << i} AS BIGINT) ELSE 0 END)")
     return "(" + " + ".join(parts) + ")"
-
-
-def ann_lsh_topk(df: DataFrame, id_col: str = "vec_id",
-                 emb_col: str = "embedding",
-                 n_queries: int = 10, k: int = 3) -> DataFrame:
-    """Approximate top-k: candidates share the query's LSH bucket."""
-    with_b = df.select(
-        F.col(id_col),
-        F.col(emb_col),
-        lsh_bucket_col(F.col(emb_col)).alias("bucket"),
-        norm_col(F.col(emb_col)).alias("nrm"),
-    )
-    q = with_b.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("q_emb"),
-        "bucket", F.col("nrm").alias("q_norm"),
-    )
-    c = with_b.select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("c_emb"),
-        "bucket", F.col("nrm").alias("c_norm"),
-    )
-    joined = q.join(c, "bucket").filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = dot_col(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        joined.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r"))
-    )
 
 
 def ann_lsh_topk_sql(table: str = "embeddings", id_col: str = "vec_id",
@@ -192,10 +171,10 @@ def ann_lsh_multi_topk(df: DataFrame, id_col: str = "vec_id",
                        n_queries: int = 10, k: int = 3,
                        n_tables: int = N_TABLES) -> DataFrame:
     """Multi-table LSH top-k: candidates share the query's bucket in
-    ANY of the N_TABLES independent hyperplane tables (union →
-    distinct pair → exact cosine re-rank). Raises recall over the
-    single-table variant at the cost of L bucket joins — the
-    production configuration; scale shape stays bucketed equi-joins,
+    ANY of the ``n_tables`` independent hyperplane tables (union →
+    distinct pair → exact cosine re-rank). ``n_tables=1`` is plain
+    single-table LSH; each added table raises recall at the cost of
+    one more bucket join. Scale shape stays bucketed equi-joins,
     never all-pairs."""
     # stage the three 512-term bucket expressions as real columns
     # BEFORE the explode: inlined into the struct array they are
@@ -230,18 +209,7 @@ def ann_lsh_multi_topk(df: DataFrame, id_col: str = "vec_id",
         .select("query_id", "neighbor_id", "q_emb", "c_emb", "q_norm", "c_norm")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    cos = dot_col(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r"))
-    )
+    return _rerank_topk(pairs, k)
 
 
 def ann_lsh_multi_topk_sql(table: str = "embeddings", id_col: str = "vec_id",
@@ -321,20 +289,9 @@ def _ivf_body(base: DataFrame, id_col: str, emb_col: str,
         F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("c_emb"),
         F.col("nrm").alias("c_norm"), "cell",
     )
-    joined = probes.join(c, "cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    cos = dot_col(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        joined.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r"))
+    return _rerank_topk(
+        probes.join(c, "cell").filter(F.col("neighbor_id") != F.col("query_id")),
+        k,
     )
 
 

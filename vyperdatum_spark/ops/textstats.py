@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import hash60, hash60_sql
+from .dedup import hash60, hash60_sql, shingles_from_tokens, tokens_col
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "at", "for")
 
@@ -32,13 +32,9 @@ KGRAM = 5
 WINNOW_W = 4
 
 
-def _toks(text: Column) -> Column:
-    return F.split(text, " ")
-
-
 # ------------------------------------------------------------- quality
 def quality_cols(text: Column) -> dict[str, Column]:
-    toks = _toks(text)
+    toks = tokens_col(text)
     n_chars = F.length(text)
     n_words = F.size(toks)
     n_stop = F.size(
@@ -98,7 +94,7 @@ def quality_sql(table: str = "documents", id_col: str = "doc_id",
 # -------------------------------------------------------------- langid
 def langid_df(df: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
-    toks = _toks(F.col(text_col))
+    toks = tokens_col(F.col(text_col))
     scores = []
     for lang in sorted(LANG_MARKERS):
         markers = LANG_MARKERS[lang]
@@ -243,7 +239,7 @@ def repetition_cols(text: Column,
     ``text`` and ``toks`` behind a ``Generate`` instead, as fields of
     a one-row ``explode(array(struct(...)))``, which the filter cannot
     cross (see ``queries.webtext.q_curation_end_to_end``)."""
-    toks = _toks(text) if toks is None else toks
+    toks = tokens_col(text) if toks is None else toks
     dtoks = F.array_distinct(toks)
     n_words = F.size(toks)
     n_distinct = F.size(dtoks)
@@ -281,7 +277,7 @@ def repetition_df(df: DataFrame, id_col: str = "doc_id",
     """(id, n_words, n_distinct_words, dup_word_frac, top_word_frac,
     gopher_keep) — repetition_cols projected per document."""
     staged = df.select(F.col(id_col), F.col(text_col),
-                       _toks(F.col(text_col)).alias("_tk"))
+                       tokens_col(F.col(text_col)).alias("_tk"))
     cols = repetition_cols(F.col(text_col), toks=F.col("_tk"))
     return staged.select(
         F.col(id_col), *[c.alias(n) for n, c in cols.items()]
@@ -335,18 +331,8 @@ def top_ngrams(df: DataFrame, n: int = 2, k: int = 20,
     shuffle with map-side partial aggregation → a k-row ordered take.
     The final global sort is over the aggregated (distinct-ngram)
     table, not the corpus."""
-    # token array STAGED below the Generate: lambda bodies re-evaluate
-    # inlined subtrees per element, so slicing an inlined split() is
-    # O(n_tokens²) string splitting per doc (dedup.shingles_from_tokens
-    # documents the same trap; staged here r5)
-    staged = df.select(_toks(F.col(text_col)).alias("_tk"))
-    tk = F.col("_tk")
-    n_pos = F.size(tk) - (n - 1)
-    grams = F.transform(
-        F.when(n_pos >= 1, F.sequence(F.lit(1), n_pos))
-        .otherwise(F.array().cast("array<int>")),
-        lambda i: F.array_join(F.slice(tk, i, n), " "),
-    )
+    staged = df.select(tokens_col(F.col(text_col)).alias("_tk"))
+    grams = shingles_from_tokens(F.col("_tk"), n)
     ex = staged.select(F.explode(grams).alias("ngram"))
     agg = ex.groupBy("ngram").agg(F.count("*").alias("n_occurrences"))
     docs = (
@@ -385,7 +371,7 @@ def top_ngrams_sql(table: str = "documents", n: int = 2, k: int = 20,
 # -------------------------------------------------------- token counts
 def token_counts_df(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
-    ws = F.size(_toks(F.col(text_col)))
+    ws = F.size(tokens_col(F.col(text_col)))
     re_toks = F.size(F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_RE), 0))
     return df.select(
         F.col(id_col),
@@ -592,7 +578,7 @@ def curation_policy_df(df: DataFrame, id_col: str = "doc_id",
     production curation run logs per document (why a doc was dropped,
     not just that it was).  Pure column math over one projection;
     zero shuffle, zero Python."""
-    toks = _toks(F.col(text_col))
+    toks = tokens_col(F.col(text_col))
     n_words = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
     dup_frac = F.lit(1.0) - n_distinct.cast("double") / n_words.cast("double")
@@ -684,17 +670,8 @@ def lm_score_df(df: DataFrame, id_col: str = "doc_id",
     scale, drop the hint and pre-partition both sides by gram. The
     per-doc sum folds a sorted array left-to-right so Spark and
     DuckDB agree bit-for-bit regardless of join/aggregation order."""
-    # token array STAGED below the Generate (r5): the bigram lambda's
-    # slice over an inlined split() re-evaluates the split per bigram
-    # — O(n_tokens²) per doc (same trap as dedup.shingles_from_tokens)
-    staged = df.select(F.col(id_col), _toks(F.col(text_col)).alias("_tk"))
-    tk = F.col("_tk")
-    n_pos = F.size(tk) - 1
-    grams = F.transform(
-        F.when(n_pos >= 1, F.sequence(F.lit(1), n_pos))
-        .otherwise(F.array().cast("array<int>")),
-        lambda i: F.array_join(F.slice(tk, i, 2), " "),
-    )
+    staged = df.select(F.col(id_col), tokens_col(F.col(text_col)).alias("_tk"))
+    grams = shingles_from_tokens(F.col("_tk"), 2)
     # explode_outer + filter: the inner-explode codegen path
     # re-evaluates its input per OUTPUT element (O(n^2) per doc)
     ex = (
@@ -793,16 +770,8 @@ def dup_substring_spans(df: DataFrame, id_col: str = "doc_id",
     combine would not shrink that shuffle anyway) — then the
     surviving-hit minority flows into the per-doc window + island
     agg, which share one (id) shuffle. No Python, no all-pairs."""
-    # token array STAGED below the Generate (r5): slicing an inlined
-    # split() inside the k-gram lambda is O(n_tokens²) splits per doc
-    staged = df.select(F.col(id_col), _toks(F.col(text_col)).alias("_tk"))
-    tk = F.col("_tk")
-    n_pos = F.size(tk) - (k - 1)
-    grams = F.transform(
-        F.when(n_pos >= 1, F.sequence(F.lit(1), n_pos))
-        .otherwise(F.array().cast("array<int>")),
-        lambda i: F.array_join(F.slice(tk, i, k), " "),
-    )
+    staged = df.select(F.col(id_col), tokens_col(F.col(text_col)).alias("_tk"))
+    grams = shingles_from_tokens(F.col("_tk"), k)
     ex = (
         staged.select(
             F.col(id_col),

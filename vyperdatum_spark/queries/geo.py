@@ -605,9 +605,6 @@ def q_geo_knn_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tx.transform_points(
         spark, pts, "ellipse", "mllw", key_col="pid",
         grid_defs=_knn_grid_defs(), knn_fallback=True,
-        # fixture grid set is deterministic per catalog version →
-        # dims cacheable across calls (the PROJ-grid-cache analog)
-        grid_cache_token="knn_edge_fixture",
     )
     return out.select("pid", "region_id", "z_out")
 

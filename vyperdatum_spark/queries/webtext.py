@@ -464,7 +464,7 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "canonical_url", "n_email", "n_ip", "n_phone",
         F.explode(F.array(F.struct(
             F.col("clean_text").alias("t"),
-            ts._toks(F.col("clean_text")).alias("tk"),
+            dedup.tokens_col(F.col("clean_text")).alias("tk"),
         ))).alias("_r"),
     )
     rep = ts.repetition_cols(F.col("_r.t"), toks=F.col("_r.tk"))
@@ -553,12 +553,11 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     512-token sequence indexes it spans — the integer window math a
     distributed sequence writer needs (`ops/packing.py`)."""
     from ..ops.packing import pack_sequences
-    from ..ops.textstats import _toks
 
     docs = _docs(spark, sf_dir).select(
         "doc_id",
         "source",
-        F.size(_toks(F.col("text"))).cast("long").alias("ws_tokens"),
+        F.size(dedup.tokens_col(F.col("text"))).cast("long").alias("ws_tokens"),
     )
     return pack_sequences(docs, seq_len=512, sep_tokens=1)
 
@@ -567,12 +566,12 @@ def q_sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-mixing: fill a 500-token budget per source in
     deterministic hash order (`ops/textstats.sample_token_budget`) —
     rerun/engine-portable, overshoot ≤ 1 doc per group."""
-    from ..ops.textstats import _toks, sample_token_budget
+    from ..ops.textstats import sample_token_budget
 
     docs = _docs(spark, sf_dir).select(
         "doc_id",
         "source",
-        F.size(_toks(F.col("text"))).cast("long").alias("ws_tokens"),
+        F.size(dedup.tokens_col(F.col("text"))).cast("long").alias("ws_tokens"),
     )
     return sample_token_budget(docs, budget=500).select(
         "doc_id", "source", "ws_tokens", "taken_before"
@@ -670,7 +669,8 @@ def queries() -> dict:
         "ann_bruteforce_topk": lambda s, d: similarity.ann_bruteforce_topk(
             _embs(s, d)
         ),
-        "ann_lsh_topk": lambda s, d: similarity.ann_lsh_topk(_embs(s, d)),
+        "ann_lsh_topk": lambda s, d: similarity.ann_lsh_multi_topk(
+            _embs(s, d), n_tables=1),
         "ann_lsh_multi_topk": lambda s, d: similarity.ann_lsh_multi_topk(
             _embs(s, d)
         ),
