@@ -39,7 +39,7 @@ from vyperdatum_spark.queries import geo
 #     same plan class as the exposed transform variants;
 #   geo_chart_datum_flip — F4 flip also driver-evidenced by
 #     geo_transform_from_depth;
-#   ann_lsh_topk — strict subset of ann_lsh_multi_topk;
+#   ann_lsh_topk — ann_lsh_multi_topk at n_tables=1;
 #   dedup_ngram_jaccard — the all-pairs opt-in recall reference;
 #     dedup_lsh_verified is the exposed production path;
 #   geo_knn_edge_kernel — alias of the exposed geo_knn_edge (bench.py

@@ -1,8 +1,37 @@
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
+from py4j.java_gateway import GatewayClient
 
 from vyperdatum_spark.session import get_spark
+
+
+@contextlib.contextmanager
+def _counting_py4j():
+    calls = [0]
+    orig = GatewayClient.send_command
+
+    def counting(self, command, *args, **kw):
+        # not the deletes of Java refs that earlier work left behind:
+        # they arrive in bursts of hundreds, whenever Python frees them
+        if not command.startswith("m\nd\n"):
+            calls[0] += 1
+        return orig(self, command, *args, **kw)
+
+    GatewayClient.send_command = counting
+    try:
+        yield calls
+    finally:
+        GatewayClient.send_command = orig
+
+
+@pytest.fixture
+def count_py4j():
+    """``with count_py4j() as calls:`` counts the py4j round-trips the
+    block makes in ``calls[0]``."""
+    return _counting_py4j
 
 
 @pytest.fixture(scope="session")

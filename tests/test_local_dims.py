@@ -17,7 +17,6 @@ import math
 
 import numpy as np
 import pytest
-from py4j.java_gateway import GatewayClient
 
 from vyperdatum_spark.engine import transform as tx
 from vyperdatum_spark.engine.inputs import local_df
@@ -93,28 +92,15 @@ _PY4J_PINS = {
 }
 
 
-def test_warm_transform_build_py4j_budget(spark):
+def test_warm_transform_build_py4j_budget(spark, count_py4j):
     pts = _points(spark)
-    orig = GatewayClient.send_command
     over = {}
     for name, (kwargs, sampled, pin) in _PY4J_PINS.items():
         kwargs = {"from_datum": "ellipse", "to_datum": "mllw", **kwargs}
         entry = tx.transform_points_sampled if sampled else tx.transform_points
         entry(spark, pts, **kwargs)  # fill the dim cache
-        calls = [0]
-
-        def counting(self, command, *args, **kw):
-            # not the deletes of Java refs that earlier work left behind:
-            # they arrive in bursts of hundreds, whenever Python frees them
-            if not command.startswith("m\nd\n"):
-                calls[0] += 1
-            return orig(self, command, *args, **kw)
-
-        GatewayClient.send_command = counting
-        try:
+        with count_py4j() as calls:
             entry(spark, pts, **kwargs)
-        finally:
-            GatewayClient.send_command = orig
         if calls[0] >= pin:
             over[name] = (calls[0], pin)
     assert not over, over

@@ -45,7 +45,7 @@ AUDIT = [
     ("dedup_paragraphs", "keep-first exact paragraph dedup"),
     ("pii_redact", "PII redaction"),
     ("text_repetition", "repetition / Gopher-rule stats"),
-    ("curation_end_to_end", "full curation chain (extract→redact→filter→dedup)"),
+    ("curation_end_to_end", "full curation chain (latest capture→extract→redact→filter)"),
     ("curation_policy", "per-rule policy audit (keep + reasons)"),
     ("rel_events_sessions", "gap sessionization (session_window)"),
     ("dedup_cluster_canonical", "CC clustering (fixpoint iteration plans)"),

@@ -72,6 +72,11 @@ def tokens_col(text: Column) -> Column:
     return F.split(text, " ")
 
 
+def tokens_spark_sql(text: str) -> str:
+    """:func:`tokens_col` as Spark SQL text over a column reference."""
+    return f"split({text}, ' ')"
+
+
 def shingles_from_tokens(toks: Column, w: int = SHINGLE_W) -> Column:
     """The word n-gram builder of every text op: the space-joined
     ``w``-token windows of a MATERIALIZED token-array column, in

@@ -12,7 +12,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import hash60, hash60_sql, shingles_from_tokens, tokens_col
+from ..spatial.cells import dlit
+from .dedup import (hash60, hash60_sql, shingles_from_tokens, tokens_col,
+                    tokens_spark_sql)
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "at", "for")
 
@@ -215,21 +217,22 @@ GOPHER_MAX_DUP_WORD_FRAC = 0.75
 GOPHER_WORD_LEN_RANGE = (2.0, 12.0)
 
 
-def repetition_cols(text: Column,
-                    toks: Column | None = None) -> dict[str, Column]:
-    """Repetition signals + the composite Gopher keep decision as
-    reusable column expressions (pure column math, zero shuffle).
+def repetition_spark_sql(text: str, toks: str | None = None) -> dict[str, str]:
+    """Repetition signals + the composite Gopher keep decision as Spark
+    SQL text over column references (zero shuffle) — the one Spark
+    builder, for ``selectExpr``/``filter``/``F.expr``; ``repetition_sql``
+    is its DuckDB twin.
 
     top_word_frac (share of the modal token) is computed as a fold
     over the DISTINCT token list counting occurrences in the full
     list — O(d·n) per doc on both engines, bounded by doc length.
 
-    Pass ``toks`` as a STAGED column when the caller can project one
-    (r5 perf): the top_cnt fold's inner ``F.filter(toks, …)`` sits in
-    a lambda body, and lambda bodies re-evaluate inlined subtrees per
-    element — with an inlined split() that is one full re-split of
-    the text per DISTINCT TOKEN (measured 3× on text_repetition at
-    sf0.1; same trap as dedup.shingles_from_tokens).
+    Pass ``toks`` as a STAGED token-array column when the caller can
+    project one (r5 perf): the top_cnt fold's inner ``filter(toks, …)``
+    sits in a lambda body, and lambda bodies re-evaluate inlined
+    subtrees per element — with an inlined split() that is one full
+    re-split of the text per DISTINCT TOKEN (measured 3× on
+    text_repetition at sf0.1; same trap as dedup.shingles_from_tokens).
 
     Staging in a projection is not enough under a ``Filter`` on these
     columns: predicate pushdown substitutes aliases as it moves the
@@ -239,48 +242,54 @@ def repetition_cols(text: Column,
     ``text`` and ``toks`` behind a ``Generate`` instead, as fields of
     a one-row ``explode(array(struct(...)))``, which the filter cannot
     cross (see ``queries.webtext.q_curation_end_to_end``)."""
-    toks = tokens_col(text) if toks is None else toks
-    dtoks = F.array_distinct(toks)
-    n_words = F.size(toks)
-    n_distinct = F.size(dtoks)
-    dup_frac = F.round(
-        F.lit(1.0) - n_distinct.cast("double") / n_words.cast("double"), 6
-    )
-    top_cnt = F.aggregate(
-        dtoks,
-        F.lit(0),
-        lambda acc, w: F.greatest(
-            acc, F.size(F.filter(toks, lambda t: t == w))
-        ),
-    )
-    top_frac = F.round(top_cnt.cast("double") / n_words.cast("double"), 6)
-    n_chars = F.length(text)
-    avg_wl = (n_chars - (n_words - 1)).cast("double") / n_words.cast("double")
+    toks = tokens_spark_sql(text) if toks is None else toks
+    dtoks = f"array_distinct({toks})"
+    n_words = f"size({toks})"
+    n_distinct = f"size({dtoks})"
+    dup_frac = (f"round({dlit(1.0)} - CAST({n_distinct} AS DOUBLE)"
+                f" / CAST({n_words} AS DOUBLE), 6)")
+    # lambda names no caller's column is expected to carry
+    top_cnt = (f"aggregate({dtoks}, 0, (_acc, _w) -> greatest(_acc, "
+               f"size(filter({toks}, _t -> _t = _w))))")
+    top_frac = (f"round(CAST({top_cnt} AS DOUBLE)"
+                f" / CAST({n_words} AS DOUBLE), 6)")
+    avg_wl = (f"(CAST(length({text}) - ({n_words} - 1) AS DOUBLE)"
+              f" / CAST({n_words} AS DOUBLE))")
     lo, hi = GOPHER_WORD_LEN_RANGE
     keep = (
-        (n_words >= GOPHER_MIN_WORDS)
-        & (n_words <= GOPHER_MAX_WORDS)
-        & (dup_frac <= GOPHER_MAX_DUP_WORD_FRAC)
-        & (avg_wl >= lo) & (avg_wl <= hi)
+        f"{n_words} >= {GOPHER_MIN_WORDS}"
+        f" AND {n_words} <= {GOPHER_MAX_WORDS}"
+        f" AND {dup_frac} <= {dlit(GOPHER_MAX_DUP_WORD_FRAC)}"
+        f" AND {avg_wl} >= {dlit(lo)} AND {avg_wl} <= {dlit(hi)}"
     )
     return {
-        "n_words": n_words.cast("long"),
-        "n_distinct_words": n_distinct.cast("long"),
+        "n_words": f"CAST({n_words} AS BIGINT)",
+        "n_distinct_words": f"CAST({n_distinct} AS BIGINT)",
         "dup_word_frac": dup_frac,
         "top_word_frac": top_frac,
-        "gopher_keep": keep,
+        "gopher_keep": f"({keep})",
     }
+
+
+def repetition_cols(text: Column,
+                    toks: Column | None = None) -> dict[str, Column]:
+    """``repetition_spark_sql`` as Columns, for callers that compose
+    Columns; ``text`` and ``toks`` must be plain column references."""
+    cols = repetition_spark_sql(
+        text._jc.toString(), None if toks is None else toks._jc.toString())
+    return {n: F.expr(e) for n, e in cols.items()}
 
 
 def repetition_df(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """(id, n_words, n_distinct_words, dup_word_frac, top_word_frac,
-    gopher_keep) — repetition_cols projected per document."""
-    staged = df.select(F.col(id_col), F.col(text_col),
-                       tokens_col(F.col(text_col)).alias("_tk"))
-    cols = repetition_cols(F.col(text_col), toks=F.col("_tk"))
-    return staged.select(
-        F.col(id_col), *[c.alias(n) for n, c in cols.items()]
+    gopher_keep) — repetition_spark_sql projected per document."""
+    text = f"`{text_col}`"
+    staged = df.selectExpr(f"`{id_col}`", text,
+                           f"{tokens_spark_sql(text)} AS _tk")
+    cols = repetition_spark_sql(text, toks="_tk")
+    return staged.selectExpr(
+        f"`{id_col}`", *[f"{e} AS {n}" for n, e in cols.items()]
     )
 
 

@@ -422,17 +422,25 @@ def stream_curated_capture_sql() -> str:
 
 def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch Common-Crawl curation chain in ONE Spark plan:
-    pages (html:binary with PII planted in the text) → HTML→text
-    extraction → PII redaction (column-preserving) → Gopher repetition
-    filter → latest-capture-per-canonical-URL dedup. Output: one clean
-    row per kept page.
+    pages (html:binary with PII planted in the text) → latest capture
+    per canonical URL → HTML→text extraction → PII redaction
+    (column-preserving) → Gopher repetition filter. Output: one clean
+    row per canonical URL whose latest capture passes the filter.
 
-    Plan shape at 100 TB: projections (extract/redact), the token
-    Generate and the filter fuse into one codegen stage, with every
-    regexp chain evaluated once per row; the only shuffles are the
-    latest-capture aggregate on the canonical key and its join back —
-    the same two-exchange shape as dedup.exact_duplicates + keeper
-    join."""
+    The latest capture is picked over ALL captures, before any per-row
+    text work: a URL whose latest capture fails the filter gives no
+    row (an older, passing capture does not stand in).  Every step
+    after the pick works row by row on doc_id, so running them on the
+    latest captures only gives the same rows as filtering first and
+    joining last, without the regexp work on older captures.
+
+    Plan shape at 100 TB: the only shuffles are the latest-capture
+    aggregate on the canonical key and the semi join of the pages
+    (html still raw) with its winners on doc_id — the same two-exchange
+    shape as dedup.exact_duplicates + keeper join.  Above the join, the
+    projections (extract/redact), the token Generate and the filter
+    fuse into one codegen stage, with every regexp chain evaluated
+    once per kept row."""
     from ..ops import html as html_ops
     from ..ops import pii as pii_ops
     from ..ops import textstats as ts
@@ -447,9 +455,19 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(_page_html_col("text"), "UTF-8").alias("html"),
     )
     canon = urls.canonical_url_df(pages, extra_cols=["warc_ts", "html"])
+    # latest capture per canonical key, directly on the already-
+    # canonical column (same map-combining max-struct shape as
+    # urls.latest_capture, minus the redundant re-canonicalization);
+    # column pruning drops html from this branch
+    latest_ids = (
+        canon.groupBy("canonical_url")
+        .agg(F.max(F.struct("warc_ts", "doc_id")).alias("_b"))
+        .select(F.col("_b.doc_id").alias("doc_id"))
+    )
+    latest = canon.join(latest_ids, "doc_id", "left_semi")
     # extraction and redaction are plain projections, where codegen
     # evaluates each regexp chain once per row
-    ext = canon.select(
+    ext = latest.select(
         "doc_id", "canonical_url",
         html_ops.extract_text_col(F.col("html")).alias("text_out"),
     )
@@ -460,30 +478,16 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subexpression elimination).  The text travels inside the struct:
     # as a plain child column, constraint inference would push
     # isnotnull(<whole HTML+PII chain>) down to the scan instead.
-    tok = red.select(
+    tok = red.selectExpr(
         "doc_id", "canonical_url", "n_email", "n_ip", "n_phone",
-        F.explode(F.array(F.struct(
-            F.col("clean_text").alias("t"),
-            dedup.tokens_col(F.col("clean_text")).alias("tk"),
-        ))).alias("_r"),
+        "explode(array(named_struct('t', clean_text, "
+        f"'tk', {dedup.tokens_spark_sql('clean_text')}))) AS _r",
     )
-    rep = ts.repetition_cols(F.col("_r.t"), toks=F.col("_r.tk"))
-    kept = tok.filter(rep["gopher_keep"])
-    # latest capture per canonical key, directly on the already-
-    # canonical column (same map-combining max-struct shape as
-    # urls.latest_capture, minus the redundant re-canonicalization);
-    # built from canon, so column pruning drops html from this branch
-    latest_ids = (
-        canon.groupBy("canonical_url")
-        .agg(F.max(F.struct("warc_ts", "doc_id")).alias("_b"))
-        .select(F.col("_b.doc_id").alias("doc_id"))
-    )
-    out = kept.join(latest_ids, "doc_id")
-    return out.select(
-        "doc_id", "canonical_url", F.col("_r.t").alias("clean_text"),
-        (F.col("n_email") + F.col("n_ip") + F.col("n_phone"))
-        .cast("long").alias("n_pii"),
-        rep["n_words"].alias("n_words"),
+    rep = ts.repetition_spark_sql("_r.t", toks="_r.tk")
+    return tok.filter(rep["gopher_keep"]).selectExpr(
+        "doc_id", "canonical_url", "_r.t AS clean_text",
+        "CAST(n_email + n_ip + n_phone AS BIGINT) AS n_pii",
+        f"{rep['n_words']} AS n_words",
     )
 
 
