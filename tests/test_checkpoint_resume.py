@@ -66,6 +66,25 @@ def test_metrics_account_for_every_row(spark, tmp_path):
                               "rows_out", "rows_error", "rows_nocoverage"}
 
 
+def test_read_metrics_rejects_done_snapshot_without_sidecar(spark, tmp_path):
+    """A done snapshot with no metrics_ref fails on the driver, naming
+    the table and the snapshot, instead of yielding no rows."""
+    import os
+
+    from vyperdatum_spark.sources import tables
+
+    out_dir = str(tmp_path / "nosidecar")
+    ck.run_with_checkpoint(spark, _points(spark, 60), _tf, out_dir, "runS",
+                           n_buckets=2)
+    data_dir = os.path.join(out_dir, "data")
+    meta = tables._load(data_dir)
+    snap = meta["snapshots"][-1]
+    del snap["properties"]["metrics_ref"]
+    tables._commit(data_dir, meta)
+    with pytest.raises(ValueError, match=rf"{data_dir}.*snapshot {snap['id']}"):
+        ck.read_metrics(spark, out_dir, "runS")
+
+
 def test_single_pass_staging_partition_pruned(spark, tmp_path):
     """The driving table is scanned ONCE (the staging write); every
     per-bucket read is partition-pruned to its own bucket=N directory

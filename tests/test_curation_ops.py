@@ -428,31 +428,32 @@ def _plan_nodes(node):
 
 
 def test_curation_plan_picks_latest_capture_below_extraction(spark, tmp_path):
-    """Optimized-plan shape of q_curation_end_to_end: the left-semi join
-    with the latest captures on doc_id sits under the projection that
-    runs the HTML strip, so only latest captures are extracted."""
+    """Optimized-plan shape of q_curation_end_to_end: the join of the
+    pages with the latest captures on doc_id sits under the projection
+    that runs the HTML strip, so only latest captures are extracted;
+    and the canonical-URL chain runs once, on the latest-capture side."""
     import re
 
     from vyperdatum_spark.queries.webtext import q_curation_end_to_end
 
     _write_docs(tmp_path)
     df = q_curation_end_to_end(spark, str(tmp_path))
+    plan = df._jdf.queryExecution().optimizedPlan()
     (strip,) = [
-        n for n in _plan_nodes(df._jdf.queryExecution().optimizedPlan())
+        n for n in _plan_nodes(plan)
         if n.nodeName() == "Project"
         and html.RE_TAG in n.expressions().toString()
     ]
-    semi = [
-        n for n in _plan_nodes(strip)
-        if n.nodeName() == "Join" and n.joinType().toString() == "LeftSemi"
-    ]
-    assert len(semi) == 1
+    joins = [n for n in _plan_nodes(strip) if n.nodeName() == "Join"]
+    assert len(joins) == 1
     assert re.fullmatch(r"\(doc_id#\d+L = doc_id#\d+L\)",
-                        semi[0].condition().get().toString())
+                        joins[0].condition().get().toString())
+    assert plan.toString().count(urls._AUTH_RE) == 1
 
 
-# Warm-build py4j round-trips of q_curation_end_to_end, measured at 534
-# (1,138 with the Gopher stage built as Column DSL).
+# Warm-build py4j round-trips of q_curation_end_to_end, measured at 524
+# (665 with urls.latest_capture's aggregate built as Column DSL, 1,138
+# with the Gopher stage built as Column DSL).
 _CURATION_PY4J_PIN = 620
 
 
@@ -475,6 +476,7 @@ def test_stream_first_capture_across_batches(spark, tmp_path):
     import pandas as pd
 
     from vyperdatum_spark.streaming import stateful
+    from vyperdatum_spark.streaming.windows import run_available_now
 
     in_dir = str(tmp_path / "fc_in")
     out_dir = str(tmp_path / "fc_out")
@@ -485,13 +487,7 @@ def test_stream_first_capture_across_batches(spark, tmp_path):
         rows = spark.readStream.schema(
             "canonical_url string, warc_ts long, doc_id long, text_out string"
         ).parquet(in_dir)
-        q = (
-            stateful.stream_first_capture(rows)
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", out_dir).option("checkpointLocation", ck_dir)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
+        run_available_now(stateful.stream_first_capture(rows), out_dir, ck_dir)
         return spark.read.parquet(out_dir).toPandas()
 
     pd.DataFrame({

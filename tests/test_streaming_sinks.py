@@ -176,37 +176,40 @@ def test_stream_drain_empty_emission_yields_empty_df(spark, tmp_path):
     ]
 
 
+class _FakeState:
+    """The GroupState surface the keyed first-row kernel uses."""
+
+    def __init__(self):
+        self.exists = False
+        self.hasTimedOut = False
+        self._v = None
+        self.timeout_set = None
+        self.removed = False
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+        self.exists = True
+
+    def setTimeoutDuration(self, d):
+        self.timeout_set = d
+
+    def remove(self):
+        self.removed = True
+        self.exists = False
+
+
 def test_stateful_ttl_kernel_arms_and_ages_out():
     """Round-3 ADVICE regression: the TTL variant must arm a
     processing-time timeout on every update and remove state on the
     timeout invocation (previously state_ttl was a silent no-op)."""
-    from vyperdatum_spark.streaming.stateful import _make_dedup_fn
+    from vyperdatum_spark.streaming.stateful import _first_row_fn
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self.hasTimedOut = False
-            self._v = None
-            self.timeout_set = None
-            self.removed = False
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-        def setTimeoutDuration(self, d):
-            self.timeout_set = d
-
-        def remove(self):
-            self.removed = True
-            self.exists = False
-
-    fn = _make_dedup_fn("10 minutes")
-    st = FakeState()
+    fn = _first_row_fn(["warc_ts", "text"], "10 minutes")
+    st = _FakeState()
     pdf = pd.DataFrame({
         "url": ["u"], "warc_ts": [pd.Timestamp("2024-01-01")],
         "text": ["t"],
@@ -222,10 +225,100 @@ def test_stateful_ttl_kernel_arms_and_ages_out():
     out3 = list(fn(("u",), iter([]), st))
     assert out3 == [] and st.removed
     # no-TTL kernel never arms a timeout
-    fn0 = _make_dedup_fn(None)
-    st0 = FakeState()
+    fn0 = _first_row_fn(["warc_ts", "text"], None)
+    st0 = _FakeState()
     list(fn0(("u",), iter([pdf]), st0))
     assert st0.timeout_set is None
+
+
+def test_stateful_kernel_min_row_over_all_chunks():
+    """A key with more rows than one Arrow batch reaches the kernel as
+    several pandas chunks: the emitted row is the minimum under the
+    order columns over ALL chunks, not the first chunk's minimum, and
+    equal timestamps fall back to the next order column."""
+    from vyperdatum_spark.streaming.stateful import _first_row_fn
+
+    fn = _first_row_fn(["warc_ts", "text"], None)
+    late = pd.DataFrame({
+        "url": ["u", "u"],
+        "warc_ts": [pd.Timestamp("2024-01-03"), pd.Timestamp("2024-01-02")],
+        "text": ["late", "mid"],
+    })
+    early = pd.DataFrame({
+        "url": ["u", "u"],
+        "warc_ts": [pd.Timestamp("2024-01-01")] * 2,
+        "text": ["zz", "early"],
+    })
+    st = _FakeState()
+    (out,) = list(fn(("u",), iter([late, early]), st))
+    assert out.to_dict("records") == [{
+        "url": "u", "warc_ts": pd.Timestamp("2024-01-01"), "text": "early",
+        "n_in_batch": 4,
+    }]
+    assert st._v == (4,)
+
+
+def test_stream_dedup_urls_earliest_capture_past_one_arrow_batch(
+        spark, tmp_path):
+    """End to end: a url with more captures in one batch than
+    spark.sql.execution.arrow.maxRecordsPerBatch (10,000) is emitted
+    with its earliest capture even when that row is the batch's last."""
+    from vyperdatum_spark.streaming import stateful
+
+    in_dir = str(tmp_path / "big_in")
+    os.makedirs(in_dir)
+    n = 12_000
+    pdf = pd.DataFrame({
+        "url": "u",
+        "warc_ts": pd.Timestamp("2024-01-02")
+        + pd.to_timedelta(range(n), unit="s"),
+        "html": [b"x"] * n,
+        "text": [f"t{i}" for i in range(n)],
+        "lang": "en",
+    })
+    pdf.loc[n - 1, "warc_ts"] = pd.Timestamp("2024-01-01")
+    pdf.to_parquet(f"{in_dir}/b1.parquet", coerce_timestamps="us")
+    out_dir = str(tmp_path / "big_out")
+    stateful.stream_dedup_urls(spark, in_dir, out_dir, str(tmp_path / "big_ck"))
+    (row,) = spark.read.parquet(out_dir).collect()
+    assert (row["first_ts"], row["text"], row["n_in_batch"]) == (
+        pd.Timestamp("2024-01-01").to_pydatetime(), f"t{n - 1}", n)
+
+
+def test_stream_entry_point_schemas(spark, tmp_path):
+    """Each stream entry point keeps its output column names, order
+    and types."""
+    from vyperdatum_spark.streaming import stateful
+
+    rows = spark.readStream.schema(
+        "canonical_url string, warc_ts long, doc_id long, text_out string"
+    ).parquet(str(tmp_path))
+    assert stateful.stream_first_capture(rows).schema.simpleString() == (
+        "struct<canonical_url:string,first_id:bigint,first_ts:bigint,"
+        "text_out:string,n_in_batch:bigint>"
+    )
+
+    src = str(tmp_path / "docs.parquet")
+    pd.DataFrame({"source": ["a", "b", "a"], "doc_id": [3, 1, 2]}).to_parquet(src)
+    got = stateful.stream_first_per_key(
+        spark, src, str(tmp_path / "work"), "source", "doc_id")
+    assert got.schema.simpleString() == (
+        "struct<key:string,first_id:bigint,n_in_batch:bigint>"
+    )
+    assert sorted(map(tuple, got.collect())) == [("a", 2, 2), ("b", 1, 1)]
+
+    in_dir = str(tmp_path / "pages")
+    out_dir = str(tmp_path / "dedup_out")
+    os.makedirs(in_dir)
+    datagen.pages_pdf(10, seed=1).to_parquet(
+        f"{in_dir}/b1.parquet", coerce_timestamps="us"
+    )
+    stateful.stream_dedup_urls(spark, in_dir, out_dir,
+                               str(tmp_path / "dedup_ck"))
+    assert spark.read.parquet(out_dir).schema.simpleString() == (
+        "struct<url:string,first_ts:timestamp,text:string,"
+        "n_in_batch:bigint>"
+    )
 
 
 def test_session_window_boundary_merges_at_exact_gap(spark):

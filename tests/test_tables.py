@@ -174,3 +174,54 @@ def test_schema_evolution_add_column_unions_by_name(spark, tmp_path):
     assert rows[1] is None and rows[2] is None and rows[3] == 7
     old = tables.read_table(spark, d, as_of=1)
     assert set(old.columns) == {"id", "a"}
+
+
+def _jobs_during(spark, fn):
+    """(result of fn(), ids of the Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("vy_read_table", "read_table schema probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup("vy_read_table")
+
+
+def test_read_table_uses_recorded_schema(spark, tmp_path):
+    """A snapshot whose dirs share one recorded schema is read with it:
+    no schema-inference job at plan build, the written column types
+    (the partition column last, as in an inferred read, but typed as
+    written rather than inferred from its directory names) and the
+    same rows as an inferred read."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path / "typed")
+    pdf = pd.DataFrame({
+        "id": [1, 2, 3], "s": ["a", "b", "c"], "bucket": [0, 1, 0],
+        "ts": pd.to_datetime(["2024-01-01", "2024-01-02", "2024-01-03"]),
+    })
+    sid = tables.write_table(spark.createDataFrame(pdf), d,
+                             partition_by=("bucket",))
+    got, jobs = _jobs_during(spark, lambda: tables.read_table(spark, d))
+    assert jobs == []
+    (data_dir,) = tables.snapshot_meta(d, sid)["dirs"]
+    inferred = spark.read.parquet(os.path.join(d, data_dir))
+    assert got.schema.simpleString() == (
+        "struct<id:bigint,s:string,ts:timestamp,bucket:bigint>")
+    assert inferred.schema["bucket"].dataType.simpleString() == "int"
+    inferred = inferred.withColumn("bucket", F.col("bucket").cast("long"))
+    assert got.exceptAll(inferred).count() == 0
+    assert inferred.exceptAll(got).count() == 0
+
+
+def test_read_table_infers_unparseable_recorded_schema(spark, tmp_path):
+    """A field name the recorded simple form cannot quote falls back to
+    schema inference instead of failing the read."""
+    d = str(tmp_path / "odd_names")
+    tables.write_table(
+        spark.createDataFrame(pd.DataFrame({"a b": [1, 2], "c": ["x", "y"]})), d)
+    got, jobs = _jobs_during(spark, lambda: tables.read_table(spark, d))
+    assert got.columns == ["a b", "c"] and got.count() == 2
+    assert jobs

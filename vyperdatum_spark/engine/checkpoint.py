@@ -231,19 +231,22 @@ def read_metrics(spark: SparkSession, out_dir: str,
     reassembled from snapshot properties + metrics sidecar files
     (driver-side manifest scan, no data read). Only the current chain
     is consulted, so metrics of runs whose output was later
-    overwritten are excluded — with or without ``run_id``."""
+    overwritten are excluded — with or without ``run_id``. A done
+    snapshot without a metrics sidecar raises ValueError."""
     rows = []
-    for snap in tables.current_chain(_data_dir(out_dir)):
+    data_dir = _data_dir(out_dir)
+    for snap in tables.current_chain(data_dir):
         p = snap.get("properties", {})
         if p.get("status") != "done":
             continue
         if run_id is not None and p.get("run_id") != run_id:
             continue
-        if "metrics_ref" in p:
-            with open(os.path.join(_data_dir(out_dir), p["metrics_ref"])) as f:
-                payload = json.load(f)
-        else:  # pre-sidecar manifests inlined the payload
-            payload = json.loads(p.get("metrics", "[]"))
+        if "metrics_ref" not in p:
+            raise ValueError(
+                f"checkpoint table {data_dir}: done snapshot {snap['id']} "
+                "has no metrics_ref (no metrics sidecar recorded)")
+        with open(os.path.join(data_dir, p["metrics_ref"])) as f:
+            payload = json.load(f)
         for m in payload:
             rows.append((
                 p["run_id"], int(p["bucket"]), int(m["partition_id"]),

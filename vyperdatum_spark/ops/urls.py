@@ -127,18 +127,15 @@ def latest_capture(df: DataFrame, url_col: str = "url",
     struct-max agg combines partially before it). Ties on ts break to
     the larger id, deterministically on both engines.
 
-    Returns (canonical_url, latest_id, latest_ts, n_captures)."""
+    Returns (canonical_url, latest_id, latest_ts, n_captures); each
+    stage is SQL text, a few py4j calls per stage."""
     canon = canonical_url_df(df, url_col, id_col, extra_cols=[ts_col])
-    best = F.max(F.struct(F.col(ts_col), F.col(id_col))).alias("_b")
     return (
         canon.groupBy("canonical_url")
-        .agg(best, F.count("*").alias("n_captures"))
-        .select(
-            "canonical_url",
-            F.col(f"_b.{id_col}").alias("latest_id"),
-            F.col(f"_b.{ts_col}").alias("latest_ts"),
-            "n_captures",
-        )
+        .agg(F.expr(f"max(struct(`{ts_col}`, `{id_col}`)) AS _b"),
+             F.expr("count(*) AS n_captures"))
+        .selectExpr("canonical_url", f"_b.`{id_col}` AS latest_id",
+                    f"_b.`{ts_col}` AS latest_ts", "n_captures")
     )
 
 

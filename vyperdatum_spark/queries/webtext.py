@@ -435,9 +435,10 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     joining last, without the regexp work on older captures.
 
     Plan shape at 100 TB: the only shuffles are the latest-capture
-    aggregate on the canonical key and the semi join of the pages
-    (html still raw) with its winners on doc_id — the same two-exchange
-    shape as dedup.exact_duplicates + keeper join.  Above the join, the
+    aggregate on the canonical key (urls.latest_capture, the one place
+    the canonical-URL chain runs) and the join of its winners with the
+    pages' (doc_id, html) on doc_id — the same two-exchange shape as
+    dedup.exact_duplicates + keeper join.  Above the join, the
     projections (extract/redact), the token Generate and the filter
     fuse into one codegen stage, with every regexp chain evaluated
     once per kept row."""
@@ -454,17 +455,11 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         _url_col().alias("url"),
         F.encode(_page_html_col("text"), "UTF-8").alias("html"),
     )
-    canon = urls.canonical_url_df(pages, extra_cols=["warc_ts", "html"])
-    # latest capture per canonical key, directly on the already-
-    # canonical column (same map-combining max-struct shape as
-    # urls.latest_capture, minus the redundant re-canonicalization);
-    # column pruning drops html from this branch
-    latest_ids = (
-        canon.groupBy("canonical_url")
-        .agg(F.max(F.struct("warc_ts", "doc_id")).alias("_b"))
-        .select(F.col("_b.doc_id").alias("doc_id"))
-    )
-    latest = canon.join(latest_ids, "doc_id", "left_semi")
+    # the canonical URL is computed once, on the latest-capture side;
+    # the page side carries only (doc_id, html) to the join
+    winners = urls.latest_capture(pages.select("doc_id", "warc_ts", "url"))
+    latest = winners.selectExpr("latest_id AS doc_id", "canonical_url").join(
+        pages.select("doc_id", "html"), "doc_id")
     # extraction and redaction are plain projections, where codegen
     # evaluates each regexp chain once per row
     ext = latest.select(

@@ -29,7 +29,9 @@ import os
 import time
 import uuid
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_string
 
 _MANIFEST = "_snapshots.json"
 
@@ -207,7 +209,11 @@ def read_table(
     append), the read unions by name via parquet ``mergeSchema`` —
     rows from pre-evolution dirs surface the new columns as null,
     Iceberg's add-column semantics. Homogeneous snapshots skip the
-    merge (no footer-merge cost on the common path)."""
+    merge (no footer-merge cost on the common path) and read with the
+    recorded schema, so planning the read runs no schema-inference
+    job. Adopted dirs have no recorded schema and keep inference, as
+    does a recorded schema that does not parse back (field names the
+    simple form cannot quote)."""
     meta = _load(table_dir)
     if meta["current"] is None:
         raise ValueError(f"{table_dir} has no committed snapshots")
@@ -226,6 +232,11 @@ def read_table(
     reader = spark.read
     if len(fps) > 1:
         reader = reader.option("mergeSchema", "true")
+    elif fps != {"?"}:
+        try:
+            reader = reader.schema(_parse_datatype_string(fps.pop()))
+        except ParseException:
+            pass
     return reader.parquet(*paths)
 
 

@@ -1,64 +1,68 @@
-"""Custom stateful streaming operator: cross-batch URL dedup.
+"""Custom stateful streaming operator: keyed first row across batches.
 
 A crawl re-fetches URLs across micro-batches; the training pipeline
 wants each url exactly once downstream. This is the
-``applyInPandasWithState`` shape from the brief — keyed state (url →
-first_seen, n_fetches) that survives micro-batches via the state
-store, emitting a row only the first time a key appears.
+``applyInPandasWithState`` shape from the brief — keyed state (key →
+row count) that survives micro-batches via the state store, emitting a
+row only in the batch that introduced the key.
+
+One kernel (``first_row_per_key``) serves every caller: per key it
+emits the batch's minimum row under the caller's order columns, taken
+over ALL of the group's Arrow chunks (a key with more rows than
+``spark.sql.execution.arrow.maxRecordsPerBatch`` arrives in several),
+plus that row's payload and the batch row count; later batches only
+bump the counter. The URL dedup, the per-key first id and the
+first-capture dedup are projections around it.
 
 Scale notes:
-- state is per-url and grows with distinct urls: production bounds it
-  with a timeout (set ``state_ttl``) so stale urls age out — the state
+- state is per-key and grows with distinct keys: production bounds it
+  with a timeout (set ``state_ttl``) so stale keys age out — the state
   store then holds only the active crawl frontier;
-- the groupBy(url) shuffle is the one exchange; within a batch the
-  kernel sees each url's rows as ONE pandas group (vectorized, no
+- the groupBy(key) shuffle is the one exchange; within a batch the
+  kernel sees each key's rows as pandas chunks (vectorized, no
   per-row Python outside the group loop Spark itself drives).
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType, StringType, StructField, StructType, TimestampType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..engine.datagen import PAGES_SCHEMA
-
-OUT_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("first_ts", TimestampType()),
-    StructField("text", StringType()),
-    StructField("n_in_batch", LongType()),
-])
+from .windows import drain_to_parquet, run_available_now
 
 STATE_SCHEMA = StructType([
     StructField("n_fetches", LongType()),
 ])
 
 
-def _make_dedup_fn(state_ttl: str | None):
-    """Build the keyed-state kernel. With ``state_ttl`` set, each
-    update arms a processing-time timeout; when it fires (url idle for
-    the TTL) the state is removed so the store holds only the active
-    crawl frontier — a url re-fetched after aging out is emitted again
-    (the documented trade of bounded state)."""
+def _first_row_fn(order: Sequence[str], state_ttl: str | None):
+    """Build the keyed-state kernel: it emits the group's minimum row
+    under ``order`` (all of the group's columns) plus ``n_in_batch``.
+    With ``state_ttl`` set, each update arms a processing-time
+    timeout; when it fires (key idle for the TTL) the state is removed
+    so the store holds only the active frontier — a key re-fetched
+    after aging out is emitted again (the documented trade of bounded
+    state)."""
+    order = list(order)
 
-    def _dedup_fn(key, pdf_iter, state: GroupState):
-        url = key[0]
+    def fn(_key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
             # timeout invocation carries no rows: age the key out
             state.remove()
             return iter(())
+        already = state.exists
         n = 0
-        first_row = None
+        heads = []
         for pdf in pdf_iter:
             n += len(pdf)
-            if first_row is None and len(pdf):
-                first = pdf.sort_values("warc_ts").iloc[0]
-                first_row = (url, first["warc_ts"], first["text"])
-        already = state.exists
+            if not already and len(pdf):
+                heads.append(pdf.sort_values(order, kind="stable").head(1))
         if already:
             (seen,) = state.get
             state.update((seen + n,))
@@ -67,19 +71,30 @@ def _make_dedup_fn(state_ttl: str | None):
         if state_ttl:
             state.setTimeoutDuration(state_ttl)
         if already:
-            return iter(())  # already emitted in an earlier batch
-        return iter([pd.DataFrame({
-            "url": [first_row[0]],
-            "first_ts": [first_row[1]],
-            "text": [first_row[2]],
-            "n_in_batch": [n],
-        })])
+            return iter(())  # emitted in the batch that introduced the key
+        best = pd.concat(heads).sort_values(order, kind="stable").head(1)
+        return iter([best.assign(n_in_batch=n)])
 
-    return _dedup_fn
+    return fn
 
 
-# default kernel (no TTL) — kept importable for tests
-_dedup_fn = _make_dedup_fn(None)
+def first_row_per_key(df: DataFrame, key: str, order: Sequence[str],
+                      payload: Sequence[str] = (),
+                      state_ttl: str | None = None) -> DataFrame:
+    """Per ``key``, emit the introducing batch's minimum row under
+    ``order`` (with its ``payload`` columns) plus ``n_in_batch``, once
+    per stream; later batches only bump the state counter. Output
+    columns: ``key, *order, *payload, n_in_batch``, typed as in ``df``."""
+    rows = df.select(key, *order, *payload)
+    out_schema = StructType(
+        rows.schema.fields + [StructField("n_in_batch", LongType())]
+    )
+    timeout = (GroupStateTimeout.ProcessingTimeTimeout if state_ttl
+               else GroupStateTimeout.NoTimeout)
+    return rows.groupBy(key).applyInPandasWithState(
+        _first_row_fn(order, state_ttl),
+        out_schema, STATE_SCHEMA, "append", timeout,
+    )
 
 
 def stream_dedup_urls(
@@ -90,91 +105,14 @@ def stream_dedup_urls(
     state_ttl: str | None = None,
 ):
     """Drain available page files, emitting each url exactly once
-    across ALL micro-batches (keyed state store)."""
-    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir)
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout if state_ttl
-               else GroupStateTimeout.NoTimeout)
-    deduped = (
-        pages.groupBy("url")
-        .applyInPandasWithState(
-            _make_dedup_fn(state_ttl), OUT_SCHEMA, STATE_SCHEMA,
-            "append", timeout,
-        )
-    )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-FIRST_OUT_SCHEMA = StructType([
-    StructField("key", StringType()),
-    StructField("first_id", LongType()),
-    StructField("n_in_batch", LongType()),
-])
-
-
-def _first_fn(key, pdf_iter, state: GroupState):
-    """Emit (key, min id, row count) the first batch the key appears;
-    later batches only bump state — same state-store mechanics as the
-    URL dedup, over a generic (key, id) projection."""
-    n = 0
-    best = None
-    for pdf in pdf_iter:
-        n += len(pdf)
-        if len(pdf):
-            m = int(pdf["_id"].min())
-            best = m if best is None else min(best, m)
-    if state.exists:
-        (seen,) = state.get
-        state.update((seen + n,))
-        return iter(())
-    state.update((n,))
-    return iter([pd.DataFrame({
-        "key": [key[0]], "first_id": [best], "n_in_batch": [n],
-    })])
-
-
-CAPTURE_OUT_SCHEMA = StructType([
-    StructField("canonical_url", StringType()),
-    StructField("first_id", LongType()),
-    StructField("first_ts", LongType()),
-    StructField("text_out", StringType()),
-    StructField("n_in_batch", LongType()),
-])
-
-
-def _first_capture_fn(key, pdf_iter, state: GroupState):
-    """First capture per canonical URL with its extracted-text payload:
-    within the introducing batch the earliest (ts, id) row wins; later
-    batches only bump the fetch counter. Input groups carry columns
-    (_ts, _id, text_out)."""
-    n = 0
-    best = None  # (ts, id, text_out)
-    for pdf in pdf_iter:
-        n += len(pdf)
-        if len(pdf):
-            row = pdf.sort_values(["_ts", "_id"]).iloc[0]
-            cand = (int(row["_ts"]), int(row["_id"]), row["text_out"])
-            best = cand if best is None or cand[:2] < best[:2] else best
-    if state.exists:
-        (seen,) = state.get
-        state.update((seen + n,))
-        return iter(())
-    state.update((n,))
-    return iter([pd.DataFrame({
-        "canonical_url": [key[0]],
-        "first_id": [best[1]],
-        "first_ts": [best[0]],
-        "text_out": [best[2]],
-        "n_in_batch": [n],
-    })])
+    across ALL micro-batches (keyed state store): its earliest capture
+    (ties on ``warc_ts`` broken by ``text``) as (url, first_ts, text,
+    n_in_batch)."""
+    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir).select(
+        "url", F.col("warc_ts").alias("first_ts"), "text")
+    deduped = first_row_per_key(pages, "url", ["first_ts", "text"],
+                                state_ttl=state_ttl)
+    return run_available_now(deduped, out_dir, checkpoint_dir)
 
 
 def stream_first_capture(rows, url_col: str = "canonical_url",
@@ -182,22 +120,20 @@ def stream_first_capture(rows, url_col: str = "canonical_url",
                          text_col: str = "text_out"):
     """Attach the keyed-state first-capture operator to a (possibly
     streaming) DataFrame already carrying the canonical URL and the
-    extracted text: one groupBy(canonical_url) shuffle, state O(keys)."""
-    from pyspark.sql import functions as F
-
-    return (
+    extracted text: one groupBy(canonical_url) shuffle, state O(keys).
+    Within the introducing batch the earliest (ts, id) row wins.
+    Output: (canonical_url, first_id, first_ts, text_out, n_in_batch)."""
+    firsts = first_row_per_key(
         rows.select(
             F.col(url_col).alias("canonical_url"),
-            F.col(ts_col).alias("_ts"),
-            F.col(id_col).alias("_id"),
+            F.col(ts_col).cast("long").alias("first_ts"),
+            F.col(id_col).cast("long").alias("first_id"),
             F.col(text_col).alias("text_out"),
-        )
-        .groupBy("canonical_url")
-        .applyInPandasWithState(
-            _first_capture_fn, CAPTURE_OUT_SCHEMA, STATE_SCHEMA, "append",
-            GroupStateTimeout.NoTimeout,
-        )
+        ),
+        "canonical_url", ["first_ts", "first_id"], ["text_out"],
     )
+    return firsts.select("canonical_url", "first_id", "first_ts",
+                         "text_out", "n_in_batch")
 
 
 def stream_first_per_key(
@@ -206,26 +142,19 @@ def stream_first_per_key(
     work_dir: str,
     key_col: str,
     id_col: str,
-) -> "DataFrame":
+) -> DataFrame:
     """applyInPandasWithState over a drained static table: per key,
     the minimum id and the row count of the batch that introduced the
-    key. On a single-batch drain (one source file) this equals the
-    batch aggregate MIN(id)/COUNT(*) per key — closed-form, so the
-    stateful-operator machinery (keyed state store, append emission)
-    is oracle-checkable; cross-batch behavior is covered by the URL
-    dedup pytest."""
-    from pyspark.sql import functions as F
-
-    from .windows import drain_to_parquet
-
+    key, as (key, first_id, n_in_batch). On a single-batch drain (one
+    source file) this equals the batch aggregate MIN(id)/COUNT(*) per
+    key — closed-form, so the stateful-operator machinery (keyed state
+    store, append emission) is oracle-checkable; cross-batch behavior
+    is covered by the URL dedup pytest."""
     def build(rows):
-        return (
-            rows.select(F.col(key_col).alias("key"), F.col(id_col).alias("_id"))
-            .groupBy("key")
-            .applyInPandasWithState(
-                _first_fn, FIRST_OUT_SCHEMA, STATE_SCHEMA, "append",
-                GroupStateTimeout.NoTimeout,
-            )
+        return first_row_per_key(
+            rows.select(F.col(key_col).cast("string").alias("key"),
+                        F.col(id_col).cast("long").alias("first_id")),
+            "key", ["first_id"],
         )
 
     return drain_to_parquet(spark, table_dir, work_dir, build)

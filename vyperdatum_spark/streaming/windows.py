@@ -12,7 +12,8 @@ Scale notes:
 - the shuffle key is (window, lang): low cardinality, no skew concern;
 - ``Trigger.AvailableNow`` drains the backlog incrementally with the
   same checkpointed offsets as the ingest path (exactly-once per input
-  file).
+  file); ``run_available_now`` is the one parquet-append drain every
+  streaming query here and in ``stateful.py`` runs through.
 """
 
 from __future__ import annotations
@@ -54,8 +55,16 @@ def stream_hourly_counts(
             "lang", "n_pages", "html_bytes",
         )
     )
+    return run_available_now(agg, out_dir, checkpoint_dir)
+
+
+def run_available_now(df: DataFrame, out_dir: str, checkpoint_dir: str):
+    """Drain what the streaming ``df``'s source holds now into parquet
+    at ``out_dir`` (append mode, offsets and state in
+    ``checkpoint_dir``, so a re-run reads only new input files), and
+    return the finished query."""
     q = (
-        agg.writeStream.outputMode("append")
+        df.writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
@@ -82,8 +91,6 @@ def drain_to_parquet(
     emitted zero rows holds only ``_spark_metadata`` and schema
     inference would throw where 'empty result' is the correct answer.
     """
-    import os
-
     out_dir = f"{work_dir}/out"
     ck_dir = f"{work_dir}/ck"
     src_dir = f"{work_dir}/src"
@@ -97,15 +104,7 @@ def drain_to_parquet(
         stream_src = table_dir
     schema = spark.read.parquet(table_dir).schema
     agg = build_query(spark.readStream.schema(schema).parquet(stream_src))
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(agg, out_dir, ck_dir)
     return spark.read.schema(agg.schema).parquet(out_dir)
 
 
