@@ -44,6 +44,8 @@ from vyperdatum_spark.queries import geo
 #     dedup_lsh_verified is the exposed production path;
 #   geo_knn_edge_kernel — alias of the exposed geo_knn_edge (bench.py
 #     lists the name);
+#   decontaminate_bloom — alias of decontaminate (bench.py lists the
+#     name);
 #   rel_events_hourly / rel_custs_without_orders /
 #   rel_top_orders_per_cust / rel_nation_revenue — relational shapes
 #     subsumed by rel_pricing_summary + stream_events_hourly +

@@ -225,3 +225,25 @@ def test_read_table_infers_unparseable_recorded_schema(spark, tmp_path):
     got, jobs = _jobs_during(spark, lambda: tables.read_table(spark, d))
     assert got.columns == ["a b", "c"] and got.count() == 2
     assert jobs
+
+
+def test_partitioned_append_reads_every_dir(spark, tmp_path):
+    """A partitioned table with an append spans two partition roots;
+    the read and the incremental read still return every row, typed as
+    written."""
+    d = str(tmp_path / "part_append")
+    pdf = pd.DataFrame({"id": [1, 2, 3], "s": ["a", "b", "c"],
+                        "bucket": [0, 1, 0]})
+    s1 = tables.write_table(spark.createDataFrame(pdf), d,
+                            partition_by=("bucket",))
+    tables.write_table(spark.createDataFrame(pdf.assign(id=pdf.id + 3)), d,
+                       mode="append", partition_by=("bucket",))
+    got = tables.read_table(spark, d)
+    assert got.schema.simpleString() == (
+        "struct<id:bigint,s:string,bucket:bigint>")
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, "a", 0), (2, "b", 1), (3, "c", 0),
+        (4, "a", 0), (5, "b", 1), (6, "c", 0)]
+    assert tables.incremental_rows(spark, d, since=0).count() == 6
+    inc = tables.incremental_rows(spark, d, since=s1)
+    assert sorted(r.id for r in inc.collect()) == [4, 5, 6]

@@ -100,12 +100,14 @@ def test_jaccard_pairs_values(spark):
 
 
 def test_jaccard_default_is_candidate_guarded(spark):
-    """Without the explicit all-pairs opt-in, jaccard_pairs verifies
-    MinHash-LSH candidates — every default pair must be an LSH
-    candidate pair AND meet the threshold (no O(n²) fallback)."""
+    """Verifying MinHash-LSH candidates keeps jaccard_pairs off the
+    O(n²) path — every verified pair must be an LSH candidate pair AND
+    meet the threshold."""
     df = _docs_df(spark)
-    guarded = dedup.jaccard_pairs(df, threshold=0.5).toPandas()
-    cand = dedup.minhash_lsh_pairs(df).toPandas()
+    cand = dedup.minhash_lsh_pairs(df)
+    guarded = dedup.jaccard_pairs(df, threshold=0.5,
+                                  candidates=cand).toPandas()
+    cand = cand.toPandas()
     cand_set = set(zip(cand.doc_a, cand.doc_b))
     assert len(guarded) > 0
     assert set(zip(guarded.doc_a, guarded.doc_b)) <= cand_set
@@ -116,6 +118,13 @@ def test_jaccard_default_is_candidate_guarded(spark):
     assert set(zip(guarded.doc_a, guarded.doc_b)) <= set(
         zip(allp.doc_a, allp.doc_b)
     )
+
+
+def test_jaccard_pairs_requires_candidates(spark):
+    """No candidates and no all-pairs opt-in is a driver-side error
+    that points at the MinHash-LSH → verify path."""
+    with pytest.raises(ValueError, match="lsh_verified_pairs"):
+        dedup.jaccard_pairs(_docs_df(spark), threshold=0.5)
 
 
 def test_simhash_matches_python(spark):
@@ -295,16 +304,6 @@ def test_multimodal_decode_plumbing(spark):
     assert (fs.frame_idx % 2 == 0).all()
 
 
-def test_multimodal_real_decode_is_stubbed(spark):
-    pages = spark.createDataFrame([(1, b"xx")], "id long, payload binary")
-    import pytest
-
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        multimodal.decode_media(
-            pages, "id", "payload", deterministic_fake=False
-        ).collect()
-
-
 def test_multimodal_resize_plumbing(spark):
     """Resize stub: deterministic dims/scales per blob, stable digest
     keyed by (content, target)."""
@@ -348,49 +347,6 @@ def test_decontaminate_flags_benchmark_overlap(spark):
     assert 0.0 < got.loc[1, "contamination"] < 1.0  # one word changed
     # unshingleable doc: n_sh = 0, contamination null
     assert got.loc[5, "n_sh"] == 0 and pd.isna(got.loc[5, "contamination"])
-
-
-def test_decontaminate_bloom_equals_exact(spark):
-    """The bloom-prefiltered path must be byte-identical to the exact
-    semi-join on every edge case (no false negatives + exact verify),
-    including at a deliberately tiny m where false positives are
-    common — the verify stage must absorb them."""
-    rows = [
-        (i, " ".join(f"w{(i * 7 + j) % 59}" for j in range(12)), "en")
-        for i in range(200)
-    ] + [(900, "ab", "en"), (901, "", "en")]  # unshingleable docs
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    bench = docs.filter(F.col("doc_id") % 5 == 0)
-    exact = dedup.decontaminate(corpus, bench).orderBy("doc_id").collect()
-    for m_bits in (1 << 8, 1 << 17):  # tiny bloom → many false positives
-        got = (
-            dedup.decontaminate_bloom(corpus, bench, m_bits=m_bits)
-            .orderBy("doc_id").collect()
-        )
-        assert got == exact
-
-
-def test_decontaminate_bloom_prefilter_actually_filters(spark):
-    """At a well-sized m the bloom must pass only ~true hits + fpp
-    into the verify join: candidate shingles (non-null join keys)
-    stay close to the true hit count, far below the corpus total."""
-    corpus = spark.createDataFrame(
-        [(i, " ".join(f"c{i}x{j}" for j in range(20)), "en")
-         for i in range(300)],
-        "doc_id long, text string, lang string",
-    )
-    bench = spark.createDataFrame(
-        [(0, " ".join(f"c7x{j}" for j in range(20)), "en")],
-        "doc_id long, text string, lang string",
-    )
-    got = (
-        dedup.decontaminate_bloom(corpus, bench, m_bits=1 << 17)
-        .toPandas().set_index("doc_id")
-    )
-    # only doc 7 overlaps the benchmark; everything else must be 0
-    assert got.loc[7, "contamination"] == 1.0
-    assert (got.drop(index=7)["n_hit"] == 0).all()
 
 
 def test_sample_stratified_deterministic_and_rated(spark):

@@ -36,7 +36,6 @@ AUDIT = [
     ("geo_raster_transform", "raster cells-as-points (W2 + CATZOC)"),
     ("multimodal_meta", "binary payload metadata"),
     ("decontaminate", "benchmark n-gram decontamination"),
-    ("decontaminate_bloom", "bloom-prefiltered decontamination (exact verify)"),
     ("sample_stratified", "stratified hash sampling"),
     ("url_canonical_dedup", "URL canonicalization dedup"),
     ("url_latest_capture", "latest capture per canonical URL"),

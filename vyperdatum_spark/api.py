@@ -60,18 +60,14 @@ class VyperPoints:
                             "x": x, "y": y, "z": z})
         pts = self.spark.createDataFrame(pdf)
 
-        from_v, in_crs = resolve.resolve_vertical(input_datum, "input")
-        to_v, out_crs = resolve.resolve_vertical(output_datum, "output")
+        from_v, to_v, in_crs, out_frame = tx.resolve_specs(
+            input_datum, output_datum)
         kwargs = dict(
             key_col="pid",
             include_uncertainty=include_vdatum_uncertainty,
+            input_crs=in_crs,
+            output_frame=out_frame,
         )
-        if in_crs:
-            kwargs["input_crs"] = in_crs
-        if out_crs:
-            from .spatial import crs as hcrs
-
-            kwargs["output_frame"] = hcrs.CRS_FRAME[out_crs]
         if sample_distance:
             out = tx.transform_points_sampled(
                 self.spark, pts, from_v, to_v,
@@ -93,9 +89,7 @@ class VyperPoints:
             self.region_index = (
                 res["region_ord"].fillna(-1).to_numpy(dtype=np.int64)
             )
-        self.out_wkt = vypercrs.lineage_wkt(
-            from_v, to_v, input_crs=in_crs or "nad83s"
-        )
+        self.out_wkt = vypercrs.lineage_wkt(from_v, to_v, input_crs=in_crs)
         return self.x, self.y, self.z, self.unc, self.region_index
 
     def export_to_csv(self, output_file: str, delimiter: str = " "):

@@ -65,27 +65,24 @@ def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFr
 # the engine
 # --------------------------------------------------------------------
 
-def _resolve_specs(from_datum, to_datum, input_crs: str,
-                   output_frame: str | None):
-    """Resolve datum specs to catalog datum names. Specs may be EPSG
-    ints, WKT, (horizontal, vertical) tuples or names (reference
+def resolve_specs(from_datum, to_datum, input_crs: str = "nad83s",
+                  output_frame: str | None = None):
+    """Resolve datum specs to catalog datum names — the one resolution
+    rule of the engine and the reference-shaped facade. Specs may be
+    EPSG ints, WKT, (horizontal, vertical) tuples or names (reference
     vypercrs.py:685-812); a horizontal component on the input side sets
     ``input_crs`` (unless the caller chose one), on the output side the
     output frame (unless the caller chose one).
 
     Returns (from_datum, to_datum, input_crs, output_frame)."""
-    if not isinstance(from_datum, str) or from_datum.lower() not in pl.DATUM_DEFINITION:
-        from ..datums import resolve as _resolve
+    from ..datums import resolve as _resolve
 
-        from_datum, in_horiz = _resolve.resolve_vertical(from_datum, "input")
-        if in_horiz is not None and input_crs == "nad83s":
-            input_crs = in_horiz
-    if not isinstance(to_datum, str) or to_datum.lower() not in pl.DATUM_DEFINITION:
-        from ..datums import resolve as _resolve
-
-        to_datum, out_horiz = _resolve.resolve_vertical(to_datum, "output")
-        if out_horiz is not None and output_frame is None:
-            output_frame = hcrs.CRS_FRAME[out_horiz]
+    from_datum, in_horiz = _resolve.resolve_vertical(from_datum, "input")
+    if in_horiz is not None and input_crs == "nad83s":
+        input_crs = in_horiz
+    to_datum, out_horiz = _resolve.resolve_vertical(to_datum, "output")
+    if out_horiz is not None and output_frame is None:
+        output_frame = hcrs.CRS_FRAME[out_horiz]
     return from_datum, to_datum, input_crs, output_frame
 
 
@@ -147,7 +144,7 @@ def transform_points(
     The plan (transform_sql.py) is broadcast joins + whole-stage
     codegen column math: no Python worker, no shuffle.
     """
-    from_datum, to_datum, input_crs, output_frame = _resolve_specs(
+    from_datum, to_datum, input_crs, output_frame = resolve_specs(
         from_datum, to_datum, input_crs, output_frame
     )
     # F4 sign matrix: depth-axis INPUT negates z before the pipeline,
@@ -344,7 +341,7 @@ def transform_points_sampled(
     """
     # resolve datum specs (EPSG/WKT/tuples) exactly as the full path
     # does so the frame detection below sees the resolved CRS
-    from_datum, to_datum, input_crs, output_frame = _resolve_specs(
+    from_datum, to_datum, input_crs, output_frame = resolve_specs(
         from_datum, to_datum, kwargs.pop("input_crs", "nad83s"),
         kwargs.pop("output_frame", None),
     )

@@ -195,33 +195,44 @@ def band_sql(sig_expr: str, band: int, rows: int) -> str:
     return v
 
 
+def _band_pairs(sig: DataFrame, id_col: str, bands: list,
+                payload: tuple = ()) -> DataFrame:
+    """The LSH banding join of every symmetric dedup stage: ids that
+    share at least one band value, as distinct (doc_a < doc_b) pairs.
+
+    ``bands`` holds one int64 Column per band over ``sig``'s columns;
+    each row explodes into (band_idx, band_val) structs and the set
+    self-joins on both (one shuffle on the band key). Each ``payload``
+    column of ``sig`` rides along as ``<c>_a`` / ``<c>_b`` for a verify
+    stage on the candidates."""
+    ex = sig.select(
+        F.col(id_col), *[F.col(c) for c in payload],
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band_idx"), v.alias("band_val"))
+            for b, v in enumerate(bands)
+        ])).alias("bd"),
+    ).select(id_col, *payload, "bd.band_idx", "bd.band_val")
+
+    def side(s: str) -> DataFrame:
+        return ex.withColumnsRenamed(
+            {id_col: f"doc_{s}", **{c: f"{c}_{s}" for c in payload}})
+
+    return (
+        side("a").join(side("b"), ["band_idx", "band_val"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b",
+                *[f"{c}_{s}" for s in "ab" for c in payload])
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text") -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing ≥1 LSH band."""
     rows = N_MINHASH // N_BANDS
     sig = minhash_sig_df(df, id_col, text_col)
-    bands = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        band_col(F.col("sig"), b, rows).alias("band_val"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bd"),
-    ).select(id_col, "bd.band_idx", "bd.band_val")
-    left = bands.withColumnRenamed(id_col, "doc_a")
-    right = bands.withColumnRenamed(id_col, "doc_b")
-    return (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return _band_pairs(sig, id_col, [band_col(F.col("sig"), b, rows)
+                                     for b in range(N_BANDS)])
 
 
 def minhash_lsh_pairs_sql(table: str = "documents", id_col: str = "doc_id",
@@ -339,37 +350,15 @@ def simhash_hamming_pairs(df: DataFrame, id_col: str = "doc_id",
     the exact xor/bit_count verify touches candidates, not the corpus.
     """
     bits_per = N_SIMHASH_BITS // N_SIMHASH_BANDS
-    sig = simhash_df(df, id_col, text_col)
-    bands = sig.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.shiftright(F.col("simhash"), b * bits_per)
-                .bitwiseAND(F.lit((1 << bits_per) - 1)).alias("band_val"),
-            )
-            for b in range(N_SIMHASH_BANDS)
-        ])).alias("bk"),
-    ).select(id_col, "simhash", "bk.band_idx", "bk.band_val")
-    left = bands.alias("l")
-    right = bands.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_val") == F.col("r.band_val"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("doc_a"),
-            F.col(f"r.{id_col}").alias("doc_b"),
-            F.col("l.simhash").alias("sh_a"),
-            F.col("r.simhash").alias("sh_b"),
-        )
-        .distinct()
+    mask = F.lit((1 << bits_per) - 1)
+    sh = F.col("simhash")
+    cand = _band_pairs(
+        simhash_df(df, id_col, text_col), id_col,
+        [F.shiftright(sh, b * bits_per).bitwiseAND(mask)
+         for b in range(N_SIMHASH_BANDS)],
+        payload=("simhash",),
     )
-    dist = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    dist = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cand.withColumn("hamming", dist.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
@@ -425,13 +414,28 @@ def _hashed_shingles(df: DataFrame, id_col: str, text_col: str, w: int,
     )
 
 
-def _contamination(corpus: DataFrame, marked: DataFrame,
-                   id_col: str) -> DataFrame:
-    """(id, n_sh, n_hit, contamination) from ``marked``: one row per
-    distinct corpus shingle, ``_hit`` non-null where the benchmark has
-    it. One aggregate produces both counts — totals and hits as
-    separate aggregations would recompute the whole explode+distinct
-    lineage twice (measured 2× wall time) and add a merge join."""
+def decontaminate(corpus: DataFrame, benchmark: DataFrame,
+                  id_col: str = "doc_id", text_col: str = "text",
+                  w: int = SHINGLE_W) -> DataFrame:
+    """Benchmark decontamination: per corpus doc, the fraction of its
+    distinct word w-grams that appear anywhere in the benchmark set
+    (the standard eval-leak check in training-data pipelines).
+
+    Scale shape: the benchmark shingle set is small by definition
+    (eval suites, not corpora) ⇒ forced broadcast LEFT join against
+    the exploded corpus shingles; one groupBy(doc) shuffle for the
+    counts. Never all-pairs, never per-row Python.
+
+    Output: (id, n_sh, n_hit, contamination∈[0,1] | null for
+    unshingleable docs).
+    """
+    bench_sh = _hashed_shingles(benchmark, id_col, text_col, w,
+                                keep_id=False).withColumn("_hit", F.lit(1))
+    corp = _hashed_shingles(corpus, id_col, text_col, w, keep_id=True)
+    marked = corp.join(F.broadcast(bench_sh), "_s", "left")
+    # one aggregate produces both counts — totals and hits as separate
+    # aggregations would recompute the whole explode+distinct lineage
+    # twice (measured 2× wall time) and add a merge join
     agg = marked.groupBy(id_col).agg(
         F.count("*").alias("_t"), F.count("_hit").alias("_h"))
     out = corpus.select(F.col(id_col)).join(agg, id_col, "left")
@@ -446,30 +450,6 @@ def _contamination(corpus: DataFrame, marked: DataFrame,
         n_hit.alias("n_hit"),
         contamination.alias("contamination"),
     )
-
-
-def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  w: int = SHINGLE_W) -> DataFrame:
-    """Benchmark decontamination: per corpus doc, the fraction of its
-    distinct word w-grams that appear anywhere in the benchmark set
-    (the standard eval-leak check in training-data pipelines).
-
-    Scale shape: the benchmark shingle set is small by definition
-    (eval suites, not corpora) ⇒ broadcast LEFT join against the
-    exploded corpus shingles; one groupBy(doc) shuffle for the
-    counts. Never all-pairs, never per-row Python. The broadcast is
-    forced: for an eval set past the broadcast limit use
-    :func:`decontaminate_bloom`.
-
-    Output: (id, n_sh, n_hit, contamination∈[0,1] | null for
-    unshingleable docs).
-    """
-    bench_sh = _hashed_shingles(benchmark, id_col, text_col, w,
-                                keep_id=False).withColumn("_hit", F.lit(1))
-    corp = _hashed_shingles(corpus, id_col, text_col, w, keep_id=True)
-    return _contamination(
-        corpus, corp.join(F.broadcast(bench_sh), "_s", "left"), id_col)
 
 
 def decontaminate_sql(corpus: str, benchmark: str,
@@ -490,97 +470,6 @@ def decontaminate_sql(corpus: str, benchmark: str,
         f"FROM (SELECT {id_col} FROM {corpus}) d "
         f"LEFT JOIN tot USING ({id_col}) LEFT JOIN hit USING ({id_col})"
     )
-
-
-def decontaminate_bloom(corpus: DataFrame, benchmark: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        w: int = SHINGLE_W, m_bits: int = 1 << 17,
-                        k: int = 3) -> DataFrame:
-    """Bloom-prefiltered decontamination: identical output to
-    :func:`decontaminate` (exact n_sh/n_hit/contamination), but the
-    benchmark membership test is staged as bloom-prefilter → exact
-    verify, the architecture modern curation pipelines (Dolma-style
-    bloom dedup/decontamination) use when the eval n-gram set is too
-    large to broadcast as a raw hash table.
-
-    Scale shape (the reason this exists at 100 TB):
-      1. The benchmark shingle hashes are folded into an m-bit bloom
-         bitset REPRESENTED AS A DATAFRAME of (word_idx, 64-bit word):
-         k probe positions per hash (double hashing: h1 + i*h2 mod m),
-         one hash-shuffle on word_idx with map-side bit_or partials.
-         The bitset dim has ≤ m/64 rows (m=2^27 → 2 M rows = 16 MB)
-         regardless of benchmark size — ~64× smaller than broadcasting
-         10^8 raw 8-byte hashes with hash-table overhead.
-      2. Corpus shingles probe the bitset via k BROADCAST equi-joins
-         (one per probe position) — zero shuffles, pure JVM bitwise
-         column math; a shingle is a candidate iff all k bits are set.
-      3. Exact verify: only candidate shingles carry a non-null join
-         key into the semi-join with the true benchmark hash set, so
-         the expensive membership join touches ~fpp·|corpus shingles|
-         rows instead of all of them, and AQE is free to pick a
-         shuffle join when the benchmark side is broadcast-too-big.
-         Bloom filters have no false negatives, so the final counts
-         are exact — the oracle is decontaminate_sql, unchanged.
-
-    All bloom math is deterministic builtin column expressions
-    (md5-derived h1, xxhash64-derived h2); no Python crosses the
-    executor boundary.
-    """
-    def _probe_positions(s: Column) -> list[Column]:
-        # double hashing: h1 from the md5-derived 60-bit value itself,
-        # h2 from an independent xxhash64 re-mix; i*h2 stays < k*m so
-        # the sum never overflows under ANSI arithmetic
-        h1 = F.pmod(s, F.lit(m_bits).cast("long"))
-        h2 = F.pmod(F.xxhash64(s), F.lit(m_bits).cast("long")) + F.lit(1)
-        return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits).cast("long"))
-                for i in range(k)]
-
-    bench_sh = _hashed_shingles(benchmark, id_col, text_col, w, keep_id=False)
-
-    # 1. fold the benchmark hashes into the (word_idx, bits) bloom dim
-    bloom = (
-        bench_sh
-        .select(F.explode(F.array(*_probe_positions(F.col("_s")))).alias("_p"))
-        .select(
-            F.shiftrightunsigned(F.col("_p"), 6).alias("_w"),
-            F.expr("shiftleft(1L, CAST(_p & 63 AS INT))").alias("_m"),
-        )
-        .groupBy("_w")
-        .agg(F.expr("bit_or(_m)").alias("_bits"))
-    )
-
-    corp = _hashed_shingles(corpus, id_col, text_col, w, keep_id=True)
-    probes = _probe_positions(F.col("_s"))
-    staged = corp.select(
-        F.col(id_col), F.col("_s"),
-        *[p.alias(f"_p{i}") for i, p in enumerate(probes)],
-    ).select(
-        "*",
-        *[F.shiftrightunsigned(F.col(f"_p{i}"), 6).alias(f"_pw{i}")
-          for i in range(k)],
-    )
-    cand = F.lit(True)
-    for i in range(k):
-        bi = bloom.select(F.col("_w").alias(f"_pw{i}"),
-                          F.col("_bits").alias(f"_b{i}"))
-        staged = staged.join(F.broadcast(bi), f"_pw{i}", "left")
-        hit_i = F.expr(
-            f"(_b{i} & shiftleft(1L, CAST(_p{i} & 63 AS INT))) != 0"
-        )
-        cand = cand & F.coalesce(hit_i, F.lit(False))
-
-    # 3. exact verify in ONE pass over the staged rows: bloom-rejected
-    # shingles carry a NULL join key (null never matches an equi-join)
-    # so only the ~fpp-sized candidate subset participates in the
-    # membership join, while every row still reaches the count
-    probed = staged.select(
-        F.col(id_col),
-        F.when(cand, F.col("_s")).alias("_sj"),
-    )
-    marked = probed.join(
-        bench_sh.select(F.col("_s").alias("_sj"), F.lit(1).alias("_hit")),
-        "_sj", "left")
-    return _contamination(corpus, marked, id_col)
 
 
 # ------------------------------------------------------ n-gram jaccard
@@ -619,15 +508,19 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     """Word-shingle Jaccard over same-language pairs — the VERIFY stage
     of the dedup pipeline.
 
-    Scale guardrail: by default the pair space is a candidate-pair
-    DataFrame (``candidates`` with doc_a/doc_b columns; when omitted,
-    MinHash-LSH candidates are generated) so the exact Jaccard runs on
-    O(candidates), never all-pairs. The full O(n²)-within-language
-    cross join — safe only at test scale or as a recall oracle — must
-    be requested explicitly with ``allow_all_pairs=True``.
+    Scale guardrail: the pair space is the caller's ``candidates``
+    (doc_a/doc_b columns, e.g. :func:`minhash_lsh_pairs`) so the exact
+    Jaccard runs on O(candidates), never all-pairs. The full
+    O(n²)-within-language cross join — safe only at test scale or as a
+    recall oracle — must be requested explicitly with
+    ``allow_all_pairs=True``. With neither, this raises: MinHash-LSH
+    candidates plus verify is :func:`lsh_verified_pairs`.
     """
     if candidates is None and not allow_all_pairs:
-        candidates = minhash_lsh_pairs(df, id_col, text_col)
+        raise ValueError(
+            "jaccard_pairs needs candidates=<doc_a/doc_b pairs> or "
+            "allow_all_pairs=True; for MinHash-LSH candidates with exact "
+            "Jaccard verify use lsh_verified_pairs")
     sets = _shingle_sets(df, id_col, text_col, extra_cols=(lang_col,))
     a = sets.select(
         F.col(lang_col).alias("_lang_a"),

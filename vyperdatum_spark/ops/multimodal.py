@@ -3,12 +3,10 @@
 Image/audio/video payloads are opaque ``binary`` columns with typed
 metadata; decode / feature-extract / resize / frame-sample run as
 Arrow-batched pandas functions over ``mapInPandas``. The container
-has no image/audio libraries, so the actual codec step is STUBBED:
-``decode_image`` raises NotImplementedError unless
-``deterministic_fake=True``, in which case a seeded, content-addressed
-fake decode (md5-derived pixel stats) exercises the real Spark-side
-plumbing — schema, batch iteration, partition sizing — which is what
-matters at 100 TB.
+has no image/audio libraries, so the actual codec step is STUBBED: a
+seeded, content-addressed fake decode (md5-derived pixel stats)
+exercises the real Spark-side plumbing — schema, batch iteration,
+partition sizing — which is what matters at 100 TB.
 
 Metadata extraction (byte length, content hash, magic-prefix sniff)
 is pure column math and oracle-checkable.
@@ -63,14 +61,13 @@ def media_meta(df: DataFrame, id_col: str, bin_col: str,
 DECODE_SCHEMA = (
     "id long, width int, height int, n_frames int, mean_lum double, feat array<float>"
 )
+FEAT_DIM = 8  # feature-vector length of the fake decode (digest bytes 4..11)
 
 
 def decode_image_batches(
     it: Iterator[pd.DataFrame],
     id_col: str,
     digest_col: str = "_digest",
-    deterministic_fake: bool = True,
-    feat_dim: int = 8,
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: content digest → (dims, frame count,
     luminance, feature vector). Real decoding is stubbed (no codec
@@ -79,11 +76,6 @@ def decode_image_batches(
     computed JVM-side (``F.unhex(F.md5(bin))``), so the kernel is pure
     vectorized numpy with no Python-level hashing."""
     for pdf in it:
-        if not deterministic_fake:
-            raise NotImplementedError(
-                "real image/audio decode requires codec libraries not "
-                "present in this container; use deterministic_fake=True"
-            )
         n = len(pdf)
         if n == 0:
             continue
@@ -91,7 +83,7 @@ def decode_image_batches(
         d = np.frombuffer(
             b"".join(pdf[digest_col]), dtype=np.uint8
         ).reshape(n, 16)
-        feat_mat = (d[:, 4:4 + feat_dim].astype(np.float32) / 255.0)
+        feat_mat = (d[:, 4:4 + FEAT_DIM].astype(np.float32) / 255.0)
         yield pd.DataFrame(
             {
                 "id": pdf[id_col].to_numpy(),
@@ -104,10 +96,9 @@ def decode_image_batches(
         )
 
 
-def decode_media(df: DataFrame, id_col: str, bin_col: str,
-                 deterministic_fake: bool = True) -> DataFrame:
+def decode_media(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     def fn(it):
-        return decode_image_batches(it, id_col, "_digest", deterministic_fake)
+        return decode_image_batches(it, id_col, "_digest")
 
     # content hash computed in whole-stage codegen; only the 16-byte
     # digest crosses the Arrow socket, never the blob itself
@@ -124,8 +115,7 @@ RESIZE_SCHEMA = (
 
 
 def resize_media(df: DataFrame, id_col: str, bin_col: str,
-                 target_w: int = 32, target_h: int = 32,
-                 deterministic_fake: bool = True) -> DataFrame:
+                 target_w: int = 32, target_h: int = 32) -> DataFrame:
     """Resize plumbing over mapInPandas: per-blob target dims, scale
     factors vs the (fake-)decoded source dims, and a content-addressed
     digest of the 'resized' payload. The pixel resample itself is the
@@ -135,11 +125,6 @@ def resize_media(df: DataFrame, id_col: str, bin_col: str,
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if not deterministic_fake:
-                raise NotImplementedError(
-                    "real image resize requires codec libraries not "
-                    "present in this container; use deterministic_fake=True"
-                )
             # a REAL pixel resample would loop per blob RIGHT HERE;
             # the fake path is fully vectorized over the JVM-computed
             # digest + resized-hash columns

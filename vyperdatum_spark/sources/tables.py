@@ -24,6 +24,7 @@ os.replace (rename) — the same single-pointer commit Iceberg relies on.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -94,6 +95,9 @@ def write_table(
         # than one recorded schema (the Iceberg add-column evolution;
         # type CHANGES are not supported and fail at read)
         "schema": df.schema.simpleString(),
+        # a partitioned dir is its own partition root: read_table reads
+        # such dirs one at a time (see _read_dirs)
+        "partition_by": list(partition_by),
         "properties": dict(properties or {}),
     })
     meta["current"] = snap_id
@@ -197,47 +201,71 @@ def snapshot_meta(table_dir: str, snap_id: int) -> dict:
     raise ValueError(f"snapshot {snap_id} not found in {table_dir}")
 
 
+def _read_dirs(spark: SparkSession, table_dir: str, meta: dict,
+               dirs: list[str]) -> DataFrame:
+    """Read data dirs of ``table_dir`` as one DataFrame.
+
+    Schema evolution: when the dirs were written by commits with
+    DIFFERENT recorded schemas (columns added by a later append), the
+    read unions by name via parquet ``mergeSchema`` — rows from
+    pre-evolution dirs surface the new columns as null, Iceberg's
+    add-column semantics. Homogeneous dirs skip the merge (no
+    footer-merge cost on the common path) and read with the recorded
+    schema, so planning the read runs no schema-inference job. Adopted
+    dirs have no recorded schema and keep inference, as does a recorded
+    schema that does not parse back (field names the simple form cannot
+    quote).
+
+    Partitioned dirs: each ``data-*`` dir is its own partition root,
+    and one parquet read over several of them fails partition discovery
+    (``CONFLICTING_DIRECTORY_STRUCTURES``). More than one dir with a
+    partitioned writer is therefore read one dir at a time, each with
+    its own recorded schema, and unioned by name."""
+    by_id = {s["id"]: s for s in meta["snapshots"]}
+    writers = []
+    for d in dirs:
+        # data dirs are named data-{snap_id:05d}-…; adopted dirs have
+        # no recorded schema (unknown → treated as one fingerprint)
+        try:
+            writers.append(by_id[int(d.split("-")[1])])
+        except (IndexError, ValueError, KeyError):
+            writers.append({})
+    paths = [os.path.join(table_dir, d) for d in dirs]
+    if len(dirs) > 1 and any(w.get("partition_by") for w in writers):
+        parts = [_reader(spark, {w.get("schema", "?")}).parquet(p)
+                 for w, p in zip(writers, paths)]
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    return _reader(spark, {w.get("schema", "?") for w in writers}) \
+        .parquet(*paths)
+
+
+def _reader(spark: SparkSession, fps: set[str]):
+    """``spark.read`` for dirs whose writers recorded the schema
+    fingerprints ``fps`` (``?`` = unknown)."""
+    reader = spark.read
+    if len(fps) > 1:
+        return reader.option("mergeSchema", "true")
+    if fps != {"?"}:
+        try:
+            return reader.schema(_parse_datatype_string(fps.pop()))
+        except ParseException:
+            pass
+    return reader
+
+
 def read_table(
     spark: SparkSession,
     table_dir: str,
     as_of: int | None = None,
 ) -> DataFrame:
-    """Read the current snapshot, or time-travel to ``as_of``.
-
-    Schema evolution: when the snapshot's data dirs were written by
-    commits with DIFFERENT recorded schemas (columns added by a later
-    append), the read unions by name via parquet ``mergeSchema`` —
-    rows from pre-evolution dirs surface the new columns as null,
-    Iceberg's add-column semantics. Homogeneous snapshots skip the
-    merge (no footer-merge cost on the common path) and read with the
-    recorded schema, so planning the read runs no schema-inference
-    job. Adopted dirs have no recorded schema and keep inference, as
-    does a recorded schema that does not parse back (field names the
-    simple form cannot quote)."""
+    """Read the current snapshot, or time-travel to ``as_of`` (schema
+    evolution and partitioned dirs: see :func:`_read_dirs`)."""
     meta = _load(table_dir)
     if meta["current"] is None:
         raise ValueError(f"{table_dir} has no committed snapshots")
     snap = snapshot_meta(table_dir, as_of if as_of is not None else meta["current"])
-    paths = [os.path.join(table_dir, d) for d in snap["dirs"]]
-    by_id = {s["id"]: s for s in meta["snapshots"]}
-    fps = set()
-    for d in snap["dirs"]:
-        # data dirs are named data-{snap_id:05d}-…; adopted dirs have
-        # no recorded schema (unknown → treated as one fingerprint)
-        try:
-            writer_snap = by_id[int(d.split("-")[1])]
-            fps.add(writer_snap.get("schema", "?"))
-        except (IndexError, ValueError, KeyError):
-            fps.add("?")
-    reader = spark.read
-    if len(fps) > 1:
-        reader = reader.option("mergeSchema", "true")
-    elif fps != {"?"}:
-        try:
-            reader = reader.schema(_parse_datatype_string(fps.pop()))
-        except ParseException:
-            pass
-    return reader.parquet(*paths)
+    return _read_dirs(spark, table_dir, meta, snap["dirs"])
 
 
 def incremental_rows(
@@ -255,7 +283,7 @@ def incremental_rows(
     new = [d for d in snapshot_meta(table_dir, until)["dirs"] if d not in old]
     if not new:
         raise ValueError(f"no new data dirs between snapshots {since}..{until}")
-    return spark.read.parquet(*[os.path.join(table_dir, d) for d in new])
+    return _read_dirs(spark, table_dir, meta, new)
 
 
 def consumer_watermark(out_dir: str, key: str = "source_until") -> int:
