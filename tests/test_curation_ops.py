@@ -3,6 +3,7 @@ PII redaction, repetition stats — golden unit tests (the sf-level
 oracle gate covers the corpus-scale behavior)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from vyperdatum_spark.ops import html, lines, pii, textstats, urls
@@ -675,3 +676,120 @@ def test_curation_policy_reasons_per_rule(spark):
     assert got[2] == (0, "no_stopwords,repetitive")
     assert got[3] == (0, "no_stopwords,word_len")
     assert got[4] == (1, "")
+
+
+# ------------------------------------------------- document text signals
+# NULL, empty, blank, a double space, quoting, unicode, and duplicate
+# fractions at and just over the Gopher bound (12 words of 3 distinct
+# give exactly 0.75)
+_EDGE_TEXTS = [
+    None, "", " ", "  ",
+    'it\'s a "quote" with a \\ backslash and the end of it',
+    "héllo wörld ünïcode naïve café the straße über déjà vu señor",
+    " ".join(["alpha", "beta", "gamma"] * 4),
+    " ".join(["alpha", "beta", "gamma"] * 4 + ["alpha"]),
+    "THE AND VALUE TABLE the and value table der die und wert",
+]
+
+
+def _failed_rules(text: str) -> set[str]:
+    """The curation policy's failing rules for one text, in Python."""
+    toks = text.split(" ")
+    n = len(toks)
+    avg_wl = (len(text) - (n - 1)) / n
+    lo, hi = textstats.GOPHER_WORD_LEN_RANGE
+    failed = {
+        "too_short": n < textstats.GOPHER_MIN_WORDS,
+        "too_long": n > textstats.GOPHER_MAX_WORDS,
+        "repetitive": (1.0 - len(set(toks)) / n
+                       > textstats.GOPHER_MAX_DUP_WORD_FRAC),
+        "word_len": not lo <= avg_wl <= hi,
+        "no_stopwords": not any(t.lower() in textstats.STOPWORDS
+                                for t in toks),
+    }
+    return {rule for rule, bad in failed.items() if bad}
+
+
+def test_policy_agrees_with_gopher_keep(spark, tmp_path):
+    """For every non-NULL text, the policy keeps a doc iff its
+    ``gopher_keep`` holds and it has a stopword, and its reasons name
+    exactly the rules that a plain-Python evaluation fails."""
+    from vyperdatum_spark.engine import datagen
+    from vyperdatum_spark.queries.webtext import _POLICY_PLANTS
+
+    _write_docs(tmp_path)
+    texts = (pd.read_parquet(tmp_path / "documents.parquet")["text"].tolist()
+             + [t for _, t in _POLICY_PLANTS] + _EDGE_TEXTS
+             + datagen.pages_pdf(40)["text"].tolist())
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    policy = {r["doc_id"]: (r["keep"], r["reasons"])
+              for r in textstats.curation_policy_df(df).collect()}
+    gopher = {r["doc_id"]: r["gopher_keep"]
+              for r in textstats.repetition_df(df).collect()}
+    kept = 0
+    for i, text in enumerate(texts):
+        if text is None:
+            continue
+        failed = _failed_rules(text)
+        assert gopher[i] == (not failed - {"no_stopwords"}), text
+        keep = gopher[i] and "no_stopwords" not in failed
+        assert policy[i] == (int(keep), ",".join(sorted(failed))), text
+        kept += keep
+    assert 0 < kept < len(texts) - 1
+
+
+def test_text_signal_ops_take_a_dashed_text_col(spark):
+    df = spark.createDataFrame(
+        [(1, "the value and the table of the data"),
+         (2, "el valor la tabla los datos el la"), (3, None)],
+        "doc_id long, text string",
+    )
+    dashed = df.withColumnRenamed("text", "clean-text")
+    for op in (textstats.quality_df, textstats.langid_df,
+               textstats.langid_trigram_df, textstats.curation_policy_df,
+               textstats.repetition_df):
+        got = op(dashed, text_col="clean-text").collect()
+        assert sorted(got) == sorted(op(df).collect()), op.__name__
+
+
+def test_repetition_cols_takes_column_references_only(spark):
+    """Names are backtick-quoted into the SQL text (a dash is not a
+    minus); any Column that is not a plain reference raises."""
+    df = spark.createDataFrame([(1, "spam spam spam and eggs")],
+                               "doc_id long, text string")
+    dashed = df.withColumnRenamed("text", "clean-text")
+    cols = textstats.repetition_cols(F.col("clean-text"))
+    got = dashed.select("doc_id", *[c.alias(n) for n, c in cols.items()])
+    assert got.collect() == textstats.repetition_df(df).collect()
+    split = F.split(F.col("clean-text"), " ")
+    with pytest.raises(ValueError, match="plain column reference"):
+        textstats.repetition_cols(split)
+    with pytest.raises(ValueError, match="plain column reference"):
+        textstats.repetition_cols(F.col("clean-text"), toks=split)
+
+
+# Warm-build py4j round-trips of the text-signal registry entries,
+# measured at 45, 36, 43 and 87 (392, 487, 821 and 511 with their
+# Column-DSL builders).
+_TEXT_SIGNAL_PY4J_PINS = {
+    "text_quality": 100,
+    "text_langid": 100,
+    "text_langid_trigram": 300,
+    "curation_policy": 150,
+}
+
+
+def test_warm_text_signal_build_py4j_budget(spark, tmp_path, count_py4j):
+    from vyperdatum_spark.queries.webtext import queries
+
+    _write_docs(tmp_path)
+    reg = queries()
+    over = {}
+    for name, pin in _TEXT_SIGNAL_PY4J_PINS.items():
+        reg[name](spark, str(tmp_path))
+        with count_py4j() as calls:
+            reg[name](spark, str(tmp_path))
+        if calls[0] >= pin:
+            over[name] = (calls[0], pin)
+    assert not over, over

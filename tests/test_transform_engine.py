@@ -698,3 +698,24 @@ def test_sampled_uncovered_rows_get_point_catzoc(spark, fixture_points,
     assert np.array_equal(off.unc_s.to_numpy(), off.unc.to_numpy())
     on = both[both.covered_s]
     assert on.unc_s.notna().all()
+
+
+def test_lineage_appends_pipeline_str_in_place(spark, fixture_points):
+    """include_lineage adds pipeline_str after every other column, which
+    keep their order; a covered row gets its region's pipeline string,
+    an uncovered row NULL."""
+    from vyperdatum_spark.datums import pipeline as pl
+
+    pts = spark.createDataFrame(fixture_points)
+    kw = dict(allow_points_outside_coverage=True)
+    plain = tx.transform_points(spark, pts, "ellipse", "mllw", **kw)
+    lin = tx.transform_points(spark, pts, "ellipse", "mllw",
+                              include_lineage=True, **kw)
+    assert lin.columns == plain.columns + ["pipeline_str"]
+    got = lin.toPandas()
+    assert (~got["covered"]).any() and got["covered"].any()
+    assert got.loc[~got["covered"], "pipeline_str"].isna().all()
+    geoid = {r.region_id: r.geoid for r in catalog.REGIONS}
+    for rid, p in got.loc[got["covered"], ["region_id", "pipeline_str"]].values:
+        assert p == pl.compile_pipeline_string("ellipse", "mllw", rid,
+                                               geoid[rid])

@@ -43,22 +43,10 @@ from pyspark.sql import functions as F
 
 from ..datums import catalog, pipeline as pl
 from ..grids import tiler
+from ..ops import sql_str
 from ..spatial import cells, crs as hcrs
 from ..spatial.cells import dlit
 from . import transform_sql as tsql
-from .inputs import local_df
-
-def region_dim_df(spark: SparkSession, from_datum: str, to_datum: str) -> DataFrame:
-    """(region_id, unc, pipeline_str) — J6 uncertainty + lineage dim."""
-    rows = [
-        (
-            r.region_id,
-            float(catalog.combined_sigma(r.region_id, to_datum)),
-            pl.compile_pipeline_string(from_datum, to_datum, r.region_id, r.geoid),
-        )
-        for r in catalog.REGIONS
-    ]
-    return local_df(spark, rows, "region_id string, unc double, pipeline_str string")
 
 
 # --------------------------------------------------------------------
@@ -236,7 +224,7 @@ def transform_points(
         precedence=precedence,
     )
     return _emit(_finalize(
-        enriched, spark, from_datum, to_datum, z_col, flips,
+        enriched, from_datum, to_datum, z_col, flips,
         allow_points_outside_coverage, include_uncertainty,
         include_lineage, dz_corr,
     ))
@@ -251,7 +239,6 @@ def _catzoc_sql(z_h: str) -> str:
 
 def _finalize(
     out: DataFrame,
-    spark: SparkSession,
     from_datum: str,
     to_datum: str,
     z_col: str,
@@ -276,31 +263,30 @@ def _finalize(
     cols = {"z_out": z_out + " END", "covered": covered}
 
     if include_uncertainty:
-        # literal map over the (tiny) catalog instead of a broadcast
-        # join (r6): same per-region combined_sigma doubles, same
-        # left-join-miss null for uncovered rows, one less broadcast
-        # exchange + dim build per transform query (guide §2.4)
-        unc = "CAST(NULL AS DOUBLE)"
-        if catalog.REGIONS:
-            unc = "map(" + ", ".join(
-                f"'{r.region_id}', "
-                f"{dlit(catalog.combined_sigma(r.region_id, to_datum))}"
-                for r in catalog.REGIONS
-            ) + ")[region_id]"
+        unc = _region_map_sql(
+            lambda r: dlit(catalog.combined_sigma(r.region_id, to_datum)),
+            "DOUBLE")
         if allow_points_outside_coverage:
             cols["unc"] = (f"CASE WHEN {covered} THEN {unc} "
                            f"ELSE {_catzoc_sql(z_h)} END")
         else:
             cols["unc"] = f"CASE WHEN {covered} THEN {unc} END"
-    out = out.withColumns({c: F.expr(e) for c, e in cols.items()})
-
     if include_lineage:
-        dim = region_dim_df(spark, from_datum, to_datum)
-        out = out.join(
-            F.broadcast(dim.select("region_id", "pipeline_str")), "region_id", "left"
-        )
+        cols["pipeline_str"] = _region_map_sql(lambda r: sql_str(
+            pl.compile_pipeline_string(from_datum, to_datum, r.region_id,
+                                       r.geoid)), "STRING")
+    return out.withColumns({c: F.expr(e) for c, e in cols.items()})
 
-    return out
+
+def _region_map_sql(value_sql, sql_type: str) -> str:
+    """``map(<region id>, value_sql(region), ...)[region_id]`` over the
+    (tiny) catalog, in place of a broadcast join of a region dim (r6);
+    a NULL or unknown region id gives NULL, as the join's miss did."""
+    if not catalog.REGIONS:
+        return f"CAST(NULL AS {sql_type})"
+    return "map(" + ", ".join(
+        f"{sql_str(r.region_id)}, {value_sql(r)}" for r in catalog.REGIONS
+    ) + ")[region_id]"
 
 
 # --------------------------------------------------------------------

@@ -130,6 +130,12 @@ def hash60_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
+def hash_bucket(col: Column, n: int) -> Column:
+    """The feature-hashing bucket of every hashed-TF op: hash60 mod
+    ``n``, as int."""
+    return (hash60(col) % n).cast("int")
+
+
 # -------------------------------------------------------------- minhash
 def minhash_sig_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, sig array<long>) via STAGED projections.

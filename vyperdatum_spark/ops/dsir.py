@@ -39,7 +39,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import hash60, hash60_sql, shingles_from_tokens, tokens_col
+from .dedup import hash60_sql, hash_bucket, shingles_from_tokens, tokens_col
 
 N_BUCKETS = 64
 
@@ -48,10 +48,6 @@ def _grams_sql(toks: str) -> str:
     bi = (f"list_transform(generate_series(1, len({toks}) - 1), "
           f"i -> {toks}[i] || ' ' || {toks}[i + 1])")
     return f"list_concat({toks}, {bi})"
-
-
-def _bucket_col(g: Column) -> Column:
-    return (hash60(g) % N_BUCKETS).cast("int")
 
 
 def _bucket_sql(g: str) -> str:
@@ -73,7 +69,7 @@ def _bucketed_grams(df: DataFrame, target_filter: Column, id_col: str,
             F.col(id_col), "is_t",
             F.explode(F.concat(toks, shingles_from_tokens(toks, 2))).alias("g"),
         )
-        .select(F.col(id_col), "is_t", _bucket_col(F.col("g")).alias("b"))
+        .select(F.col(id_col), "is_t", hash_bucket(F.col("g"), N_BUCKETS).alias("b"))
     )
 
 

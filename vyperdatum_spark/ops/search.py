@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import hash60, hash60_sql, tokens_col
+from .dedup import hash60_sql, hash_bucket, tokens_col
 
 K1 = 1.2
 B = 0.75
@@ -227,10 +227,6 @@ def bm25_topk_sql(table: str = "documents",
 EMBED_DIM = 64
 
 
-def _bucket_col(t: Column) -> Column:
-    return (hash60(t) % EMBED_DIM).cast("int")
-
-
 def _bucket_sql(t: str) -> str:
     return f"({hash60_sql(t)} % {EMBED_DIM})"
 
@@ -257,7 +253,7 @@ def doc_hash_embed(df: DataFrame, id_col: str = "doc_id",
     embeddings stay bit-exact."""
     toks = tokens_col(F.col(text_col))
     ex = df.select(F.col(id_col), F.explode(toks).alias("_t"))
-    bk = ex.select(F.col(id_col), _bucket_col(F.col("_t")).alias("_b"))
+    bk = ex.select(F.col(id_col), hash_bucket(F.col("_t"), EMBED_DIM).alias("_b"))
     # two-stage count matrix (same shape as ops/dsir, r5): the
     # token-level pass keeps ONE count buffer keyed by (id, bucket) —
     # map-side combine — and the 64-column widening runs over the

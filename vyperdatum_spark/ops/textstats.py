@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..spatial.cells import dlit
+from . import sql_str
 from .dedup import (hash60, hash60_sql, shingles_from_tokens, tokens_col,
                     tokens_spark_sql)
 
@@ -34,42 +35,63 @@ KGRAM = 5
 WINNOW_W = 4
 
 
-# ------------------------------------------------------------- quality
-def quality_cols(text: Column) -> dict[str, Column]:
-    toks = tokens_col(text)
-    n_chars = F.length(text)
-    n_words = F.size(toks)
-    n_stop = F.size(
-        F.filter(toks, lambda t: F.lower(t).isin(*STOPWORDS))
-    )
-    avg_word_len = F.round(
-        (n_chars - (n_words - 1)).cast("double") / n_words.cast("double"), 6
-    )
-    stop_ratio = F.round(n_stop.cast("double") / n_words.cast("double"), 6)
+# ---------------------------------------------------- document signals
+def _count_in_sql(arr: str, words, lower: bool) -> str:
+    """Spark SQL: how many elements of the array ``arr`` are in
+    ``words`` (compared lower-cased when ``lower``)."""
+    x = "lower(_x)" if lower else "_x"
+    return (f"size(filter({arr}, _x -> {x} IN "
+            f"({', '.join(map(sql_str, words))})))")
+
+
+def text_signals_spark_sql(text: str, toks: str) -> dict[str, str]:
+    """The one Spark builder of the per-document word signals, as
+    unrounded SQL text over a text column and its STAGED token array
+    (``dedup.tokens_spark_sql``; ``repetition_spark_sql`` says why):
+    n_chars, n_words, n_distinct, n_stop (STOPWORDS hits, any case),
+    avg_wl (mean word length) and dup_frac (share of repeat tokens)."""
+    n_words = f"size({toks})"
+    n_distinct = f"size(array_distinct({toks}))"
     return {
-        "n_chars": n_chars.cast("long"),
-        "n_words": n_words.cast("long"),
-        "avg_word_len": avg_word_len,
-        "stop_ratio": stop_ratio,
+        "n_chars": f"length({text})",
+        "n_words": n_words,
+        "n_distinct": n_distinct,
+        "n_stop": _count_in_sql(toks, STOPWORDS, lower=True),
+        "avg_wl": (f"(CAST(length({text}) - ({n_words} - 1) AS DOUBLE)"
+                   f" / CAST({n_words} AS DOUBLE))"),
+        "dup_frac": (f"({dlit(1.0)} - CAST({n_distinct} AS DOUBLE)"
+                     f" / CAST({n_words} AS DOUBLE))"),
     }
 
 
+def _signals_df(df: DataFrame, id_col: str,
+                text_col: str) -> tuple[DataFrame, dict[str, str]]:
+    """(id, <signal columns>) over one staged token column, and the
+    signals as column references."""
+    text, sig = f"`{text_col}`", text_signals_spark_sql("_tx", "_tk")
+    staged = df.selectExpr(f"`{id_col}`", f"{text} AS _tx",
+                           f"{tokens_spark_sql(text)} AS _tk")
+    return (staged.selectExpr(f"`{id_col}`",
+                              *[f"{e} AS {n}" for n, e in sig.items()]),
+            {n: n for n in sig})
+
+
+# ------------------------------------------------------------- quality
 def quality_df(df: DataFrame, id_col: str = "doc_id",
                text_col: str = "text") -> DataFrame:
-    cols = quality_cols(F.col(text_col))
-    # quality score: long-enough docs with a sane stopword share
-    score = F.round(
-        F.least(cols["n_words"].cast("double") / F.lit(100.0), F.lit(1.0))
-        * (F.lit(1.0) - cols["stop_ratio"]),
-        6,
-    )
-    return df.select(
-        F.col(id_col),
-        cols["n_chars"].alias("n_chars_c"),
-        cols["n_words"].alias("n_words"),
-        cols["avg_word_len"].alias("avg_word_len"),
-        cols["stop_ratio"].alias("stop_ratio"),
-        score.alias("quality"),
+    """(id, n_chars_c, n_words, avg_word_len, stop_ratio, quality): the
+    score favours long-enough docs with a sane stopword share."""
+    sig_df, sig = _signals_df(df, id_col, text_col)
+    n = f"CAST({sig['n_words']} AS DOUBLE)"
+    stop_r = f"round(CAST({sig['n_stop']} AS DOUBLE) / {n}, 6)"
+    return sig_df.selectExpr(
+        f"`{id_col}`",
+        f"CAST({sig['n_chars']} AS BIGINT) AS n_chars_c",
+        f"CAST({sig['n_words']} AS BIGINT) AS n_words",
+        f"round({sig['avg_wl']}, 6) AS avg_word_len",
+        f"{stop_r} AS stop_ratio",
+        f"round(least({n} / {dlit(100.0)}, {dlit(1.0)})"
+        f" * ({dlit(1.0)} - {stop_r}), 6) AS quality",
     )
 
 
@@ -94,22 +116,25 @@ def quality_sql(table: str = "documents", id_col: str = "doc_id",
 
 
 # -------------------------------------------------------------- langid
+def _lang_argmax_sql(arr: str, profiles: dict, lower: bool) -> str:
+    """Spark SQL struct<score, lang>: the language whose profile
+    (marker words or trigrams) has the most hits in ``arr``; ties go to
+    the lexicographically LAST lang (struct max compares score, then
+    lang), deterministic on both engines."""
+    return "greatest(" + ", ".join(
+        f"named_struct('score', {_count_in_sql(arr, profiles[lang], lower)}"
+        f", 'lang', {sql_str(lang)})" for lang in sorted(profiles)) + ")"
+
+
 def langid_df(df: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
-    toks = tokens_col(F.col(text_col))
-    scores = []
-    for lang in sorted(LANG_MARKERS):
-        markers = LANG_MARKERS[lang]
-        cnt = F.size(F.filter(toks, lambda t: F.lower(t).isin(*markers)))
-        scores.append(F.struct(cnt.alias("score"), F.lit(lang).alias("lang")))
-    # argmax score; ties broken by lexicographically LAST lang (struct
-    # max compares score then lang) — deterministic on both engines
-    best = F.greatest(*scores)
-    return df.select(
-        F.col(id_col),
-        best["lang"].alias("pred_lang"),
-        best["score"].cast("long").alias("marker_hits"),
-    )
+    """(id, pred_lang, marker_hits): marker-word language ID."""
+    best = df.selectExpr(
+        f"`{id_col}`", f"{tokens_spark_sql(f'`{text_col}`')} AS _tk",
+    ).selectExpr(f"`{id_col}`",
+                 f"{_lang_argmax_sql('_tk', LANG_MARKERS, True)} AS _b")
+    return best.selectExpr(f"`{id_col}`", "_b.lang AS pred_lang",
+                           "CAST(_b.score AS BIGINT) AS marker_hits")
 
 
 def langid_sql(table: str = "documents", id_col: str = "doc_id",
@@ -159,32 +184,19 @@ def langid_trigram_df(df: DataFrame, id_col: str = "doc_id",
     trigram array (lambda bodies and repeated HOF inputs re-evaluate
     inlined subtrees; multi-referenced non-cheap aliases survive
     CollapseProject)."""
-    staged_t = df.select(
-        F.col(id_col),
-        F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-        .alias("_t3"),
+    staged_t = df.selectExpr(f"`{id_col}`",
+                             f"concat(' ', lower(`{text_col}`), ' ') AS _t3")
+    n3 = "(length(_t3) - 2)"
+    staged_tris = staged_t.selectExpr(
+        f"`{id_col}`",
+        f"array_distinct(transform(CASE WHEN {n3} >= 1 THEN sequence(1, {n3})"
+        " ELSE CAST(array() AS array<int>) END, _i -> substr(_t3, _i, 3)))"
+        " AS _tris",
     )
-    t = F.col("_t3")
-    n3 = F.length(t) - 2
-    staged_tris = staged_t.select(
-        F.col(id_col),
-        F.array_distinct(F.transform(
-            F.when(n3 >= 1, F.sequence(F.lit(1), n3))
-            .otherwise(F.array().cast("array<int>")),
-            lambda i: t.substr(i, F.lit(3)),
-        )).alias("_tris"),
-    )
-    tris = F.col("_tris")
-    scores = []
-    for lang, prof in _trigram_profiles().items():
-        cnt = F.size(F.filter(tris, lambda g: g.isin(*prof)))
-        scores.append(F.struct(cnt.alias("score"), F.lit(lang).alias("lang")))
-    best = F.greatest(*scores)
-    return staged_tris.select(
-        F.col(id_col),
-        best["lang"].alias("pred_lang"),
-        best["score"].cast("long").alias("tri_hits"),
-    )
+    argmax = _lang_argmax_sql("_tris", _trigram_profiles(), False)
+    best = staged_tris.selectExpr(f"`{id_col}`", f"{argmax} AS _b")
+    return best.selectExpr(f"`{id_col}`", "_b.lang AS pred_lang",
+                           "CAST(_b.score AS BIGINT) AS tri_hits")
 
 
 def langid_trigram_sql(table: str = "documents", id_col: str = "doc_id",
@@ -217,11 +229,32 @@ GOPHER_MAX_DUP_WORD_FRAC = 0.75
 GOPHER_WORD_LEN_RANGE = (2.0, 12.0)
 
 
+def gopher_rules_sql(sig: dict[str, str]) -> list[tuple[str, str]]:
+    """The Gopher rules in order, as (reason, pass condition) Spark SQL
+    over ``text_signals_spark_sql`` signals (expressions, or the names
+    of columns holding them) — the one Spark builder of the rules.
+
+    The repetition rule compares the UNROUNDED duplicate fraction, and
+    is exact against the rounded ``dup_word_frac`` output: while
+    n_words <= GOPHER_MAX_WORDS, a fraction (n - d) / n above 3/4
+    exceeds it by at least 1/(4n) >= 2.5e-6, so rounding to 6 places
+    cannot move it across the bound; past that, too_long fails."""
+    n, wl = sig["n_words"], sig["avg_wl"]
+    lo, hi = GOPHER_WORD_LEN_RANGE
+    return [
+        ("too_short", f"{n} >= {GOPHER_MIN_WORDS}"),
+        ("too_long", f"{n} <= {GOPHER_MAX_WORDS}"),
+        ("repetitive",
+         f"{sig['dup_frac']} <= {dlit(GOPHER_MAX_DUP_WORD_FRAC)}"),
+        ("word_len", f"{wl} >= {dlit(lo)} AND {wl} <= {dlit(hi)}"),
+    ]
+
+
 def repetition_spark_sql(text: str, toks: str | None = None) -> dict[str, str]:
     """Repetition signals + the composite Gopher keep decision as Spark
-    SQL text over column references (zero shuffle) — the one Spark
-    builder, for ``selectExpr``/``filter``/``F.expr``; ``repetition_sql``
-    is its DuckDB twin.
+    SQL text over column references (zero shuffle), for
+    ``selectExpr``/``filter``/``F.expr``; ``repetition_sql`` is its
+    DuckDB twin.
 
     top_word_frac (share of the modal token) is computed as a fold
     over the DISTINCT token list counting occurrences in the full
@@ -243,32 +276,30 @@ def repetition_spark_sql(text: str, toks: str | None = None) -> dict[str, str]:
     a one-row ``explode(array(struct(...)))``, which the filter cannot
     cross (see ``queries.webtext.q_curation_end_to_end``)."""
     toks = tokens_spark_sql(text) if toks is None else toks
-    dtoks = f"array_distinct({toks})"
-    n_words = f"size({toks})"
-    n_distinct = f"size({dtoks})"
-    dup_frac = (f"round({dlit(1.0)} - CAST({n_distinct} AS DOUBLE)"
-                f" / CAST({n_words} AS DOUBLE), 6)")
+    sig = text_signals_spark_sql(text, toks)
     # lambda names no caller's column is expected to carry
-    top_cnt = (f"aggregate({dtoks}, 0, (_acc, _w) -> greatest(_acc, "
-               f"size(filter({toks}, _t -> _t = _w))))")
-    top_frac = (f"round(CAST({top_cnt} AS DOUBLE)"
-                f" / CAST({n_words} AS DOUBLE), 6)")
-    avg_wl = (f"(CAST(length({text}) - ({n_words} - 1) AS DOUBLE)"
-              f" / CAST({n_words} AS DOUBLE))")
-    lo, hi = GOPHER_WORD_LEN_RANGE
-    keep = (
-        f"{n_words} >= {GOPHER_MIN_WORDS}"
-        f" AND {n_words} <= {GOPHER_MAX_WORDS}"
-        f" AND {dup_frac} <= {dlit(GOPHER_MAX_DUP_WORD_FRAC)}"
-        f" AND {avg_wl} >= {dlit(lo)} AND {avg_wl} <= {dlit(hi)}"
-    )
+    top_cnt = (f"aggregate(array_distinct({toks}), 0, (_acc, _w) -> "
+               f"greatest(_acc, size(filter({toks}, _t -> _t = _w))))")
     return {
-        "n_words": f"CAST({n_words} AS BIGINT)",
-        "n_distinct_words": f"CAST({n_distinct} AS BIGINT)",
-        "dup_word_frac": dup_frac,
-        "top_word_frac": top_frac,
-        "gopher_keep": f"({keep})",
+        "n_words": f"CAST({sig['n_words']} AS BIGINT)",
+        "n_distinct_words": f"CAST({sig['n_distinct']} AS BIGINT)",
+        "dup_word_frac": f"round({sig['dup_frac']}, 6)",
+        "top_word_frac": (f"round(CAST({top_cnt} AS DOUBLE)"
+                          f" / CAST({sig['n_words']} AS DOUBLE), 6)"),
+        "gopher_keep":
+            "(" + " AND ".join(ok for _, ok in gopher_rules_sql(sig)) + ")",
     }
+
+
+def _sql_ref(c: Column) -> str:
+    """A plain column reference as backtick-quoted Spark SQL text; any
+    other Column raises before Spark sees it."""
+    node = c._jc.node()
+    if not node.getClass().getName().endswith(".UnresolvedAttribute"):
+        raise ValueError(f"expected a plain column reference, got {c}")
+    parts = node.nameParts()
+    return ".".join("`" + parts.apply(i).replace("`", "``") + "`"
+                    for i in range(parts.size()))
 
 
 def repetition_cols(text: Column,
@@ -276,7 +307,7 @@ def repetition_cols(text: Column,
     """``repetition_spark_sql`` as Columns, for callers that compose
     Columns; ``text`` and ``toks`` must be plain column references."""
     cols = repetition_spark_sql(
-        text._jc.toString(), None if toks is None else toks._jc.toString())
+        _sql_ref(text), None if toks is None else _sql_ref(toks))
     return {n: F.expr(e) for n, e in cols.items()}
 
 
@@ -409,8 +440,6 @@ def fingerprint_df(df: DataFrame, id_col: str = "doc_id",
     inlined into the window lambda, interpreted HOF evaluation
     re-derives ALL k-gram md5s per window position — O(n²) md5 per
     document. Materializing `_kg` first makes each slice O(w)."""
-    from pyspark.sql import Window
-
     t = F.col(text_col)
     n_k = F.length(t) - (KGRAM - 1)
     # Spark's sequence(1, 0) yields a DESCENDING [1, 0] (unlike SQL
@@ -585,32 +614,18 @@ def curation_policy_df(df: DataFrame, id_col: str = "doc_id",
     independently, emitting (id, keep, reasons) where reasons is the
     comma-joined sorted list of FAILED rules — the auditable form a
     production curation run logs per document (why a doc was dropped,
-    not just that it was).  Pure column math over one projection;
-    zero shuffle, zero Python."""
-    toks = tokens_col(F.col(text_col))
-    n_words = F.size(toks)
-    n_distinct = F.size(F.array_distinct(toks))
-    dup_frac = F.lit(1.0) - n_distinct.cast("double") / n_words.cast("double")
-    n_chars = F.length(F.col(text_col))
-    avg_wl = (n_chars - (n_words - 1)).cast("double") / n_words.cast("double")
-    n_stop = F.size(F.filter(toks, lambda t: F.lower(t).isin(*STOPWORDS)))
-    lo, hi = GOPHER_WORD_LEN_RANGE
-    rules = [
-        ("too_short", n_words < GOPHER_MIN_WORDS),
-        ("too_long", n_words > GOPHER_MAX_WORDS),
-        ("repetitive", dup_frac > GOPHER_MAX_DUP_WORD_FRAC),
-        ("word_len", (avg_wl < lo) | (avg_wl > hi)),
-        ("no_stopwords", n_stop == 0),
-    ]
-    flags = F.array(
-        *[F.when(cond, F.lit(name)) for name, cond in rules]
-    )
-    failed = F.array_sort(F.filter(flags, lambda x: x.isNotNull()))
-    return df.select(
-        F.col(id_col),
-        (F.size(failed) == 0).cast("int").alias("keep"),
-        F.concat_ws(",", failed).alias("reasons"),
-    )
+    not just that it was).  SQL-text projections over
+    ``text_signals_spark_sql`` and ``gopher_rules_sql``; zero shuffle,
+    zero Python."""
+    sig_df, sig = _signals_df(df, id_col, text_col)
+    failed = [f"CASE WHEN NOT ({ok}) THEN {sql_str(r)} END"
+              for r, ok in gopher_rules_sql(sig)]
+    failed.append(f"CASE WHEN {sig['n_stop']} = 0 THEN 'no_stopwords' END")
+    return sig_df.selectExpr(
+        f"`{id_col}`", f"array_sort(filter(array({', '.join(failed)}),"
+        " _x -> _x IS NOT NULL)) AS _f",
+    ).selectExpr(f"`{id_col}`", "CAST(size(_f) = 0 AS INT) AS keep",
+                 "concat_ws(',', _f) AS reasons")
 
 
 def curation_policy_sql(table: str = "documents", id_col: str = "doc_id",
