@@ -12,6 +12,10 @@ Each ``geo_*`` entry that runs the transform (``transform_points``,
 directly or through the raster and sampled modes) must also run it
 with no Python worker: neither the entry's executed plan nor the plan
 of any transform output holds a Python node.
+
+Building an entry's DataFrame starts no Spark job: the build runs
+under its own job group and must leave it empty, except for the
+entries of ``BUILD_JOBS``, which materialize on purpose.
 """
 
 from __future__ import annotations
@@ -32,6 +36,29 @@ if not os.path.isdir(SF_DIR):
 
 QUERIES = entry.queries_extended()
 ORACLES = entry.oracle_sql_extended()
+
+# entries whose build runs Spark jobs by design, with the reason
+_W2 = "W2 precedence: the per-cell count collect (transform_sql)"
+_SINK = "sink round trip: write, then read back"
+_KMEANS = "k-means training: one centroid collect per round"
+_BM25 = "BM25: localCheckpoint of the term base, corpus-stats collect"
+BUILD_JOBS = {
+    "geo_count_precedence": _W2,
+    "geo_raster_transform": _W2,
+    "geo_geotiff_roundtrip": _SINK,
+    "geo_csv_roundtrip": _SINK,
+    "geo_parquet_sink_roundtrip": _SINK,
+    "dedup_cluster_canonical": "per-round localCheckpoint",
+    "dedup_semantic_trained": _KMEANS,
+    "emb_kmeans": _KMEANS,
+    "ann_ivf_trained_topk": _KMEANS,
+    "text_bm25_topk": _BM25,
+    "hybrid_search_rrf": _BM25,
+    "dsir_weights": "localCheckpoint and the importance-weight collect",
+    "doc_semantic_dedup": "localCheckpoint of the embedded corpus",
+    "graph_pagerank": "per-round localCheckpoint",
+    "pipeline_end_to_end": "checkpoint, sink round trip, identity check",
+}
 
 FALLBACK = "spark.sql.codegen.fallback"
 PYTHON_NODES = ("MapInArrow", "ArrowEvalPython", "BatchEvalPython")
@@ -69,7 +96,16 @@ def test_geo_query_matches_oracle(spark, oracle_db, strict_codegen,
             return out
 
         monkeypatch.setattr(tx, "transform_points", recording)
-    df = QUERIES[name](spark, SF_DIR)
+    sc = spark.sparkContext
+    group = f"build:{name}"
+    sc.setJobGroup(group, f"build {name}")
+    try:
+        df = QUERIES[name](spark, SF_DIR)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert (build_jobs > 0) == (name in BUILD_JOBS), (name, build_jobs)
     got = df.toPandas()
     exp = oracle_db.execute(ORACLES[name]).df()
     assert len(got) == len(exp)

@@ -202,6 +202,28 @@ def test_sampled_mode_close_to_exact(spark, fixture_points):
     assert np.allclose(same.z_out, same.z_out_s, atol=0.02)
 
 
+@pytest.mark.parametrize("include_lineage", [False, True])
+def test_sampled_mode_keeps_the_exact_output_columns(
+        spark, fixture_points, include_lineage):
+    """Sampled mode emits the exact path's columns, lineage included,
+    with its cell key in place of the coarse tile key; a covered
+    point's lineage is its center's region pipeline."""
+    pts = spark.createDataFrame(fixture_points.head(50))
+    kw = {"include_lineage": include_lineage}
+    exact = tx.transform_points(spark, pts, "ellipse", "mllw", **kw)
+    sampled = tx.transform_points_sampled(spark, pts, "ellipse", "mllw", **kw)
+    assert (set(sampled.columns) - {"cell_r"}
+            == set(exact.columns) - {"cell5"})
+    assert ("pipeline_str" in sampled.columns) == include_lineage
+    if include_lineage:
+        got = sampled.toPandas()
+        cov = got[got.covered]
+        assert len(cov) > 0
+        want = {r.region_id: r.pipeline_str for r in exact.select(
+            "region_id", "pipeline_str").distinct().collect()}
+        assert (cov.pipeline_str == cov.region_id.map(want)).all()
+
+
 def test_sampled_mode_carries_frame_corrections(spark, fixture_points):
     """Regression (round-3 ADVICE): sampled mode combined with a
     non-default output_frame / input_crs must apply the frame δz —

@@ -358,10 +358,13 @@ def transform_points_sampled(
         key_col="cell_r", x_col="x", y_col="y", z_col="z",
         input_crs=in_crs, output_frame=output_frame, **kwargs,
     )
+    # the optional outputs (unc, lineage) ride along when requested
+    has = set(tc.columns)
     cell_sep = tc.selectExpr(
         "cell_r", "region_id", "region_ord",
-        *(["unc"] if "unc" in tc.columns else []),
-        "sep", "covered AS _cov", "z_out AS _z0",
+        *(["unc"] if "unc" in has else []), "sep",
+        *(["pipeline_str"] if "pipeline_str" in has else []),
+        "covered AS _cov", "z_out AS _z0",
     )
     # no broadcast hint: cell_sep is O(distinct fine cells) of the
     # input — bounded globally (~2M res-9 cells ≈ 100 MB+) but not
@@ -375,7 +378,7 @@ def transform_points_sampled(
     unc = {}
     if kwargs.get("allow_points_outside_coverage", False):
         z_out += f" ELSE round(({dlit(fout)} * {z_geo}), 3)"
-        if "unc" in tc.columns:
+        if "unc" in has:
             # an uncovered center's CATZOC is that of z=0, not the point's
             unc = {"unc": F.expr(
                 f"CASE WHEN _cov THEN unc ELSE {_catzoc_sql(z_geo)} END")}

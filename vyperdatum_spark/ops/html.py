@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import sql_str
+from . import sql_ref, sql_str
 
 # regex source shared by the Spark plan and the DuckDB oracle
 RE_COMMENT = r"(?s)<!--.*?-->"
@@ -93,9 +93,10 @@ _ENTITY_MAP_SQL = "map(" + ", ".join(
     f"{sql_str(ent[1:])}, {sql_str(ch)}" for ent, ch in ENTITIES) + ")"
 
 
-def _decode_entities(c: Column) -> Column:
-    """Single-pass entity decode: split on '&', decode the ≤1 entity
-    that can start each piece after the first, rejoin.
+def decode_entities_spark_sql(expr: str) -> str:
+    """Single-pass entity decode as Spark SQL text: split on '&',
+    decode the ≤1 entity that can start each piece after the first,
+    rejoin.
 
     One string scan regardless of table size, and decoded output is
     never re-scanned, so double-encoded entities round-trip
@@ -104,28 +105,31 @@ def _decode_entities(c: Column) -> Column:
     parsers).  Every table key is ``#?[A-Za-z0-9]+;``, so a piece
     starts with a key exactly when its prefix through the first ';' is
     one: the decode is one lookup of that prefix in a literal map, with
-    '&' + piece as the miss.  ``c`` is referenced once (the first piece
+    '&' + piece as the miss.  ``expr`` appears once (the first piece
     is kept by index inside the same ``transform``), so an expensive
     input is evaluated once per row even where no projection stages it.
     The DuckDB twin (decode_entities_sql) is generated from the same
     tuple."""
-    ents = F.expr(_ENTITY_MAP_SQL)
+    semi = "instr(_p, ';')"
+    hit = (f"concat(try_element_at({_ENTITY_MAP_SQL}, "
+           f"substring(_p, 1, {semi})), "
+           f"substring(_p, {semi} + 1, length(_p)))")
+    return (f"array_join(transform(split({expr}, '&', -1), (_p, _i) -> "
+            f"CASE WHEN _i = 0 THEN _p "
+            f"ELSE coalesce({hit}, concat('&', _p)) END), '')")
 
-    def dec(p: Column, i: Column) -> Column:
-        semi = F.instr(p, ";")
-        hit = F.concat(F.try_element_at(ents, p.substr(F.lit(1), semi)),
-                       p.substr(semi + 1, F.length(p)))
-        return F.when(i == 0, p).otherwise(
-            F.coalesce(hit, F.concat(F.lit("&"), p)))
 
-    return F.array_join(F.transform(F.split(c, "&", -1), dec), "")
+def _decode_entities(c: Column) -> Column:
+    """``decode_entities_spark_sql`` over a plain column reference."""
+    return F.expr(decode_entities_spark_sql(sql_ref(c)))
 
 
 def decode_entities_sql(expr: str) -> str:
-    """DuckDB twin of ``_decode_entities`` — split, first-match CASE per
-    piece, rejoin — generated from the same ENTITIES tuple.  The rejoin
-    is coalesced because DuckDB's ``array_to_string`` of an empty list
-    (a string without '&') is NULL where Spark's ``array_join`` is ''."""
+    """DuckDB twin of ``decode_entities_spark_sql`` — split,
+    first-match CASE per piece, rejoin — generated from the same
+    ENTITIES tuple.  The rejoin is coalesced because DuckDB's
+    ``array_to_string`` of an empty list (a string without '&') is
+    NULL where Spark's ``array_join`` is ''."""
     ps = f"string_split({expr}, '&')"
     cases = " ".join(
         f"WHEN starts_with(p, '{ent[1:]}') "
@@ -139,30 +143,36 @@ def decode_entities_sql(expr: str) -> str:
     )
 
 
-def extract_text_col(html_col: Column) -> Column:
-    """The extraction chain as ONE column expression.  Each stage,
-    the entity decode included, references its input once, so each
-    regexp runs once per row with no staging projection."""
-    s = F.decode(html_col, "UTF-8")
+def extract_text_spark_sql(html_expr: str) -> str:
+    """The one Spark builder of the extraction chain: Spark SQL text
+    over a BINARY expression.  Each stage, the entity decode included,
+    references its input once, so each regexp runs once per row with
+    no staging projection."""
+    s = f"decode({html_expr}, 'UTF-8')"
     for pat in (RE_COMMENT, RE_SCRIPT, RE_STYLE, RE_TAG):
-        s = F.regexp_replace(s, pat, "")
-    s = _decode_entities(s)
-    return F.trim(F.regexp_replace(s, RE_WS, " "))
+        s = f"regexp_replace({s}, {sql_str(pat)}, '')"
+    s = decode_entities_spark_sql(s)
+    return f"trim(regexp_replace({s}, {sql_str(RE_WS)}, ' '))"
+
+
+def extract_text_col(html_col: Column) -> Column:
+    """``extract_text_spark_sql`` over a plain column reference."""
+    return F.expr(extract_text_spark_sql(sql_ref(html_col)))
 
 
 def extract_text(df: DataFrame, id_col: str = "doc_id",
                  html_col: str = "html") -> DataFrame:
     """(id, text_out, n_html_bytes): visible text per page."""
-    raw = F.col(html_col)
-    return df.select(
-        F.col(id_col), extract_text_col(raw).alias("text_out"),
-        F.octet_length(raw).cast("long").alias("n_html_bytes"),
+    raw = f"`{html_col}`"
+    return df.selectExpr(
+        f"`{id_col}`", f"{extract_text_spark_sql(raw)} AS text_out",
+        f"CAST(octet_length({raw}) AS BIGINT) AS n_html_bytes",
     )
 
 
 def extract_expr_sql(html_expr: str) -> str:
     """The extraction chain as one DuckDB expression over a BLOB
-    expression — the SQL twin of extract_text_col. Flags: 'g'
+    expression — the DuckDB twin of extract_text_spark_sql. Flags: 'g'
     replaces all (Spark's regexp_replace always does); 's'/'i'
     carried inline in the shared patterns."""
     s = f"decode({html_expr})"

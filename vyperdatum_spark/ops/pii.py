@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from . import sql_str
+from . import sql_over, sql_str
 
 # (pattern, placeholder) in application order — e-mail before IP
 PII_RULES = (
@@ -36,31 +36,45 @@ def pii_redact(df: DataFrame, id_col: str = "doc_id",
     """(id, clean_text, n_email, n_ip, n_phone): placeholder-redacted
     text plus per-kind match counts. Counts are taken on the staged
     text (post prior rules) so kinds never double-count the same span."""
-    return pii_annotate(df.select(id_col, text_col), text_col).select(
-        id_col, "clean_text", *(f"n_{k}" for k in _KINDS))
+    counts = ", ".join(f"n_{k}" for k in _KINDS)
+    return sql_over(df, lambda rel: (
+        f"SELECT `{id_col}`, clean_text, {counts} FROM ("
+        f"{pii_annotate_spark_sql(rel, [id_col, text_col], text_col)})"))
+
+
+def pii_annotate_spark_sql(rel: str, cols: list[str],
+                           text_col: str = "text") -> str:
+    """The one Spark builder of PII redaction: a SELECT over the
+    relation ``rel`` (columns ``cols``) that APPENDS (clean_text,
+    n_email, n_ip, n_phone), keeping every other column — for
+    pipelines that carry url/ts/lineage alongside the text.
+
+    One nested SELECT per rule, in rule order: a rule reads its input
+    twice (count + replace), so the stages stay apart and each regexp
+    runs once per row.  The last stage names the text ``clean_text``
+    and puts the columns in output order."""
+    counts = [f"n_{k}" for k in _KINDS]
+    keep = [f"`{c}`" for c in cols if c not in ("clean_text", *counts)]
+    src, t = rel, f"`{text_col}`"
+    for i, ((pat, tok), kind) in enumerate(zip(PII_RULES, _KINDS)):
+        p = sql_str(pat)
+        n = (f"CAST(size(regexp_extract_all({t}, {p}, 0)) AS BIGINT) "
+             f"AS n_{kind}")
+        last = i == len(PII_RULES) - 1
+        red = (f"regexp_replace({t}, {p}, {sql_str(tok)}) AS "
+               + ("clean_text" if last else "_t"))
+        sel = ([*keep, red, *counts[:i], n] if last
+               else [*keep, *counts[:i], n, red])
+        s = f"SELECT {', '.join(sel)} FROM {src}"
+        src, t = f"({s})", "_t"
+    return s
 
 
 def pii_annotate(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Composition form: APPENDS (clean_text, n_email, n_ip, n_phone)
-    to the input DataFrame, keeping every existing column — for
-    pipelines that carry url/ts/lineage alongside the text.
-
-    One projection per rule, in rule order, each built from SQL text
-    (a handful of py4j calls): a rule reads its input twice (count +
-    replace), so the projections stay apart and each regexp runs once
-    per row."""
-    counts = [f"n_{k}" for k in _KINDS]
-    keep = [f"`{c}`" for c in df.columns if c not in ("clean_text", *counts)]
-    d = df.selectExpr(*keep, f"`{text_col}` AS _t")
-    for i, ((pat, tok), kind) in enumerate(zip(PII_RULES, _KINDS)):
-        p = sql_str(pat)
-        d = d.selectExpr(
-            *keep, *counts[:i],
-            f"CAST(size(regexp_extract_all(_t, {p}, 0)) AS BIGINT) "
-            f"AS n_{kind}",
-            f"regexp_replace(_t, {p}, {sql_str(tok)}) AS _t",
-        )
-    return d.selectExpr(*keep, "_t AS clean_text", *counts)
+    """``pii_annotate_spark_sql`` over ``df``: its columns, then
+    (clean_text, n_email, n_ip, n_phone)."""
+    return sql_over(df, lambda rel: pii_annotate_spark_sql(
+        rel, df.columns, text_col))
 
 
 def pii_redact_sql(table: str = "documents", id_col: str = "doc_id",

@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..spatial.cells import dlit
-from . import sql_str
+from . import sql_ref, sql_str
 from .dedup import (hash60, hash60_sql, shingles_from_tokens, tokens_col,
                     tokens_spark_sql)
 
@@ -120,10 +120,12 @@ def _lang_argmax_sql(arr: str, profiles: dict, lower: bool) -> str:
     """Spark SQL struct<score, lang>: the language whose profile
     (marker words or trigrams) has the most hits in ``arr``; ties go to
     the lexicographically LAST lang (struct max compares score, then
-    lang), deterministic on both engines."""
-    return "greatest(" + ", ".join(
+    lang), deterministic on both engines.  NULL when ``arr`` is NULL:
+    a missing text has no language (``greatest`` over all-NULL scores
+    would name the last one)."""
+    return f"CASE WHEN {arr} IS NOT NULL THEN greatest(" + ", ".join(
         f"named_struct('score', {_count_in_sql(arr, profiles[lang], lower)}"
-        f", 'lang', {sql_str(lang)})" for lang in sorted(profiles)) + ")"
+        f", 'lang', {sql_str(lang)})" for lang in sorted(profiles)) + ") END"
 
 
 def langid_df(df: DataFrame, id_col: str = "doc_id",
@@ -137,6 +139,13 @@ def langid_df(df: DataFrame, id_col: str = "doc_id",
                            "CAST(_b.score AS BIGINT) AS marker_hits")
 
 
+def _lang_best_sql(text_col: str, structs: list[str]) -> str:
+    """DuckDB twin of ``_lang_argmax_sql``'s pick over per-language
+    ``{score, lang}`` struct literals: NULL for a NULL text."""
+    return (f"(CASE WHEN {text_col} IS NOT NULL "
+            f"THEN list_max([{', '.join(structs)}]) END)")
+
+
 def langid_sql(table: str = "documents", id_col: str = "doc_id",
                text_col: str = "text") -> str:
     toks = f"string_split({text_col}, ' ')"
@@ -145,7 +154,7 @@ def langid_sql(table: str = "documents", id_col: str = "doc_id",
         markers = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
         cnt = f"len(list_filter({toks}, t -> lower(t) IN ({markers})))"
         structs.append(f"{{'score': {cnt}, 'lang': '{lang}'}}")
-    best = f"list_max([{', '.join(structs)}])"
+    best = _lang_best_sql(text_col, structs)
     return (
         f"SELECT {id_col}, {best}['lang'] AS pred_lang, "
         f"CAST({best}['score'] AS BIGINT) AS marker_hits FROM {table}"
@@ -190,8 +199,8 @@ def langid_trigram_df(df: DataFrame, id_col: str = "doc_id",
     staged_tris = staged_t.selectExpr(
         f"`{id_col}`",
         f"array_distinct(transform(CASE WHEN {n3} >= 1 THEN sequence(1, {n3})"
-        " ELSE CAST(array() AS array<int>) END, _i -> substr(_t3, _i, 3)))"
-        " AS _tris",
+        " WHEN _t3 IS NOT NULL THEN CAST(array() AS array<int>) END,"
+        " _i -> substr(_t3, _i, 3))) AS _tris",
     )
     argmax = _lang_argmax_sql("_tris", _trigram_profiles(), False)
     best = staged_tris.selectExpr(f"`{id_col}`", f"{argmax} AS _b")
@@ -211,7 +220,7 @@ def langid_trigram_sql(table: str = "documents", id_col: str = "doc_id",
         lits = ", ".join("'" + g.replace("'", "''") + "'" for g in prof)
         cnt = f"len(list_filter({tris}, g -> g IN ({lits})))"
         structs.append(f"{{'score': {cnt}, 'lang': '{lang}'}}")
-    best = f"list_max([{', '.join(structs)}])"
+    best = _lang_best_sql(text_col, structs)
     return (
         f"SELECT {id_col}, {best}['lang'] AS pred_lang, "
         f"CAST({best}['score'] AS BIGINT) AS tri_hits FROM {table}"
@@ -291,23 +300,12 @@ def repetition_spark_sql(text: str, toks: str | None = None) -> dict[str, str]:
     }
 
 
-def _sql_ref(c: Column) -> str:
-    """A plain column reference as backtick-quoted Spark SQL text; any
-    other Column raises before Spark sees it."""
-    node = c._jc.node()
-    if not node.getClass().getName().endswith(".UnresolvedAttribute"):
-        raise ValueError(f"expected a plain column reference, got {c}")
-    parts = node.nameParts()
-    return ".".join("`" + parts.apply(i).replace("`", "``") + "`"
-                    for i in range(parts.size()))
-
-
 def repetition_cols(text: Column,
                     toks: Column | None = None) -> dict[str, Column]:
     """``repetition_spark_sql`` as Columns, for callers that compose
     Columns; ``text`` and ``toks`` must be plain column references."""
     cols = repetition_spark_sql(
-        _sql_ref(text), None if toks is None else _sql_ref(toks))
+        sql_ref(text), None if toks is None else sql_ref(toks))
     return {n: F.expr(e) for n, e in cols.items()}
 
 
@@ -614,7 +612,8 @@ def curation_policy_df(df: DataFrame, id_col: str = "doc_id",
     independently, emitting (id, keep, reasons) where reasons is the
     comma-joined sorted list of FAILED rules — the auditable form a
     production curation run logs per document (why a doc was dropped,
-    not just that it was).  SQL-text projections over
+    not just that it was).  A NULL text is dropped with the one reason
+    ``no_text``, as ``gopher_keep`` drops it.  SQL-text projections over
     ``text_signals_spark_sql`` and ``gopher_rules_sql``; zero shuffle,
     zero Python."""
     sig_df, sig = _signals_df(df, id_col, text_col)
@@ -622,8 +621,9 @@ def curation_policy_df(df: DataFrame, id_col: str = "doc_id",
               for r, ok in gopher_rules_sql(sig)]
     failed.append(f"CASE WHEN {sig['n_stop']} = 0 THEN 'no_stopwords' END")
     return sig_df.selectExpr(
-        f"`{id_col}`", f"array_sort(filter(array({', '.join(failed)}),"
-        " _x -> _x IS NOT NULL)) AS _f",
+        f"`{id_col}`", f"CASE WHEN {sig['n_chars']} IS NULL "
+        "THEN array('no_text') ELSE array_sort(filter(array("
+        f"{', '.join(failed)}), _x -> _x IS NOT NULL)) END AS _f",
     ).selectExpr(f"`{id_col}`", "CAST(size(_f) = 0 AS INT) AS keep",
                  "concat_ws(',', _f) AS reasons")
 
@@ -649,7 +649,8 @@ def curation_policy_sql(table: str = "documents", id_col: str = "doc_id",
         f"CASE WHEN {avg_wl} < {lo} OR {avg_wl} > {hi} THEN 'word_len' END",
         f"CASE WHEN {n_stop} = 0 THEN 'no_stopwords' END",
     ])
-    failed = f"list_sort(list_filter([{cases}], x -> x IS NOT NULL))"
+    failed = (f"(CASE WHEN {text_col} IS NULL THEN ['no_text'] ELSE "
+              f"list_sort(list_filter([{cases}], x -> x IS NOT NULL)) END)")
     return (
         f"SELECT {id_col}, CAST(len({failed}) = 0 AS INT) AS keep, "
         # COALESCE: DuckDB string_agg over an empty list is NULL;

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..engine.inputs import local_df
-from . import sql_str
+from . import sql_over, sql_str
 
 # scheme://authority (everything before the first path slash)
 _AUTH_RE = r"^([A-Za-z][A-Za-z0-9+.-]*://[^/]*)"
@@ -114,37 +114,44 @@ def blocklist_filter_sql(inner_sql: str, blocked_hosts: list[str],
     )
 
 
-def latest_capture(df: DataFrame, url_col: str = "url",
-                   ts_col: str = "warc_ts", id_col: str = "doc_id") -> DataFrame:
-    """Latest capture per canonical URL — the Common-Crawl snapshot
-    dedup: a crawl re-fetches the same resource across snapshots and
-    downstream wants exactly one row per page, the freshest.
+def latest_capture_spark_sql(rel: str, url_col: str = "url",
+                             ts_col: str = "warc_ts",
+                             id_col: str = "doc_id") -> str:
+    """The one Spark builder of the latest capture per canonical URL —
+    the Common-Crawl snapshot dedup: a crawl re-fetches the same
+    resource across snapshots and downstream wants exactly one row per
+    page, the freshest.  Spark SQL text over the relation ``rel``
+    yielding (canonical_url, latest_id, latest_ts, n_captures).
 
     Shape at 100 TB: canonicalize (projection) + ONE hash shuffle on
     the canonical key with a map-side-combining ``max(struct(ts, id))``
     aggregate — deliberately NOT a window ``row_number`` (a window
     sorts every group and carries all rows through the shuffle; the
     struct-max agg combines partially before it). Ties on ts break to
-    the larger id, deterministically on both engines.
-
-    Returns (canonical_url, latest_id, latest_ts, n_captures); each
-    stage is SQL text, a few py4j calls per stage."""
-    canon = canonical_url_df(df, url_col, id_col, extra_cols=[ts_col])
+    the larger id, deterministically on both engines."""
+    canon = canonical_url_spark_sql(rel, url_col, id_col, [ts_col])
+    best = f"max(struct(`{ts_col}`, `{id_col}`))"
     return (
-        canon.groupBy("canonical_url")
-        .agg(F.expr(f"max(struct(`{ts_col}`, `{id_col}`)) AS _b"),
-             F.expr("count(*) AS n_captures"))
-        .selectExpr("canonical_url", f"_b.`{id_col}` AS latest_id",
-                    f"_b.`{ts_col}` AS latest_ts", "n_captures")
+        f"SELECT canonical_url, {best}.`{id_col}` AS latest_id, "
+        f"{best}.`{ts_col}` AS latest_ts, count(*) AS n_captures "
+        f"FROM ({canon}) GROUP BY canonical_url"
     )
+
+
+def latest_capture(df: DataFrame, url_col: str = "url",
+                   ts_col: str = "warc_ts", id_col: str = "doc_id") -> DataFrame:
+    """``latest_capture_spark_sql`` over ``df``: (canonical_url,
+    latest_id, latest_ts, n_captures)."""
+    return sql_over(df, lambda rel: latest_capture_spark_sql(
+        rel, url_col, ts_col, id_col))
 
 
 def latest_capture_sql(inner_sql: str, url_col: str = "url",
                        ts_col: str = "warc_ts",
                        id_col: str = "doc_id") -> str:
-    """DuckDB twin of latest_capture over `inner_sql` — a subquery
-    yielding (id, ts, url). Window form (oracle clarity over the
-    map-combine shape the Spark plan uses)."""
+    """DuckDB twin of latest_capture_spark_sql over `inner_sql` — a
+    subquery yielding (id, ts, url). Window form (oracle clarity over
+    the map-combine shape the Spark plan uses)."""
     canon = canonical_url_sql(inner_sql, url_col=url_col, id_col=id_col,
                               extra_cols=[ts_col])
     return (
@@ -160,9 +167,10 @@ def latest_capture_sql(inner_sql: str, url_col: str = "url",
 def canonical_url_sql(inner_sql: str, url_col: str = "url",
                       id_col: str = "doc_id",
                       extra_cols: list[str] | None = None) -> str:
-    """DuckDB twin of canonical_url_df: the same staged regex sequence
-    ('g' flag where Spark's regexp_replace replaces all occurrences).
-    Returns a SELECT yielding (id, *extra_cols, canonical_url)."""
+    """DuckDB twin of canonical_url_spark_sql: the same staged regex
+    sequence ('g' flag where Spark's regexp_replace replaces all
+    occurrences). Returns a SELECT yielding (id, *extra_cols,
+    canonical_url)."""
     extra = "".join(f"{c}, " for c in (extra_cols or []))
     return (
         f"WITH _u0 AS (SELECT {id_col}, {extra}"
@@ -181,21 +189,32 @@ def canonical_url_sql(inner_sql: str, url_col: str = "url",
     )
 
 
-def canonical_url_df(df: DataFrame, url_col: str = "url",
-                     id_col: str = "doc_id",
-                     extra_cols: list[str] | None = None) -> DataFrame:
-    """(id, *extra_cols, canonical_url) projection — staged columns so
-    each regexp runs once per row, each stage one SQL-text select."""
-    keep = [f"`{c}`" for c in (id_col, *(extra_cols or []))]
+def canonical_url_spark_sql(rel: str, url_col: str = "url",
+                            id_col: str = "doc_id",
+                            extra_cols: list[str] | None = None) -> str:
+    """The one Spark builder of the canonical URL: a SELECT over the
+    relation ``rel`` yielding (id, *extra_cols, canonical_url).  A
+    stage whose output is read twice is its own nested SELECT, so
+    each regexp runs once per row."""
+    keep = ", ".join(f"`{c}`" for c in (id_col, *(extra_cols or [])))
     frag, utm_lead, utm, p443, p80, slash = map(sql_str, (
         r"#.*$", r"\?utm_[^&#]*&", r"[?&]utm_[^&#]*",
         r"^(https://.*):443$", r"^(http://.*):80$", r"(.+)/$"))
-    d = df.selectExpr(*keep, f"regexp_replace(`{url_col}`, {frag}, '') AS _u")
-    d = d.selectExpr(*keep, f"regexp_replace(regexp_replace(_u, {utm_lead}, "
-                            f"'?'), {utm}, '') AS _u")
-    d = d.selectExpr(*keep, "_u",
-                     f"regexp_extract(_u, {sql_str(_AUTH_RE)}, 1) AS _auth")
+    u = (f"regexp_replace(regexp_replace(regexp_replace(`{url_col}`, "
+         f"{frag}, ''), {utm_lead}, '?'), {utm}, '')")
+    s = f"SELECT {keep}, {u} AS _u FROM {rel}"
+    s = (f"SELECT {keep}, _u, regexp_extract(_u, {sql_str(_AUTH_RE)}, 1) "
+         f"AS _auth FROM ({s})")
     auth = (f"regexp_replace(regexp_replace(lower(_auth), {p443}, '$1'), "
             f"{p80}, '$1')")
     rest = f"regexp_replace(substring(_u, length(_auth) + 1), {slash}, '$1')"
-    return d.selectExpr(*keep, f"concat({auth}, {rest}) AS canonical_url")
+    return f"SELECT {keep}, concat({auth}, {rest}) AS canonical_url FROM ({s})"
+
+
+def canonical_url_df(df: DataFrame, url_col: str = "url",
+                     id_col: str = "doc_id",
+                     extra_cols: list[str] | None = None) -> DataFrame:
+    """``canonical_url_spark_sql`` over ``df``: (id, *extra_cols,
+    canonical_url)."""
+    return sql_over(df, lambda rel: canonical_url_spark_sql(
+        rel, url_col, id_col, extra_cols))

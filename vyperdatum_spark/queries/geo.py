@@ -18,9 +18,10 @@ from pyspark.sql import functions as F
 
 from ..datums import catalog, pipeline as pl, vypercrs
 from ..engine import transform as tx
-from ..engine.inputs import local_df
+from ..engine.inputs import local_df, read_input
 from ..grids import tiler
 from ..spatial import cells, crs as hcrs, zorder as zorder_mod
+from . import fixtures
 
 FAMOUS_X = -76.7512345
 FAMOUS_Y = 34.7512345
@@ -32,9 +33,9 @@ FAMOUS_Y = 34.7512345
 
 def derived_points(spark: SparkSession, sf_dir: str,
                    parallel: bool = True) -> DataFrame:
-    from ..engine.inputs import read_input
-    ev = (read_input(spark, f"{sf_dir}/events.parquet") if parallel
-          else spark.read.parquet(f"{sf_dir}/events.parquet"))
+    path = f"{sf_dir}/events.parquet"
+    ev = (read_input(spark, path, fixtures.EVENTS) if parallel
+          else spark.read.schema(fixtures.EVENTS).parquet(path))
     k = F.col("event_id")
     # prime multipliers spread points over the whole region layout at
     # any scale factor (plain event_id // 400 collapses y at small sf)
@@ -580,8 +581,7 @@ def _knn_grid_defs():
 
 
 def _knn_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..engine.inputs import read_input
-    ev = read_input(spark, f"{sf_dir}/events.parquet")
+    ev = read_input(spark, f"{sf_dir}/events.parquet", fixtures.EVENTS)
     k = F.col("event_id")
     x = F.lit(KNN_NODE_LON + 0.0005) + ((k * 131) % 39).cast("double") * F.lit(0.001)
     y = F.lit(33.2005) + ((k * 7919) % 100).cast("double") * F.lit(0.008)
@@ -906,8 +906,7 @@ def q_geo_parse_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendered strings are bit-identical across engines."""
     from ..engine import geoparse
 
-    from ..engine.inputs import read_input
-    ev = read_input(spark, f"{sf_dir}/events.parquet")
+    ev = read_input(spark, f"{sf_dir}/events.parquet", fixtures.EVENTS)
     k = F.col("event_id")
     lat1 = F.lit(33.0) + ((k * 131) % 300).cast("double") * F.lit(0.01)
     lon1 = F.lit(76.0) + ((k * 7919) % 400).cast("double") * F.lit(0.01)

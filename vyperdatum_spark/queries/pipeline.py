@@ -35,8 +35,10 @@ from pyspark.sql import functions as F
 
 from ..engine import geoparse, sinks
 from ..engine import transform as tx
+from ..engine.inputs import read_input
 from ..ops import dedup, textstats
 from ..spatial import cells
+from .fixtures import EVENTS
 from .geo import region_case_sql, unc_case_sql, z_out_case_sql
 
 FAMOUS_LAT = 34.7512345
@@ -45,9 +47,7 @@ FAMOUS_LONW = 76.7512345  # rendered positive with W suffix (x = −lon)
 
 def synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Common-Crawl-shaped pages with parseable coordinate mentions."""
-    from ..engine.inputs import read_input
-
-    ev = read_input(spark, f"{sf_dir}/events.parquet")
+    ev = read_input(spark, f"{sf_dir}/events.parquet", EVENTS)
     k = F.col("event_id")
     cid = k - F.when(k % 5 == 4, F.lit(1)).otherwise(F.lit(0))
     st = ev.select(k.alias("pid"), F.col("ts").alias("warc_ts"),

@@ -7,13 +7,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .fixtures import SCHEMAS
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # plain scan, no read_input fan-out: the relational shapes are
     # aggregation/join-bound (their first exchange re-partitions
     # anyway), so a pre-shuffle to 32 partitions only adds a stage -
     # measured +0.2-0.6 s per query at sf0.1, no winner among them
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,7 +141,7 @@ def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return sw.stream_events_hourly(
         spark, f"{sf_dir}/events.parquet",
-        sw.query_work_dir("events_hourly"),
+        sw.query_work_dir("events_hourly"), schema=SCHEMAS["events"],
     )
 
 
@@ -151,7 +154,7 @@ def q_stream_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return sw.stream_events_sessions(
         spark, f"{sf_dir}/events.parquet",
-        sw.query_work_dir("events_sessions"),
+        sw.query_work_dir("events_sessions"), schema=SCHEMAS["events"],
     ).orderBy("user_id", "session_start")
 
 

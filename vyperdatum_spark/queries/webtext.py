@@ -6,18 +6,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine.inputs import local_df
+from ..engine.inputs import local_df, read_input
 from ..ops import clustering, dedup, dsir, search, similarity, textstats
+from . import fixtures
 
 
 def _docs(spark: SparkSession, sf_dir: str,
           parallel: bool = True) -> DataFrame:
-    from ..engine.inputs import read_input
-
+    path = f"{sf_dir}/documents.parquet"
     if not parallel:
         # aggregation-bound consumers: the fan-out only adds a stage
-        return spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return read_input(spark, f"{sf_dir}/documents.parquet")
+        return spark.read.schema(fixtures.DOCUMENTS).parquet(path)
+    return read_input(spark, path, fixtures.DOCUMENTS)
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -28,7 +28,8 @@ def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emb_kmeans 3.5 -> 10-13 s and ann_lsh_multi_topk 2x worse.  At
     # scale the table arrives as many files and parallelizes at the
     # scan without any repartition.
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return spark.read.schema(fixtures.EMBEDDINGS).parquet(
+        f"{sf_dir}/embeddings.parquet")
 
 
 def _docs_with_dups(spark: SparkSession, sf_dir: str,
@@ -159,7 +160,8 @@ def q_stream_first_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return stateful.stream_first_per_key(
         spark, f"{sf_dir}/documents.parquet",
-        query_work_dir("first_per_source"), "source", "doc_id"
+        query_work_dir("first_per_source"), "source", "doc_id",
+        schema=fixtures.DOCUMENTS,
     )
 
 
@@ -396,7 +398,7 @@ def q_stream_curated_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return drain_to_parquet(
         spark, f"{sf_dir}/documents.parquet",
-        query_work_dir("curated_capture"), build,
+        query_work_dir("curated_capture"), build, fixtures.DOCUMENTS,
     )
 
 
@@ -421,11 +423,16 @@ def stream_curated_capture_sql() -> str:
 
 
 def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch Common-Crawl curation chain in ONE Spark plan:
-    pages (html:binary with PII planted in the text) → latest capture
-    per canonical URL → HTML→text extraction → PII redaction
-    (column-preserving) → Gopher repetition filter. Output: one clean
-    row per canonical URL whose latest capture passes the filter.
+    """The batch Common-Crawl curation chain as ONE Spark SQL
+    statement: pages (html:binary with PII planted in the text) →
+    latest capture per canonical URL → HTML→text extraction → PII
+    redaction (column-preserving) → Gopher repetition filter. Output:
+    one clean row per canonical URL whose latest capture passes the
+    filter.
+
+    The statement is composed from each stage's one SQL-text builder
+    and bound to the schema-typed, fanned-out documents scan, so the
+    build is one parse and one analysis and starts no Spark job.
 
     The latest capture is picked over ALL captures, before any per-row
     text work: a URL whose latest capture fails the filter gives no
@@ -435,55 +442,60 @@ def q_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     joining last, without the regexp work on older captures.
 
     Plan shape at 100 TB: the only shuffles are the latest-capture
-    aggregate on the canonical key (urls.latest_capture, the one place
-    the canonical-URL chain runs) and the join of its winners with the
-    pages' (doc_id, html) on doc_id — the same two-exchange shape as
-    dedup.exact_duplicates + keeper join.  Above the join, the
-    projections (extract/redact), the token Generate and the filter
-    fuse into one codegen stage, with every regexp chain evaluated
-    once per kept row."""
+    aggregate on the canonical key (urls.latest_capture_spark_sql, the
+    one place the canonical-URL chain runs) and the join of its
+    winners with the pages' (doc_id, html) on doc_id — the same
+    two-exchange shape as dedup.exact_duplicates + keeper join.  Above
+    the join, the projections (extract/redact), the token Generate and
+    the filter fuse into one codegen stage, with every regexp chain
+    evaluated once per kept row."""
     from ..ops import html as html_ops
     from ..ops import pii as pii_ops
+    from ..ops import sql_over
     from ..ops import textstats as ts
     from ..ops import urls
 
-    # _url_col()/_warc_ts_col() depend only on doc_id+source, which
-    # the PII-augmented docs carry — page-ification stays one scan
-    pages = _pii_docs(spark, sf_dir).select(
-        F.col("doc_id"),
-        _warc_ts_col().alias("warc_ts"),
-        _url_col().alias("url"),
-        F.encode(_page_html_col("text"), "UTF-8").alias("html"),
-    )
-    # the canonical URL is computed once, on the latest-capture side;
-    # the page side carries only (doc_id, html) to the join
-    winners = urls.latest_capture(pages.select("doc_id", "warc_ts", "url"))
-    latest = winners.selectExpr("latest_id AS doc_id", "canonical_url").join(
-        pages.select("doc_id", "html"), "doc_id")
-    # extraction and redaction are plain projections, where codegen
-    # evaluates each regexp chain once per row
-    ext = latest.select(
-        "doc_id", "canonical_url",
-        html_ops.extract_text_col(F.col("html")).alias("text_out"),
-    )
-    red = pii_ops.pii_annotate(ext, "text_out")
-    # 1-row explode = a Generate barrier the Gopher filter cannot cross.
-    # Without it, predicate pushdown substitutes clean_text's alias into
-    # the filter (~10 copies of the PII chain; a Filter has no common-
-    # subexpression elimination).  The text travels inside the struct:
-    # as a plain child column, constraint inference would push
-    # isnotnull(<whole HTML+PII chain>) down to the scan instead.
-    tok = red.selectExpr(
-        "doc_id", "canonical_url", "n_email", "n_ip", "n_phone",
-        "explode(array(named_struct('t', clean_text, "
-        f"'tk', {dedup.tokens_spark_sql('clean_text')}))) AS _r",
-    )
+    red = pii_ops.pii_annotate_spark_sql(
+        "ext", ["doc_id", "canonical_url", "text_out"], "text_out")
     rep = ts.repetition_spark_sql("_r.t", toks="_r.tk")
-    return tok.filter(rep["gopher_keep"]).selectExpr(
-        "doc_id", "canonical_url", "_r.t AS clean_text",
-        "CAST(n_email + n_ip + n_phone AS BIGINT) AS n_pii",
-        f"{rep['n_words']} AS n_words",
-    )
+
+    def query(docs: str) -> str:
+        return (
+            # the URL and capture time depend only on doc_id+source,
+            # which the PII-augmented docs carry: one scan page-ifies
+            f"WITH pages AS (SELECT doc_id, {_WARC_TS_SQL} AS warc_ts, "
+            f"{_URL_SQL} AS url, "
+            f"encode({_page_html_sql('text')}, 'UTF-8') AS html FROM ("
+            f"SELECT doc_id, source, {_PII_TEXT_SQL} AS text FROM {docs})), "
+            # the canonical URL is computed once, on the latest-capture
+            # side; the page side carries only (doc_id, html) to the join
+            f"winners AS ({urls.latest_capture_spark_sql('pages')}), "
+            "latest AS (SELECT doc_id, canonical_url, html FROM ("
+            "SELECT latest_id AS doc_id, canonical_url FROM winners) "
+            "JOIN pages USING (doc_id)), "
+            # extraction and redaction are plain projections, where
+            # codegen evaluates each regexp chain once per row
+            "ext AS (SELECT doc_id, canonical_url, "
+            f"{html_ops.extract_text_spark_sql('html')} AS text_out "
+            f"FROM latest), red AS ({red}), "
+            # 1-row explode = a Generate barrier the Gopher filter
+            # cannot cross.  Without it, predicate pushdown substitutes
+            # clean_text's alias into the filter (~10 copies of the PII
+            # chain; a Filter has no common-subexpression elimination).
+            # The text travels inside the struct: as a plain child
+            # column, constraint inference would push
+            # isnotnull(<whole HTML+PII chain>) down to the scan instead.
+            "tok AS (SELECT doc_id, canonical_url, n_email, n_ip, n_phone, "
+            "explode(array(named_struct('t', clean_text, "
+            f"'tk', {dedup.tokens_spark_sql('clean_text')}))) AS _r "
+            "FROM red) "
+            "SELECT doc_id, canonical_url, _r.t AS clean_text, "
+            "CAST(n_email + n_ip + n_phone AS BIGINT) AS n_pii, "
+            f"{rep['n_words']} AS n_words FROM tok "
+            f"WHERE {rep['gopher_keep']}"
+        )
+
+    return sql_over(_docs(spark, sf_dir), query)
 
 
 def curation_end_to_end_sql() -> str:

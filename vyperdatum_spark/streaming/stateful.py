@@ -142,6 +142,7 @@ def stream_first_per_key(
     work_dir: str,
     key_col: str,
     id_col: str,
+    schema: str | StructType | None = None,
 ) -> DataFrame:
     """applyInPandasWithState over a drained static table: per key,
     the minimum id and the row count of the batch that introduced the
@@ -149,7 +150,8 @@ def stream_first_per_key(
     source file) this equals the batch aggregate MIN(id)/COUNT(*) per
     key — closed-form, so the stateful-operator machinery (keyed state
     store, append emission) is oracle-checkable; cross-batch behavior
-    is covered by the URL dedup pytest."""
+    is covered by the URL dedup pytest.  ``schema``: the table's
+    declared schema, as in ``drain_to_parquet``."""
     def build(rows):
         return first_row_per_key(
             rows.select(F.col(key_col).cast("string").alias("key"),
@@ -157,4 +159,4 @@ def stream_first_per_key(
             "key", ["first_id"],
         )
 
-    return drain_to_parquet(spark, table_dir, work_dir, build)
+    return drain_to_parquet(spark, table_dir, work_dir, build, schema)

@@ -22,6 +22,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..engine.datagen import PAGES_SCHEMA
 
@@ -80,6 +81,7 @@ def drain_to_parquet(
     table_dir: str,
     work_dir: str,
     build_query,
+    schema: str | StructType | None = None,
 ) -> DataFrame:
     """Shared AvailableNow drain harness: stream ``table_dir`` (a
     parquet file OR directory — the file source requires a directory,
@@ -87,7 +89,9 @@ def drain_to_parquet(
     through ``build_query(streaming_df) -> streaming DataFrame``, sink
     to parquet under ``work_dir``, and read the sink back.
 
-    The read-back passes the query's schema explicitly: a sink that
+    ``schema`` is the table's declared schema; without it the schema
+    is inferred from the files, which starts a Spark job.  The
+    read-back passes the query's schema explicitly: a sink that
     emitted zero rows holds only ``_spark_metadata`` and schema
     inference would throw where 'empty result' is the correct answer.
     """
@@ -102,7 +106,8 @@ def drain_to_parquet(
         stream_src = src_dir
     else:
         stream_src = table_dir
-    schema = spark.read.parquet(table_dir).schema
+    if schema is None:
+        schema = spark.read.parquet(table_dir).schema
     agg = build_query(spark.readStream.schema(schema).parquet(stream_src))
     run_available_now(agg, out_dir, ck_dir)
     return spark.read.schema(agg.schema).parquet(out_dir)
@@ -126,6 +131,7 @@ def stream_events_hourly(
     events_dir: str,
     work_dir: str,
     watermark: str = "1 hour",
+    schema: str | StructType | None = None,
 ) -> DataFrame:
     """Watermarked hourly (window × event_type) aggregation of the
     events table run AS A STREAM (AvailableNow over the parquet file
@@ -136,7 +142,8 @@ def stream_events_hourly(
     and emitted once; trailing windows stay in (discarded) state. That
     cutoff is closed-form, so this streaming pipeline is
     oracle-checkable against batch SQL — the correctness contract for
-    the watermark/window machinery itself.
+    the watermark/window machinery itself.  ``schema``: the events
+    table's declared schema, as in ``drain_to_parquet``.
     """
     def build(ev: DataFrame) -> DataFrame:
         # the table stores wall-clock TIMESTAMP_NTZ; watermarks
@@ -159,7 +166,7 @@ def stream_events_hourly(
             )
         )
 
-    return drain_to_parquet(spark, events_dir, work_dir, build)
+    return drain_to_parquet(spark, events_dir, work_dir, build, schema)
 
 
 def stream_events_sessions(
@@ -168,6 +175,7 @@ def stream_events_sessions(
     work_dir: str,
     gap: str = "8 hours",
     watermark: str = "1 hour",
+    schema: str | StructType | None = None,
 ) -> DataFrame:
     """Gap-based sessionization run AS A STREAM: ``session_window``
     is a merging-window state machine (late rows extend or merge
@@ -180,6 +188,7 @@ def stream_events_sessions(
     session machinery itself is oracle-checkable against the batch
     gaps-and-islands SQL plus that cutoff.  State at 10^12 rows is
     O(open sessions), bounded by the watermark horizon per user.
+    ``schema``: as in ``stream_events_hourly``.
     """
     def build(ev: DataFrame) -> DataFrame:
         ev = ev.withColumn("_ts", F.col("ts").cast("timestamp"))
@@ -200,4 +209,4 @@ def stream_events_sessions(
             )
         )
 
-    return drain_to_parquet(spark, events_dir, work_dir, build)
+    return drain_to_parquet(spark, events_dir, work_dir, build, schema)
