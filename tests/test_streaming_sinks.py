@@ -169,7 +169,9 @@ def test_stream_drain_empty_emission_yields_empty_df(spark, tmp_path):
         "value": [1.0, 2.0],
     })
     spark.createDataFrame(pdf).write.parquet(src)
-    out = sw.stream_events_hourly(spark, src, str(tmp_path / "work"))
+    out = sw.stream_events_hourly(
+        spark, src, str(tmp_path / "work"),
+        "ts timestamp, event_type string, value double")
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "window_start", "event_type", "n_events", "sum_value"
@@ -301,7 +303,8 @@ def test_stream_entry_point_schemas(spark, tmp_path):
     src = str(tmp_path / "docs.parquet")
     pd.DataFrame({"source": ["a", "b", "a"], "doc_id": [3, 1, 2]}).to_parquet(src)
     got = stateful.stream_first_per_key(
-        spark, src, str(tmp_path / "work"), "source", "doc_id")
+        spark, src, str(tmp_path / "work"), "source", "doc_id",
+        "source string, doc_id bigint")
     assert got.schema.simpleString() == (
         "struct<key:string,first_id:bigint,n_in_batch:bigint>"
     )

@@ -142,7 +142,7 @@ def stream_first_per_key(
     work_dir: str,
     key_col: str,
     id_col: str,
-    schema: str | StructType | None = None,
+    schema: str | StructType,
 ) -> DataFrame:
     """applyInPandasWithState over a drained static table: per key,
     the minimum id and the row count of the batch that introduced the

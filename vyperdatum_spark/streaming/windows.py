@@ -81,7 +81,7 @@ def drain_to_parquet(
     table_dir: str,
     work_dir: str,
     build_query,
-    schema: str | StructType | None = None,
+    schema: str | StructType,
 ) -> DataFrame:
     """Shared AvailableNow drain harness: stream ``table_dir`` (a
     parquet file OR directory — the file source requires a directory,
@@ -89,8 +89,8 @@ def drain_to_parquet(
     through ``build_query(streaming_df) -> streaming DataFrame``, sink
     to parquet under ``work_dir``, and read the sink back.
 
-    ``schema`` is the table's declared schema; without it the schema
-    is inferred from the files, which starts a Spark job.  The
+    ``schema`` is the table's declared schema (DDL or StructType), so
+    building the drain's source starts no inference job.  The
     read-back passes the query's schema explicitly: a sink that
     emitted zero rows holds only ``_spark_metadata`` and schema
     inference would throw where 'empty result' is the correct answer.
@@ -106,8 +106,6 @@ def drain_to_parquet(
         stream_src = src_dir
     else:
         stream_src = table_dir
-    if schema is None:
-        schema = spark.read.parquet(table_dir).schema
     agg = build_query(spark.readStream.schema(schema).parquet(stream_src))
     run_available_now(agg, out_dir, ck_dir)
     return spark.read.schema(agg.schema).parquet(out_dir)
@@ -130,8 +128,8 @@ def stream_events_hourly(
     spark: SparkSession,
     events_dir: str,
     work_dir: str,
+    schema: str | StructType,
     watermark: str = "1 hour",
-    schema: str | StructType | None = None,
 ) -> DataFrame:
     """Watermarked hourly (window × event_type) aggregation of the
     events table run AS A STREAM (AvailableNow over the parquet file
@@ -173,9 +171,9 @@ def stream_events_sessions(
     spark: SparkSession,
     events_dir: str,
     work_dir: str,
+    schema: str | StructType,
     gap: str = "8 hours",
     watermark: str = "1 hour",
-    schema: str | StructType | None = None,
 ) -> DataFrame:
     """Gap-based sessionization run AS A STREAM: ``session_window``
     is a merging-window state machine (late rows extend or merge
